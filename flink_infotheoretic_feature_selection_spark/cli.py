@@ -33,7 +33,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--pack-route",
         default="auto",
-        choices=["auto", "scan", "spill", "direct"],
+        choices=["auto", "scan", "direct"],
         help="pack substrate routing (auto: direct-pack bare parquet scans)",
     )
     p.add_argument("--save-model", default=None, help="write fitted model JSON here")

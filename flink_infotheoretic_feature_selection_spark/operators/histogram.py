@@ -30,6 +30,11 @@ movement for free.  Two interchangeable routes, identical output:
 
 Either way, at 100 TB the shuffle volume is ``O(n_features × dims²)``
 cells per partition, independent of row count.
+
+The selector's own fit passes (relevances and the greedy loop) run on
+the packed NumPy blocks instead (operators/packed.py); this module
+supplies their shared guards: :func:`check_int32_rows` and the
+driver-merge budget :data:`BLOB_DRIVER_MERGE_MAX_BYTES`.
 """
 
 from __future__ import annotations
@@ -48,7 +53,6 @@ __all__ = [
     "hist3d",
     "hist2d_arrow",
     "hist3d_arrow",
-    "hist3d_mi_cmi",
     "collect_hist2d",
     "collect_hist3d",
 ]
@@ -236,146 +240,14 @@ def check_int32_rows(n_rows: int) -> None:
         )
 
 
-def int32_exact(a: np.ndarray) -> np.ndarray:
-    """Scan-based int32 guard — kept for callers that accumulate across
-    an UNKNOWN number of rows (none on the hot loop path since r9; see
-    :func:`check_int32_rows` for the O(1) proof used there)."""
-    if a.size and int(a.max()) > _INT32_MAX:
-        raise ValueError(
-            "partition histogram cell exceeds int32 — too many rows per "
-            "partition for exact int32 partials; increase the partition count"
-        )
-    return a.astype(np.int32)
-
-
-# Driver-side blob merge is used only below this total-volume bound
-# (exactly computable up front: partitions × Σxd × y_dim × z_dim × 4 B).
-# Same idea as a broadcast-join threshold: the driver shortcut saves one
-# shuffle + one Python stage when the payload is trivially small, and the
-# distributed applyInPandas merge takes over long before the collect
-# could hurt the driver.
+# The packed passes merge their per-block partials on the driver only
+# below this total-volume bound (exactly computable up front, e.g.
+# partitions × Σxd × y_dim × z_dim × 4 B for a loop pass).  Same idea as
+# a broadcast-join threshold: the driver shortcut saves one shuffle + one
+# Python stage when the payload is trivially small, and the shuffled
+# merge takes over long before the collect could hurt the driver.  Read
+# at call time (packed._merge_partials), so tests can force a regime.
 BLOB_DRIVER_MERGE_MAX_BYTES = 32 << 20
-
-
-def hist3d_mi_cmi(
-    matrix: DataFrame,
-    feature_cols: list[str],
-    y_col: str,
-    z_col: str,
-    dims: dict[str, int],
-    y_dim: int,
-    z_dim: int,
-    n: int,
-    emit_f32: bool = True,
-    n_partitions: int | None = None,
-) -> dict[str, tuple[float, float]]:
-    """The greedy loop's redundancy pass, fully distributed: returns
-    ``{feature: (MI(x;y), CMI(x;y|z))}`` in ONE job.
-
-    This is the closest Spark analogue of the reference's partial+final
-    dense-matrix reduce (``InfoTheory.scala:474-521``, ``:535-586``):
-    each partition emits ONE packed binary blob per feature — the dense
-    int32 count matrix over ``(x, y, z)`` — instead of sparse cell rows;
-    blobs merge per feature; MI/CMI run executor-side on the merged
-    histogram, so the driver collects ``n_features`` scalar rows.  When
-    the total blob volume is under :data:`BLOB_DRIVER_MERGE_MAX_BYTES`,
-    the partials are instead collected and merged on the driver — one
-    stage, no shuffle (measured 0.52 s vs 0.61 s per iteration at
-    sf0.1); the distributed merge is the 100 TB path.
-
-    Why not :func:`hist3d_arrow` + :func:`collect_hist3d` (the round-3
-    loop body): the loop's contingency tables are near-DENSE (measured
-    at sf0.1: ~492k nonzero of ~492k possible cells), so sparse
-    (feat, x, y, z, cnt) rows pay 16B+ per cell through a hash agg
-    whose partial aggregation compresses nothing — ~500k-row shuffle
-    AND a ~500k-row driver collect per iteration.  Dense blobs are 4B
-    per cell, shuffle ``partitions × n_features`` ROWS (not cells), no
-    per-cell hash-agg work, and the collect is 31 scalar rows.
-
-    Exactness: partial counts are int64-accumulated per partition and
-    emitted as int32 (a partition holds < 2^31 rows by construction);
-    the merge sums exact integers, so merge ORDER cannot change the
-    histogram, and ``mi_and_cmi`` sees bit-identical input to the
-    driver-side route — the selection path is unchanged by design
-    (pinned by tests/test_selector.py and the selected_* gates).
-    """
-    import pandas as pd
-
-    from flink_infotheoretic_feature_selection_spark.functions.infotheory import mi_and_cmi
-
-    feats = list(feature_cols)
-    xdims = [dims[c] for c in feats]
-    yz = y_dim * z_dim
-
-    def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc = [np.zeros(xd * yz, dtype=np.int64) for xd in xdims]
-        seen = False
-        n_rows = 0
-        for batch in batches:
-            seen = True
-            n_rows += batch.num_rows
-            y = _col_i64(batch, y_col)
-            z = _col_i64(batch, z_col)
-            yz_code = y * z_dim + z
-            for fi, fname in enumerate(feats):
-                x = _col_i64(batch, fname)
-                acc[fi] += np.bincount(x * yz + yz_code, minlength=acc[fi].size)
-        if seen:
-            # cells <= rows seen by this partition: one compare proves
-            # int32 safety for every blob (check_int32_rows docstring)
-            check_int32_rows(n_rows)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.arange(len(feats), dtype=np.int32)),
-                    pa.array(
-                        [a.astype(np.int32).tobytes() for a in acc],
-                        type=pa.binary(),
-                    ),
-                ],
-                names=["feat", "blob"],
-            )
-
-    def merge_and_score(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        fi = int(pdf["feat"].iloc[0])
-        total = np.zeros(xdims[fi] * yz, dtype=np.int64)
-        for b in pdf["blob"]:
-            total += np.frombuffer(b, dtype=np.int32)
-        h = total.reshape(xdims[fi], y_dim, z_dim)
-        mi, cmi = mi_and_cmi(h, n, emit_f32=emit_f32)
-        return pd.DataFrame({"feat": [fi], "mi": [float(mi)], "cmi": [float(cmi)]})
-
-    # dict.fromkeys dedupes while keeping order: y_col == z_col is legal
-    # (the relevance init passes label for both — the 2-D table is the
-    # z-marginal) and must not produce a duplicate-name select
-    sel = list(dict.fromkeys([*feats, y_col, z_col]))
-    needed = matrix.select(*sel) if set(matrix.columns) != set(sel) else matrix
-    partial = needed.mapInArrow(partials, "feat int, blob binary")
-
-    if n_partitions is None:
-        n_partitions = matrix.rdd.getNumPartitions()
-    blob_bytes = n_partitions * sum(xdims) * yz * 4
-    if blob_bytes <= BLOB_DRIVER_MERGE_MAX_BYTES:
-        totals = {fi: np.zeros(xdims[fi] * yz, dtype=np.int64) for fi in range(len(feats))}
-        for r in partial.collect():
-            totals[r["feat"]] += np.frombuffer(r["blob"], dtype=np.int32)
-        scores = {
-            feats[fi]: mi_and_cmi(
-                totals[fi].reshape(xdims[fi], y_dim, z_dim), n, emit_f32=emit_f32
-            )
-            for fi in range(len(feats))
-        }
-    else:
-        out = (
-            partial.groupBy("feat")
-            .applyInPandas(merge_and_score, "feat int, mi double, cmi double")
-            .collect()
-        )
-        scores = {feats[r["feat"]]: (r["mi"], r["cmi"]) for r in out}
-    # an empty matrix emits no blobs; mirror collect_hist3d's zero
-    # histograms (scores 0.0) so callers see identical behavior
-    for c in feats:
-        scores.setdefault(c, (0.0, 0.0))
-    return scores
 
 
 def collect_hist2d(

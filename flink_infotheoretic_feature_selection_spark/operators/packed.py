@@ -28,15 +28,15 @@ over data whose layout never changes across k iterations.
 
 Scale shape (100 TB): the packed RDD is the same bytes as the DataFrame
 cache (int8/int16 columns, per-partition dict overhead amortized), it
-inherits the loop's 65536-rows-per-partition layout, and partials
-follow the same two-regime merge as ``histogram.hist3d_mi_cmi``:
-``partitions × Σxd × y_dim × z_dim × 4`` bytes under
-``BLOB_DRIVER_MERGE_MAX_BYTES`` are collected and merged on the driver
-(one stage, no shuffle); above the bound, int32 partials flow through a
-``combineByKey`` (int64 accumulators — merge order cannot change exact
-integer sums) and MI/CMI run executor-side, so the driver collects
-``n_features`` scalars.  Bit-equality of both regimes against the
-DataFrame route is pinned by tests/test_packed.py.
+inherits the loop's 65536-rows-per-partition layout, and every
+histogram pass merges its per-block int32 partials through ONE
+two-regime helper, :func:`_merge_partials`: a pass volume under
+``histogram.BLOB_DRIVER_MERGE_MAX_BYTES`` is collected and summed on the
+driver (one stage, no shuffle); above the bound the partials flow
+through a shuffled per-key combine (int64 accumulators — merge order
+cannot change exact integer sums) and MI/CMI run executor-side, so the
+driver collects only merged results.  Bit-equality of both regimes against
+``np.bincount`` tables is pinned by tests/test_packed.py.
 """
 
 from __future__ import annotations
@@ -47,11 +47,66 @@ from typing import Iterator
 import numpy as np
 import pyarrow as pa
 
+from flink_infotheoretic_feature_selection_spark.operators import histogram
 from flink_infotheoretic_feature_selection_spark.operators.histogram import check_int32_rows
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 __all__ = ["PackedMatrix", "PackedSparse", "list_parquet_files"]
+
+
+def _add_partial(acc: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """``acc += v`` for an int64 accumulator, growing ``acc`` to the
+    longer array first — ``PackedSparse.dims_and_hist2d`` encodes each
+    feature's dim in its table LENGTH, so partials may differ in size;
+    every other pass emits fixed-length tables and never grows."""
+    if len(v) > len(acc):
+        acc = np.pad(acc, (0, len(v) - len(acc)))
+    acc[: len(v)] += v
+    return acc
+
+
+def _merge_partials(rdd, partials, n_keys: int, est_bytes: int, finalize=None) -> dict:
+    """The two-regime merge every histogram pass shares.
+
+    ``partials`` maps a partition's blocks to one list of int32 tables
+    per block; a table's list position is its key (``0 .. n_keys-1``).
+    Returns ``{key: finalize(key, merged_int64_table)}`` (the table
+    itself when ``finalize`` is None) for every key some block emitted —
+    callers fill the empty-input defaults.
+
+    - ``est_bytes`` (the pass's collected partial volume) under
+      ``histogram.BLOB_DRIVER_MERGE_MAX_BYTES``: collect the per-block
+      lists and sum them in int64 on the driver — one stage, no shuffle.
+    - above it: a shuffled int64 per-key combine, ``finalize`` (MI/CMI)
+      on the executors, only the merged results reach the driver.
+
+    The budget is read at call time so tests can force either regime.
+    Exact in both: integer sums merge identically in any order, and
+    ``finalize`` sees the same int64 table either way."""
+    fin = finalize or (lambda k, acc: acc)
+    if est_bytes <= histogram.BLOB_DRIVER_MERGE_MAX_BYTES:
+        totals: dict[int, np.ndarray] = {}
+        for part in rdd.mapPartitions(partials).collect():
+            for k, v in enumerate(part):
+                totals[k] = _add_partial(totals[k], v) if k in totals else v.astype(np.int64)
+        return {k: fin(k, acc) for k, acc in totals.items()}
+
+    def keyed(blocks):
+        for part in partials(blocks):
+            yield from enumerate(part)
+
+    return dict(
+        rdd.mapPartitions(keyed)
+        .combineByKey(
+            lambda v: v.astype(np.int64),
+            _add_partial,
+            _add_partial,
+            numPartitions=max(min(n_keys, rdd.getNumPartitions()), 1),
+        )
+        .map(lambda kv: (kv[0], fin(kv[0], kv[1])))
+        .collect()
+    )
 
 
 def _is_hidden_relpath(rel: str) -> bool:
@@ -632,14 +687,10 @@ class PackedMatrix:
         """
         import math
 
-        from flink_infotheoretic_feature_selection_spark.operators.histogram import (
-            BLOB_DRIVER_MERGE_MAX_BYTES,
-        )
-
         cols = self.cols
         feats = [c for c in cols if c != y_col]
         per_part_budget = max(
-            BLOB_DRIVER_MERGE_MAX_BYTES // max(self.n_partitions, 1), 1
+            histogram.BLOB_DRIVER_MERGE_MAX_BYTES // max(self.n_partitions, 1), 1
         )
 
         def stat_hist(blk):
@@ -726,8 +777,9 @@ class PackedMatrix:
 
     def validate_byte_range(self, cols: list[str]) -> list[str]:
         """Columns violating the non-null-integer-in-[0,255] contract —
-        the packed twin of ``InfoThSelector._validate_byte_range`` (one
-        pass, NULLs arrive as NaN through Arrow's null→float promotion)."""
+        the selector's opt-in ``validate`` check
+        (``InfoSelector.scala:404-416``).  One pass; NULLs arrive as NaN
+        through Arrow's null→float promotion."""
         cols = list(cols)
 
         def check(blk):
@@ -815,17 +867,10 @@ class PackedMatrix:
         fit; ``InfoTheory.scala:413-432``).
 
         Per-feature 2-D tables are small (``xd × y_dim`` ints), but the
-        collected volume is ``n_partitions × Σxd × y_dim`` — unbounded in
-        partition count — so the same two-regime merge as
-        :meth:`hist3d_mi_cmi` applies: driver merge under
-        ``BLOB_DRIVER_MERGE_MAX_BYTES``, else int32 partials through a
-        ``combineByKey`` int64 merge with executor-side MI (the driver
-        then collects ``n_features`` scalars).  Exact in both regimes —
-        integer sums merge identically in any order."""
+        collected volume is ``n_partitions × Σxd × y_dim × 4`` — unbounded
+        in partition count — so the tables go through
+        :func:`_merge_partials` with MI as the finalize step."""
         from flink_infotheoretic_feature_selection_spark.functions.infotheory import mutual_info
-        from flink_infotheoretic_feature_selection_spark.operators.histogram import (
-            BLOB_DRIVER_MERGE_MAX_BYTES,
-        )
 
         feats = list(feature_cols)
         y_dim = dims[y_col]
@@ -833,7 +878,7 @@ class PackedMatrix:
 
         def partials(blocks):
             # int32 partial emit: the collected volume then matches the
-            # blob_bytes × 4 B formula — raw int64 bincounts would put
+            # 4 B/count est_bytes formula — raw int64 bincounts would put
             # 2× the documented bound on the driver.  Overflow safety is
             # proven once per block from its ROW COUNT (cells <= rows),
             # not by scanning each emitted table (r9: check_int32_rows)
@@ -848,43 +893,15 @@ class PackedMatrix:
                     for fi, c in enumerate(feats)
                 ]
 
-        blob_bytes = self.n_partitions * sum(xd) * y_dim * 4
-        if blob_bytes <= BLOB_DRIVER_MERGE_MAX_BYTES:
-            totals = [np.zeros(d * y_dim, dtype=np.int64) for d in xd]
-            for part in self.rdd.mapPartitions(partials).collect():
-                for fi, acc in enumerate(part):
-                    totals[fi] += acc
-            return {
-                c: mutual_info(totals[fi].reshape(xd[fi], y_dim), n, emit_f32=emit_f32)
-                for fi, c in enumerate(feats)
-            }
-
-        def kv_partials(blocks):
-            for part in partials(blocks):
-                for fi, acc in enumerate(part):
-                    yield fi, acc
-
-        merged = (
-            self.rdd.mapPartitions(kv_partials)
-            .combineByKey(
-                lambda v: v.astype(np.int64),
-                lambda a, v: a + v,
-                lambda a, b: a + b,
-                numPartitions=min(len(feats), self.n_partitions),
-            )
-            .map(
-                lambda kv: (
-                    kv[0],
-                    mutual_info(kv[1].reshape(xd[kv[0]], y_dim), n, emit_f32=emit_f32),
-                )
-            )
-            .collect()
+        merged = _merge_partials(
+            self.rdd,
+            partials,
+            len(feats),
+            self.n_partitions * sum(xd) * y_dim * 4,
+            lambda fi, acc: mutual_info(acc.reshape(xd[fi], y_dim), n, emit_f32=emit_f32),
         )
-        scores = {feats[fi]: mi for fi, mi in merged}
         # empty matrix → no blocks → zero histograms, like collect_hist2d
-        for c in feats:
-            scores.setdefault(c, 0.0)
-        return scores
+        return {c: merged.get(fi, 0.0) for fi, c in enumerate(feats)}
 
     def hist3d_mi_cmi_multi(
         self,
@@ -896,35 +913,31 @@ class PackedMatrix:
         emit_f32: bool = True,
     ) -> dict[str, dict[str, tuple[float, float]]]:
         """``{y_col: {feature: (MI(x;y), CMI(x;y|z))}}`` for SEVERAL
-        conditioning columns in ONE job — the greedy loop's speculative
-        batch pass (r13, guide §1.2: the loop's sequential job count is
-        the cost, so score the known winner AND the likely next winners
-        in one launch).
+        conditioning columns in ONE job — the greedy loop's redundancy
+        pass (``InfoTheory.scala:535-586``).  With one conditioning
+        column it is the plain per-iteration pass; with more it also
+        scores the likely next winners in the same launch (r13, guide
+        §1.2: the loop's sequential job count is the cost).
 
-        Each (feature, y) table is the same integer-merged contingency
-        table :meth:`hist3d_mi_cmi` builds — per-cond bincounts over the
-        same blocks, exact int64 merges in any order, the same
-        ``mi_and_cmi`` on the final table — so every returned pair is
-        bit-identical to a dedicated single-cond pass (pinned by
-        tests/test_packed.py).  The driver-merge budget accounts for ALL
-        conds together; past it the int32 partials flow through the same
-        ``combineByKey`` int64 merge keyed by (cond, feature) and only
-        scalars reach the driver."""
+        Each (feature, y) table is an exact integer merge of per-block
+        bincounts, finalized by the same ``mi_and_cmi`` — so every
+        returned pair is bit-identical whatever the batch width or merge
+        regime (pinned by tests/test_packed.py).  The merge budget
+        accounts for ALL conds together; past it the tables merge keyed
+        by (cond, feature) and only scalars reach the driver."""
         from flink_infotheoretic_feature_selection_spark.functions.infotheory import mi_and_cmi
-        from flink_infotheoretic_feature_selection_spark.operators.histogram import (
-            BLOB_DRIVER_MERGE_MAX_BYTES,
-        )
 
         feats = list(feature_cols)
         conds = list(y_cols)
+        nf = len(feats)
         z_dim = dims[z_col]
         y_dims = [dims[s] for s in conds]
         xd = [dims[c] for c in feats]
 
         def partials(blocks):
             # one pass over the blocks: per cond, the fused (y, z) code,
-            # then per feature the same int32 bincount emit as the
-            # single-cond pass (same overflow proof: counts <= rows)
+            # then per feature an int32 bincount (overflow proof: counts
+            # <= rows); key si·nf + fi
             for blk in blocks:
                 z = blk[z_col].astype(np.int64)
                 check_int32_rows(len(z))
@@ -932,163 +945,29 @@ class PackedMatrix:
                 for si, s in enumerate(conds):
                     yz_code = blk[s].astype(np.int64) * z_dim + z
                     yz = y_dims[si] * z_dim
-                    out.append(
-                        [
-                            np.bincount(
-                                blk[c].astype(np.int64) * yz + yz_code,
-                                minlength=xd[fi] * yz,
-                            ).astype(np.int32)
-                            for fi, c in enumerate(feats)
-                        ]
+                    out.extend(
+                        np.bincount(
+                            blk[c].astype(np.int64) * yz + yz_code,
+                            minlength=xd[fi] * yz,
+                        ).astype(np.int32)
+                        for fi, c in enumerate(feats)
                     )
                 yield out
 
-        blob_bytes = self.n_partitions * sum(xd) * z_dim * 4 * sum(y_dims)
-        if blob_bytes <= BLOB_DRIVER_MERGE_MAX_BYTES:
-            totals = [
-                [np.zeros(d * y_dims[si] * z_dim, dtype=np.int64) for d in xd]
-                for si in range(len(conds))
-            ]
-            for part in self.rdd.mapPartitions(partials).collect():
-                for si, cond_part in enumerate(part):
-                    for fi, acc in enumerate(cond_part):
-                        totals[si][fi] += acc
-            result = {
-                s: {
-                    feats[fi]: mi_and_cmi(
-                        totals[si][fi].reshape(xd[fi], y_dims[si], z_dim),
-                        n,
-                        emit_f32=emit_f32,
-                    )
-                    for fi in range(len(feats))
-                }
-                for si, s in enumerate(conds)
-            }
-        else:
-            # 100 TB regime: same shape as hist3d_mi_cmi's, keyed by
-            # (cond, feature); executor-side MI/CMI, scalars collected.
-            def kv_partials(blocks):
-                for part in partials(blocks):
-                    for si, cond_part in enumerate(part):
-                        for fi, acc in enumerate(cond_part):
-                            yield (si, fi), acc
-
-            merged = (
-                self.rdd.mapPartitions(kv_partials)
-                .combineByKey(
-                    lambda v: v.astype(np.int64),
-                    lambda a, v: a + v,
-                    lambda a, b: a + b,
-                    numPartitions=min(
-                        len(feats) * len(conds), self.n_partitions
-                    ),
-                )
-                .map(
-                    lambda kv: (
-                        kv[0],
-                        mi_and_cmi(
-                            kv[1].reshape(
-                                xd[kv[0][1]], y_dims[kv[0][0]], z_dim
-                            ),
-                            n,
-                            emit_f32=emit_f32,
-                        ),
-                    )
-                )
-                .collect()
-            )
-            result = {s: {} for s in conds}
-            for (si, fi), mi_cmi in merged:
-                result[conds[si]][feats[fi]] = mi_cmi
-        # empty matrix → no blocks → zero histograms, like collect_hist3d
-        for s in conds:
-            for c in feats:
-                result[s].setdefault(c, (0.0, 0.0))
-        return result
-
-    def hist3d_mi_cmi(
-        self,
-        feature_cols: list[str],
-        y_col: str,
-        z_col: str,
-        dims: dict[str, int],
-        n: int,
-        emit_f32: bool = True,
-    ) -> dict[str, tuple[float, float]]:
-        """``{feature: (MI(x;y), CMI(x;y|z))}`` — one redundancy pass of
-        the greedy loop, same contract and bit-identical output as
-        ``histogram.hist3d_mi_cmi`` (``InfoTheory.scala:535-586``)."""
-        from flink_infotheoretic_feature_selection_spark.functions.infotheory import mi_and_cmi
-        from flink_infotheoretic_feature_selection_spark.operators.histogram import (
-            BLOB_DRIVER_MERGE_MAX_BYTES,
+        merged = _merge_partials(
+            self.rdd,
+            partials,
+            nf * len(conds),
+            self.n_partitions * sum(xd) * z_dim * 4 * sum(y_dims),
+            lambda k, acc: mi_and_cmi(
+                acc.reshape(xd[k % nf], y_dims[k // nf], z_dim), n, emit_f32=emit_f32
+            ),
         )
-
-        feats = list(feature_cols)
-        y_dim, z_dim = dims[y_col], dims[z_col]
-        yz = y_dim * z_dim
-        xd = [dims[c] for c in feats]
-
-        def partials(blocks):
-            # int32 partial emit: keeps the collected/shuffled volume
-            # equal to the blob_bytes × 4 B formula in BOTH regimes (r8
-            # review find: raw int64 bincounts put 2× the documented
-            # bound on the driver).  Overflow proof is one row-count
-            # compare per block, not a per-table scan (r9 fix)
-            for blk in blocks:
-                yz_code = blk[y_col].astype(np.int64) * z_dim + blk[z_col].astype(np.int64)
-                check_int32_rows(len(yz_code))
-                yield [
-                    np.bincount(
-                        blk[c].astype(np.int64) * yz + yz_code,
-                        minlength=xd[fi] * yz,
-                    ).astype(np.int32)
-                    for fi, c in enumerate(feats)
-                ]
-
-        blob_bytes = self.n_partitions * sum(xd) * yz * 4
-        if blob_bytes <= BLOB_DRIVER_MERGE_MAX_BYTES:
-            totals = [np.zeros(d * yz, dtype=np.int64) for d in xd]
-            for part in self.rdd.mapPartitions(partials).collect():
-                for fi, acc in enumerate(part):
-                    totals[fi] += acc
-            scores = {
-                feats[fi]: mi_and_cmi(
-                    totals[fi].reshape(xd[fi], y_dim, z_dim), n, emit_f32=emit_f32
-                )
-                for fi in range(len(feats))
-            }
-        else:
-            # 100 TB regime: int32 partial emit (histogram.py's shuffle
-            # volume), int64 combiners (exact merge in any order),
-            # executor-side MI/CMI, n_features scalars to the driver.
-            def kv_partials(blocks):
-                for part in partials(blocks):
-                    for fi, acc in enumerate(part):
-                        yield fi, acc
-
-            merged = (
-                self.rdd.mapPartitions(kv_partials)
-                .combineByKey(
-                    lambda v: v.astype(np.int64),
-                    lambda a, v: a + v,
-                    lambda a, b: a + b,
-                    numPartitions=min(len(feats), self.n_partitions),
-                )
-                .map(
-                    lambda kv: (
-                        kv[0],
-                        mi_and_cmi(
-                            kv[1].reshape(xd[kv[0]], y_dim, z_dim), n, emit_f32=emit_f32
-                        ),
-                    )
-                )
-                .collect()
-            )
-            scores = {feats[fi]: mi_cmi for fi, mi_cmi in merged}
         # empty matrix → no blocks → zero histograms, like collect_hist3d
-        for c in feats:
-            scores.setdefault(c, (0.0, 0.0))
-        return scores
+        return {
+            s: {c: merged.get(si * nf + fi, (0.0, 0.0)) for fi, c in enumerate(feats)}
+            for si, s in enumerate(conds)
+        }
 
 
 class PackedSparse:
@@ -1229,22 +1108,14 @@ class PackedSparse:
         length-encoded dims.  The caller credits the x=0 row from
         ``N_y`` exactly like the SQL route's ``collect2d``.
 
-        Two-regime merge (r8): collected partial volume is
-        ``n_partitions × Σ local_lens × 8 B`` — unbounded in partition
-        count, the same driver-OOM class the advisor flagged on
-        ``PackedMatrix.relevances``.  The WORST-CASE volume
-        ``n_partitions × nf × 256 × y_dim × 4`` (cells are byte-ranged:
-        the executor-side guard in the partial pass raises past 256)
-        gates the route: under ``BLOB_DRIVER_MERGE_MAX_BYTES`` the
-        driver merges as before; above it int32 partials flow through a
-        per-feature ``combineByKey`` pad-to-max int64 merge and the
-        driver collects ``nf`` merged tables (dims-bounded).  Integer
-        sums and length-max are order-free, so both regimes are
-        bit-identical (pinned by tests/test_packed.py)."""
-        from flink_infotheoretic_feature_selection_spark.operators.histogram import (
-            BLOB_DRIVER_MERGE_MAX_BYTES,
-        )
-
+        Merge (r8): collected partial volume is unbounded in partition
+        count, so the tables go through :func:`_merge_partials`, gated by
+        the WORST-CASE volume ``n_partitions × nf × 256 × y_dim × 4``
+        (cells are byte-ranged: the executor-side guard in the partial
+        pass raises past 256).  Its pad-to-max add keeps the
+        length-encoded dims in both regimes; integer sums and length-max
+        are order-free, so both are bit-identical (pinned by
+        tests/test_packed.py)."""
         nf = self.n_features
 
         def partials(blocks):
@@ -1282,44 +1153,8 @@ class PackedSparse:
                     for f in range(nf)
                 ]
 
-        worst_case_bytes = self.n_partitions * nf * 256 * y_dim * 4
-        if worst_case_bytes <= BLOB_DRIVER_MERGE_MAX_BYTES:
-            parts = self.rdd.mapPartitions(partials).collect()
-            dims = {
-                f: max(-(-max((len(p[f]) for p in parts), default=0) // y_dim), 1)
-                for f in range(nf)
-            }
-            totals = [np.zeros(dims[f] * y_dim, dtype=np.int64) for f in range(nf)]
-            for part in parts:
-                for f, acc in enumerate(part):
-                    totals[f][: len(acc)] += acc
-            return dims, {f: totals[f].reshape(dims[f], y_dim) for f in range(nf)}
-
-        # 100 TB regime: int32 partials, executor-side pad-to-max int64
-        # merge per feature, nf dims-bounded tables to the driver
-        def kv_partials(blocks):
-            for part in partials(blocks):
-                for f, acc in enumerate(part):
-                    yield f, acc
-
-        def pad_merge(a, v):
-            # grow the int64 accumulator to the longer partial, then add;
-            # the merged LENGTH doubles as the feature's max code + 1
-            if len(v) > len(a):
-                a = np.pad(a, (0, len(v) - len(a)))
-            a = a.astype(np.int64, copy=False)
-            a[: len(v)] += v
-            return a
-
-        merged = dict(
-            self.rdd.mapPartitions(kv_partials)
-            .combineByKey(
-                lambda v: v.astype(np.int64),
-                pad_merge,
-                pad_merge,
-                numPartitions=min(nf, self.n_partitions) or 1,
-            )
-            .collect()
+        merged = _merge_partials(
+            self.rdd, partials, nf, self.n_partitions * nf * 256 * y_dim * 4
         )
         dims = {
             f: max(-(-len(merged.get(f, ())) // y_dim), 1) for f in range(nf)
@@ -1346,60 +1181,39 @@ class PackedSparse:
         ONE partition-local pass, no join: z comes from scattering the
         selected feature's cells onto the partition's local row index.
 
-        Driver merge under ``BLOB_DRIVER_MERGE_MAX_BYTES`` (the loop's
-        tables are near-dense); above it, int32 partials flow through a
-        ``combineByKey`` int64 merge and only the merged per-feature
-        tables return — same two-regime shape as the dense path.
+        The per-block tables merge through :func:`_merge_partials`, the
+        same two-regime merge as the dense passes.
         """
-        from flink_infotheoretic_feature_selection_spark.operators.histogram import (
-            BLOB_DRIVER_MERGE_MAX_BYTES,
-        )
-
         rem = list(remaining)
         szy = sel_dim * y_dim
 
-        def block_tables(blk):
-            ptr, x, y, row = blk["ptr"], blk["x"], blk["y"], blk["row"]
-            z_row = np.zeros(blk["nrows"], dtype=np.int64)
-            sl = slice(ptr[best], ptr[best + 1])
-            z_row[row[sl]] = x[sl]
-            # cells count nonzero entries <= block nnz: one compare
-            # proves int32 safety for every emitted table (r9 fix)
-            check_int32_rows(len(x))
-            for f in rem:
-                fsl = slice(ptr[f], ptr[f + 1])
-                # int64 upcast first: blocks store int32 cells; int32
-                # partial emit keeps the volume at the 4 B/count formula
-                code = x[fsl].astype(np.int64) * szy + z_row[row[fsl]] * y_dim + y[fsl]
-                yield f, np.bincount(code, minlength=dims[f] * szy).astype(np.int32)
+        def partials(blocks):
+            for blk in blocks:
+                ptr, x, y, row = blk["ptr"], blk["x"], blk["y"], blk["row"]
+                z_row = np.zeros(blk["nrows"], dtype=np.int64)
+                sl = slice(ptr[best], ptr[best + 1])
+                z_row[row[sl]] = x[sl]
+                # cells count nonzero entries <= block nnz: one compare
+                # proves int32 safety for every emitted table (r9 fix)
+                check_int32_rows(len(x))
+                out = []
+                for f in rem:
+                    fsl = slice(ptr[f], ptr[f + 1])
+                    # int64 upcast first: blocks store int32 cells; int32
+                    # partial emit keeps the volume at the 4 B/count formula
+                    code = x[fsl].astype(np.int64) * szy + z_row[row[fsl]] * y_dim + y[fsl]
+                    out.append(np.bincount(code, minlength=dims[f] * szy).astype(np.int32))
+                yield out
 
-        blob_bytes = self.n_partitions * sum(dims[f] for f in rem) * szy * 4
-        if blob_bytes <= BLOB_DRIVER_MERGE_MAX_BYTES:
-            totals = {f: np.zeros(dims[f] * szy, dtype=np.int64) for f in rem}
-
-            def partials(blocks):
-                for blk in blocks:
-                    yield list(block_tables(blk))
-
-            for part in self.rdd.mapPartitions(partials).collect():
-                for f, acc in part:
-                    totals[f] += acc
-        else:
-            def kv_partials(blocks):
-                for blk in blocks:
-                    yield from block_tables(blk)
-
-            merged = (
-                self.rdd.mapPartitions(kv_partials)
-                .combineByKey(
-                    lambda v: v.astype(np.int64),
-                    lambda a, v: a + v,
-                    lambda a, b: a + b,
-                    numPartitions=min(len(rem), self.n_partitions) or 1,
-                )
-                .collect()
+        merged = _merge_partials(
+            self.rdd,
+            partials,
+            len(rem),
+            self.n_partitions * sum(dims[f] for f in rem) * szy * 4,
+        )
+        return {
+            f: merged.get(i, np.zeros(dims[f] * szy, dtype=np.int64)).reshape(
+                dims[f], sel_dim, y_dim
             )
-            totals = {f: np.zeros(dims[f] * szy, dtype=np.int64) for f in rem}
-            for f, arr in merged:
-                totals[f] = arr
-        return {f: totals[f].reshape(dims[f], sel_dim, y_dim) for f in rem}
+            for i, f in enumerate(rem)
+        }

@@ -3,22 +3,24 @@
 Re-expresses the reference's flagship (``InfoSelector.scala``; lifecycle
 traced in SURVEY.md §3.1) as an idiomatic PySpark Estimator/Model:
 
-- fit stage 1: cache the wide tinyint matrix (the Spark analogue of the
-  reference's columnar transpose + HDFS persist, ``InfoSelector.scala:
-  425-437``).  Default ``loop_engine="packed"``: ONE scan of the source
-  packs per-partition NumPy column blocks into a persisted RDD
-  (operators/packed.py) — the direct analogue of the reference's
-  hand-rolled byte layout; ``loop_engine="arrow"`` keeps the
-  Tungsten-cache + per-iteration Arrow-exchange route.
-- fit stage 2: per-feature dims (``counterByFeat``), 2-D histograms vs the
-  label, relevances = MI(X; class) (``InfoTheory.scala:413-432``) — from
-  the blocks (packed) or a Catalyst aggregate + codegen histogram pass
-  (arrow).
-- fit stage 3: MIM short-circuit = top-k by relevance
+One dense fit path, five phases over one cache:
+
+- pack: ONE scan of the source packs per-partition NumPy column blocks
+  into a persisted RDD (operators/packed.py) — the Spark analogue of the
+  reference's columnar transpose + HDFS persist and hand-rolled byte
+  layout (``InfoSelector.scala:425-437``).
+- stats: per-feature dims (``counterByFeat``) and the row count from the
+  blocks, fused with the relevance histograms when the layout allows.
+- re-layout: at most one split or coalesce of the blocks, decided once
+  by ``InfoThSelector._plan_relayout``.
+- relevances: MI(X; class) from 2-D histograms vs the label
+  (``InfoTheory.scala:413-432``).
+- loop: MIM short-circuits to top-k by relevance
   (``InfoSelector.scala:313-315``); otherwise the greedy loop
-  (``InfoSelector.scala:353-362``) runs on the driver — one Spark job per
-  selected feature (3-D histogram pass + driver MI/CMI + criterion
-  updates), the idiomatic Spark replacement for Flink bulk iteration.
+  (``InfoSelector.scala:353-362``) runs on the driver — at most one
+  Spark job per selected feature (3-D histogram pass + MI/CMI + criterion
+  updates), the idiomatic Spark replacement for Flink bulk iteration;
+  speculative passes also score likely next winners in the same job.
 - transform: narrow column projection (``InfoSelector.scala:229-263``) —
   pure Catalyst, no shuffle.
 
@@ -52,26 +54,35 @@ from __future__ import annotations
 
 import math
 import threading
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
-from flink_infotheoretic_feature_selection_spark.functions.criteria import Criterion, criterion_factory
-from flink_infotheoretic_feature_selection_spark.functions.infotheory import mi_and_cmi, mutual_info
-from flink_infotheoretic_feature_selection_spark.operators.histogram import (
-    collect_hist2d,
-    feature_dims,
-    feature_dims_and_count,
-    hist2d,
-    hist3d_mi_cmi,
+from flink_infotheoretic_feature_selection_spark.functions.criteria import (
+    CRITERION_NAMES,
+    Criterion,
+    criterion_factory,
 )
+from flink_infotheoretic_feature_selection_spark.functions.infotheory import mi_and_cmi, mutual_info
 
 __all__ = ["InfoThSelector", "InfoThSelectorModel", "SparseInfoThSelector"]
 
 # Serializes the sparse pack's session-global skew-join override so two
 # concurrent fits cannot interleave set/restore (see SparseInfoThSelector.fit).
 _SKEW_CONF_LOCK = threading.Lock()
+
+
+def _check_selection_args(n_to_select: int, criterion: str) -> None:
+    """Constructor-time checks both selectors share, so a bad value fails
+    before any Spark job runs (a negative ``n_to_select`` would otherwise
+    slice the MIM ranking from the end)."""
+    if int(n_to_select) < 1:
+        raise ValueError(f"n_to_select must be >= 1, got {n_to_select!r}")
+    if not isinstance(criterion, str) or criterion.lower() not in CRITERION_NAMES:
+        raise ValueError(
+            f"unknown criterion {criterion!r}; expected one of {CRITERION_NAMES}"
+        )
 
 
 def _tie_key(score: float, precision: int | None):
@@ -176,27 +187,22 @@ class InfoThSelector:
     users wanting byte-parity with the reference's selection order on
     near-tied scores must pass ``None``.
 
-    ``loop_engine`` — substrate for stage 2 + the greedy loop, identical
-    output (pinned by tests/test_packed.py):
+    The fit packs the matrix once into a persisted RDD of NumPy column
+    blocks (operators/packed.py); stats, relevances and every greedy
+    iteration are plain closures over those blocks — no per-iteration
+    Catalyst plan or Arrow conversion.
 
-    - ``"packed"`` (default): pack the matrix once into a persisted RDD
-      of NumPy column blocks (operators/packed.py); each iteration is a
-      plain closure over the blocks — no per-iteration Catalyst plan or
-      Arrow conversion.  2.3× faster per iteration at sf0.1, more on
-      wide matrices.
-    - ``"arrow"``: the round-3..6 route — fresh ``mapInArrow`` plan over
-      the Tungsten cache per iteration (``histogram.hist3d_mi_cmi``).
-      Kept as the pure-DataFrame cross-check.
+    ``pack_route`` — how the one-time pack is produced; all routes yield
+    bit-identical blocks-by-value (see :meth:`_fit_packed`): ``"auto"``
+    (default) detects a bare local parquet scan and direct-packs its
+    files with pyarrow (no JVM row transit — the r9 ``fit_parquet`` win
+    applied automatically), else takes the ``mapInArrow`` scan pack;
+    ``"scan"`` / ``"direct"`` pin a route.
 
-    ``pack_route`` (packed engine only) — how the one-time pack is
-    produced; all routes yield bit-identical blocks-by-value (see
-    :meth:`_fit_packed`): ``"auto"`` (default) detects a bare local
-    parquet scan and direct-packs its files with pyarrow (no JVM row
-    transit — the r9 ``fit_parquet`` win applied automatically), else
-    takes the ``mapInArrow`` scan pack; ``"scan"`` / ``"direct"`` /
-    ``"spill"`` pin a route.  ``spill_dir`` — where the explicit spill
-    route writes its temp parquet (must be executor-visible; defaults
-    to the local temp dir, fine on single-host masters).
+    ``speculation`` — how many likely next winners each loop pass also
+    scores (``"auto"`` adapts the width to observed hits; an int pins
+    it, 0 = one conditioning column per pass).  Selections are
+    bit-identical at every width.
     """
 
     def __init__(
@@ -209,16 +215,13 @@ class InfoThSelector:
         emit_f32: bool = True,
         validate: bool = False,
         tie_precision: int | None = 5,
-        loop_engine: str = "packed",
         pack_route: str = "auto",
-        spill_dir: str | None = None,
         speculation: int | str = "auto",
     ) -> None:
-        if loop_engine not in ("packed", "arrow"):
-            raise ValueError(f"loop_engine must be 'packed' or 'arrow', got {loop_engine!r}")
-        if pack_route not in ("auto", "scan", "spill", "direct"):
+        _check_selection_args(n_to_select, criterion)
+        if pack_route not in ("auto", "scan", "direct"):
             raise ValueError(
-                f"pack_route must be 'auto', 'scan', 'spill' or 'direct', got {pack_route!r}"
+                f"pack_route must be 'auto', 'scan' or 'direct', got {pack_route!r}"
             )
         if speculation != "auto" and (
             not isinstance(speculation, int) or speculation < 0
@@ -234,9 +237,7 @@ class InfoThSelector:
         self.emit_f32 = emit_f32
         self.validate = validate
         self.tie_precision = tie_precision
-        self.loop_engine = loop_engine
         self.pack_route = pack_route
-        self.spill_dir = spill_dir
         self.speculation = speculation
 
     def fit(self, df: DataFrame) -> InfoThSelectorModel:
@@ -247,26 +248,12 @@ class InfoThSelector:
             raise ValueError(
                 f"n_to_select={self.n_to_select} exceeds n_features={len(feats)}"
             )
-        label = self.label_col
-        if self.loop_engine == "packed":
-            # The packed path scans the source EXACTLY ONCE (the pack is
-            # the cache) and derives dims/count/validation from the NumPy
-            # blocks — no DataFrame persist and no wide Catalyst
-            # aggregates, whose plan cost explodes with column count
-            # (632-column dims agg measured at 60.9 s vs 0.17 s from
-            # blocks; see operators/packed.py).
-            return self._fit_packed(df, feats, label)
-        if self.validate:
-            # label rides the same histogram index arithmetic as the
-            # features — validate it too (r8: a NULL/fractional label
-            # used to pass validation and die later in index code)
-            self._validate_byte_range(df, feats + [label])
-
-        matrix = df.select(*feats, label).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            return self._fit_cached(matrix, feats, label)
-        finally:
-            matrix.unpersist()
+        # The fit scans the source EXACTLY ONCE (the pack is the cache)
+        # and derives dims/count/validation from the NumPy blocks — no
+        # DataFrame persist and no wide Catalyst aggregates, whose plan
+        # cost explodes with column count (632-column dims agg measured
+        # at 60.9 s vs 0.17 s from blocks; see operators/packed.py).
+        return self._fit_packed(df, feats, self.label_col)
 
     def fit_parquet(self, spark, path: str, filesystem=None) -> InfoThSelectorModel:
         """Fit straight from a MATERIALIZED parquet feature matrix via
@@ -293,8 +280,6 @@ class InfoThSelector:
             list_parquet_files,
         )
 
-        if self.loop_engine != "packed":
-            raise ValueError("fit_parquet requires loop_engine='packed'")
         # list_parquet_files raises the clear 'no parquet files' error on
         # an empty directory (r10, advisor find: the old sorted(glob)[0]
         # raised a bare IndexError first) and resolves nested /
@@ -333,18 +318,11 @@ class InfoThSelector:
           ``spark.read.parquet(...)`` gets ``fit_parquet``'s 21× wide
           pack without the caller materializing anything.
         - ``scan``: the ``mapInArrow`` pack — handles every input, and
-          is what ``auto`` takes for DERIVED frames.  Measured r10
-          (BASELINE "spill route vs scan pack"): a derived frame's
-          expression evaluation is row-oriented either way, and the
-          parquet WRITER pays a per-field row cost that crosses the
-          Arrow transit's from ~128 columns up (631 cols × 100k rows:
-          write 18.5 s vs scan pack 12.3 s) — so spilling a derived
-          frame does NOT beat packing it, outside a shallow ~40-100
-          column band (~20%).  ``auto`` therefore never spills.
-        - ``spill``: explicit only — write ``cols`` to temp parquet
-          once (one JVM pass), direct-pack the files.  For callers in
-          the mid-width band, or who point ``spill_dir`` at shared
-          storage a later ``fit_parquet`` can reuse.
+          is what ``auto`` takes for DERIVED frames.  Spilling a derived
+          frame to parquet and direct-packing it does not beat this
+          outside a shallow ~40-100 column band (measured r10: the
+          parquet writer's per-field row cost crosses the Arrow
+          transit's from ~128 columns up), so there is no spill route.
         """
         import time
 
@@ -362,7 +340,7 @@ class InfoThSelector:
                     raise ValueError(
                         "pack_route='direct' requires the input to be a bare "
                         "local parquet scan (optionally column-pruned); this "
-                        "plan computes expressions — use 'auto' or 'spill', "
+                        "plan computes expressions — use 'auto' or 'scan', "
                         "or fit_parquet on the materialized path"
                     )
             else:
@@ -387,53 +365,11 @@ class InfoThSelector:
                 if packed is not None:
                     timings["pack_sec"] = round(time.perf_counter() - t0, 3)
                     return self._fit_from_packed(packed, feats, label, timings)
-        if route == "spill":
-            return self._fit_spill(df, feats, label)
         timings = {"pack_route": "scan"}
         t0 = time.perf_counter()
         packed = PackedMatrix.pack(df, cols)
         timings["pack_sec"] = round(time.perf_counter() - t0, 3)
         return self._fit_from_packed(packed, feats, label, timings)
-
-    def _fit_spill(self, df: DataFrame, feats: list[str], label: str) -> InfoThSelectorModel:
-        import os
-        import shutil
-        import tempfile
-        import time
-        import uuid
-
-        from flink_infotheoretic_feature_selection_spark.operators.packed import PackedMatrix
-
-        cols = feats + [label]
-        # the caller owns spill-dir visibility: the default temp dir is
-        # only executor-readable on single-host masters (local[...] /
-        # local-cluster[...]); on a real cluster pass spill_dir on
-        # shared storage or the pyarrow readers fail loudly
-        base = self.spill_dir or tempfile.gettempdir()
-        spill = os.path.join(base, f"infoth_spill_{uuid.uuid4().hex}")
-        timings: dict = {"pack_route": "spill"}
-        try:
-            t0 = time.perf_counter()
-            # 16 MB row groups bound the direct reader's split atom even
-            # when the plan writes few (or one) output files; ordinary
-            # multi-partition plans write one file per partition anyway
-            (
-                df.select(*cols)
-                .write.option("parquet.block.size", str(16 * 1024 * 1024))
-                .parquet(spill)
-            )
-            timings["spill_write_sec"] = round(time.perf_counter() - t0, 3)
-            t0 = time.perf_counter()
-            packed = PackedMatrix.pack_parquet(
-                df.sparkSession, spill, cols,
-                rows_per_partition=self.LOOP_ROWS_PER_PARTITION,
-            )
-            timings["pack_sec"] = round(time.perf_counter() - t0, 3)
-            # _fit_from_packed unpersists before returning/raising, so the
-            # spill files are never deleted under a live block lineage
-            return self._fit_from_packed(packed, feats, label, timings)
-        finally:
-            shutil.rmtree(spill, ignore_errors=True)
 
     def _fit_from_packed(
         self, packed, feats: list[str], label: str, timings: dict
@@ -452,155 +388,53 @@ class InfoThSelector:
                 offenders = packed.validate_byte_range(feats + [label])
                 if offenders:
                     raise ValueError(self._byte_range_message(offenders))
+            # The layout is decided ONCE, from the pack's free row count,
+            # and that one decision gates both the stats fusion and the
+            # re-layout below (see _plan_relayout).
+            needs_loop = self.criterion.lower() != "mim" and self.n_to_select >= 2
+            relayout = self._plan_relayout(
+                packed.n_rows or 0,
+                len(packed.cols),
+                packed.n_partitions,
+                packed.rdd.context.defaultParallelism,
+                needs_loop,
+            )
             # r12 (guide §1.2): fuse the dims pass with the stage-2
             # relevance histograms — one scan of the blocks instead of
             # two — whenever the per-partition collect stays inside the
             # driver-merge budget (h2 comes back None otherwise and the
-            # flow below falls back to the separate relevances pass,
-            # costing exactly what the unfused flow always cost).  Only
-            # in the bounded-partition regime; at 100 TB partition
-            # counts the treeReduce dims pass keeps the driver volume
-            # flat.  Bit-identical either way (integer pad-merge; pinned
-            # by tests/test_packed.py).
-            #
-            # r13 (ADVICE r12, medium): do NOT fuse when the
-            # parallelism-starved re-layout below is about to fire — the
-            # fused histograms would execute serially inside the very
-            # partitions the rebalance exists to split; run the cheap
-            # stats pass, re-layout, and take the relevances pass over
-            # the spread blocks instead.  The prediction uses the pack's
-            # free n_rows (same numbers the real decision below uses).
-            h2_fused = None
+            # relevances pass runs separately, costing exactly what the
+            # unfused flow always cost).  At 100 TB partition counts the
+            # treeReduce dims pass keeps the driver volume flat.
+            # Bit-identical either way (integer pad-merge; pinned by
+            # tests/test_packed.py).  r13 (ADVICE r12): never fuse ahead
+            # of a starved split — the fused histograms would run
+            # serially inside the very partitions the split exists to
+            # spread; the relevances pass then runs over the spread
+            # blocks instead.
             fuse = (
                 packed.n_partitions * len(packed.cols) * 16
                 <= type(packed).DRIVER_STATS_MAX_BYTES
+                and (relayout is None or relayout[0] != "split")
             )
-            nr = packed.n_rows
-            if fuse and nr and nr >= 2 * self.LOOP_ROWS_PER_PARTITION:
-                sc = packed.rdd.context
-                ideal = -(-nr // self.LOOP_ROWS_PER_PARTITION)
-                target = max(1, min(ideal, sc.defaultParallelism))
-                cells = (nr * len(packed.cols)) / max(packed.n_partitions, 1)
-                if (
-                    packed.n_partitions < -(-target // 2)
-                    and cells >= self.REBALANCE_MIN_CELLS_PER_PART
-                ):
-                    fuse = False
+            timings["relayout"] = relayout
+            timings["stats_fused"] = fuse
+            h2_fused = None
             if fuse:
                 dims, n, h2_fused = packed.dims_count_hist2d(label)
             else:
                 dims, n = packed.dims_and_count()
             timings["stats_sec"] = round(time.perf_counter() - t0, 3)
-            # The re-layout exists for the greedy LOOP (dims/relevances
-            # already ran above it); MIM and k=1 fits never run a loop
-            # pass, so re-laying out for them is pure waste (r13 — the
-            # MIM bench paid a 0.55 s coalesce for zero loop jobs).
-            needs_loop = self.criterion.lower() != "mim" and self.n_to_select >= 2
-            if needs_loop and n >= 2 * self.LOOP_ROWS_PER_PARTITION:
-                sc = packed.rdd.context
-                # ideal = the layout the loop's memory model is built on
-                # (~LOOP_ROWS_PER_PARTITION rows per block); the
-                # core-clamped target exists ONLY for the starved case
-                # (spread few huge blocks across the cores).
-                ideal = -(-n // self.LOOP_ROWS_PER_PARTITION)
-                target = max(1, min(ideal, sc.defaultParallelism))
-                cur = packed.n_partitions
-                # Re-layout only for GROSS mismatch: parallelism-starved
-                # (cur < half the core-clamped target — e.g. one giant
-                # unsplit file) pays a one-time chunk shuffle; over-split
-                # (cur > 4× IDEAL — e.g. a 100 TB scan's millions of tiny
-                # input splits) is a shuffle-free coalesce DOWN TO IDEAL.
-                # The over-split test compares against IDEAL, never the
-                # core-clamped target: at 60M×631 the pack's 901
-                # right-sized blocks exceeded 4×32 cores and the old
-                # band coalesced them into 32 blocks of 1.9M rows /
-                # 1.2 GB each, whose concat OOM-killed the box — more
-                # partitions than cores is exactly how big data is
-                # supposed to look (r10 decade-run find).
-                #
-                # r12 (guide §2.4 — remove shuffles outright): the
-                # starved re-layout must also be WORTH its own job + a
-                # full shuffle of the packed bytes.  Spreading a
-                # partition only pays when the per-task histogram work it
-                # removes, summed over the loop's k-1 iterations, exceeds
-                # the one-time re-layout; below ~32M cells (≈32 MB of
-                # int8 blocks) per partition the per-iteration task
-                # compute is tens of ms and the shuffle can never win it
-                # back (measured sf0.1, 600k×33, local[32]: the 3→10
-                # split cost 1.3-1.8 s and the loop iteration read
-                # 0.39 s vs 0.38 s — parity).  A genuinely starved big
-                # input (one unsplit multi-GB file) is far above the
-                # threshold and still re-lays out.  Partition-count
-                # choices never affect results: histogram merges are
-                # partition-agnostic integer sums (pinned by
-                # tests/test_packed.py).
-                # r13: the over-split band tightened 4×ideal → 2×ideal.
-                # The loop's per-pass merge volume grows linearly with
-                # partition count (each partition emits one partial per
-                # (cond, feature) table), so an over-split layout pushes
-                # the pass into the shuffled combineByKey regime where
-                # the one-stage driver merge would do.  Measured sf0.1,
-                # 32 blocks vs the coalesced ideal 10: pass m=1
-                # 0.68 → 0.33 s, m=8 1.42 → 0.82 s, against a one-time
-                # shuffle-free coalesce of 0.64 s.  The coalesce target
-                # stays IDEAL (≈LOOP_ROWS_PER_PARTITION-row blocks, the
-                # loop's memory model) — never the core count, which is
-                # what OOM-killed the r10 decade run.
-                cells_per_part = (n * len(feats + [label])) / max(cur, 1)
-                if cur < -(-target // 2) and cells_per_part >= self.REBALANCE_MIN_CELLS_PER_PART:
-                    t0 = time.perf_counter()
-                    packed = packed.rebalance(target, self.LOOP_ROWS_PER_PARTITION)
-                    timings["rebalance_sec"] = round(time.perf_counter() - t0, 3)
-                elif cur > 2 * ideal:
-                    t0 = time.perf_counter()
-                    packed = packed.rebalance(ideal, self.LOOP_ROWS_PER_PARTITION)
-                    timings["rebalance_sec"] = round(time.perf_counter() - t0, 3)
+            if relayout is not None:
+                t0 = time.perf_counter()
+                packed = packed.rebalance(relayout[1], self.LOOP_ROWS_PER_PARTITION)
+                timings["rebalance_sec"] = round(time.perf_counter() - t0, 3)
             timings["loop_partitions"] = packed.n_partitions
-            # matrix=None: with a packed substrate _fit_stages never
-            # touches the DataFrame (both histogram passes and the
-            # partition probe run on the blocks)
-            return self._fit_stages(
-                None, feats, label, dims, n, dims[label], packed=packed,
-                timings=timings, h2_fused=h2_fused,
-            )
+            return self._fit_stages(packed, feats, label, dims, n, timings, h2_fused)
         finally:
             packed.unpersist()
 
     # -- internal ----------------------------------------------------------
-
-    @staticmethod
-    def _validate_byte_range(df: DataFrame, feats: list[str]) -> None:
-        """Input validation (``InfoSelector.scala:404-416``).
-
-        Documented divergence: the reference's message says "[0, 255]"
-        while its code accepts −128..127 and only checks the sparse path
-        (SURVEY.md §1.2) — yet a negative value would crash its histogram
-        indexing just like ours.  We enforce what both engines actually
-        require — integers in [0, 255] — on every path, opt-in, as ONE
-        aggregation job (no extra pass per column).
-        """
-        from pyspark.sql import functions as F
-
-        # isNull is a separate disjunct: every other predicate evaluates
-        # to NULL for a null cell and F.sum skips NULLs, so without it a
-        # null feature passes "validation" and crashes the fit later with
-        # an unrelated indexing error.
-        bad = df.select(
-            *[
-                F.sum(
-                    (
-                        F.col(c).isNull()
-                        | (F.col(c) < 0)
-                        | (F.col(c) > 255)
-                        | (F.col(c).cast("double") % 1 != 0)
-                    ).cast("long")
-                ).alias(c)
-                for c in feats
-            ]
-        ).collect()[0]
-        offenders = [c for c in feats if (bad[c] or 0) > 0]
-        if offenders:
-            raise ValueError(InfoThSelector._byte_range_message(offenders))
 
     @staticmethod
     def _byte_range_message(offenders: list[str]) -> str:
@@ -630,81 +464,91 @@ class InfoThSelector:
             )
         return df
 
-    # Rows per cache partition the loop aims for, matched to the Arrow
-    # batch size it clamps (one batch per task amortizes the per-batch
-    # Python/Arrow overhead).  Matched to sf0.1 measurement: the natural
-    # parquet layout gave 3 partitions on a 32-core box — every loop
-    # pass ran 3-wide; ~64k-row partitions cut per-iteration wall time
-    # 1.05 s → 0.52 s.  Data below 2× this floor is never repartitioned
-    # (the shuffle would cost more than it saves).
+    # Rows per packed block the loop aims for.  Matched to sf0.1
+    # measurement: the natural parquet layout gave 3 partitions on a
+    # 32-core box — every loop pass ran 3-wide; ~64k-row partitions cut
+    # per-iteration wall time 1.05 s → 0.52 s.  Data below 2× this floor
+    # is never re-laid out (the shuffle would cost more than it saves).
     LOOP_ROWS_PER_PARTITION = 65536
     # Minimum per-partition cell count (rows × packed columns) for the
-    # parallelism-starved re-layout to fire — see _fit_from_packed.
+    # parallelism-starved re-layout to fire — see _plan_relayout.
     # Scale-free: compares actual per-partition work against the fixed
     # cost of one extra job + shuffling every packed byte once.
     REBALANCE_MIN_CELLS_PER_PART = 32 * 1024 * 1024
 
-    def _loop_partition_target(self, matrix: DataFrame, n: int) -> int | None:
-        """Partition count the loop should run at, or None to keep the
-        input layout (small data: a shuffle would cost more than it
-        saves; near-target layouts: good enough)."""
-        if n < 2 * self.LOOP_ROWS_PER_PARTITION:
+    @classmethod
+    def _plan_relayout(
+        cls,
+        n_rows: int,
+        n_cols: int,
+        n_partitions: int,
+        parallelism: int,
+        needs_loop: bool,
+    ) -> tuple[str, int] | None:
+        """The fit's one layout decision, a pure function of the pack's
+        shape: ``None`` (keep the layout), ``("split", target)`` or
+        ``("coalesce", ideal)``.
+
+        The re-layout exists for the greedy LOOP (dims and relevances
+        run before or regardless of it), so MIM and k=1 fits
+        (``needs_loop`` False) never re-lay out (r13 — the MIM bench
+        paid a 0.55 s coalesce for zero loop jobs).  Data under
+        2 × ``LOOP_ROWS_PER_PARTITION`` rows is never re-laid out either.
+
+        ``ideal`` is the layout the loop's memory model is built on
+        (~``LOOP_ROWS_PER_PARTITION`` rows per block); the core-clamped
+        ``target`` exists ONLY for the starved case (spread few huge
+        blocks across the cores).  Only GROSS mismatches re-lay out:
+
+        - split: fewer than half the core-clamped target partitions
+          (e.g. one giant unsplit file) AND at least
+          ``REBALANCE_MIN_CELLS_PER_PART`` cells per partition.  r12
+          (guide §2.4): the split's own job + full shuffle of the packed
+          bytes must be won back by the per-task histogram work it
+          removes over the loop's k-1 passes; below ~32M cells per
+          partition it never is (measured sf0.1, 600k×33, local[32]: the
+          3→10 split cost 1.3-1.8 s for a 0.39 s vs 0.38 s loop pass).
+        - coalesce: more than 2 × IDEAL partitions, shuffle-free, down to
+          IDEAL — never to the core count: at 60M×631 the pack's 901
+          right-sized blocks exceeded 4×32 cores and a core-count
+          coalesce made 1.2 GB blocks whose concat OOM-killed the box
+          (r10).  r13 tightened the band from 4× to 2×: each partition
+          emits one partial per (cond, feature) table, so an over-split
+          layout pushes loop passes into the shuffled merge regime
+          (measured sf0.1, 32 blocks vs the coalesced 10: pass m=1
+          0.68 → 0.33 s, m=8 1.42 → 0.82 s, for a one-time 0.64 s
+          coalesce).
+
+        Partition counts never affect results: histogram merges are
+        partition-agnostic integer sums (pinned by tests/test_packed.py).
+        """
+        rows_per_part = cls.LOOP_ROWS_PER_PARTITION
+        if not needs_loop or n_rows < 2 * rows_per_part:
             return None
-        sc = matrix.sparkSession.sparkContext
-        target = max(
-            1, min(-(-n // self.LOOP_ROWS_PER_PARTITION), sc.defaultParallelism)
-        )
-        cur = matrix.rdd.getNumPartitions()
-        # same gross-mismatch band as the packed engine: starved (< half
-        # the target) pays the re-layout, over-split (> 4x) coalesces
-        # shuffle-free in _fit_cached, near-target layouts are kept
-        return None if -(-target // 2) <= cur <= 4 * target else target
-
-    def _fit_cached(self, matrix: DataFrame, feats: list[str], label: str) -> InfoThSelectorModel:
-        from flink_infotheoretic_feature_selection_spark.session import conf_clamp
-
-        # one job: dims + count together (also materializes the cache)
-        dims, n = feature_dims_and_count(matrix, feats + [label])
-        y_dim = dims[label]
-        target = self._loop_partition_target(matrix, n)
-
-        with conf_clamp(
-            matrix.sparkSession,
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            "65536",
+        ideal = -(-n_rows // rows_per_part)
+        target = max(1, min(ideal, parallelism))
+        cells_per_part = n_rows * n_cols / max(n_partitions, 1)
+        if (
+            n_partitions < -(-target // 2)
+            and cells_per_part >= cls.REBALANCE_MIN_CELLS_PER_PART
         ):
-            repart = None
-            try:
-                if target is not None:
-                    # input-file-derived partitioning is parallelism-starved
-                    # (or over-split): re-layout ONCE, reuse k times.
-                    # Over-split consolidation is a shuffle-free coalesce
-                    # (the packed engine's band, r8) — only the starved
-                    # case pays a full repartition shuffle.
-                    cur = matrix.rdd.getNumPartitions()
-                    relayout = matrix.coalesce(target) if cur > target else matrix.repartition(target)
-                    repart = relayout.persist(StorageLevel.MEMORY_AND_DISK)
-                    matrix = repart
-                return self._fit_stages(matrix, feats, label, dims, n, y_dim)
-            finally:
-                if repart is not None:
-                    repart.unpersist()
+            return ("split", target)
+        if n_partitions > 2 * ideal:
+            return ("coalesce", ideal)
+        return None
 
     def _fit_stages(
         self,
-        matrix: DataFrame | None,  # None iff packed is provided
+        packed,
         feats: list[str],
         label: str,
         dims: dict[str, int],
         n: int,
-        y_dim: int,
-        packed=None,
-        timings: dict | None = None,
+        timings: dict,
         h2_fused: dict | None = None,
     ) -> InfoThSelectorModel:
         import time as _time
 
-        timings = {} if timings is None else timings
         # Stage 2 — relevances: one histogram pass over all features
         # (or zero, when the fused dims+hist2d pass already produced the
         # global tables — driver-side MI math only).
@@ -714,15 +558,10 @@ class InfoThSelector:
                 c: mutual_info(h2_fused[c], n, emit_f32=self.emit_f32)
                 for c in feats
             }
-        elif packed is not None:
+        else:
             relevances = packed.relevances(
                 feats, label, dims, n, emit_f32=self.emit_f32
             )
-        else:
-            h2 = collect_hist2d(
-                hist2d(matrix, feats, label, dims, y_dim), feats, dims, y_dim
-            )
-            relevances = {c: mutual_info(h2[c], n, emit_f32=self.emit_f32) for c in feats}
         timings["relevance_sec"] = round(_time.perf_counter() - _t0, 3)
 
         state: dict[str, Criterion] = {
@@ -742,7 +581,6 @@ class InfoThSelector:
             )
             path = [(c, relevances[c]) for c in order[: self.n_to_select]]
         else:
-            n_parts = None if packed is not None else matrix.rdd.getNumPartitions()
             remaining = list(feats)
             # Speculative prefetch (r13, guide §1.2 — the greedy loop is
             # k−1 SEQUENTIAL jobs and at bench scale each pays far more
@@ -786,23 +624,15 @@ class InfoThSelector:
                 if len(path) >= self.n_to_select or not remaining:
                     break
                 # Redundancy pass: 3-D histograms of every remaining feature
-                # vs (selected=best, class) — InfoTheory.scala:445-461.
-                # Distributed dense-blob route (see hist3d_mi_cmi): one
-                # packed int32 count matrix per (feature, partition)
-                # shipped through a per-feature merge, MI/CMI computed
-                # executor-side, n_features scalar rows collected.  An
-                # Arrow plan, NOT codegen: each iteration is a fresh plan
-                # (remaining shrinks, best changes) and posexplode codegen
-                # compilation costs seconds per fresh plan.  One-shot
-                # passes (relevance init, the hist2d/hist3d gate queries)
-                # keep the codegen route.
+                # vs (selected=best, class) — InfoTheory.scala:445-461 —
+                # one packed pass (hist3d_mi_cmi_multi) per launch.
                 if best in prefetched:
                     # the prefetching pass scored a SUPERSET of the
                     # current remaining set (remaining only shrinks)
                     scores = prefetched.pop(best)
                     spec_hits += 1
                     consumed_since_launch += 1
-                elif packed is not None:
+                else:
                     if loop_jobs and spec_auto:
                         width = (
                             min(2 * consumed_since_launch + 1, 7)
@@ -832,20 +662,6 @@ class InfoThSelector:
                     loop_jobs += 1
                     scores = multi.pop(best)
                     prefetched.update(multi)
-                else:
-                    scores = hist3d_mi_cmi(
-                        matrix,
-                        remaining,
-                        best,
-                        label,
-                        dims,
-                        dims[best],
-                        y_dim,
-                        n,
-                        emit_f32=self.emit_f32,
-                        n_partitions=n_parts,
-                    )
-                    loop_jobs += 1
                 for c in remaining:
                     state[c].update(*scores[c])
             timings["loop_jobs"] = loop_jobs
@@ -913,6 +729,7 @@ class SparseInfoThSelector:
         tie_precision: int | None = 5,
         loop_engine: str = "sql",
     ) -> None:
+        _check_selection_args(n_to_select, criterion)
         if loop_engine not in ("packed", "sql"):
             raise ValueError(f"loop_engine must be 'packed' or 'sql', got {loop_engine!r}")
         self.n_features = int(n_features)

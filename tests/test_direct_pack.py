@@ -98,13 +98,6 @@ def test_fit_parquet_null_column_fails_like_fit(spark, tmp_path):
         InfoThSelector(n_to_select=2).fit(spark.read.parquet(str(p)))
 
 
-def test_fit_parquet_rejects_arrow_engine(spark, tmp_path):
-    p = tmp_path / "m.parquet"
-    _write_matrix(p)
-    with pytest.raises(ValueError, match="loop_engine"):
-        InfoThSelector(n_to_select=2, loop_engine="arrow").fit_parquet(spark, str(p))
-
-
 # ---------------------------------------------------------------------------
 # r10 — pack-route auto-detection (VERDICT ask #1), recursive listing
 # (advisor finds), uint8 block compaction (VERDICT ask #4), spill guard.
@@ -155,7 +148,7 @@ def test_all_pack_routes_bit_identical(spark, tmp_path):
     _write_matrix(p)
     bare = spark.read.parquet(str(p))
     paths = {}
-    for route in ("auto", "scan", "spill", "direct"):
+    for route in ("auto", "scan", "direct"):
         m = _sel(route).fit(bare)
         assert m.fit_timings["pack_route"] in (route, "direct")
         paths[route] = tuple(m.selection_path)

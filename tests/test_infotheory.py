@@ -79,40 +79,10 @@ def test_mi_nonnegative_random():
         assert mutual_info(counts, counts.sum()) >= -1e-12
 
 
-def test_hist3d_mi_cmi_branches_agree(spark, monkeypatch):
-    # The adaptive redundancy pass has two merge branches: driver-side
-    # (small blob volume — what every local test exercises naturally) and
-    # the distributed applyInPandas merge (the 100 TB path, which only
-    # engages above the volume bound).  Force BOTH on the same input and
-    # pin bit-identical scores, so the scale path can never silently
-    # drift from the verified one.
-    from flink_infotheoretic_feature_selection_spark.datasets import FEATURE_NAMES, features_dense
-    from flink_infotheoretic_feature_selection_spark.operators import histogram
-    from flink_infotheoretic_feature_selection_spark.operators.histogram import (
-        feature_dims_and_count,
-        hist3d_mi_cmi,
-    )
-
-    df = features_dense(spark, "/root/testdata/sf0.001")
-    matrix = df.select(*FEATURE_NAMES, "label").persist()
-    try:
-        dims, n = feature_dims_and_count(matrix, FEATURE_NAMES + ["label"])
-        feats = [c for c in FEATURE_NAMES[:6] if c != "f0"]
-        args = (matrix, feats, "f0", "label", dims, dims["f0"], dims["label"], n)
-        driver_side = hist3d_mi_cmi(*args)
-        monkeypatch.setattr(histogram, "BLOB_DRIVER_MERGE_MAX_BYTES", 0)
-        distributed = hist3d_mi_cmi(*args)
-    finally:
-        matrix.unpersist()
-    assert driver_side == distributed
-    assert set(driver_side) == set(feats)
-    assert all(mi >= -1e-12 for mi, _ in driver_side.values())
-
-
 def test_arrow_hist_routes_handle_y_col_among_features(spark):
     # duplicate-name select trap: pyarrow get_field_index returns -1 for
     # a duplicated column name and column(-1) silently reads the LAST
-    # column — the arrow routes must dedupe like hist3d_mi_cmi does.
+    # column — the arrow routes must dedupe their pass columns.
     import pandas as pd
 
     from flink_infotheoretic_feature_selection_spark.operators.histogram import (

@@ -1,15 +1,16 @@
 """PackedMatrix (operators/packed.py) — bit-equality against the
-DataFrame histogram routes, both merge regimes, and fit parity between
-``loop_engine="packed"`` and ``loop_engine="arrow"``.
+DataFrame histogram routes and NumPy ``bincount`` oracles in both merge
+regimes, plus the fit's layout decisions.
 
-The packed substrate replaces the per-iteration mapInArrow pass of the
-greedy loop; these tests pin that the replacement changes NOTHING about
-the numbers — same int64 partition accumulators, same exact integer
-merges, same MI/CMI floats, same selection paths.
+The packed substrate is the selector's one dense engine; these tests pin
+that its passes change NOTHING about the numbers — exact integer merges,
+the same MI/CMI floats, the same selection paths — whatever the merge
+regime, batch width or partition layout.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from flink_infotheoretic_feature_selection_spark import InfoThSelector
@@ -19,10 +20,12 @@ from flink_infotheoretic_feature_selection_spark.operators.histogram import (
     collect_hist2d,
     feature_dims_and_count,
     hist2d,
-    hist3d_mi_cmi,
 )
 from flink_infotheoretic_feature_selection_spark.operators.packed import PackedMatrix
-from flink_infotheoretic_feature_selection_spark.functions.infotheory import mutual_info
+from flink_infotheoretic_feature_selection_spark.functions.infotheory import (
+    mi_and_cmi,
+    mutual_info,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -60,32 +63,42 @@ def test_relevances_bit_equal_hist2d_route(matrix, packed):
 
 @pytest.mark.parametrize("forced_regime", ["driver", "distributed"])
 def test_hist3d_mi_cmi_bit_equal_both_regimes(matrix, packed, forced_regime, monkeypatch):
+    """The loop pass (width 1) in BOTH merge regimes equals ``mi_and_cmi``
+    on ``np.bincount`` tables built straight from the pandas matrix —
+    an oracle that shares no code with the packed merge."""
+    pdf = matrix.toPandas()
     feats = [c for c in matrix.columns if c != "label"]
-    dims, n = _dims_n(matrix)
+    dims = {c: int(pdf[c].max()) + 1 for c in pdf.columns}
+    n = len(pdf)
     best, remaining = feats[3], [c for c in feats if c != feats[3]]
+    yd, zd = dims[best], dims["label"]
+    yz = pdf[best].to_numpy(np.int64) * zd + pdf["label"].to_numpy(np.int64)
+    want = {
+        c: mi_and_cmi(
+            np.bincount(
+                pdf[c].to_numpy(np.int64) * yd * zd + yz, minlength=dims[c] * yd * zd
+            ).reshape(dims[c], yd, zd),
+            n,
+            emit_f32=True,
+        )
+        for c in remaining
+    }
     if forced_regime == "distributed":
-        # force the combineByKey/executor-side-MI path on tiny data
+        # force the shuffled merge with executor-side MI/CMI on tiny data
         monkeypatch.setattr(histogram, "BLOB_DRIVER_MERGE_MAX_BYTES", 0)
-    want = hist3d_mi_cmi(
-        matrix, remaining, best, "label", dims, dims[best], dims["label"], n,
-        emit_f32=True,
-    )
-    got = packed.hist3d_mi_cmi(remaining, best, "label", dims, n, emit_f32=True)
-    assert got == want  # exact float equality in BOTH regimes
-
-
-@pytest.mark.parametrize("criterion", ["mrmr", "cmim", "mim"])
-def test_fit_identical_packed_vs_arrow(matrix, criterion):
-    a = InfoThSelector(n_to_select=6, criterion=criterion, loop_engine="arrow").fit(matrix)
-    p = InfoThSelector(n_to_select=6, criterion=criterion, loop_engine="packed").fit(matrix)
-    assert p.selection_path == a.selection_path
-    assert p.relevances == a.relevances
-    assert p.selected_cols == a.selected_cols
+    got = packed.hist3d_mi_cmi_multi(remaining, [best], "label", dims, n, emit_f32=True)
+    assert got == {best: want}  # exact float equality in BOTH regimes
 
 
 def test_loop_engine_validated():
-    with pytest.raises(ValueError, match="loop_engine"):
-        InfoThSelector(loop_engine="flink")
+    """The dense selector has one engine and three pack routes: the
+    removed options are rejected, not silently ignored."""
+    with pytest.raises(TypeError, match="loop_engine"):
+        InfoThSelector(loop_engine="packed")
+    with pytest.raises(TypeError, match="spill_dir"):
+        InfoThSelector(spill_dir="/tmp")
+    with pytest.raises(ValueError, match="pack_route"):
+        InfoThSelector(pack_route="spill")
 
 
 def test_dims_and_count_matches_catalyst_route(matrix, packed):
@@ -117,13 +130,13 @@ def test_rebalance_preserves_histograms(matrix, packed):
     feats = [c for c in matrix.columns if c != "label"]
     dims, n = _dims_n(matrix)
     best, remaining = feats[0], feats[1:6]
-    want = packed.hist3d_mi_cmi(remaining, best, "label", dims, n)
+    want = packed.hist3d_mi_cmi_multi(remaining, [best], "label", dims, n)
     pm2 = PackedMatrix.pack(matrix, feats + ["label"], n_partitions=2)
     try:
         pm3 = pm2.rebalance(6, rows_per_partition=max(1, n // 6))
         assert pm3.n_partitions >= 2  # actually re-laid-out
         assert pm3.dims_and_count() == (dims, n)
-        assert pm3.hist3d_mi_cmi(remaining, best, "label", dims, n) == want
+        assert pm3.hist3d_mi_cmi_multi(remaining, [best], "label", dims, n) == want
         pm3.unpersist()
     finally:
         pm2.unpersist()
@@ -196,9 +209,9 @@ def test_pack_keeps_layout_when_target_none(matrix):
 def test_relevances_bit_equal_distributed_regime(matrix, packed, monkeypatch):
     # r8 advisor fix: relevances used to collect un-merged per-partition
     # partials unconditionally (n_partitions × Σxd × y_dim driver bytes,
-    # unbounded in partition count); it now shares hist3d_mi_cmi's
-    # two-regime merge. Forcing the combineByKey regime must change
-    # NOTHING about the floats.
+    # unbounded in partition count); it now shares the loop pass's
+    # two-regime merge (_merge_partials). Forcing the shuffled regime
+    # must change NOTHING about the floats.
     feats = [c for c in matrix.columns if c != "label"]
     dims, n = _dims_n(matrix)
     want = packed.relevances(feats, "label", dims, n, emit_f32=True)
@@ -380,8 +393,8 @@ def test_dims_count_hist2d_budget_fallback_and_errors(spark, matrix, packed, mon
 @pytest.mark.parametrize("forced_regime", ["driver", "distributed"])
 def test_hist3d_mi_cmi_multi_bit_equal_single(matrix, packed, forced_regime, monkeypatch):
     """r13: the speculative batch pass returns, for every conditioning
-    column, exactly the pairs a dedicated single-cond pass returns —
-    in BOTH merge regimes."""
+    column, exactly the pairs a width-1 pass returns — in BOTH merge
+    regimes."""
     feats = [c for c in matrix.columns if c != "label"]
     dims, n = _dims_n(matrix)
     conds = [feats[3], feats[0], feats[5]]
@@ -391,8 +404,8 @@ def test_hist3d_mi_cmi_multi_bit_equal_single(matrix, packed, forced_regime, mon
     got = packed.hist3d_mi_cmi_multi(remaining, conds, "label", dims, n, emit_f32=True)
     assert sorted(got) == sorted(conds)
     for s in conds:
-        want = packed.hist3d_mi_cmi(remaining, s, "label", dims, n, emit_f32=True)
-        assert got[s] == want  # exact float equality
+        want = packed.hist3d_mi_cmi_multi(remaining, [s], "label", dims, n, emit_f32=True)
+        assert got[s] == want[s]  # exact float equality
 
 
 @pytest.mark.parametrize("criterion", ["mrmr", "jmi", "cmim", "icap", "mifs"])
@@ -443,8 +456,73 @@ def test_fusion_skipped_when_rebalance_will_fire(spark, matrix, monkeypatch):
     monkeypatch.setattr(PackedMatrix, "dims_count_hist2d", boom)
     m = Sel(n_to_select=3, criterion="mrmr").fit(few)
     assert "rebalance_sec" in m.fit_timings
+    assert m.fit_timings["relayout"][0] == "split"
+    assert m.fit_timings["stats_fused"] is False
     assert m.selection_path == m_fused.selection_path
     assert m.relevances == m_fused.relevances
+
+
+@pytest.mark.parametrize("criterion, k", [("mim", 3), ("mrmr", 1)])
+def test_no_loop_fit_keeps_fused_stats_on_starved_input(matrix, monkeypatch, criterion, k):
+    """ADVICE r13 (medium): a fit that runs no loop pass (MIM, k=1) never
+    re-lays out, so the same starved input that skips fusion for a k>=2
+    fit must still take the fused dims+hist2d pass — one decision gates
+    both."""
+    from flink_infotheoretic_feature_selection_spark.selector import InfoThSelector as Sel
+
+    few = matrix.coalesce(1)
+    want = Sel(n_to_select=k, criterion=criterion).fit(few)
+
+    # the same forcing as test_fusion_skipped_when_rebalance_will_fire
+    monkeypatch.setattr(Sel, "REBALANCE_MIN_CELLS_PER_PART", 0)
+    monkeypatch.setattr(Sel, "LOOP_ROWS_PER_PARTITION", 64)
+    calls = []
+    fused = PackedMatrix.dims_count_hist2d
+
+    def spy(self, *a, **kw):
+        calls.append(self.n_partitions)
+        return fused(self, *a, **kw)
+
+    def no_rebalance(self, *a, **kw):  # pragma: no cover - failure path
+        raise AssertionError("a fit without loop passes must not re-lay out")
+
+    monkeypatch.setattr(PackedMatrix, "dims_count_hist2d", spy)
+    monkeypatch.setattr(PackedMatrix, "rebalance", no_rebalance)
+    m = Sel(n_to_select=k, criterion=criterion).fit(few)
+    assert calls == [1]
+    assert m.fit_timings["relayout"] is None
+    assert m.fit_timings["stats_fused"] is True
+    assert "rebalance_sec" not in m.fit_timings
+    assert m.selection_path == want.selection_path
+    assert m.relevances == want.relevances
+
+
+# (n_rows, n_cols, n_partitions, parallelism) -> plan when the fit runs
+# loop passes; a fit without them (MIM, k=1) never re-lays out
+_LAYOUTS = [
+    # starved: one unsplit 6M-row file on 32 cores, far above the cost gate
+    ((6_000_000, 33, 1, 32), ("split", 32)),
+    # starved but cheap: sf0.1's 3 splits hold ~6.6M cells each (< 32M)
+    ((600_000, 33, 3, 32), None),
+    # starved on a small box: the core clamp sets the split target
+    ((6_000_000, 33, 1, 4), ("split", 4)),
+    # over-split: 32 blocks for a 10-block ideal -> coalesce to IDEAL
+    ((600_000, 33, 32, 32), ("coalesce", 10)),
+    # over-split 100 TB shape: 901 right-sized blocks stay (r10 OOM find)
+    ((60_000_000, 632, 901, 32), None),
+    # near-ideal, and exactly at the 2x band edge
+    ((600_000, 33, 10, 32), None),
+    ((600_000, 33, 20, 32), None),
+    # small data (< 2x LOOP_ROWS_PER_PARTITION rows) is never re-laid out
+    ((100_000, 33, 100, 32), None),
+]
+
+
+@pytest.mark.parametrize("needs_loop", [True, False])
+@pytest.mark.parametrize("layout, plan", _LAYOUTS)
+def test_plan_relayout_table(layout, plan, needs_loop):
+    got = InfoThSelector._plan_relayout(*layout, needs_loop)
+    assert got == (plan if needs_loop else None)
 
 
 def test_pack_records_n_rows(matrix, packed):

@@ -5,7 +5,8 @@ Full-fit wall ABBA at sf0.1 bottoms out at ~±10% resolution on this
 host (5-8 s fits, within-tree min spread of that order even in one
 window).  When the change under test is per-ITERATION executor code,
 measure the iteration directly instead: pack + rebalance ONCE, then run
-hist3d_mi_cmi (the greedy loop's entire per-iteration job) 30 times and
+the width-1 hist3d_mi_cmi_multi pass (the greedy loop's entire
+per-iteration job without speculation) 30 times and
 report min/median.  30 reps x interleaved subprocess runs resolves
 ~2-3% effects that the wall protocol cannot.
 
@@ -35,14 +36,14 @@ packed = PackedMatrix.pack(df, feats + ["label"])
 dims, n = packed.dims_and_count()
 packed = packed.rebalance(10, 60000)
 # y=selected feature, z=label — the REAL loop's argument order
-# (selector.py: hist3d_mi_cmi(remaining, best, label, ...)); an earlier
-# draft swapped y/z, which transposes the histogram planes and would
-# mis-measure any change asymmetric in the y/z roles
-packed.hist3d_mi_cmi(feats[:31], feats[31], "label", dims, n)  # warm-up
+# (selector.py: hist3d_mi_cmi_multi(remaining, [best, ...], label, ...));
+# an earlier draft swapped y/z, which transposes the histogram planes and
+# would mis-measure any change asymmetric in the y/z roles
+packed.hist3d_mi_cmi_multi(feats[:31], [feats[31]], "label", dims, n)  # warm-up
 times = []
 for i in range(30):
     t0 = time.perf_counter()
-    packed.hist3d_mi_cmi([f for f in feats if f != feats[i % 32]], feats[i % 32], "label", dims, n)
+    packed.hist3d_mi_cmi_multi([f for f in feats if f != feats[i % 32]], [feats[i % 32]], "label", dims, n)
     times.append(time.perf_counter() - t0)
 print("LOOP_RESULT " + json.dumps({
     "min": round(min(times), 4), "p50": round(statistics.median(times), 4),

@@ -9,7 +9,7 @@ line of results for tests/test_local_cluster.py to compare against the
 same computations under the in-process ``local[*]`` session.
 
 Covered (the VERDICT's list): dense selector fit on every pack route
-(auto→direct / scan / spill), the packed distributed-merge regime
+(auto→direct / scan), the packed distributed-merge regime
 (driver-merge bound forced to 0 so partials flow through combineByKey
 across REAL executor boundaries), the sparse selector (zipper-join
 co-location check under multi-executor AQE), a wide fit, LSH dedup
@@ -85,7 +85,7 @@ def main(cfg_path: str) -> None:
     feats = cfg["feats"]
     bare = spark.read.parquet(matrix)
     sels = {}
-    for route in ("auto", "scan", "spill"):
+    for route in ("auto", "scan"):
         m = InfoThSelector(
             n_to_select=4, criterion="mrmr", feature_cols=feats,
             emit_f32=False, pack_route=route,
@@ -93,7 +93,7 @@ def main(cfg_path: str) -> None:
         sels[route] = q5_path(m)
         if route == "auto":
             out["dense_auto_route"] = m.fit_timings.get("pack_route")
-    assert sels["auto"] == sels["scan"] == sels["spill"], sels
+    assert sels["auto"] == sels["scan"], sels
     out["dense_selection"] = sels["auto"]
     # sampled AFTER real jobs so both executor JVMs have registered
     # (right at startup the status tracker may only know the driver)

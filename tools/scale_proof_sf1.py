@@ -4,12 +4,11 @@ Builds a deterministic 10x replica of the sf0.1 lineitem table (~6M
 rows, "sf1") and runs the mRMR k=10 greedy fit on it, recording:
 
 - wall time + per-iteration time vs the sf0.1 record (BASELINE.md);
-- WHICH hist3d_mi_cmi merge path engaged: the driver blob merge is used
+- WHICH loop-pass merge path engaged: the driver merge is used
   only while ``partitions x sum(xdims) x y_dim x z_dim x 4B`` stays
   under BLOB_DRIVER_MERGE_MAX_BYTES (32 MB); at sf1 the loop cache
   re-lays-out to defaultParallelism partitions and the volume crosses
-  the bound, so the distributed applyInPandas merge — the 100 TB path —
-  must take over.  This script computes the exact bound inputs and
+  the bound, so the shuffled merge — the 100 TB path — must take over.  This script computes the exact bound inputs and
   prints the engaged path per iteration shape.
 - selection-path invariance: row duplication scales every contingency
   count uniformly, so MI/CMI and therefore the greedy path must be

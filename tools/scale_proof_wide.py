@@ -6,8 +6,8 @@ reference's own default workload is 631 attributes x ~8k rows
 loop's per-iteration cost is linear in the REMAINING features and the
 blob volume grows with features x dims^2.  This script builds that
 shape (plus the README toy: 100 features x 100k rows), runs mRMR k=10,
-and records which hist3d_mi_cmi merge route engages (driver blob merge
-vs the distributed applyInPandas merge — the decision formula from
+and records which loop-pass merge route engages (driver merge vs the
+shuffled merge — the decision formula from
 ``histogram.py::BLOB_DRIVER_MERGE_MAX_BYTES``).
 
 Deterministic synthetic data (seeded numpy): feature j has dim
