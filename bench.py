@@ -71,7 +71,9 @@ RESULTS: dict[str, float] = {}
 MEDIANS: dict[str, float] = {}
 # r13 (VERDICT r12 ask #5, additions-only): estimated sequential Spark
 # job count per selector/loop-family query, from the fitted model's own
-# fit_timings — pack(1) + stats(1) + optional rebalance(1) + loop_jobs.
+# fit_timings — pack(1) + stats(1) + optional rebalance(1) + the separate
+# relevances job when stats were not fused(1) + loop_jobs; a local-regime
+# fit is pack(1) + its one collect(1), every later pass on the driver.
 # The full payload emits queries_excess = min_sec − est_jobs × the
 # measured job_floor_sec, so the PERF diff can separate substrate time
 # from scheduler floor on the job-count-bound queries.
@@ -82,9 +84,12 @@ def _est_fit_jobs(model) -> int | None:
     ft = getattr(model, "fit_timings", None)
     if not ft:
         return None
+    if ft.get("relayout") == ("local", 1):
+        return 2
     return (
         2
         + (1 if "rebalance_sec" in ft else 0)
+        + (0 if ft.get("stats_fused", True) else 1)
         + int(ft.get("loop_jobs", 0))
     )
 

@@ -29,18 +29,32 @@ over data whose layout never changes across k iterations.
 Scale shape (100 TB): the packed RDD is the same bytes as the DataFrame
 cache (int8/int16 columns, per-partition dict overhead amortized), it
 inherits the loop's 65536-rows-per-partition layout, and every
-histogram pass merges its per-block int32 partials through ONE
-two-regime helper, :func:`_merge_partials`: a pass volume under
-``histogram.BLOB_DRIVER_MERGE_MAX_BYTES`` is collected and summed on the
-driver (one stage, no shuffle); above the bound the partials flow
-through a shuffled per-key combine (int64 accumulators — merge order
-cannot change exact integer sums) and MI/CMI run executor-side, so the
-driver collects only merged results.  Bit-equality of both regimes against
-``np.bincount`` tables is pinned by tests/test_packed.py.
+histogram pass runs one per-block closure over the blocks.  Where the
+blocks live and how the per-block int32 partials merge is decided in
+ONE dispatch, :func:`_map_blocks` plus :func:`_merge_partials`, which
+gives three regimes:
+
+- local: a matrix small enough to hold on the driver
+  (``InfoThSelector.LOCAL_MAX_BYTES``) is collected ONCE into a single
+  driver-held block (:meth:`PackedMatrix.collect_local`), and every
+  later pass calls its closure on that block in the driver process —
+  no Spark job at all.  At bench scale a job launch costs several times
+  the NumPy work of a loop pass, so this regime removes the loop's cost.
+- driver merge: a pass volume under
+  ``histogram.BLOB_DRIVER_MERGE_MAX_BYTES`` is collected and summed on
+  the driver (one stage, no shuffle).
+- shuffled: above that bound the partials flow through a shuffled
+  per-key combine (int64 accumulators — merge order cannot change exact
+  integer sums) and MI/CMI run executor-side, so the driver collects
+  only merged results.
+
+Bit-equality of all three against ``np.bincount`` tables is pinned by
+tests/test_packed.py.
 """
 
 from __future__ import annotations
 
+import functools
 import pickle
 from typing import Iterator
 
@@ -66,15 +80,26 @@ def _add_partial(acc: np.ndarray, v: np.ndarray) -> np.ndarray:
     return acc
 
 
-def _merge_partials(rdd, partials, n_keys: int, est_bytes: int, finalize=None) -> dict:
-    """The two-regime merge every histogram pass shares.
+def _map_blocks(src, fn) -> list:
+    """``[fn(block) for every block]``, on the driver: one Spark job over a
+    persisted block RDD, a plain loop over the driver-held block list of
+    the local regime (:meth:`PackedMatrix.collect_local`)."""
+    if isinstance(src, list):
+        return [fn(blk) for blk in src]
+    return src.map(fn).collect()
 
-    ``partials`` maps a partition's blocks to one list of int32 tables
-    per block; a table's list position is its key (``0 .. n_keys-1``).
-    Returns ``{key: finalize(key, merged_int64_table)}`` (the table
-    itself when ``finalize`` is None) for every key some block emitted —
-    callers fill the empty-input defaults.
 
+def _merge_partials(src, partials, n_keys: int, est_bytes: int, finalize=None) -> dict:
+    """The merge every histogram pass shares.
+
+    ``partials`` maps ONE block to its list of int32 tables; a table's
+    list position is its key (``0 .. n_keys-1``).  ``src`` is the
+    persisted block RDD, or the driver-held block list of the local
+    regime.  Returns ``{key: finalize(key, merged_int64_table)}`` (the
+    table itself when ``finalize`` is None) for every key some block
+    emitted — callers fill the empty-input defaults.
+
+    - driver-held blocks: ``partials`` runs in this process, no job.
     - ``est_bytes`` (the pass's collected partial volume) under
       ``histogram.BLOB_DRIVER_MERGE_MAX_BYTES``: collect the per-block
       lists and sum them in int64 on the driver — one stage, no shuffle.
@@ -82,27 +107,23 @@ def _merge_partials(rdd, partials, n_keys: int, est_bytes: int, finalize=None) -
       on the executors, only the merged results reach the driver.
 
     The budget is read at call time so tests can force either regime.
-    Exact in both: integer sums merge identically in any order, and
+    Exact in all three: integer sums merge identically in any order, and
     ``finalize`` sees the same int64 table either way."""
     fin = finalize or (lambda k, acc: acc)
-    if est_bytes <= histogram.BLOB_DRIVER_MERGE_MAX_BYTES:
+    if isinstance(src, list) or est_bytes <= histogram.BLOB_DRIVER_MERGE_MAX_BYTES:
         totals: dict[int, np.ndarray] = {}
-        for part in rdd.mapPartitions(partials).collect():
+        for part in _map_blocks(src, partials):
             for k, v in enumerate(part):
                 totals[k] = _add_partial(totals[k], v) if k in totals else v.astype(np.int64)
         return {k: fin(k, acc) for k, acc in totals.items()}
 
-    def keyed(blocks):
-        for part in partials(blocks):
-            yield from enumerate(part)
-
     return dict(
-        rdd.mapPartitions(keyed)
+        src.flatMap(lambda blk: enumerate(partials(blk)))
         .combineByKey(
             lambda v: v.astype(np.int64),
             _add_partial,
             _add_partial,
-            numPartitions=max(min(n_keys, rdd.getNumPartitions()), 1),
+            numPartitions=max(min(n_keys, src.getNumPartitions()), 1),
         )
         .map(lambda kv: (kv[0], fin(kv[0], kv[1])))
         .collect()
@@ -335,6 +356,14 @@ def _block_of(batches: list[pa.RecordBatch], cols: list[str]) -> dict[str, np.nd
     return arrs
 
 
+def _materialize(rdd, cols: list[str]) -> tuple[int, int]:
+    """Materialize a freshly persisted block RDD in ONE job, returning
+    its total row count and the summed ``nbytes`` of its column arrays."""
+    return rdd.map(
+        lambda blk: (len(blk[cols[0]]), sum(blk[c].nbytes for c in cols))
+    ).fold((0, 0), lambda a, b: (a[0] + b[0], a[1] + b[1]))
+
+
 class PackedMatrix:
     """Per-partition NumPy column blocks of a wide discrete matrix,
     persisted as an RDD.
@@ -353,8 +382,15 @@ class PackedMatrix:
     DRIVER_STATS_MAX_BYTES = 64 * 1024 * 1024
 
     def __init__(
-        self, rdd, cols: list[str], n_partitions: int, n_rows: int | None = None
+        self,
+        rdd,
+        cols: list[str],
+        n_partitions: int,
+        n_rows: int | None = None,
+        n_bytes: int | None = None,
     ) -> None:
+        #: The persisted RDD of blocks — or, after :meth:`collect_local`,
+        #: a plain list holding the one driver-held block.
         self.rdd = rdd
         self.cols = list(cols)
         self.n_partitions = n_partitions
@@ -366,6 +402,15 @@ class PackedMatrix:
         #: the fused dims+hist2d pass must not run serially inside the
         #: very partitions the rebalance is about to split).
         self.n_rows = n_rows
+        #: Summed ``nbytes`` of the blocks' column arrays, from the same
+        #: materialization job (``None`` when unknown) — what the local
+        #: regime would hold on the driver.
+        self.n_bytes = n_bytes
+
+    @property
+    def local(self) -> bool:
+        """True once :meth:`collect_local` moved the blocks to the driver."""
+        return isinstance(self.rdd, list)
 
     @classmethod
     def pack(
@@ -425,11 +470,11 @@ class PackedMatrix:
             .persist(storage_level)
         )
         n_parts = rdd.getNumPartitions()
-        # materialize (downstream timing is pure iteration cost); the sum
-        # of per-block row counts rides the same job and gives n_rows for
-        # free (r13 — replaces the former bare count())
-        n_rows = int(rdd.map(lambda blk: len(blk[cols[0]])).sum())
-        return cls(rdd, cols, n_parts, n_rows=n_rows)
+        # materialize (downstream timing is pure iteration cost); the
+        # per-block row counts and byte sizes ride the same job and give
+        # n_rows / n_bytes for free (r13 — replaces the former bare count())
+        n_rows, n_bytes = _materialize(rdd, cols)
+        return cls(rdd, cols, n_parts, n_rows=n_rows, n_bytes=n_bytes)
 
     @classmethod
     def pack_parquet(
@@ -563,12 +608,32 @@ class PackedMatrix:
             .mapPartitions(read_chunk)
             .persist(storage_level)
         )
-        rdd.count()  # materialize: downstream timing is pure iteration cost
-        # row count is footer-known (sum of non-empty row-group rows)
-        return cls(rdd, cols, rdd.getNumPartitions(), n_rows=sum(u[2] for u in units))
+        # materialize: downstream timing is pure iteration cost; the row
+        # count is also footer-known (sum of non-empty row-group rows)
+        n_rows, n_bytes = _materialize(rdd, cols)
+        return cls(rdd, cols, rdd.getNumPartitions(), n_rows=n_rows, n_bytes=n_bytes)
 
     def unpersist(self) -> None:
-        self.rdd.unpersist()
+        if not self.local:
+            self.rdd.unpersist()
+
+    def collect_local(self) -> "PackedMatrix":
+        """The local regime: ONE ``collect()`` of the persisted blocks,
+        concatenated per column into a single driver-held block; the RDD
+        is unpersisted.  Every later pass runs its per-block closure on
+        that block in the driver process (:func:`_map_blocks`,
+        :func:`_merge_partials`) — no Spark job.  Integer tables are
+        partition-agnostic sums and concatenation keeps each column's
+        values (and any out-of-contract dtype the checks need), so every
+        result is bit-identical to the distributed passes."""
+        cols = self.cols
+        try:
+            blocks = self.rdd.collect()
+        finally:
+            self.unpersist()
+        if len(blocks) > 1:
+            blocks = [{c: np.concatenate([b[c] for b in blocks]) for c in cols}]
+        return PackedMatrix(blocks, cols, 1, n_rows=self.n_rows, n_bytes=self.n_bytes)
 
     # -- stats / layout ------------------------------------------------------
 
@@ -616,32 +681,34 @@ class PackedMatrix:
         def merge(a, b):
             return np.maximum(a[0], b[0]), a[1] | b[1], a[2] + b[2]
 
-        try:
-            # Two-regime fold (r12, guide §2.4): treeReduce inserts a
-            # shuffle fold round whenever partitions > ~4, i.e. a second
-            # STAGE per dims call — measured +0.3-0.5 s at 10 partitions
-            # on local[32] for stat rows of 33 floats.  Up to a bounded
-            # driver volume (n_partitions × n_cols × 16 B ≤ 64 MB, i.e.
-            # ~128k partitions at 33 cols / ~6.7k at 632 cols) a plain
-            # reduce — one stage, per-partition pre-reduced rows to the
-            # driver — is strictly cheaper; beyond it the tree fold
-            # keeps the driver volume flat.  Identical results either
-            # way: elementwise max / or / int sum are associative and
-            # commutative (NaN travels in the mask, never through max).
-            small = (
-                self.n_partitions * len(cols) * 16 <= self.DRIVER_STATS_MAX_BYTES
-            )
-            stats = self.rdd.map(stat)
-            maxes, nan_mask, n = (
-                stats.reduce(merge) if small else stats.treeReduce(merge)
-            )
-        except ValueError:
-            # empty input packs to an RDD with no blocks; reduce of an
-            # empty RDD raises — re-raise as the dims contract error
-            raise ValueError(
-                "cannot derive dims: input is empty or columns are all-NULL "
-                f"or NULL-bearing: {cols}"
-            ) from None
+        empty_msg = (
+            "cannot derive dims: input is empty or columns are all-NULL "
+            f"or NULL-bearing: {cols}"
+        )
+        # Two-regime fold (r12, guide §2.4): treeReduce inserts a shuffle
+        # fold round whenever partitions > ~4, i.e. a second STAGE per
+        # dims call — measured +0.3-0.5 s at 10 partitions on local[32]
+        # for stat rows of 33 floats.  Up to a bounded driver volume
+        # (n_partitions × n_cols × 16 B ≤ 64 MB, i.e. ~128k partitions at
+        # 33 cols / ~6.7k at 632 cols) collecting the per-block rows and
+        # reducing on the driver — one stage, or no job at all for the
+        # driver-held block — is strictly cheaper; beyond it the tree
+        # fold keeps the driver volume flat.  Identical results either
+        # way: elementwise max / or / int sum are associative and
+        # commutative (NaN travels in the mask, never through max).
+        if self.n_partitions * len(cols) * 16 <= self.DRIVER_STATS_MAX_BYTES:
+            parts = _map_blocks(self.rdd, stat)
+            if not parts:
+                # empty input packs to no blocks at all
+                raise ValueError(empty_msg)
+            maxes, nan_mask, n = functools.reduce(merge, parts)
+        else:
+            try:
+                maxes, nan_mask, n = self.rdd.map(stat).treeReduce(merge)
+            except ValueError:
+                # treeReduce of an empty RDD raises — re-raise as the
+                # dims contract error
+                raise ValueError(empty_msg) from None
         null_cols = [c for i, c in enumerate(cols) if nan_mask[i]]
         if n == 0 or null_cols or not np.isfinite(maxes).all():
             raise ValueError(
@@ -741,7 +808,7 @@ class PackedMatrix:
                     tables = (y_loc, tabs)
             return maxes, nan_mask, nrows, tables
 
-        parts = self.rdd.map(stat_hist).collect()
+        parts = _map_blocks(self.rdd, stat_hist)
         if not parts:
             raise ValueError(
                 "cannot derive dims: input is empty or columns are all-NULL "
@@ -797,13 +864,16 @@ class PackedMatrix:
                     bad.append(c)
             return bad
 
-        # executor-side set-union fold: one small set reaches the driver
-        # regardless of partition count (same discipline as
-        # dims_and_count's treeReduce); treeAggregate's zero value covers
-        # the empty-RDD case in the SAME single job
-        seen = self.rdd.treeAggregate(
-            set(), lambda a, blk: a | set(check(blk)), lambda a, b: a | b
-        )
+        if self.local:
+            seen = set().union(*_map_blocks(self.rdd, check))
+        else:
+            # executor-side set-union fold: one small set reaches the
+            # driver regardless of partition count (same discipline as
+            # dims_and_count's treeReduce); treeAggregate's zero value
+            # covers the empty-RDD case in the SAME single job
+            seen = self.rdd.treeAggregate(
+                set(), lambda a, blk: a | set(check(blk)), lambda a, b: a | b
+            )
         return [c for c in cols if c in seen]
 
     def rebalance(
@@ -850,7 +920,9 @@ class PackedMatrix:
             )
         rdd.count()
         self.unpersist()
-        return PackedMatrix(rdd, cols, rdd.getNumPartitions(), n_rows=self.n_rows)
+        return PackedMatrix(
+            rdd, cols, rdd.getNumPartitions(), n_rows=self.n_rows, n_bytes=self.n_bytes
+        )
 
     # -- histograms --------------------------------------------------------
 
@@ -876,22 +948,21 @@ class PackedMatrix:
         y_dim = dims[y_col]
         xd = [dims[c] for c in feats]
 
-        def partials(blocks):
+        def partials(blk):
             # int32 partial emit: the collected volume then matches the
             # 4 B/count est_bytes formula — raw int64 bincounts would put
             # 2× the documented bound on the driver.  Overflow safety is
             # proven once per block from its ROW COUNT (cells <= rows),
             # not by scanning each emitted table (r9: check_int32_rows)
-            for blk in blocks:
-                y = blk[y_col].astype(np.int64)
-                check_int32_rows(len(y))
-                yield [
-                    np.bincount(
-                        blk[c].astype(np.int64) * y_dim + y,
-                        minlength=xd[fi] * y_dim,
-                    ).astype(np.int32)
-                    for fi, c in enumerate(feats)
-                ]
+            y = blk[y_col].astype(np.int64)
+            check_int32_rows(len(y))
+            return [
+                np.bincount(
+                    blk[c].astype(np.int64) * y_dim + y,
+                    minlength=xd[fi] * y_dim,
+                ).astype(np.int32)
+                for fi, c in enumerate(feats)
+            ]
 
         merged = _merge_partials(
             self.rdd,
@@ -934,25 +1005,24 @@ class PackedMatrix:
         y_dims = [dims[s] for s in conds]
         xd = [dims[c] for c in feats]
 
-        def partials(blocks):
-            # one pass over the blocks: per cond, the fused (y, z) code,
+        def partials(blk):
+            # one pass over the block: per cond, the fused (y, z) code,
             # then per feature an int32 bincount (overflow proof: counts
             # <= rows); key si·nf + fi
-            for blk in blocks:
-                z = blk[z_col].astype(np.int64)
-                check_int32_rows(len(z))
-                out = []
-                for si, s in enumerate(conds):
-                    yz_code = blk[s].astype(np.int64) * z_dim + z
-                    yz = y_dims[si] * z_dim
-                    out.extend(
-                        np.bincount(
-                            blk[c].astype(np.int64) * yz + yz_code,
-                            minlength=xd[fi] * yz,
-                        ).astype(np.int32)
-                        for fi, c in enumerate(feats)
-                    )
-                yield out
+            z = blk[z_col].astype(np.int64)
+            check_int32_rows(len(z))
+            out = []
+            for si, s in enumerate(conds):
+                yz_code = blk[s].astype(np.int64) * z_dim + z
+                yz = y_dims[si] * z_dim
+                out.extend(
+                    np.bincount(
+                        blk[c].astype(np.int64) * yz + yz_code,
+                        minlength=xd[fi] * yz,
+                    ).astype(np.int32)
+                    for fi, c in enumerate(feats)
+                )
+            return out
 
         merged = _merge_partials(
             self.rdd,
@@ -1118,40 +1188,39 @@ class PackedSparse:
         tests/test_packed.py)."""
         nf = self.n_features
 
-        def partials(blocks):
-            for blk in blocks:
-                ptr, x, y = blk["ptr"], blk["x"], blk["y"]
-                # Guard BEFORE sizing any bincount: the caller's dim>256
-                # contract check runs on the returned dims, but a single
-                # corrupt cell (x = 1e9, representable in the int32
-                # block) would have this partition allocate
-                # ~x·y_dim·8 bytes FIRST and OOM the executor where the
-                # SQL route's groupBy aggregated safely and the driver
-                # raised cleanly.  max(x) per feature is scalar work;
-                # raise the same contract error here instead.
-                fmax = {
-                    f: int(x[ptr[f] : ptr[f + 1]].max())
-                    for f in range(nf)
-                    if ptr[f + 1] > ptr[f]
-                }
-                over = {f: mx + 1 for f, mx in fmax.items() if mx >= 256}
-                if over:
-                    raise ValueError(
-                        f"sparse feature values exceed the byte range (dim>256): {over}"
-                    )
-                # upcast before the code product (blocks store int32);
-                # emit int32 partials so the collected volume matches the
-                # 4 B/count bound formula.  Cells count nonzero entries,
-                # bounded by the block's total nnz — one compare proves
-                # int32 safety for every feature table (r9 fix)
-                check_int32_rows(len(x))
-                yield [
-                    np.bincount(
-                        x[ptr[f] : ptr[f + 1]].astype(np.int64) * y_dim
-                        + y[ptr[f] : ptr[f + 1]]
-                    ).astype(np.int32)
-                    for f in range(nf)
-                ]
+        def partials(blk):
+            ptr, x, y = blk["ptr"], blk["x"], blk["y"]
+            # Guard BEFORE sizing any bincount: the caller's dim>256
+            # contract check runs on the returned dims, but a single
+            # corrupt cell (x = 1e9, representable in the int32 block)
+            # would have this partition allocate ~x·y_dim·8 bytes FIRST
+            # and OOM the executor where the SQL route's groupBy
+            # aggregated safely and the driver raised cleanly.  max(x)
+            # per feature is scalar work; raise the same contract error
+            # here instead.
+            fmax = {
+                f: int(x[ptr[f] : ptr[f + 1]].max())
+                for f in range(nf)
+                if ptr[f + 1] > ptr[f]
+            }
+            over = {f: mx + 1 for f, mx in fmax.items() if mx >= 256}
+            if over:
+                raise ValueError(
+                    f"sparse feature values exceed the byte range (dim>256): {over}"
+                )
+            # upcast before the code product (blocks store int32); emit
+            # int32 partials so the collected volume matches the 4 B/count
+            # bound formula.  Cells count nonzero entries, bounded by the
+            # block's total nnz — one compare proves int32 safety for
+            # every feature table (r9 fix)
+            check_int32_rows(len(x))
+            return [
+                np.bincount(
+                    x[ptr[f] : ptr[f + 1]].astype(np.int64) * y_dim
+                    + y[ptr[f] : ptr[f + 1]]
+                ).astype(np.int32)
+                for f in range(nf)
+            ]
 
         merged = _merge_partials(
             self.rdd, partials, nf, self.n_partitions * nf * 256 * y_dim * 4
@@ -1187,23 +1256,22 @@ class PackedSparse:
         rem = list(remaining)
         szy = sel_dim * y_dim
 
-        def partials(blocks):
-            for blk in blocks:
-                ptr, x, y, row = blk["ptr"], blk["x"], blk["y"], blk["row"]
-                z_row = np.zeros(blk["nrows"], dtype=np.int64)
-                sl = slice(ptr[best], ptr[best + 1])
-                z_row[row[sl]] = x[sl]
-                # cells count nonzero entries <= block nnz: one compare
-                # proves int32 safety for every emitted table (r9 fix)
-                check_int32_rows(len(x))
-                out = []
-                for f in rem:
-                    fsl = slice(ptr[f], ptr[f + 1])
-                    # int64 upcast first: blocks store int32 cells; int32
-                    # partial emit keeps the volume at the 4 B/count formula
-                    code = x[fsl].astype(np.int64) * szy + z_row[row[fsl]] * y_dim + y[fsl]
-                    out.append(np.bincount(code, minlength=dims[f] * szy).astype(np.int32))
-                yield out
+        def partials(blk):
+            ptr, x, y, row = blk["ptr"], blk["x"], blk["y"], blk["row"]
+            z_row = np.zeros(blk["nrows"], dtype=np.int64)
+            sl = slice(ptr[best], ptr[best + 1])
+            z_row[row[sl]] = x[sl]
+            # cells count nonzero entries <= block nnz: one compare proves
+            # int32 safety for every emitted table (r9 fix)
+            check_int32_rows(len(x))
+            out = []
+            for f in rem:
+                fsl = slice(ptr[f], ptr[f + 1])
+                # int64 upcast first: blocks store int32 cells; int32
+                # partial emit keeps the volume at the 4 B/count formula
+                code = x[fsl].astype(np.int64) * szy + z_row[row[fsl]] * y_dim + y[fsl]
+                out.append(np.bincount(code, minlength=dims[f] * szy).astype(np.int32))
+            return out
 
         merged = _merge_partials(
             self.rdd,

@@ -9,10 +9,12 @@ One dense fit path, five phases over one cache:
   into a persisted RDD (operators/packed.py) — the Spark analogue of the
   reference's columnar transpose + HDFS persist and hand-rolled byte
   layout (``InfoSelector.scala:425-437``).
+- re-layout: one decision, ``InfoThSelector._plan_relayout``: keep the
+  layout, split or coalesce the blocks once (after stats), or — for a
+  greedy fit whose packed matrix fits ``LOCAL_MAX_BYTES`` — collect the
+  blocks ONCE into a driver-held block before stats (the local regime).
 - stats: per-feature dims (``counterByFeat``) and the row count from the
   blocks, fused with the relevance histograms when the layout allows.
-- re-layout: at most one split or coalesce of the blocks, decided once
-  by ``InfoThSelector._plan_relayout``.
 - relevances: MI(X; class) from 2-D histograms vs the label
   (``InfoTheory.scala:413-432``).
 - loop: MIM short-circuits to top-k by relevance
@@ -21,6 +23,9 @@ One dense fit path, five phases over one cache:
   Spark job per selected feature (3-D histogram pass + MI/CMI + criterion
   updates), the idiomatic Spark replacement for Flink bulk iteration;
   speculative passes also score likely next winners in the same job.
+  In the local regime every pass runs in the driver process, no job at
+  all — like the reference, whose MI/CMI tables live on the driver
+  (``InfoTheory.scala:474-521``).
 - transform: narrow column projection (``InfoSelector.scala:229-263``) —
   pure Catalyst, no shuffle.
 
@@ -83,6 +88,23 @@ def _check_selection_args(n_to_select: int, criterion: str) -> None:
         raise ValueError(
             f"unknown criterion {criterion!r}; expected one of {CRITERION_NAMES}"
         )
+
+
+def _scatter_counts(out: dict, pdf, index_cols: list[str]) -> None:
+    """``out[feat][row's index_cols] = row's cnt`` for every row of the
+    collected sparse-histogram frame ``pdf`` — one NumPy fancy assignment
+    per feature (the frame holds one row per distinct cell, so no index
+    repeats within a feature).  Negative indices must ERROR: fancy
+    indexing would silently wrap them to the end of the histogram (the
+    dense collect_hist2d raises for the same input)."""
+    import numpy as np
+
+    idx = [pdf[c].to_numpy() for c in index_cols]
+    if any((a < 0).any() for a in idx):
+        raise ValueError("sparse histogram indices must be >= 0")
+    cnt = pdf["cnt"].to_numpy()
+    for f, rows in pdf.groupby("feat").indices.items():
+        out[f][tuple(a[rows] for a in idx)] = cnt[rows]
 
 
 def _tie_key(score: float, precision: int | None):
@@ -190,7 +212,14 @@ class InfoThSelector:
     The fit packs the matrix once into a persisted RDD of NumPy column
     blocks (operators/packed.py); stats, relevances and every greedy
     iteration are plain closures over those blocks — no per-iteration
-    Catalyst plan or Arrow conversion.
+    Catalyst plan or Arrow conversion.  When the fit runs loop passes and
+    the packed matrix holds at most ``LOCAL_MAX_BYTES`` (32 MB — the
+    volume one loop pass may already collect under the driver-merge
+    budget), the blocks are collected once to the driver and every later
+    pass runs there: at that size a Spark job launch costs several times
+    a pass's NumPy work (see :meth:`_plan_relayout`), so the fit pays two
+    jobs (pack, collect) instead of one per pass.  Selections are
+    bit-identical in every regime (same integer tables, same finalize).
 
     ``pack_route`` — how the one-time pack is produced; all routes yield
     bit-identical blocks-by-value (see :meth:`_fit_packed`): ``"auto"``
@@ -202,7 +231,8 @@ class InfoThSelector:
     ``speculation`` — how many likely next winners each loop pass also
     scores (``"auto"`` adapts the width to observed hits; an int pins
     it, 0 = one conditioning column per pass).  Selections are
-    bit-identical at every width.
+    bit-identical at every width.  The local regime always runs width 0:
+    with no job launch to amortize, a speculated cond is pure waste.
     """
 
     def __init__(
@@ -381,16 +411,10 @@ class InfoThSelector:
 
         try:
             t0 = time.perf_counter()
-            if self.validate:
-                # BEFORE dims derivation: NULL-bearing columns would
-                # otherwise hit dims_and_count's blunter NaN-contract
-                # error instead of the actionable byte-range message
-                offenders = packed.validate_byte_range(feats + [label])
-                if offenders:
-                    raise ValueError(self._byte_range_message(offenders))
-            # The layout is decided ONCE, from the pack's free row count,
-            # and that one decision gates both the stats fusion and the
-            # re-layout below (see _plan_relayout).
+            # The layout is decided ONCE, from the pack's free row and
+            # byte counts, and that one decision gates the local collect,
+            # the stats fusion and the re-layout below (see
+            # _plan_relayout).
             needs_loop = self.criterion.lower() != "mim" and self.n_to_select >= 2
             relayout = self._plan_relayout(
                 packed.n_rows or 0,
@@ -398,7 +422,17 @@ class InfoThSelector:
                 packed.n_partitions,
                 packed.rdd.context.defaultParallelism,
                 needs_loop,
+                packed.n_bytes,
             )
+            if relayout == ("local", 1):
+                packed = packed.collect_local()
+            if self.validate:
+                # BEFORE dims derivation: NULL-bearing columns would
+                # otherwise hit dims_and_count's blunter NaN-contract
+                # error instead of the actionable byte-range message
+                offenders = packed.validate_byte_range(feats + [label])
+                if offenders:
+                    raise ValueError(self._byte_range_message(offenders))
             # r12 (guide §1.2): fuse the dims pass with the stage-2
             # relevance histograms — one scan of the blocks instead of
             # two — whenever the per-partition collect stays inside the
@@ -425,7 +459,7 @@ class InfoThSelector:
             else:
                 dims, n = packed.dims_and_count()
             timings["stats_sec"] = round(time.perf_counter() - t0, 3)
-            if relayout is not None:
+            if relayout is not None and relayout[0] != "local":
                 t0 = time.perf_counter()
                 packed = packed.rebalance(relayout[1], self.LOOP_ROWS_PER_PARTITION)
                 timings["rebalance_sec"] = round(time.perf_counter() - t0, 3)
@@ -475,6 +509,10 @@ class InfoThSelector:
     # Scale-free: compares actual per-partition work against the fixed
     # cost of one extra job + shuffling every packed byte once.
     REBALANCE_MIN_CELLS_PER_PART = 32 * 1024 * 1024
+    # Largest packed matrix (bytes) the local regime holds on the driver
+    # — see _plan_relayout.  The same volume one loop pass may already
+    # collect under histogram.BLOB_DRIVER_MERGE_MAX_BYTES.
+    LOCAL_MAX_BYTES = 32 * 1024 * 1024
 
     @classmethod
     def _plan_relayout(
@@ -484,16 +522,29 @@ class InfoThSelector:
         n_partitions: int,
         parallelism: int,
         needs_loop: bool,
+        n_bytes: int | None = None,
     ) -> tuple[str, int] | None:
         """The fit's one layout decision, a pure function of the pack's
-        shape: ``None`` (keep the layout), ``("split", target)`` or
-        ``("coalesce", ideal)``.
+        shape: ``None`` (keep the layout), ``("local", 1)``,
+        ``("split", target)`` or ``("coalesce", ideal)``.
 
         The re-layout exists for the greedy LOOP (dims and relevances
         run before or regardless of it), so MIM and k=1 fits
         (``needs_loop`` False) never re-lay out (r13 — the MIM bench
-        paid a 0.55 s coalesce for zero loop jobs).  Data under
-        2 × ``LOOP_ROWS_PER_PARTITION`` rows is never re-laid out either.
+        paid a 0.55 s coalesce for zero loop jobs).
+
+        local: the packed matrix — ``n_bytes`` from the pack's own
+        materialization job, else ``n_rows × n_cols`` one-byte cells —
+        holds at most ``LOCAL_MAX_BYTES``.  The fit collects the blocks
+        once and runs stats, relevances and every loop pass on the
+        driver (``PackedMatrix.collect_local``): at this size the job
+        launches, not the bincounts, are the loop's cost.  Measured on a
+        4-vCPU host, mRMR k=10: on 120k rows × 33 packed columns the
+        Spark loop's 4 speculative passes took 2.24 s and the 9 local
+        passes 0.16-0.18 s; on 600k × 33 (sf0.1, 19.8 MB) 2.4-2.7 s vs
+        0.70-0.75 s.  Checked first: it also covers data under
+        2 × ``LOOP_ROWS_PER_PARTITION`` rows, which is otherwise never
+        re-laid out.
 
         ``ideal`` is the layout the loop's memory model is built on
         (~``LOOP_ROWS_PER_PARTITION`` rows per block); the core-clamped
@@ -522,8 +573,12 @@ class InfoThSelector:
         Partition counts never affect results: histogram merges are
         partition-agnostic integer sums (pinned by tests/test_packed.py).
         """
+        if not needs_loop:
+            return None
+        if (n_rows * n_cols if n_bytes is None else n_bytes) <= cls.LOCAL_MAX_BYTES:
+            return ("local", 1)
         rows_per_part = cls.LOOP_ROWS_PER_PARTITION
-        if not needs_loop or n_rows < 2 * rows_per_part:
+        if n_rows < 2 * rows_per_part:
             return None
         ideal = -(-n_rows // rows_per_part)
         target = max(1, min(ideal, parallelism))
@@ -600,9 +655,11 @@ class InfoThSelector:
             # auto width adapts to the observed consumption (halve on a
             # fully-wasted launch, grow with hits, cap 7) so adversarial
             # data decays to the old one-cond-per-job behavior.
+            # The local regime (no job launch to amortize) pins width 0.
             prefetched: dict[str, dict[str, tuple[float, float]]] = {}
-            spec_auto = self.speculation == "auto"
-            width = 3 if spec_auto else int(self.speculation)
+            local = packed.local
+            spec_auto = self.speculation == "auto" and not local
+            width = 0 if local else 3 if spec_auto else int(self.speculation)
             consumed_since_launch = 0
             loop_jobs = 0
             spec_hits = 0
@@ -659,7 +716,8 @@ class InfoThSelector:
                         remaining, [best] + spec, label, dims, n,
                         emit_f32=self.emit_f32,
                     )
-                    loop_jobs += 1
+                    if not local:
+                        loop_jobs += 1
                     scores = multi.pop(best)
                     prefetched.update(multi)
                 for c in remaining:
@@ -863,14 +921,7 @@ class SparseInfoThSelector:
 
             def collect2d(hdf) -> dict[int, np.ndarray]:
                 out = {i: np.zeros((dims[i], y_dim), dtype=np.int64) for i in range(nf)}
-                pdf = hdf.toPandas()
-                # negative values must ERROR: numpy fancy indexing would
-                # silently wrap them to the end of the histogram (the
-                # dense collect_hist2d raises for the same input)
-                if len(pdf) and (pdf[["x", "y"]].to_numpy() < 0).any():
-                    raise ValueError("sparse histogram indices must be >= 0")
-                for f_, x_, y_, c_ in pdf[["feat", "x", "y", "cnt"]].itertuples(index=False):
-                    out[f_][x_, y_] = c_
+                _scatter_counts(out, hdf.toPandas(), ["x", "y"])
                 # credited zeros: count(x=0, y) = N_y − Σ_{x≠0} count(x, y)
                 for i in range(nf):
                     out[i][0] = n_y - out[i][1:].sum(axis=0)
@@ -970,13 +1021,7 @@ class SparseInfoThSelector:
                         i: np.zeros((dims[i], sel_dim, y_dim), dtype=np.int64)
                         for i in remaining
                     }
-                    pdf = h3df.toPandas()
-                    if len(pdf) and (pdf[["x", "y", "z"]].to_numpy() < 0).any():
-                        raise ValueError("sparse histogram indices must be >= 0")
-                    for f_, x_, y_, z_, c_ in pdf[
-                        ["feat", "x", "y", "z", "cnt"]
-                    ].itertuples(index=False):
-                        out[f_][x_, z_, y_] = c_
+                    _scatter_counts(out, h3df.toPandas(), ["x", "z", "y"])
                     # credited zeros: count(x=0, z, y) = N_yz − Σ_{x≠0}
                     for i in remaining:
                         out[i][0] = n_zy - out[i][1:].sum(axis=0)

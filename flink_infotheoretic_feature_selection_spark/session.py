@@ -94,7 +94,12 @@ def spread_starved_scan(df, min_ratio: int = 2, cache_key: str | None = None):
     process lifetime; a path whose files change between calls must keep
     the default re-probe.  The probe is the RDD conversion's partition
     count — for a bare scan, the file-split count (AQE does not re-plan
-    a bare scan's splits).
+    a bare scan's splits).  The cache is keyed on ``cache_key`` alone,
+    NOT on the plan: a caller passing ``cache_key`` must pass the BARE
+    scan of that path (``spark.read.parquet(path)``, no filter or
+    projection).  A filtered or projected frame under the same key would
+    reuse — or poison — the bare scan's cached split count, which is
+    wrong for that frame.
     """
     sc = df.sparkSession.sparkContext
     p = sc.defaultParallelism

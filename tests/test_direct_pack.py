@@ -415,6 +415,7 @@ def test_rebalance_band_compares_oversplit_to_row_ideal(spark, tmp_path):
     # reproduces the decision geometry.
     class TinySelector(InfoThSelector):
         LOOP_ROWS_PER_PARTITION = 100
+        LOCAL_MAX_BYTES = 0  # the Spark-loop layout is under test
 
     p = tmp_path / "m.parquet"
     _write_matrix(p, n=4000, row_group_size=10)  # 400 row groups

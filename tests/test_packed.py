@@ -328,6 +328,8 @@ def test_rebalance_cost_gate(spark, matrix, monkeypatch):
     from flink_infotheoretic_feature_selection_spark.selector import InfoThSelector as Sel
 
     few = matrix.coalesce(1)
+    # the Spark-loop layout rules, not the local regime, are under test
+    monkeypatch.setattr(Sel, "LOCAL_MAX_BYTES", 0)
 
     # small data: starved layout (1 partition) must NOT re-layout
     m_skip = Sel(n_to_select=3, criterion="mrmr").fit(few)
@@ -409,10 +411,12 @@ def test_hist3d_mi_cmi_multi_bit_equal_single(matrix, packed, forced_regime, mon
 
 
 @pytest.mark.parametrize("criterion", ["mrmr", "jmi", "cmim", "icap", "mifs"])
-def test_fit_identical_across_speculation_widths(matrix, criterion):
+def test_fit_identical_across_speculation_widths(matrix, criterion, monkeypatch):
     """r13: speculation is a pure prefetch — selection path, scores and
     relevances are bit-identical at every width (updates replay in
     selection order from the same integer-merged histograms)."""
+    # speculation widths only exist in the Spark loop
+    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
     base = InfoThSelector(
         n_to_select=6, criterion=criterion, speculation=0
     ).fit(matrix)
@@ -444,6 +448,8 @@ def test_fusion_skipped_when_rebalance_will_fire(spark, matrix, monkeypatch):
     from flink_infotheoretic_feature_selection_spark.selector import InfoThSelector as Sel
 
     few = matrix.coalesce(1)
+    # the Spark-loop stats/re-layout path, not the local regime
+    monkeypatch.setattr(Sel, "LOCAL_MAX_BYTES", 0)
     m_fused = Sel(n_to_select=3, criterion="mrmr").fit(few)
 
     # force the starved-rebalance prediction true on the tiny fixture
@@ -471,6 +477,7 @@ def test_no_loop_fit_keeps_fused_stats_on_starved_input(matrix, monkeypatch, cri
     from flink_infotheoretic_feature_selection_spark.selector import InfoThSelector as Sel
 
     few = matrix.coalesce(1)
+    monkeypatch.setattr(Sel, "LOCAL_MAX_BYTES", 0)
     want = Sel(n_to_select=k, criterion=criterion).fit(few)
 
     # the same forcing as test_fusion_skipped_when_rebalance_will_fire
@@ -498,7 +505,8 @@ def test_no_loop_fit_keeps_fused_stats_on_starved_input(matrix, monkeypatch, cri
 
 
 # (n_rows, n_cols, n_partitions, parallelism) -> plan when the fit runs
-# loop passes; a fit without them (MIM, k=1) never re-lays out
+# loop passes, with the local regime off (these rows pin the Spark-loop
+# rules); a fit without loop passes (MIM, k=1) never re-lays out
 _LAYOUTS = [
     # starved: one unsplit 6M-row file on 32 cores, far above the cost gate
     ((6_000_000, 33, 1, 32), ("split", 32)),
@@ -516,13 +524,60 @@ _LAYOUTS = [
     # small data (< 2x LOOP_ROWS_PER_PARTITION rows) is never re-laid out
     ((100_000, 33, 100, 32), None),
 ]
+_LOCAL = ("local", 1)
+_BOUND = InfoThSelector.LOCAL_MAX_BYTES
+# (n_rows, n_cols, n_partitions, parallelism, n_bytes) -> plan at the
+# default local bound; n_bytes None falls back to n_rows x n_cols cells
+_LOCAL_LAYOUTS = [
+    # packed bytes below, at and above the bound (small data: no re-layout)
+    ((100_000, 33, 4, 32, _BOUND - 1), _LOCAL),
+    ((100_000, 33, 4, 32, _BOUND), _LOCAL),
+    ((100_000, 33, 4, 32, _BOUND + 1), None),
+    # the byte count wins over the cell count (int16 blocks are 2 B/cell)
+    ((600_000, 33, 32, 32, 2 * 600_000 * 33), ("coalesce", 10)),
+    # cells fallback: below / above the bound
+    ((600_000, 33, 32, 32, None), _LOCAL),
+    ((6_000_000, 33, 1, 32, None), ("split", 32)),
+    # a starved single-partition input under the bound goes local too
+    ((1_000_000, 33, 1, 32, 1_000_000 * 33), _LOCAL),
+]
 
 
 @pytest.mark.parametrize("needs_loop", [True, False])
-@pytest.mark.parametrize("layout, plan", _LAYOUTS)
-def test_plan_relayout_table(layout, plan, needs_loop):
-    got = InfoThSelector._plan_relayout(*layout, needs_loop)
+@pytest.mark.parametrize("layout, plan", _LAYOUTS + _LOCAL_LAYOUTS)
+def test_plan_relayout_table(layout, plan, needs_loop, monkeypatch):
+    if len(layout) == 4:
+        monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
+    got = InfoThSelector._plan_relayout(*layout[:4], needs_loop, *layout[4:])
     assert got == (plan if needs_loop else None)
+
+
+@pytest.mark.parametrize(
+    "criterion", ["mim", "mifs", "jmi", "mrmr", "cmim", "if", "icap"]
+)
+def test_fit_identical_across_local_driver_and_shuffled_regimes(
+    matrix, criterion, monkeypatch
+):
+    """The local regime (blocks collected once, every pass on the driver)
+    selects exactly what the Spark loop selects in both merge regimes:
+    the same integer tables reach the same finalize."""
+    def fit():
+        return InfoThSelector(n_to_select=6, criterion=criterion).fit(matrix)
+
+    local = fit()
+    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
+    driver = fit()
+    monkeypatch.setattr(histogram, "BLOB_DRIVER_MERGE_MAX_BYTES", 0)
+    shuffled = fit()
+    if criterion != "mim":
+        assert local.fit_timings["relayout"] == _LOCAL
+        assert local.fit_timings["loop_partitions"] == 1
+        assert local.fit_timings["loop_jobs"] == 0
+        assert driver.fit_timings["relayout"] != _LOCAL
+        assert driver.fit_timings["loop_jobs"] > 0
+    for other in (driver, shuffled):
+        assert other.selection_path == local.selection_path
+        assert other.relevances == local.relevances
 
 
 def test_pack_records_n_rows(matrix, packed):
@@ -535,3 +590,30 @@ def test_pack_records_n_rows(matrix, packed):
         assert re.n_rows == packed.n_rows
     finally:
         re.unpersist()
+
+
+@pytest.mark.parametrize(
+    "rows, validate, match",
+    [
+        ([(1, 200, 0), (2, -3, 1), (0, 5, 0)], True, r"non-null integers.*\['f1'\]"),
+        ([(1, 0, 0), (None, 1, 1), (2, 0, 1)], True, r"non-null integers.*\['f0'\]"),
+        ([(1, 0, 0), (None, 1, 1), (2, 0, 1)], False, r"NULL-bearing: \['f0'\]"),
+        ([(300, 0, 0), (1, 1, 1)], False, "exceed the byte range"),
+        ([], False, "input is empty"),
+    ],
+)
+def test_local_regime_keeps_contract_errors(spark, monkeypatch, rows, validate, match):
+    """The local regime runs the same validate / dims / NULL / over-256
+    checks on its driver-held block as the Spark passes run per block."""
+    calls = []
+    collect_local = PackedMatrix.collect_local
+
+    def spy(self):
+        calls.append(self.n_partitions)
+        return collect_local(self)
+
+    monkeypatch.setattr(PackedMatrix, "collect_local", spy)
+    df = spark.createDataFrame(rows, "f0 int, f1 int, label int")
+    with pytest.raises(ValueError, match=match):
+        InfoThSelector(n_to_select=2, feature_cols=["f0", "f1"], validate=validate).fit(df)
+    assert len(calls) == 1

@@ -357,3 +357,39 @@ def test_mim_reports_zero_iterations(spark):
     df = features_dense(spark, "/root/testdata/sf0.001")
     m = InfoThSelector(n_to_select=4, criterion="mim").fit(df)
     assert m.fit_timings["iterations"] == 0
+
+
+@pytest.mark.parametrize("index_cols", [["x", "y"], ["x", "z", "y"]])
+def test_sparse_fill_matches_row_loop_and_rejects_negatives(index_cols):
+    # the sparse SQL route's collected-histogram fill (2-D relevance
+    # tables and the per-iteration 3-D tables, which swap z in front of
+    # the class) against the per-row loop it replaced
+    import pandas as pd
+
+    from flink_infotheoretic_feature_selection_spark.selector import _scatter_counts
+
+    rng = np.random.default_rng(7)
+    shape = {"x": 5, "y": 3, "z": 4}
+    dims = [shape[c] for c in index_cols]
+    cells = sorted(
+        {(int(f), *(int(rng.integers(0, d)) for d in dims)) for f in rng.integers(0, 4, 200)}
+    )
+    pdf = pd.DataFrame(cells, columns=["feat", *index_cols])
+    pdf["cnt"] = rng.integers(1, 1000, len(pdf))
+    pdf = pdf.sample(frac=1.0, random_state=3)  # order must not matter
+
+    got = {f: np.zeros(dims, dtype=np.int64) for f in range(4)}
+    _scatter_counts(got, pdf, index_cols)
+    want = {f: np.zeros(dims, dtype=np.int64) for f in range(4)}
+    for row in pdf.itertuples(index=False):
+        want[row.feat][tuple(getattr(row, c) for c in index_cols)] = row.cnt
+    for f in range(4):
+        assert (got[f] == want[f]).all()
+
+    # a negative index would wrap to the end of the table: loud error,
+    # whichever index column carries it
+    for c in index_cols:
+        bad = pdf.copy()
+        bad.iloc[0, bad.columns.get_loc(c)] = -1
+        with pytest.raises(ValueError, match=">= 0"):
+            _scatter_counts({f: np.zeros(dims, dtype=np.int64) for f in range(4)}, bad, index_cols)

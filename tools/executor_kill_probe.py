@@ -77,6 +77,9 @@ def main(cfg_path: str) -> None:
     from flink_infotheoretic_feature_selection_spark.selector import InfoThSelector
 
     matrix, feats, k = cfg["matrix"], cfg["feats"], cfg.get("k", 6)
+    # the probe's matrix fits the local regime, whose loop runs no Spark
+    # job for an executor loss to hit: keep every loop pass on Spark
+    InfoThSelector.LOCAL_MAX_BYTES = 0
 
     def q5_path(model):
         return [[c, round(float(s), 5)] for c, s in model.selection_path]

@@ -109,7 +109,10 @@ def main(cfg_path: str) -> None:
     out["n_executors"] = n_exec
 
     # -- distributed-merge regime across real executor boundaries -------
+    # (the local regime would keep every pass on the driver: off here)
     histogram.BLOB_DRIVER_MERGE_MAX_BYTES = 0
+    local_max = InfoThSelector.LOCAL_MAX_BYTES
+    InfoThSelector.LOCAL_MAX_BYTES = 0
     try:
         m = InfoThSelector(
             n_to_select=4, criterion="mrmr", feature_cols=feats,
@@ -118,6 +121,7 @@ def main(cfg_path: str) -> None:
         out["distmerge_selection"] = q5_path(m)
     finally:
         histogram.BLOB_DRIVER_MERGE_MAX_BYTES = 32 << 20
+        InfoThSelector.LOCAL_MAX_BYTES = local_max
 
     # -- wide fit (column-count fast path + direct pack) ----------------
     wide = cfg.get("wide_matrix")

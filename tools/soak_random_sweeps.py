@@ -64,19 +64,24 @@ def main() -> int:
         # r9 (verdict ask #7): force the DISTRIBUTED merge regime —
         # combineByKey int64 partials on the dense packed substrate and
         # PackedSparse's pad-to-max merge — under the randomized
-        # cross-engine sweep.  The default lanes above exercise the
-        # driver-merge regime (random shapes sit far under 32 MB), so
-        # without this lane the distributed branch only ever ran in
-        # test_packed's fixed cases.  Module attr restored in finally:
-        # packed.py re-imports it from histogram at call time.
+        # cross-engine sweep.  The default lanes above run the random
+        # shapes (far under 32 MB) in the local regime, every pass on
+        # the driver, so without this lane the distributed branch only
+        # ever ran in test_packed's fixed cases; the local regime is
+        # switched off here for that reason.  Both attrs restored in
+        # finally: packed.py and the selector read them at call time.
         from flink_infotheoretic_feature_selection_spark.operators import histogram
+        from flink_infotheoretic_feature_selection_spark.selector import InfoThSelector
 
         prev = histogram.BLOB_DRIVER_MERGE_MAX_BYTES
+        prev_local = InfoThSelector.LOCAL_MAX_BYTES
         histogram.BLOB_DRIVER_MERGE_MAX_BYTES = 0
+        InfoThSelector.LOCAL_MAX_BYTES = 0
         try:
             matrix.test_core_gates_cross_engine_on_random_matrix(spark, d, s, 120)
         finally:
             histogram.BLOB_DRIVER_MERGE_MAX_BYTES = prev
+            InfoThSelector.LOCAL_MAX_BYTES = prev_local
 
     for s in thin:
         # r12: writer->reader closure legs (KEEL write-back + JSONL export)
