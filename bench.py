@@ -74,6 +74,9 @@ MEDIANS: dict[str, float] = {}
 # fit_timings — pack(1) + stats(1) + optional rebalance(1) + the separate
 # relevances job when stats were not fused(1) + loop_jobs; a local-regime
 # fit is pack(1) + its one collect(1), every later pass on the driver.
+# A sparse fit on its local route is 4: the label histogram (2 under
+# AQE, its shuffle stage and its result) plus the two Arrow collects;
+# its SQL and packed routes are not estimated.
 # The full payload emits queries_excess = min_sec − est_jobs × the
 # measured job_floor_sec, so the PERF diff can separate substrate time
 # from scheduler floor on the job-count-bound queries.
@@ -84,6 +87,8 @@ def _est_fit_jobs(model) -> int | None:
     ft = getattr(model, "fit_timings", None)
     if not ft:
         return None
+    if "sparse_route" in ft:
+        return 4 if ft["sparse_route"] == "local" else None
     if ft.get("relayout") == ("local", 1):
         return 2
     return (
@@ -259,7 +264,8 @@ def main() -> None:
         finally:
             base.unpersist()
 
-    t, _ = record("b13_sparse_mrmr_k3", b13)
+    t, m13 = record("b13_sparse_mrmr_k3", b13)
+    EST_JOBS["b13_sparse_mrmr_k3"] = _est_fit_jobs(m13)
 
     # B8-B12 — extension operators (LLM-data-pipeline surface).
     # The matrix cache is dead weight from here on; drop it so the

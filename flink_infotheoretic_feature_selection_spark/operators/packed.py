@@ -625,7 +625,11 @@ class PackedMatrix:
         :func:`_merge_partials`) — no Spark job.  Integer tables are
         partition-agnostic sums and concatenation keeps each column's
         values (and any out-of-contract dtype the checks need), so every
-        result is bit-identical to the distributed passes."""
+        result is bit-identical to the distributed passes.  An already
+        driver-held matrix (e.g. the sparse selector's densified block)
+        is returned as is."""
+        if self.local:
+            return self
         cols = self.cols
         try:
             blocks = self.rdd.collect()

@@ -23,14 +23,153 @@ reference's broadcast y-histogram trick, here an outer join against the
 
 Every step is a hash aggregation or a broadcast-able join on small keys;
 shuffle volume is O(nonzeros + n_features × dims) — never row count.
+
+For inputs small enough to hold on the driver, :func:`densify_long`
+turns the collected long-format cells into the dense byte block the
+dense selector's local stages run on (``SparseInfoThSelector``'s local
+route); :func:`check_cells` is the cell contract every route enforces.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["sparse_hist2d", "sparse_hist3d", "matrix_to_sparse_long"]
+__all__ = [
+    "sparse_hist2d",
+    "sparse_hist3d",
+    "matrix_to_sparse_long",
+    "check_cells",
+    "densify_long",
+]
+
+
+def check_cells(
+    n_features: int,
+    n_null: int,
+    feat_lo: int | None,
+    feat_hi: int | None,
+    x_lo: int | None,
+    over: dict[int, int],
+) -> None:
+    """The sparse cell contract, checked in one order by every route of
+    ``SparseInfoThSelector`` from its own aggregates of the cells that
+    carry a label: no NULL ``feat``/``x`` (``n_null``), ``feat`` in
+    ``[0, n_features)``, no feature dim over 256 (``over`` maps feature
+    → ``max(x)+1``; a corrupt cell would otherwise size every table by
+    it) and no negative ``x`` (NumPy indexing would wrap it to the end
+    of the histogram).  ``None`` bounds mean there were no such cells."""
+    if n_null:
+        raise ValueError(
+            f"sparse nonzeros contain NULL feat or x values ({n_null} cells)"
+        )
+    if feat_lo is not None and (feat_lo < 0 or feat_hi >= n_features):
+        raise ValueError(
+            f"sparse feat indices must lie in [0, n_features={n_features}); "
+            f"got feat values from {feat_lo} to {feat_hi}"
+        )
+    if over:
+        raise ValueError(
+            f"sparse feature values exceed the byte range (dim>256): {over}"
+        )
+    if x_lo is not None and x_lo < 0:
+        raise ValueError("sparse histogram indices must be >= 0")
+
+
+def _int_array(col) -> np.ndarray:
+    """Arrow integer column → int64 NumPy, NULLs as 0 (callers mask them)."""
+    return col.fill_null(0).to_numpy().astype(np.int64, copy=False)
+
+
+def densify_long(
+    labels: pa.Table, cells: pa.Table, n_features: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Collected long-format input → ``(block, y)``: a ``uint8``
+    ``n_features × n`` matrix holding every label row's feature values
+    (absent cells are 0) and the ``uint8`` labels of those ``n`` rows.
+
+    Same semantics as the SQL route's inner join on ``row_id``: a cell
+    whose ``row_id`` has no label row (or is NULL) is dropped, a cell
+    whose ``row_id`` repeats in ``labels`` fills every such row, and a
+    label row with no cell is all zeros.  Block rows follow the label
+    rows sorted by ``row_id`` (NULL ids last); histograms do not depend
+    on row order.  Labels must already satisfy the label contract (the
+    selector checks it on its label-histogram job first).
+
+    Cells are scattered one Arrow record batch at a time, so the
+    temporaries stay batch-sized.  Raises :func:`check_cells`' errors,
+    and the duplicate-cell error when two nonzero cells hit one
+    ``(row, feat)`` slot (the block then holds fewer nonzeros than the
+    cells)."""
+    nf = int(n_features)
+    n = labels.num_rows
+    ids_col = labels.column("row_id")
+    keyed = ids_col.is_valid().to_numpy(zero_copy_only=False)
+    ids = _int_array(ids_col)
+    order = np.flatnonzero(keyed)
+    order = order[np.argsort(ids[order], kind="stable")]
+    sorted_ids = ids[order]
+    y = _int_array(labels.column("y"))[
+        np.concatenate([order, np.flatnonzero(~keyed)])
+    ].astype(np.uint8)
+
+    block = np.zeros((nf, n), dtype=np.uint8)
+    want = np.zeros(nf, dtype=np.int64)  # nonzero cells per feature
+    n_null = 0
+    feat_lo = feat_hi = x_lo = None
+    over_f: list[np.ndarray] = []
+    over_x: list[np.ndarray] = []
+    for b in cells.to_batches():
+        rid = b.column("row_id")
+        r = _int_array(rid)
+        lo = np.searchsorted(sorted_ids, r, "left")
+        rep = np.searchsorted(sorted_ids, r, "right") - lo
+        if rid.null_count:
+            rep[~rid.is_valid().to_numpy(zero_copy_only=False)] = 0
+        f_col, x_col = b.column("feat"), b.column("x")
+        null = np.zeros(len(r), dtype=bool)
+        for c in (f_col, x_col):
+            if c.null_count:
+                null |= ~c.is_valid().to_numpy(zero_copy_only=False)
+        n_null += int(np.count_nonzero(null & (rep > 0)))
+        # one entry per (cell, label row with its row_id): the join
+        tot = int(rep.sum())
+        row = np.repeat(lo, rep) + (np.arange(tot) - np.repeat(np.cumsum(rep) - rep, rep))
+        keep = ~np.repeat(null, rep)
+        f = np.repeat(_int_array(f_col), rep)[keep]
+        x = np.repeat(_int_array(x_col), rep)[keep]
+        if not f.size:
+            continue
+        row = row[keep]
+        lo_f, hi_f, lo_x = int(f.min()), int(f.max()), int(x.min())
+        feat_lo = lo_f if feat_lo is None else min(feat_lo, lo_f)
+        feat_hi = hi_f if feat_hi is None else max(feat_hi, hi_f)
+        x_lo = lo_x if x_lo is None else min(x_lo, lo_x)
+        big = x > 255
+        if big.any():
+            over_f.append(f[big])
+            over_x.append(x[big])
+        if n_null or feat_lo < 0 or feat_hi >= nf or x_lo < 0 or over_f:
+            continue  # the input is rejected below; stop filling
+        nz = x != 0
+        want += np.bincount(f[nz], minlength=nf)
+        block[f[nz], row[nz]] = x[nz]
+
+    over: dict[int, int] = {}
+    if over_f:
+        fo, xo = np.concatenate(over_f), np.concatenate(over_x)
+        over = {int(g): int(xo[fo == g].max()) + 1 for g in np.unique(fo)}
+    check_cells(nf, n_null, feat_lo, feat_hi, x_lo, over)
+    dup = np.flatnonzero(np.count_nonzero(block, axis=1) != want)
+    if dup.size:
+        raise ValueError(
+            f"feature {int(dup[0])} has duplicate (row_id, feat) cells: "
+            f"{int(want[dup[0]])} nonzero cells fill "
+            f"{int(np.count_nonzero(block[dup[0]]))} label rows"
+        )
+    return block, y
 
 
 def matrix_to_sparse_long(

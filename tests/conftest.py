@@ -26,3 +26,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _release_spark_caches():
+    """Release, after each module, what its tests left persisted: cached
+    DataFrames and persisted RDDs (the gate sweeps leave about 40 for the
+    rest of the session otherwise).  Autouse module fixtures are set up
+    before, and so torn down after, the module's own module-scoped
+    fixtures, which release their caches themselves first.  A module that
+    never started Spark does not start it here."""
+    yield
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return
+    SparkSession.builder.getOrCreate().catalog.clearCache()
+    for rdd in list(sc._jsc.getPersistentRDDs().values()):
+        rdd.unpersist()

@@ -155,6 +155,7 @@ def test_local_cluster_matches_local_mode(spark, tmp_path):
     assert got["distmerge_selection"] == exp_dense
     assert got["wide_route"] == "direct"
     assert got["wide_selection"] == exp_wide
+    assert got["sparse_route"] == "sql"  # distributed, not collected
     assert got["sparse_selection"] == exp_sparse
     assert got["lsh_pairs"] == len(lsh_rows)
     assert got["lsh_digest"] == _pairs_digest(lsh_rows)

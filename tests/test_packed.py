@@ -143,10 +143,12 @@ def test_rebalance_preserves_histograms(matrix, packed):
 
 
 @pytest.mark.parametrize("criterion", ["mrmr", "cmim"])
-def test_sparse_fit_identical_packed_vs_sql(matrix, criterion):
+def test_sparse_fit_identical_packed_vs_sql(matrix, criterion, monkeypatch):
     from flink_infotheoretic_feature_selection_spark.operators.sparse import matrix_to_sparse_long
     from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
 
+    # both Spark engines, not the local route
+    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
     feats = [c for c in matrix.columns if c != "label"][:8]
     base, nz, labels = matrix_to_sparse_long(matrix, feats)
     try:
@@ -166,6 +168,7 @@ def test_sparse_packed_distributed_merge_regime(matrix, monkeypatch):
     from flink_infotheoretic_feature_selection_spark.operators.sparse import matrix_to_sparse_long
     from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
 
+    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
     feats = [c for c in matrix.columns if c != "label"][:8]
     base, nz, labels = matrix_to_sparse_long(matrix, feats)
     try:
@@ -183,9 +186,10 @@ def test_sparse_packed_distributed_merge_regime(matrix, monkeypatch):
         base.unpersist()
 
 
-def test_sparse_packed_rejects_negative_indices(spark):
+def test_sparse_packed_rejects_negative_indices(spark, monkeypatch):
     from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
 
+    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
     nz = spark.createDataFrame([(0, 1, -2)], "row_id long, feat int, x int")
     labels = spark.createDataFrame([(0, 1)], "row_id long, y int")
     with pytest.raises(Exception, match=">= 0|negative"):
@@ -240,13 +244,18 @@ def test_dims_and_count_raises_on_partial_nulls(spark):
         pm.unpersist()
 
 
-def test_sparse_packed_oversized_dim_errors_before_alloc(spark):
+def test_sparse_packed_oversized_dim_errors_before_alloc(spark, monkeypatch):
     # r8 advisor fix: a corrupt cell (x=1e6, int32-representable) used to
     # size the executor-side bincount BEFORE the caller's dim>256 check —
     # ~x·y_dim·8 bytes per partition. The guard now raises the same
     # contract error from the scalar per-feature max, allocating nothing.
+    # The packed route's own contract check (on its distinct-count job)
+    # rejects the input before the pack; the pass's guard is checked on
+    # the packed cells directly.
+    from flink_infotheoretic_feature_selection_spark.operators.packed import PackedSparse
     from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
 
+    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
     labels = spark.createDataFrame([(r, r % 2) for r in range(4)], "row_id long, y int")
     huge = spark.createDataFrame(
         [(0, 0, 1_000_000), (1, 1, 2), (2, 0, 1)], "row_id long, feat int, x int"
@@ -255,6 +264,12 @@ def test_sparse_packed_oversized_dim_errors_before_alloc(spark):
         SparseInfoThSelector(n_features=2, n_to_select=1, loop_engine="packed").fit(
             huge, labels
         )
+    ps = PackedSparse.pack(huge.join(labels, "row_id"), 2)
+    try:
+        with pytest.raises(Exception, match="dim>256"):
+            ps.dims_and_hist2d(2)
+    finally:
+        ps.unpersist()
 
 
 def test_sparse_pack_colocation_check(spark, matrix):
@@ -617,3 +632,131 @@ def test_local_regime_keeps_contract_errors(spark, monkeypatch, rows, validate, 
     with pytest.raises(ValueError, match=match):
         InfoThSelector(n_to_select=2, feature_cols=["f0", "f1"], validate=validate).fit(df)
     assert len(calls) == 1
+
+
+# ---- SparseInfoThSelector routes -------------------------------------------
+
+_I, _L = "int", "bigint"
+
+
+@pytest.mark.parametrize(
+    "n_rows, n_features, cell_bytes, engine, route",
+    [
+        # sparse_long's shape: 120k labels × 16 features × 16 B = 30.7 MB
+        (120_000, 16, 16, "sql", "local"),
+        (120_000, 16, 16, "packed", "local"),
+        # exactly at the 32 MiB bound, and one label row past it
+        (131_072, 16, 16, "sql", "local"),
+        (131_073, 16, 16, "sql", "sql"),
+        (131_073, 16, 16, "packed", "packed"),
+        # wider cells cross the bound sooner
+        (120_000, 16, 24, "sql", "sql"),
+        # a non-integer column never goes local
+        (10, 2, None, "sql", "sql"),
+        (10, 2, None, "packed", "packed"),
+    ],
+)
+def test_sparse_route_table(n_rows, n_features, cell_bytes, engine, route):
+    from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
+
+    assert InfoThSelector.LOCAL_MAX_BYTES == 32 * 1024 * 1024
+    got = SparseInfoThSelector._plan_route(n_rows, n_features, cell_bytes, engine)
+    assert got == route
+
+
+def test_sparse_route_bound_zero_keeps_engine(monkeypatch):
+    from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
+
+    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
+    for engine in ("sql", "packed"):
+        assert SparseInfoThSelector._plan_route(1, 1, 3, engine) == engine
+
+
+@pytest.mark.parametrize(
+    "nonzeros, labels, width",
+    [
+        ((_L, _I, _I), (_L, _I), 16),
+        ((_L, _L, _L), (_L, _I), 24),
+        ((_I, "smallint", "tinyint"), (_I, "tinyint"), 7),
+        ((_L, _I, "double"), (_L, _I), None),
+        (("string", _I, _I), ("string", _I), None),
+        ((_L, _I, _I), ("string", _I), None),
+        ((_L, _I, _I), (_L, "double"), None),
+    ],
+)
+def test_sparse_cell_bytes(nonzeros, labels, width):
+    from pyspark.sql import types as T
+
+    from flink_infotheoretic_feature_selection_spark.selector import _cell_bytes
+
+    kinds = {
+        "tinyint": T.ByteType(), "smallint": T.ShortType(), "int": T.IntegerType(),
+        "bigint": T.LongType(), "double": T.DoubleType(), "string": T.StringType(),
+    }
+
+    def schema(names, types):
+        return T.StructType([T.StructField(c, kinds[t]) for c, t in zip(names, types)])
+
+    nz = schema(["row_id", "feat", "x"], nonzeros)
+    lab = schema(["row_id", "y"], labels)
+    assert _cell_bytes(nz, lab) == width
+
+
+@pytest.fixture(scope="module")
+def sparse_input(spark):
+    """Long-format input with every join corner: sparse, permuted
+    row_ids; orphan cells (no label row); label rows with no cells; a
+    repeated label row_id and a NULL one; explicit x=0 cells; an
+    all-zero feature."""
+    rng = np.random.default_rng(11)
+    n, nf = 600, 8
+    X = rng.integers(0, 5, (n, nf))
+    X[rng.random(X.shape) < 0.55] = 0
+    X[:, 3] = 0
+    X[:40] = 0  # label rows with no cells
+    y = (X[:, 0] + X[:, 1] + rng.integers(0, 2, n)) % 3
+    ids = rng.permutation(50 * n)[:n].astype(np.int64) * 7 + 3
+    r, f = np.nonzero(X)
+    cells = [(int(ids[a]), int(b), int(X[a, b])) for a, b in zip(r, f)]
+    cells += [(1, 2, 4), (2, 5, 1)]  # orphans: ids are ≡ 3 (mod 7)
+    cells += [(int(ids[50]), 3, 0)]  # explicit zero
+    cells = [cells[i] for i in rng.permutation(len(cells))]
+    lab = [(int(ids[i]), int(y[i])) for i in range(n)]
+    lab += [(int(ids[60]), 2), (None, 1)]
+    nz = spark.createDataFrame(cells, "row_id long, feat int, x int").persist()
+    labels = spark.createDataFrame(lab, "row_id long, y int").persist()
+    nz.count(), labels.count()
+    yield nz, labels, nf
+    nz.unpersist()
+    labels.unpersist()
+
+
+@pytest.mark.parametrize(
+    "criterion", ["mim", "mifs", "jmi", "mrmr", "cmim", "if", "icap"]
+)
+def test_sparse_fit_identical_across_local_sql_and_packed_routes(
+    sparse_input, criterion, monkeypatch
+):
+    """The local route (two Arrow collects, the dense local stages)
+    selects exactly what both Spark routes select, with the same
+    relevances: the densified block yields the same integer tables."""
+    from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
+
+    nz, labels, nf = sparse_input
+
+    def fit(engine):
+        return SparseInfoThSelector(
+            n_features=nf, n_to_select=6, criterion=criterion, loop_engine=engine
+        ).fit(nz, labels)
+
+    local = fit("sql")
+    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
+    fits = {"sql": fit("sql"), "packed": fit("packed")}
+    assert local.fit_timings["sparse_route"] == "local"
+    if criterion != "mim":
+        assert local.fit_timings["relayout"] == _LOCAL
+        assert local.fit_timings["loop_jobs"] == 0
+    for route, other in fits.items():
+        assert other.fit_timings["sparse_route"] == route
+        assert other.selection_path == local.selection_path
+        assert other.relevances == local.relevances

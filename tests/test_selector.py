@@ -217,13 +217,28 @@ def test_validate_rejects_null_features(spark):
         ).fit(df)
 
 
-def test_sparse_fit_rejects_negative_values_and_oversized_dims(spark):
+# SparseInfoThSelector routes: the local route (default bound) and both
+# Spark engines with the local bound at 0
+SPARSE_REGIMES = ["local", "sql", "packed"]
+
+
+def _sparse_selector(regime, monkeypatch, **kw):
+    from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
+
+    if regime != "local":
+        monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
+    engine = "packed" if regime == "packed" else "sql"
+    return SparseInfoThSelector(loop_engine=engine, **kw)
+
+
+@pytest.mark.parametrize("regime", SPARSE_REGIMES)
+def test_sparse_fit_rejects_negative_values_and_oversized_dims(spark, regime, monkeypatch):
     # numpy fancy indexing would silently WRAP a negative x to the end of
     # the histogram; and an uncapped dim would size driver ndarrays by a
     # single corrupt cell. Both must be loud errors like the dense path.
     import pytest
-    from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
 
+    sel = _sparse_selector(regime, monkeypatch, n_features=2, n_to_select=1)
     labels = spark.createDataFrame(
         [(r, r % 2) for r in range(6)], "row_id long, y int"
     )
@@ -231,13 +246,40 @@ def test_sparse_fit_rejects_negative_values_and_oversized_dims(spark):
         [(0, 0, -1), (1, 1, 2), (2, 0, 1)], "row_id long, feat int, x int"
     )
     with pytest.raises(ValueError, match=">= 0"):
-        SparseInfoThSelector(n_features=2, n_to_select=1).fit(neg, labels)
+        sel.fit(neg, labels)
 
     huge = spark.createDataFrame(
         [(0, 0, 1_000_000), (1, 1, 2)], "row_id long, feat int, x int"
     )
-    with pytest.raises(ValueError, match="dim>256"):
-        SparseInfoThSelector(n_features=2, n_to_select=1).fit(huge, labels)
+    with pytest.raises(ValueError, match=r"dim>256\): \{0: 1000001\}"):
+        sel.fit(huge, labels)
+
+
+@pytest.mark.parametrize("regime", SPARSE_REGIMES)
+def test_sparse_fit_rejects_bad_feat_and_null_cells(spark, regime, monkeypatch):
+    # an out-of-range feat used to surface as a bare KeyError (SQL) or be
+    # silently dropped (packed); a NULL feat or x as a TypeError or a
+    # Python-worker exception — every route now raises one ValueError
+    sel = _sparse_selector(regime, monkeypatch, n_features=2, n_to_select=1)
+    labels = spark.createDataFrame(
+        [(r, r % 2) for r in range(6)], "row_id long, y int"
+    )
+    cases = [
+        ([(0, 0, 1), (1, 2, 1)], r"\[0, n_features=2\)"),
+        ([(0, 0, 1), (1, -1, 1)], r"\[0, n_features=2\)"),
+        ([(0, 0, 1), (1, 1, None)], "NULL"),
+        ([(0, 0, 1), (1, None, 3)], "NULL"),
+    ]
+    for rows, match in cases:
+        nz = spark.createDataFrame(rows, "row_id long, feat int, x int")
+        with pytest.raises(ValueError, match=match):
+            sel.fit(nz, labels)
+    # a faulty cell whose row_id has no label row is dropped by the join
+    # semantics in every route, as before
+    orphan = spark.createDataFrame(
+        [(0, 0, 1), (1, 1, 2), (99, 7, None)], "row_id long, feat int, x int"
+    )
+    assert sel.fit(orphan, labels).fit_timings["sparse_route"] == regime
 
 
 def test_empty_input_raises_clear_error(spark):
@@ -311,30 +353,35 @@ def test_validate_rejects_null_label(spark):
         ).fit(df)
 
 
-def test_sparse_fit_clear_errors_on_bad_labels(spark):
+@pytest.mark.parametrize("regime", SPARSE_REGIMES)
+def test_sparse_fit_clear_errors_on_bad_labels(spark, regime, monkeypatch):
     import pytest
-    from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
 
+    sel = _sparse_selector(regime, monkeypatch, n_features=2, n_to_select=1)
     nz = spark.createDataFrame([(0, 0, 1), (1, 1, 2)], "row_id long, feat int, x int")
     empty = spark.createDataFrame([], "row_id long, y int")
     with pytest.raises(ValueError, match="empty"):
-        SparseInfoThSelector(n_features=2, n_to_select=1).fit(nz, empty)
+        sel.fit(nz, empty)
 
     nully = spark.createDataFrame([(0, None), (1, 1)], "row_id long, y int")
     with pytest.raises(ValueError, match="NULL"):
-        SparseInfoThSelector(n_features=2, n_to_select=1).fit(nz, nully)
+        sel.fit(nz, nully)
 
     bigy = spark.createDataFrame([(0, 1), (1, 50_000_000)], "row_id long, y int")
     with pytest.raises(ValueError, match="byte range"):
-        SparseInfoThSelector(n_features=2, n_to_select=1).fit(nz, bigy)
+        sel.fit(nz, bigy)
+
+    negy = spark.createDataFrame([(0, 1), (1, -1)], "row_id long, y int")
+    with pytest.raises(ValueError, match=">= 0"):
+        sel.fit(nz, negy)
 
 
-def test_sparse_fit_rejects_duplicate_cells(spark):
+@pytest.mark.parametrize("regime", SPARSE_REGIMES)
+def test_sparse_fit_rejects_duplicate_cells(spark, regime, monkeypatch):
     # duplicate (row_id, feat) cells over-count nonzeros past the label
     # totals; the credited-zeros row would go NEGATIVE and mutual_info's
     # p>0 mask would silently skip it — must be a loud error
     import pytest
-    from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
 
     labels = spark.createDataFrame([(r, r % 2) for r in range(3)], "row_id long, y int")
     # row 0 duplicated 3x: its (x=2, y=0) cell counts 3 > n_y[0]=2, so
@@ -343,11 +390,10 @@ def test_sparse_fit_rejects_duplicate_cells(spark):
     dup = spark.createDataFrame(
         [(0, 0, 2)] * 3 + [(1, 1, 1)], "row_id long, feat int, x int"
     )
-    for engine in ("sql", "packed"):
-        with pytest.raises(ValueError, match="duplicate"):
-            SparseInfoThSelector(
-                n_features=2, n_to_select=1, loop_engine=engine
-            ).fit(dup, labels)
+    with pytest.raises(ValueError, match="duplicate"):
+        _sparse_selector(regime, monkeypatch, n_features=2, n_to_select=1).fit(
+            dup, labels
+        )
 
 
 def test_mim_reports_zero_iterations(spark):

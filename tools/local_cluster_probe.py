@@ -134,12 +134,18 @@ def main(cfg_path: str) -> None:
         out["wide_selection"] = q5_path(m)
 
     # -- sparse fit: zipper-join co-location under multi-executor AQE ---
+    # (the local route would collect the cells to the driver: off here)
     nz = spark.read.parquet(cfg["sparse_nonzeros"])
     labels = spark.read.parquet(cfg["sparse_labels"])
-    m = SparseInfoThSelector(
-        n_features=cfg["sparse_nf"], n_to_select=3, criterion="mrmr",
-        emit_f32=False,
-    ).fit(nz, labels)
+    InfoThSelector.LOCAL_MAX_BYTES = 0
+    try:
+        m = SparseInfoThSelector(
+            n_features=cfg["sparse_nf"], n_to_select=3, criterion="mrmr",
+            emit_f32=False,
+        ).fit(nz, labels)
+    finally:
+        InfoThSelector.LOCAL_MAX_BYTES = local_max
+    out["sparse_route"] = m.fit_timings["sparse_route"]
     out["sparse_selection"] = q5_path(m)
 
     # -- LSH dedup pairs over the shared testdata corpus ----------------

@@ -68,7 +68,9 @@ def main() -> int:
         # shapes (far under 32 MB) in the local regime, every pass on
         # the driver, so without this lane the distributed branch only
         # ever ran in test_packed's fixed cases; the local regime is
-        # switched off here for that reason.  Both attrs restored in
+        # switched off here for that reason — for the dense fits and for
+        # SparseInfoThSelector's local route, which reads the same
+        # bound, so the sparse gates take the SQL route.  Both attrs restored in
         # finally: packed.py and the selector read them at call time.
         from flink_infotheoretic_feature_selection_spark.operators import histogram
         from flink_infotheoretic_feature_selection_spark.selector import InfoThSelector
