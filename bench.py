@@ -76,7 +76,7 @@ MEDIANS: dict[str, float] = {}
 # fit is pack(1) + its one collect(1), every later pass on the driver.
 # A sparse fit on its local route is 4: the label histogram (2 under
 # AQE, its shuffle stage and its result) plus the two Arrow collects;
-# its SQL and packed routes are not estimated.
+# its SQL route is not estimated.
 # The full payload emits queries_excess = min_sec − est_jobs × the
 # measured job_floor_sec, so the PERF diff can separate substrate time
 # from scheduler floor on the job-count-bound queries.

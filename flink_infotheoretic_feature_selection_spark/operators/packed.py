@@ -66,17 +66,13 @@ from flink_infotheoretic_feature_selection_spark.operators.histogram import chec
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
-__all__ = ["PackedMatrix", "PackedSparse", "list_parquet_files"]
+__all__ = ["PackedMatrix", "list_parquet_files"]
 
 
 def _add_partial(acc: np.ndarray, v: np.ndarray) -> np.ndarray:
-    """``acc += v`` for an int64 accumulator, growing ``acc`` to the
-    longer array first — ``PackedSparse.dims_and_hist2d`` encodes each
-    feature's dim in its table LENGTH, so partials may differ in size;
-    every other pass emits fixed-length tables and never grows."""
-    if len(v) > len(acc):
-        acc = np.pad(acc, (0, len(v) - len(acc)))
-    acc[: len(v)] += v
+    """``acc += v`` in place for an int64 accumulator; every pass emits
+    one fixed-length table per key, so the shapes always agree."""
+    acc += v
     return acc
 
 
@@ -1043,249 +1039,3 @@ class PackedMatrix:
             for si, s in enumerate(conds)
         }
 
-
-class PackedSparse:
-    """CSC-style per-partition blocks of the label-attached nonzero
-    cells — the sparse twin of :class:`PackedMatrix`.
-
-    Input contract: a DataFrame ``(row_id, feat, x, y)`` whose
-    partitioning CO-LOCATES every cell of a row (the selector's merge
-    zipper join on ``row_id`` guarantees this — its SMJ exchange hash
-    partitions the output by ``row_id``).  Co-location is what makes the
-    per-iteration z-attach (selected feature's value per row) a purely
-    partition-local scatter, so the greedy loop runs with ZERO
-    per-iteration shuffles or joins — the SQL route
-    (``SparseInfoThSelector`` with ``loop_engine="sql"``) pays a fresh
-    plan + zipper join + sparse-cell ``toPandas`` per iteration instead.
-
-    Block layout (built once, NumPy): cells stable-sorted by ``feat``
-    with ``ptr[f]:ptr[f+1]`` slicing (the CSC column pointer), per-cell
-    ``x``/``y``/local-row arrays, local row count.  Zero-crediting stays
-    EXACTLY where the SQL route put it — on the driver against the
-    dims-bounded global ``N_y`` / ``N_zy`` tables
-    (``InfoTheory.scala:296-304``, ``:377-384``) — so histograms and
-    scores are bit-identical (pinned by tests/test_packed.py).
-    """
-
-    def __init__(self, rdd, n_features: int, n_partitions: int, total_local_rows: int = -1) -> None:
-        self.rdd = rdd
-        self.n_features = int(n_features)
-        self.n_partitions = n_partitions
-        #: Σ per-partition distinct row_id counts (set by :meth:`pack`).
-        #: Equals the GLOBAL distinct row count iff every row's cells are
-        #: co-located in one partition — the property every histogram
-        #: method here silently depends on.
-        self.total_local_rows = total_local_rows
-
-    @classmethod
-    def pack(
-        cls,
-        nzy: DataFrame,
-        n_features: int,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-        expected_distinct_rows: int | None = None,
-    ) -> "PackedSparse":
-        """Pack co-located ``(row_id, feat, x, y)`` cells into CSC blocks.
-
-        ``expected_distinct_rows`` — the caller's independently-computed
-        global ``count(DISTINCT row_id)`` — arms the co-location check:
-        each block's distinct-row count rides the pack scan for free, and
-        their sum exceeds the global count exactly when some row's cells
-        were split across partitions (each split row is then counted
-        once per partition holding it).  A split would NOT fail loudly —
-        the per-iteration z-attach in :meth:`hist3d_nonzero` would
-        scatter z=0 for the cells living away from the selected feature's
-        cell and silently corrupt every score — so a mismatch raises.
-        AQE's skew-join split (``spark.sql.adaptive.skewJoin.enabled``,
-        on by default) is the known way a hash-partitioned join output
-        loses this property; ``SparseInfoThSelector`` disables it for the
-        pack job AND passes this check.
-        """
-        nf = int(n_features)
-
-        def pack_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            got = list(batches)
-            if not got:
-                return
-            cols = {
-                name: np.concatenate(
-                    [b.column(b.schema.get_field_index(name)).to_numpy(zero_copy_only=False) for b in got]
-                )
-                for name in ("row_id", "feat", "x", "y")
-            }
-            feat = cols["feat"].astype(np.int64)
-            x = cols["x"].astype(np.int64)
-            y = cols["y"].astype(np.int64)
-            if feat.size and (x.min() < 0 or y.min() < 0 or feat.min() < 0):
-                # the SQL route raises the same contract error when the
-                # collected histogram cells go negative
-                raise ValueError("sparse histogram indices must be >= 0")
-            _, inv = np.unique(cols["row_id"], return_inverse=True)
-            order = np.argsort(feat, kind="stable")
-            # Compact cell arrays: x/y are byte-ranged by contract, so
-            # _compact stores them uint8 (r10 — was int32; the persisted
-            # RDD re-deserializes every block on EVERY job, so cell
-            # bytes are the per-job floor).  Same no-silent-wrap rule as
-            # the dense blocks: out-of-range values keep a preserving
-            # dtype so the executor-side dim>256 guard in the histogram
-            # partials still sees the real value.  Local row index stays
-            # int32 (< 2^31 rows per partition by construction).
-            blk = {
-                "ptr": np.searchsorted(feat[order], np.arange(nf + 1)),
-                "x": _compact(x[order].astype(np.int32)),
-                "y": _compact(y[order].astype(np.int32)),
-                "row": inv[order].astype(np.int32),
-                "nrows": int(inv.max()) + 1 if inv.size else 0,
-            }
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([pickle.dumps(blk, protocol=pickle.HIGHEST_PROTOCOL)], type=pa.binary())],
-                names=["blk"],
-            )
-
-        rdd = (
-            nzy.select("row_id", "feat", "x", "y")
-            .mapInArrow(pack_batches, "blk binary")
-            .rdd.map(lambda r: pickle.loads(r.blk))
-            .persist(storage_level)
-        )
-        n_parts = rdd.getNumPartitions()
-        # materialize; the sum of per-partition distinct row counts rides
-        # the same job (replaces the former bare count())
-        total_local = int(rdd.map(lambda blk: blk["nrows"]).sum())
-        if expected_distinct_rows is not None and total_local != expected_distinct_rows:
-            rdd.unpersist()
-            raise ValueError(
-                "PackedSparse co-location violated: sum of per-partition "
-                f"distinct row counts {total_local} != global distinct row "
-                f"count {expected_distinct_rows}. Some row's cells are split "
-                "across partitions (e.g. AQE skew-join split of the zipper "
-                "join output); repartition the input by row_id or disable "
-                "spark.sql.adaptive.skewJoin.enabled for the pack job."
-            )
-        return cls(rdd, nf, n_parts, total_local)
-
-    def unpersist(self) -> None:
-        self.rdd.unpersist()
-
-    def dims_and_hist2d(self, y_dim: int) -> tuple[dict[int, int], dict[int, np.ndarray]]:
-        """ONE pass: per-feature dims (``max(x)+1`` over the nonzeros,
-        UNCAPPED — the caller applies the 256-contract check with its own
-        message; empty features get dim 1, mirroring the SQL route's
-        ``max(drow.get(i, 1), 1)``) AND the global ``count(x, y)``
-        nonzero tables (``(dims[f], y_dim)`` int64).
-
-        Dims ride the histogram for free: each partition bincounts codes
-        ``x·y_dim + y`` with NO minlength, so the bincount LENGTH is
-        ``local_max_code + 1`` and ``ceil(len / y_dim)`` is the local
-        ``max(x)+1``; padding partials to the running max length before
-        the exact integer merge preserves both the counts and the
-        length-encoded dims.  The caller credits the x=0 row from
-        ``N_y`` exactly like the SQL route's ``collect2d``.
-
-        Merge (r8): collected partial volume is unbounded in partition
-        count, so the tables go through :func:`_merge_partials`, gated by
-        the WORST-CASE volume ``n_partitions × nf × 256 × y_dim × 4``
-        (cells are byte-ranged: the executor-side guard in the partial
-        pass raises past 256).  Its pad-to-max add keeps the
-        length-encoded dims in both regimes; integer sums and length-max
-        are order-free, so both are bit-identical (pinned by
-        tests/test_packed.py)."""
-        nf = self.n_features
-
-        def partials(blk):
-            ptr, x, y = blk["ptr"], blk["x"], blk["y"]
-            # Guard BEFORE sizing any bincount: the caller's dim>256
-            # contract check runs on the returned dims, but a single
-            # corrupt cell (x = 1e9, representable in the int32 block)
-            # would have this partition allocate ~x·y_dim·8 bytes FIRST
-            # and OOM the executor where the SQL route's groupBy
-            # aggregated safely and the driver raised cleanly.  max(x)
-            # per feature is scalar work; raise the same contract error
-            # here instead.
-            fmax = {
-                f: int(x[ptr[f] : ptr[f + 1]].max())
-                for f in range(nf)
-                if ptr[f + 1] > ptr[f]
-            }
-            over = {f: mx + 1 for f, mx in fmax.items() if mx >= 256}
-            if over:
-                raise ValueError(
-                    f"sparse feature values exceed the byte range (dim>256): {over}"
-                )
-            # upcast before the code product (blocks store int32); emit
-            # int32 partials so the collected volume matches the 4 B/count
-            # bound formula.  Cells count nonzero entries, bounded by the
-            # block's total nnz — one compare proves int32 safety for
-            # every feature table (r9 fix)
-            check_int32_rows(len(x))
-            return [
-                np.bincount(
-                    x[ptr[f] : ptr[f + 1]].astype(np.int64) * y_dim
-                    + y[ptr[f] : ptr[f + 1]]
-                ).astype(np.int32)
-                for f in range(nf)
-            ]
-
-        merged = _merge_partials(
-            self.rdd, partials, nf, self.n_partitions * nf * 256 * y_dim * 4
-        )
-        dims = {
-            f: max(-(-len(merged.get(f, ())) // y_dim), 1) for f in range(nf)
-        }
-        out = {}
-        for f in range(nf):
-            tbl = np.zeros(dims[f] * y_dim, dtype=np.int64)
-            got = merged.get(f)
-            if got is not None:
-                tbl[: len(got)] = got
-            out[f] = tbl.reshape(dims[f], y_dim)
-        return dims, out
-
-    def hist3d_nonzero(
-        self,
-        remaining: list[int],
-        best: int,
-        dims: dict[int, int],
-        sel_dim: int,
-        y_dim: int,
-    ) -> dict[int, np.ndarray]:
-        """Global ``count(x, z=selected, y)`` over the nonzero cells of
-        every remaining feature (``(dims[f], sel_dim, y_dim)`` int64) —
-        ONE partition-local pass, no join: z comes from scattering the
-        selected feature's cells onto the partition's local row index.
-
-        The per-block tables merge through :func:`_merge_partials`, the
-        same two-regime merge as the dense passes.
-        """
-        rem = list(remaining)
-        szy = sel_dim * y_dim
-
-        def partials(blk):
-            ptr, x, y, row = blk["ptr"], blk["x"], blk["y"], blk["row"]
-            z_row = np.zeros(blk["nrows"], dtype=np.int64)
-            sl = slice(ptr[best], ptr[best + 1])
-            z_row[row[sl]] = x[sl]
-            # cells count nonzero entries <= block nnz: one compare proves
-            # int32 safety for every emitted table (r9 fix)
-            check_int32_rows(len(x))
-            out = []
-            for f in rem:
-                fsl = slice(ptr[f], ptr[f + 1])
-                # int64 upcast first: blocks store int32 cells; int32
-                # partial emit keeps the volume at the 4 B/count formula
-                code = x[fsl].astype(np.int64) * szy + z_row[row[fsl]] * y_dim + y[fsl]
-                out.append(np.bincount(code, minlength=dims[f] * szy).astype(np.int32))
-            return out
-
-        merged = _merge_partials(
-            self.rdd,
-            partials,
-            len(rem),
-            self.n_partitions * sum(dims[f] for f in rem) * szy * 4,
-        )
-        return {
-            f: merged.get(i, np.zeros(dims[f] * szy, dtype=np.int64)).reshape(
-                dims[f], sel_dim, y_dim
-            )
-            for i, f in enumerate(rem)
-        }

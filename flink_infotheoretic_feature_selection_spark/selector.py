@@ -52,15 +52,19 @@ Differences from the reference, deliberate and documented:
   ``tie_precision=None`` for full-precision argmax — deterministic via
   the id tiebreak, but not oracle-reproducible across engines.
 - the sparse path works (the reference's throws,
-  ``InfoSelector.scala:378-386``): ``SparseInfoThSelector`` densifies
-  inputs under ``LOCAL_MAX_BYTES`` on the driver and fits them with the
-  dense local stages; larger inputs take its SQL or packed Spark route.
+  ``InfoSelector.scala:378-386``): ``SparseInfoThSelector`` has two
+  routes.  Inputs under ``LOCAL_MAX_BYTES`` are densified on the driver
+  and fitted by the dense local stages; larger ones take the SQL route,
+  one co-partitioned join per loop pass.
+
+Every route — dense local, dense Spark, sparse SQL — selects through the
+one greedy loop, :func:`greedy_path`; they differ only in the pass that
+scores the remaining features against a selected one.
 """
 
 from __future__ import annotations
 
 import math
-import threading
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -68,16 +72,11 @@ from pyspark.storagelevel import StorageLevel
 
 from flink_infotheoretic_feature_selection_spark.functions.criteria import (
     CRITERION_NAMES,
-    Criterion,
     criterion_factory,
 )
 from flink_infotheoretic_feature_selection_spark.functions.infotheory import mi_and_cmi, mutual_info
 
 __all__ = ["InfoThSelector", "InfoThSelectorModel", "SparseInfoThSelector"]
-
-# Serializes the sparse pack's session-global skew-join override so two
-# concurrent fits cannot interleave set/restore (see SparseInfoThSelector.fit).
-_SKEW_CONF_LOCK = threading.Lock()
 
 
 def _check_selection_args(n_to_select: int, criterion: str) -> None:
@@ -146,6 +145,91 @@ def _tie_key(score: float, precision: int | None):
     if precision is None:
         return score
     return math.floor(score * 10.0**precision + 0.5)
+
+
+def greedy_path(
+    feats: list,
+    relevances: dict,
+    criterion: str,
+    beta: float,
+    k: int,
+    tie_precision: int | None,
+    score_pass,
+    speculation: int | str,
+) -> tuple[list[tuple], int, int]:
+    """The greedy forward selection every route runs
+    (``InfoSelector.scala:353-362``): ``(path, passes, hits)`` — the
+    ``k`` winners with their scores at selection time, the number of
+    ``score_pass`` calls and the number of passes speculation saved.
+
+    MIM is top-k by relevance (``InfoSelector.scala:313-315``) and
+    calls no pass.  Otherwise each winner is the argmax of the
+    criterion scores under the tie contract (module docstring): the
+    ``_tie_key`` at ``tie_precision``, then the lowest position in
+    ``feats``.  ``score_pass(remaining, conds)`` returns
+    ``{cond: {feat: (MI(feat; cond), CMI(feat; cond | class))}}`` for
+    every remaining feature — the redundancy pass
+    (``InfoTheory.scala:445-461``); ``conds[0]`` is the latest winner.
+
+    Speculation (r13, guide §1.2): the pairs a pass returns do not depend
+    on the iteration that consumes them, so one pass may also score the
+    ``width`` remaining features most likely to win next (ranked by the
+    argmax key).  A later winner already scored skips its pass — the
+    prefetching pass scored a superset of the current remaining set,
+    which only shrinks.  Updates replay one winner at a time in
+    selection order, so the floats never depend on the width.
+    ``speculation`` pins the width (0 = one cond per pass) or is
+    ``"auto"``: start at 3, then before each pass take
+    ``min(2·consumed + 1, 7)`` after a launch whose prefetches were
+    consumed and halve after a fully wasted one, so adversarial data
+    decays to one cond per pass.  No pass scores a cond past the
+    ``k − len(path) − 1`` the fit still needs."""
+    pos = {c: i for i, c in enumerate(feats)}
+
+    def key(c, score):
+        return (_tie_key(score, tie_precision), -pos[c])
+
+    if criterion.lower() == "mim":
+        order = sorted(feats, key=lambda c: key(c, relevances[c]), reverse=True)
+        return [(c, relevances[c]) for c in order[:k]], 0, 0
+
+    state: dict = {c: criterion_factory(criterion, beta).init(relevances[c]) for c in feats}
+    remaining = list(feats)
+    path: list[tuple] = []
+    prefetched: dict = {}
+    spec_auto = speculation == "auto"
+    width = 3 if spec_auto else int(speculation)
+    consumed = passes = hits = 0
+    while True:
+        best = max(remaining, key=lambda c: key(c, state[c].score))
+        path.append((best, state[best].score))
+        # parity artifact, not control flow: mirrors the reference's
+        # setValid(false) (InfoCriterion.scala) — `remaining` drives
+        # exclusion
+        state[best].valid = False
+        remaining.remove(best)
+        if len(path) >= k or not remaining:
+            return path, passes, hits
+        if best in prefetched:
+            scores = prefetched.pop(best)
+            hits += 1
+            consumed += 1
+        else:
+            if passes and spec_auto:
+                width = min(2 * consumed + 1, 7) if consumed else width // 2
+            consumed = 0
+            w = min(width, k - len(path) - 1)
+            spec = sorted(
+                (c for c in remaining if c not in prefetched),
+                key=lambda c: key(c, state[c].score),
+                reverse=True,
+            )[:w] if w > 0 else []
+            multi = score_pass(remaining, [best] + spec)
+            passes += 1
+            scores = multi.pop(best)
+            prefetched.update(multi)
+        for c in remaining:
+            state[c].update(*scores[c])
 
 
 @dataclass
@@ -643,112 +727,20 @@ class InfoThSelector:
             )
         timings["relevance_sec"] = round(_time.perf_counter() - _t0, 3)
 
-        state: dict[str, Criterion] = {
-            c: criterion_factory(self.criterion, self.beta).init(relevances[c]) for c in feats
-        }
-
-        path: list[tuple[str, float]] = []
+        # Loop: one packed pass (hist3d_mi_cmi_multi) per launch, called
+        # through the instance at pass time.  A speculated cond only pays
+        # off by saving a job launch, so the local regime pins width 0.
         _t0 = _time.perf_counter()
-        if self.criterion.lower() == "mim":
-            # MIM fast path: pure top-k by relevance, InfoSelector.scala:313-315.
-            order = sorted(
-                feats,
-                key=lambda c: (
-                    -_tie_key(relevances[c], self.tie_precision),
-                    feats.index(c),
-                ),
-            )
-            path = [(c, relevances[c]) for c in order[: self.n_to_select]]
-        else:
-            remaining = list(feats)
-            # Speculative prefetch (r13, guide §1.2 — the greedy loop is
-            # k−1 SEQUENTIAL jobs and at bench scale each pays far more
-            # in job-launch latency than in histogram compute): the loop
-            # consumes only the pairwise quantities
-            # (MI(c; s), CMI(c; s | label)), which do not depend on the
-            # iteration they are consumed in — so one launch can compute
-            # the pass for the known winner AND for the `width` features
-            # most likely to win next (ranked by the same argmax key the
-            # selection uses).  When a later winner is already prefetched
-            # its pass is skipped outright.  Results are bit-identical by
-            # construction: every (c, s) table is the same integer-merged
-            # histogram, and updates are replayed one winner at a time in
-            # selection order, so float accumulation order never changes
-            # (pinned by tests/test_packed.py).  A miss wastes only the
-            # speculated bincounts inside an already-launched job; the
-            # auto width adapts to the observed consumption (halve on a
-            # fully-wasted launch, grow with hits, cap 7) so adversarial
-            # data decays to the old one-cond-per-job behavior.
-            # The local regime (no job launch to amortize) pins width 0.
-            prefetched: dict[str, dict[str, tuple[float, float]]] = {}
-            local = packed.local
-            spec_auto = self.speculation == "auto" and not local
-            width = 0 if local else 3 if spec_auto else int(self.speculation)
-            consumed_since_launch = 0
-            loop_jobs = 0
-            spec_hits = 0
-            while len(path) < self.n_to_select:
-                # tie_precision comparison: module-docstring tie contract
-                best = max(
-                    remaining,
-                    key=lambda c: (
-                        _tie_key(state[c].score, self.tie_precision),
-                        -feats.index(c),
-                    ),
-                )
-                path.append((best, state[best].score))
-                # parity artifact, not control flow: mirrors the
-                # reference's setValid(false) (InfoCriterion.scala) —
-                # exclusion here is driven by `remaining`
-                state[best].valid = False
-                remaining.remove(best)
-                if len(path) >= self.n_to_select or not remaining:
-                    break
-                # Redundancy pass: 3-D histograms of every remaining feature
-                # vs (selected=best, class) — InfoTheory.scala:445-461 —
-                # one packed pass (hist3d_mi_cmi_multi) per launch.
-                if best in prefetched:
-                    # the prefetching pass scored a SUPERSET of the
-                    # current remaining set (remaining only shrinks)
-                    scores = prefetched.pop(best)
-                    spec_hits += 1
-                    consumed_since_launch += 1
-                else:
-                    if loop_jobs and spec_auto:
-                        width = (
-                            min(2 * consumed_since_launch + 1, 7)
-                            if consumed_since_launch
-                            else width // 2
-                        )
-                    consumed_since_launch = 0
-                    # a speculated cond is only consumable by a FUTURE
-                    # pass; the fit needs exactly
-                    # n_to_select − len(path) − 1 more of them, so wider
-                    # speculation past that bound is guaranteed waste
-                    w_eff = min(width, self.n_to_select - len(path) - 1)
-                    spec: list[str] = []
-                    if w_eff > 0:
-                        spec = sorted(
-                            (c for c in remaining if c not in prefetched),
-                            key=lambda c: (
-                                _tie_key(state[c].score, self.tie_precision),
-                                -feats.index(c),
-                            ),
-                            reverse=True,
-                        )[:w_eff]
-                    multi = packed.hist3d_mi_cmi_multi(
-                        remaining, [best] + spec, label, dims, n,
-                        emit_f32=self.emit_f32,
-                    )
-                    if not local:
-                        loop_jobs += 1
-                    scores = multi.pop(best)
-                    prefetched.update(multi)
-                for c in remaining:
-                    state[c].update(*scores[c])
-            timings["loop_jobs"] = loop_jobs
-            timings["speculation_hits"] = spec_hits
-
+        path, passes, hits = greedy_path(
+            feats, relevances, self.criterion, self.beta, self.n_to_select,
+            self.tie_precision,
+            lambda remaining, conds: packed.hist3d_mi_cmi_multi(
+                remaining, conds, label, dims, n, emit_f32=self.emit_f32
+            ),
+            0 if packed.local else self.speculation,
+        )
+        timings["loop_jobs"] = 0 if packed.local else passes
+        timings["speculation_hits"] = hits
         timings["loop_sec"] = round(_time.perf_counter() - _t0, 3)
         # MIM never runs a redundancy pass — reporting k-1 would hand
         # per-iteration diagnostics a nonsense denominator (r8 review)
@@ -776,13 +768,13 @@ class SparseInfoThSelector:
     to the dense path — verified by the dense-vs-densified test.
 
     The fit first runs the label histogram (class priors, the label
-    contract, the row count ``n``), then takes one of three routes,
+    contract, the row count ``n``), then takes one of two routes,
     decided once by :meth:`_plan_route` and recorded as
-    ``fit_timings["sparse_route"]``.  Selections and relevances are
-    bit-identical on all three (tests/test_packed.py):
+    ``fit_timings["sparse_route"]``.  Both run the one greedy loop
+    (:func:`greedy_path`); selections and relevances are bit-identical
+    on both (tests/test_packed.py):
 
-    - ``"local"``, whatever ``loop_engine`` says, when
-      ``n × n_features × cell_bytes`` is at most
+    - ``"local"`` when ``n × n_features × cell_bytes`` is at most
       ``InfoThSelector.LOCAL_MAX_BYTES`` (32 MiB).  ``cell_bytes`` is
       the width of one collected ``(row_id, feat, x)`` row — 16 B for
       long/int/int — and ``n × n_features`` the most cells a
@@ -795,37 +787,16 @@ class SparseInfoThSelector:
       17 jobs and 4.6 s on the SQL route, 4 jobs and about 1 s here).
       Orphan cells (no label row) are collected before the join
       semantics drop them, so they are outside the bound.
+    - ``"sql"`` for everything above the bound: one zipper join
+      persists the label-attached cells partitioned and sorted by
+      ``row_id``; every loop pass is one co-partitioned join plus a
+      sparse-cell collect, all JVM-side and data-parallel.
 
-    Above the bound, ``loop_engine`` picks the Spark route:
-
-    - ``"sql"`` (default): persisted zipper layout, one co-partitioned
-      join + sparse-cell collect per iteration.  Its one-time setup is
-      cheapest (the cache materializes in Tungsten, no Python transit),
-      so it wins at small k.
-    - ``"packed"``: one zipper join attaches labels, then the cells pack
-      into row_id-co-partitioned CSC blocks
-      (operators/packed.py::PackedSparse); every iteration's z-attach is
-      a partition-local scatter — zero per-iteration joins or plans.
-      The pack pays a one-time Python/Arrow transit of the cells
-      (~6.8 s at sf0.1's 4.6M nonzeros) that 0.30 s/iteration (vs the
-      SQL route's ~0.9 s) amortizes from k ≈ 6 selected features up
-      AT THAT DATA SIZE (measured sf0.1: k=8 fit 9.0 s packed vs
-      10.9 s sql; k=3 the SQL route stays ahead).  The crossover does
-      NOT extend with data volume: at 10× (sf1-shape, 16 features /
-      ~90M cells, k=10) the cell transit outgrows the per-iteration
-      savings — 107.7 s packed vs 86.1 s sql, identical selection —
-      because the SQL route's join machinery is JVM-side and
-      data-parallel while the pack is a fixed per-byte Python toll.
-      Unlike the DENSE packed engine, whose pack REPLACES same-cost
-      Catalyst setup and wins at every k and scale, the sparse packed
-      engine is a small-data / many-iteration option; the sql default
-      is the scale path.
-
-    Every route enforces one cell contract with the same errors
+    Both routes enforce one cell contract with the same errors
     (``operators.sparse.check_cells``, from each route's own aggregate
     of the labelled cells): no NULL ``feat``/``x``, ``feat`` in
-    ``[0, n_features)``, ``x`` in ``[0, 255]``; duplicate
-    ``(row_id, feat)`` cells raise as well.
+    ``[0, n_features)``, ``x`` in ``[0, 255]``, and at most one nonzero
+    cell per labelled ``(row_id, feat)``.
     """
 
     def __init__(
@@ -836,36 +807,30 @@ class SparseInfoThSelector:
         beta: float = 1.0,
         emit_f32: bool = True,
         tie_precision: int | None = 5,
-        loop_engine: str = "sql",
     ) -> None:
         _check_selection_args(n_to_select, criterion)
-        if loop_engine not in ("packed", "sql"):
-            raise ValueError(f"loop_engine must be 'packed' or 'sql', got {loop_engine!r}")
         self.n_features = int(n_features)
         self.n_to_select = int(n_to_select)
         self.criterion = criterion
         self.beta = beta
         self.emit_f32 = emit_f32
         self.tie_precision = tie_precision
-        self.loop_engine = loop_engine
 
     @staticmethod
-    def _plan_route(
-        n_rows: int, n_features: int, cell_bytes: int | None, loop_engine: str
-    ) -> str:
+    def _plan_route(n_rows: int, n_features: int, cell_bytes: int | None) -> str:
         """The fit's route, a pure function of the label count, the
         feature count and the collected cell width (:func:`_cell_bytes`):
         ``"local"`` when ``n_rows × n_features × cell_bytes`` — the
         largest long-format table a duplicate-free input can hold — is
         at most ``InfoThSelector.LOCAL_MAX_BYTES`` (read at call time),
-        else ``loop_engine``.  ``cell_bytes`` None (a non-integer
-        column) never goes local."""
+        else ``"sql"``.  ``cell_bytes`` None (a non-integer column)
+        never goes local."""
         if (
             cell_bytes is not None
             and n_rows * n_features * cell_bytes <= InfoThSelector.LOCAL_MAX_BYTES
         ):
             return "local"
-        return loop_engine
+        return "sql"
 
     def _fit_local(self, nonzeros: DataFrame, labels: DataFrame, n: int) -> InfoThSelectorModel:
         """The local route: one Arrow collect of ``labels`` and one of
@@ -911,11 +876,8 @@ class SparseInfoThSelector:
         import numpy as np
         from pyspark.sql import functions as F
 
-        from flink_infotheoretic_feature_selection_spark.operators.sparse import check_cells
-
-        nf = self.n_features
         # The label histogram comes first, before any join or persist:
-        # every route needs it (class priors, label contract) and its
+        # both routes need it (class priors, label contract) and its
         # row count decides the route.
         y_hist = {}
         for r in labels.groupBy("y").agg(F.count("*").alias("cnt")).collect():
@@ -936,267 +898,163 @@ class SparseInfoThSelector:
             raise ValueError(
                 f"label values exceed the byte range (dim>256): {y_dim}"
             )
-        route = self._plan_route(
-            n, nf, _cell_bytes(nonzeros.schema, labels.schema), self.loop_engine
-        )
-        if route == "local":
+        cell_bytes = _cell_bytes(nonzeros.schema, labels.schema)
+        if self._plan_route(n, self.n_features, cell_bytes) == "local":
             return self._fit_local(nonzeros, labels, n)
         n_y = np.zeros(y_dim, dtype=np.int64)
         for y_, c_ in y_hist.items():
             n_y[y_] = c_
+        return self._fit_sql(nonzeros, labels, n, n_y)
 
-        # One data-sized join for the whole fit: attach the label to every
-        # nonzero cell, persist partitioned+sorted by row_id.  Every
-        # per-iteration join (remaining cells vs. the selected feature's
-        # column) then has BOTH sides co-partitioned on row_id — no
-        # further shuffle of the big table, k iterations reuse one layout.
-        # Zero-crediting (InfoTheory.scala:296-304, :377-384) moves to the
-        # driver: it only needs the dims-bounded y / (y,z) histograms.
+    def _fit_sql(self, nonzeros: DataFrame, labels: DataFrame, n: int, n_y) -> InfoThSelectorModel:
+        """The SQL route: everything above the local bound.
+
+        One data-sized join for the whole fit attaches the label to every
+        nonzero cell and persists the result partitioned and sorted by
+        row_id.  Every per-pass join (remaining cells vs. the selected
+        feature's column) then has BOTH sides co-partitioned on row_id —
+        no further shuffle of the big table, k passes reuse one layout.
+        Zero-crediting (InfoTheory.scala:296-304, :377-384) happens on
+        the driver: it only needs the dims-bounded y / (y,z) histograms.
+        """
+        import numpy as np
+        from pyspark.sql import Window
+        from pyspark.sql import functions as F
+
+        from flink_infotheoretic_feature_selection_spark.operators.sparse import check_cells
+
+        nf = self.n_features
+        y_dim = len(n_y)
+        # Each cell carries the count of nonzero cells sharing its
+        # (row_id, feat) — the dims job rejects a labelled count above 1,
+        # as the local route's densify does; orphan copies drop at the
+        # join.  The explicit row_id repartition stays the cells' one
+        # exchange: the window's (row_id, feat) sort reuses it, and the
+        # zipper join reuses both (its own sort included).
+        cells = nonzeros.repartition("row_id").withColumn(
+            "copies",
+            F.count(F.when(F.col("x") != 0, 1)).over(Window.partitionBy("row_id", "feat")),
+        )
         # The merge-join HINT is load-bearing twice over: (1) it stops AQE
         # electing a broadcast join (whose output would keep the file
         # partitioning, not row_id's, breaking the zipper property — and
         # broadcasting a row-count-sized label column is unbounded at
-        # scale anyway); (2) the SMJ's own exchanges leave the output
-        # hash-partitioned AND sorted by row_id, so no explicit
-        # repartition/sort is needed — the round-3 build paid one extra
-        # full shuffle of the joined table here (measured: 3.8 s → 2.1 s
-        # at sf0.1).  sortWithinPartitions is kept as a declarative
-        # guard: it collapses to a no-op while the SMJ ordering holds.
-        packed = None
-        nzy = None
-        nzy_joined = nonzeros.join(labels.hint("merge"), "row_id").select(
-            "row_id", "feat", "x", "y"
+        # scale anyway); (2) the SMJ output stays hash-partitioned AND
+        # sorted by row_id, so no explicit sort is needed — the round-3
+        # build paid one extra full shuffle of the joined table here
+        # (measured: 3.8 s → 2.1 s at sf0.1).  sortWithinPartitions is
+        # kept as a declarative guard: it collapses to a no-op while the
+        # SMJ ordering holds.
+        nzy = (
+            cells.join(labels.hint("merge"), "row_id")
+            .select("row_id", "feat", "x", "y", "copies")
+            .sortWithinPartitions("row_id")
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        # NULL feat or x in a labelled cell, counted by the stats jobs
-        null_cell = F.when(F.col("feat").isNull() | F.col("x").isNull(), 1).otherwise(0)
-        if route == "packed":
-            # The zipper join's SMJ exchange hash partitions its output by
-            # row_id (co-locating every cell of a row — what makes the
-            # per-iteration z-attach partition-local), and PackedSparse
-            # scans that output exactly once.  Two guards protect the
-            # co-location property the packed histograms silently depend
-            # on: (1) AQE's skew-join split — the one optimizer rewrite
-            # that re-scatters a hash-partitioned join output by mapper
-            # ranges — is disabled for the materializing jobs; (2) the
-            # pack verifies Σ per-partition distinct rows == global
-            # distinct rows and raises instead of silently mis-scoring.
-            # The transient persist means the join runs once for both the
-            # distinct count and the pack; it is dropped immediately
-            # after (the pack is the loop's cache).
-            from flink_infotheoretic_feature_selection_spark.operators.packed import PackedSparse
-
-            spark = nonzeros.sparkSession
-            skew_key = "spark.sql.adaptive.skewJoin.enabled"
-            cached = nzy_joined.persist(StorageLevel.MEMORY_AND_DISK)
-            # _SKEW_CONF_LOCK serializes the set/restore window: two
-            # concurrent fits interleaving set/restore could otherwise
-            # leave the session conf wrong after both finish (r9,
-            # advisor find).  The override is still SESSION-global while
-            # held — unrelated queries running on the same session
-            # during the pack lose skew-join mitigation for that window
-            # (availability only; the pack's co-location check catches
-            # any correctness fallout).  Spark offers no per-job conf
-            # scope for AQE rewrites, so this is the best available.
-            with _SKEW_CONF_LOCK:
-                skew_prev = spark.conf.get(skew_key, "true")
-                try:
-                    spark.conf.set(skew_key, "false")
-                    # the cell contract rides the distinct-count job;
-                    # only a rejected input pays a second job, for the
-                    # per-feature dims its error names
-                    st = cached.agg(
-                        F.countDistinct("row_id").alias("d"),
-                        F.sum(null_cell).alias("nulls"),
-                        F.min("feat").alias("f_lo"),
-                        F.max("feat").alias("f_hi"),
-                        F.min("x").alias("x_lo"),
-                        F.max("x").alias("x_hi"),
-                    ).collect()[0]
-                    over = {}
-                    if st["x_hi"] is not None and st["x_hi"] > 255:
-                        over = {
-                            r["feat"]: int(r["d"])
-                            for r in cached.groupBy("feat")
-                            .agg((F.max("x") + 1).alias("d"))
-                            .where("d > 256")
-                            .collect()
-                        }
-                    check_cells(
-                        nf, st["nulls"] or 0, st["f_lo"], st["f_hi"], st["x_lo"], over
-                    )
-                    packed = PackedSparse.pack(
-                        cached, self.n_features, expected_distinct_rows=int(st["d"])
-                    )
-                finally:
-                    spark.conf.set(skew_key, skew_prev)
-                    cached.unpersist()
-        else:
-            nzy = (
-                nzy_joined.sortWithinPartitions("row_id")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
         try:
-            # dims: per-feature max+1 (≥1 so empty features still get x=0)
-            h2nz = None
-            if packed is not None:
-                # dims ride the init histogram pass — one job for both
-                drow, h2nz = packed.dims_and_hist2d(y_dim)
-            else:
-                # the cell contract rides the dims job.  The 256 cap is
-                # the dense path's feature_dims one: without it a single
-                # corrupt cell (x = 1e6) would size every per-feature
-                # ndarray by it — hundreds of GB of driver allocations
-                # instead of one clear error.
-                rows = (
-                    nzy.groupBy("feat")
-                    .agg(
-                        (F.max("x") + 1).alias("d"),
-                        F.min("x").alias("x_lo"),
-                        F.sum(null_cell).alias("nulls"),
-                    )
-                    .collect()
+            # dims: per-feature max+1 (≥1 so empty features still get
+            # x=0).  The cell contract rides the dims job.  The 256 cap is
+            # the dense path's feature_dims one: without it a single
+            # corrupt cell (x = 1e6) would size every per-feature ndarray
+            # by it — hundreds of GB of driver allocations instead of one
+            # clear error.
+            rows = (
+                nzy.groupBy("feat")
+                .agg(
+                    (F.max("x") + 1).alias("d"),
+                    F.min("x").alias("x_lo"),
+                    F.sum(
+                        F.when(F.col("feat").isNull() | F.col("x").isNull(), 1).otherwise(0)
+                    ).alias("nulls"),
+                    F.max("copies").alias("copies"),
                 )
-                keys = [r["feat"] for r in rows if r["feat"] is not None]
-                lows = [r["x_lo"] for r in rows if r["x_lo"] is not None]
-                check_cells(
-                    nf,
-                    sum(r["nulls"] for r in rows),
-                    min(keys, default=None),
-                    max(keys, default=None),
-                    min(lows, default=None),
-                    {r["feat"]: r["d"] for r in rows if r["d"] is not None and r["d"] > 256},
+                .collect()
+            )
+            keys = [r["feat"] for r in rows if r["feat"] is not None]
+            lows = [r["x_lo"] for r in rows if r["x_lo"] is not None]
+            check_cells(
+                nf,
+                sum(r["nulls"] for r in rows),
+                min(keys, default=None),
+                max(keys, default=None),
+                min(lows, default=None),
+                {r["feat"]: r["d"] for r in rows if r["d"] is not None and r["d"] > 256},
+            )
+            dup = sorted((r["feat"], r["copies"]) for r in rows if r["copies"] > 1)
+            if dup:
+                raise ValueError(
+                    f"feature {dup[0][0]} has duplicate (row_id, feat) cells: "
+                    f"{dup[0][1]} nonzero cells share one labelled row_id"
                 )
-                drow = {r["feat"]: int(r["d"]) for r in rows if r["d"] is not None}
+            drow = {r["feat"]: int(r["d"]) for r in rows if r["d"] is not None}
             dims = {i: max(drow.get(i, 1), 1) for i in range(nf)}
 
-            def collect2d(hdf) -> dict[int, np.ndarray]:
-                out = {i: np.zeros((dims[i], y_dim), dtype=np.int64) for i in range(nf)}
-                _scatter_counts(out, hdf.toPandas(), ["x", "y"])
-                # credited zeros: count(x=0, y) = N_y − Σ_{x≠0} count(x, y)
-                for i in range(nf):
-                    out[i][0] = n_y - out[i][1:].sum(axis=0)
-                    if (out[i][0] < 0).any():
-                        # duplicate (row_id, feat) cells over-count the
-                        # nonzeros past the label totals; mutual_info's
-                        # p>0 mask would silently skip the negative cell
-                        raise ValueError(
-                            "nonzero counts exceed label totals for "
-                            f"feature {i}: duplicate (row_id, feat) cells"
-                        )
-                return out
-
-            if packed is not None:
-                h2 = h2nz
-                # credited zeros: count(x=0, y) = N_y − Σ_{x≠0} count(x, y)
-                for i in range(nf):
-                    h2[i][0] = n_y - h2[i][1:].sum(axis=0)
-                    if (h2[i][0] < 0).any():
-                        raise ValueError(
-                            "nonzero counts exceed label totals for "
-                            f"feature {i}: duplicate (row_id, feat) cells"
-                        )
-            else:
-                h2 = collect2d(
-                    nzy.groupBy("feat", "x", "y").agg(F.count("*").alias("cnt"))
-                )
+            # credited zeros: count(x=0, y) = N_y − Σ_{x≠0} count(x, y)
+            h2 = {i: np.zeros((dims[i], y_dim), dtype=np.int64) for i in range(nf)}
+            _scatter_counts(
+                h2,
+                nzy.groupBy("feat", "x", "y").agg(F.count("*").alias("cnt")).toPandas(),
+                ["x", "y"],
+            )
+            for i in range(nf):
+                h2[i][0] = n_y - h2[i][1:].sum(axis=0)
             relevances = {
                 i: mutual_info(h2[i], n, emit_f32=self.emit_f32) for i in range(nf)
             }
-            state = {
-                i: criterion_factory(self.criterion, self.beta).init(relevances[i])
-                for i in range(nf)
-            }
 
-            path: list[tuple[int, float]] = []
-            if self.criterion.lower() == "mim":
-                order = sorted(
-                    range(nf),
-                    key=lambda i: (-_tie_key(relevances[i], self.tie_precision), i),
+            def score_pass(remaining: list[int], conds: list[int]) -> dict:
+                (best,) = conds
+                # z column = selected feature's nonzeros (absent ⇒ z=0),
+                # ONE row per row_id: nzy holds a cell once per label row
+                # carrying its row_id, and joining those copies with each
+                # other would count a repeated row_id's cells once per
+                # pair of its label rows.  The per-row_id aggregate keeps
+                # nzy's row_id partitioning, so the join below stays
+                # exchange-free (AQE may still elect broadcast).
+                nz_best = (
+                    nzy.filter(F.col("feat") == best)
+                    .groupBy("row_id")
+                    .agg(F.max("x").alias("z"))
                 )
-                path = [(i, relevances[i]) for i in order[: self.n_to_select]]
-            else:
-                remaining = list(range(nf))
-                while len(path) < self.n_to_select:
-                    # tie_precision comparison: module-docstring tie contract
-                    best = max(
-                        remaining,
-                        key=lambda i: (_tie_key(state[i].score, self.tie_precision), -i),
-                    )
-                    path.append((best, state[best].score))
-                    state[best].valid = False
-                    remaining.remove(best)
-                    if len(path) >= self.n_to_select or not remaining:
-                        break
-                    sel_dim = dims[best]
-                    # full (z, y) totals — NO Spark job: count(x_best=z,
-                    # label=y) is exactly the init-time 2-D histogram
-                    # h2[best] (credited zeros included).  The round-3
-                    # build re-aggregated the selected column every
-                    # iteration; an interim version kept a transposed
-                    # copy only to transpose it back at the use site.
-                    n_zy = h2[best]
-
-                    if packed is not None:
-                        # partition-local z-attach + bincount, zero joins
-                        h3 = packed.hist3d_nonzero(
-                            remaining, best, dims, sel_dim, y_dim
-                        )
-                        for i in remaining:
-                            out_i = h3[i]
-                            # credited zeros: count(x=0, z, y) = N_zy − Σ_{x≠0}
-                            out_i[0] = n_zy - out_i[1:].sum(axis=0)
-                            mi, cmi = mi_and_cmi(out_i, n, emit_f32=self.emit_f32)
-                            state[i].update(mi, cmi)
-                        continue
-
-                    # z column = selected feature's nonzeros (absent ⇒ z=0),
-                    # ONE row per row_id: nzy holds a cell once per label
-                    # row carrying its row_id, and joining those copies
-                    # with each other would count a repeated row_id's
-                    # cells once per pair of its label rows.  The
-                    # per-row_id aggregate keeps nzy's row_id
-                    # partitioning, so the join below stays exchange-free
-                    # (AQE may still elect broadcast).
-                    nz_best = (
-                        nzy.filter(F.col("feat") == best)
-                        .groupBy("row_id")
-                        .agg(F.max("x").alias("z"))
-                    )
-
-                    h3df = (
-                        nzy.filter(F.col("feat").isin(remaining))
-                        .join(nz_best, "row_id", "left")
-                        .groupBy(
-                            "feat", "x", "y", F.coalesce("z", F.lit(0)).alias("z")
-                        )
-                        .agg(F.count("*").alias("cnt"))
-                    )
-                    # mi_and_cmi convention: counts[x, y=selected, z=class]
-                    # (InfoTheory.scala:445-461) — our y is the class and z
-                    # the selected feature, so swap on fill.
-                    out = {
-                        i: np.zeros((dims[i], sel_dim, y_dim), dtype=np.int64)
+                h3df = (
+                    nzy.filter(F.col("feat").isin(remaining))
+                    .join(nz_best, "row_id", "left")
+                    .groupBy("feat", "x", "y", F.coalesce("z", F.lit(0)).alias("z"))
+                    .agg(F.count("*").alias("cnt"))
+                )
+                # mi_and_cmi convention: counts[x, y=selected, z=class]
+                # (InfoTheory.scala:445-461) — our y is the class and z
+                # the selected feature, so swap on fill.
+                out = {
+                    i: np.zeros((dims[i], dims[best], y_dim), dtype=np.int64)
+                    for i in remaining
+                }
+                _scatter_counts(out, h3df.toPandas(), ["x", "z", "y"])
+                # credited zeros: count(x=0, z, y) = N_zy − Σ_{x≠0}, where
+                # N_zy is exactly the init-time table h2[best] (credited
+                # zeros included) — no Spark job
+                for i in remaining:
+                    out[i][0] = h2[best] - out[i][1:].sum(axis=0)
+                return {
+                    best: {
+                        i: mi_and_cmi(out[i], n, emit_f32=self.emit_f32)
                         for i in remaining
                     }
-                    _scatter_counts(out, h3df.toPandas(), ["x", "z", "y"])
-                    # credited zeros: count(x=0, z, y) = N_yz − Σ_{x≠0}
-                    for i in remaining:
-                        out[i][0] = n_zy - out[i][1:].sum(axis=0)
-                        mi, cmi = mi_and_cmi(out[i], n, emit_f32=self.emit_f32)
-                        state[i].update(mi, cmi)
+                }
 
+            # one cond per pass: the SQL pass joins one z column
+            path, _, _ = greedy_path(
+                list(range(nf)), relevances, self.criterion, self.beta,
+                self.n_to_select, self.tie_precision, score_pass, 0,
+            )
             names = [f"f{i}" for i in range(nf)]
-            selected = sorted(i for i, _ in path)
             return InfoThSelectorModel(
                 feature_cols=names,
                 label_col="y",
-                selected_cols=[names[i] for i in selected],
+                selected_cols=[names[i] for i in sorted(i for i, _ in path)],
                 selection_path=[(names[i], s) for i, s in path],
                 relevances={names[i]: relevances[i] for i in range(nf)},
-                fit_timings={"sparse_route": route},
+                fit_timings={"sparse_route": "sql"},
             )
         finally:
-            if packed is not None:
-                packed.unpersist()
-            if nzy is not None:
-                nzy.unpersist()
+            nzy.unpersist()

@@ -91,10 +91,14 @@ def test_hist3d_mi_cmi_bit_equal_both_regimes(matrix, packed, forced_regime, mon
 
 
 def test_loop_engine_validated():
-    """The dense selector has one engine and three pack routes: the
-    removed options are rejected, not silently ignored."""
+    """Both selectors have one loop engine, and the dense one three pack
+    routes: the removed options are rejected, not silently ignored."""
+    from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
+
     with pytest.raises(TypeError, match="loop_engine"):
         InfoThSelector(loop_engine="packed")
+    with pytest.raises(TypeError, match="loop_engine"):
+        SparseInfoThSelector(n_features=2, loop_engine="packed")
     with pytest.raises(TypeError, match="spill_dir"):
         InfoThSelector(spill_dir="/tmp")
     with pytest.raises(ValueError, match="pack_route"):
@@ -142,62 +146,6 @@ def test_rebalance_preserves_histograms(matrix, packed):
         pm2.unpersist()
 
 
-@pytest.mark.parametrize("criterion", ["mrmr", "cmim"])
-def test_sparse_fit_identical_packed_vs_sql(matrix, criterion, monkeypatch):
-    from flink_infotheoretic_feature_selection_spark.operators.sparse import matrix_to_sparse_long
-    from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
-
-    # both Spark engines, not the local route
-    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
-    feats = [c for c in matrix.columns if c != "label"][:8]
-    base, nz, labels = matrix_to_sparse_long(matrix, feats)
-    try:
-        a = SparseInfoThSelector(
-            n_features=8, n_to_select=4, criterion=criterion, loop_engine="sql"
-        ).fit(nz, labels)
-        p = SparseInfoThSelector(
-            n_features=8, n_to_select=4, criterion=criterion, loop_engine="packed"
-        ).fit(nz, labels)
-        assert p.selection_path == a.selection_path
-        assert p.relevances == a.relevances
-    finally:
-        base.unpersist()
-
-
-def test_sparse_packed_distributed_merge_regime(matrix, monkeypatch):
-    from flink_infotheoretic_feature_selection_spark.operators.sparse import matrix_to_sparse_long
-    from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
-
-    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
-    feats = [c for c in matrix.columns if c != "label"][:8]
-    base, nz, labels = matrix_to_sparse_long(matrix, feats)
-    try:
-        want = SparseInfoThSelector(
-            n_features=8, n_to_select=4, loop_engine="sql"
-        ).fit(nz, labels)
-        # force every per-iteration merge through combineByKey
-        monkeypatch.setattr(histogram, "BLOB_DRIVER_MERGE_MAX_BYTES", 0)
-        got = SparseInfoThSelector(
-            n_features=8, n_to_select=4, loop_engine="packed"
-        ).fit(nz, labels)
-        assert got.selection_path == want.selection_path
-        assert got.relevances == want.relevances
-    finally:
-        base.unpersist()
-
-
-def test_sparse_packed_rejects_negative_indices(spark, monkeypatch):
-    from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
-
-    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
-    nz = spark.createDataFrame([(0, 1, -2)], "row_id long, feat int, x int")
-    labels = spark.createDataFrame([(0, 1)], "row_id long, y int")
-    with pytest.raises(Exception, match=">= 0|negative"):
-        SparseInfoThSelector(n_features=2, n_to_select=1, loop_engine="packed").fit(
-            nz, labels
-        )
-
-
 def test_pack_keeps_layout_when_target_none(matrix):
     feats = [c for c in matrix.columns if c != "label"]
     pm = PackedMatrix.pack(matrix, feats + ["label"], n_partitions=None)
@@ -242,85 +190,6 @@ def test_dims_and_count_raises_on_partial_nulls(spark):
             pm.dims_and_count()
     finally:
         pm.unpersist()
-
-
-def test_sparse_packed_oversized_dim_errors_before_alloc(spark, monkeypatch):
-    # r8 advisor fix: a corrupt cell (x=1e6, int32-representable) used to
-    # size the executor-side bincount BEFORE the caller's dim>256 check —
-    # ~x·y_dim·8 bytes per partition. The guard now raises the same
-    # contract error from the scalar per-feature max, allocating nothing.
-    # The packed route's own contract check (on its distinct-count job)
-    # rejects the input before the pack; the pass's guard is checked on
-    # the packed cells directly.
-    from flink_infotheoretic_feature_selection_spark.operators.packed import PackedSparse
-    from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
-
-    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
-    labels = spark.createDataFrame([(r, r % 2) for r in range(4)], "row_id long, y int")
-    huge = spark.createDataFrame(
-        [(0, 0, 1_000_000), (1, 1, 2), (2, 0, 1)], "row_id long, feat int, x int"
-    )
-    with pytest.raises(Exception, match="dim>256"):
-        SparseInfoThSelector(n_features=2, n_to_select=1, loop_engine="packed").fit(
-            huge, labels
-        )
-    ps = PackedSparse.pack(huge.join(labels, "row_id"), 2)
-    try:
-        with pytest.raises(Exception, match="dim>256"):
-            ps.dims_and_hist2d(2)
-    finally:
-        ps.unpersist()
-
-
-def test_sparse_pack_colocation_check(spark, matrix):
-    # The packed histograms silently depend on every row's cells landing
-    # in ONE partition. pack(expected_distinct_rows=...) must catch a
-    # split layout (here: partitioned by feat, so each row spans
-    # partitions) and pass a co-located one.
-    from flink_infotheoretic_feature_selection_spark.operators.packed import PackedSparse
-    from flink_infotheoretic_feature_selection_spark.operators.sparse import matrix_to_sparse_long
-
-    feats = [c for c in matrix.columns if c != "label"][:4]
-    base, nz, labels = matrix_to_sparse_long(matrix, feats)
-    try:
-        nzy = nz.join(labels, "row_id").select("row_id", "feat", "x", "y")
-        n_distinct = nzy.select("row_id").distinct().count()
-
-        split = nzy.repartition(4, "feat")
-        with pytest.raises(ValueError, match="co-location"):
-            PackedSparse.pack(split, 4, expected_distinct_rows=n_distinct)
-
-        ok = nzy.repartition(4, "row_id")
-        ps = PackedSparse.pack(ok, 4, expected_distinct_rows=n_distinct)
-        assert ps.total_local_rows == n_distinct
-        ps.unpersist()
-    finally:
-        base.unpersist()
-
-
-def test_sparse_dims_and_hist2d_bit_equal_both_regimes(matrix, monkeypatch):
-    # r8: the init histogram pass gained the same two-regime merge as the
-    # loop (collected partials were unbounded in partition count).
-    # Forcing the combineByKey pad-to-max route must change nothing.
-    from flink_infotheoretic_feature_selection_spark.operators.packed import PackedSparse
-    from flink_infotheoretic_feature_selection_spark.operators.sparse import matrix_to_sparse_long
-
-    feats = [c for c in matrix.columns if c != "label"][:6]
-    base, nz, labels = matrix_to_sparse_long(matrix, feats)
-    try:
-        nzy = nz.join(labels, "row_id").select("row_id", "feat", "x", "y")
-        ps = PackedSparse.pack(nzy.repartition(4, "row_id"), 6)
-        y_dim = int(labels.agg({"y": "max"}).collect()[0][0]) + 1
-        dims_a, h2_a = ps.dims_and_hist2d(y_dim)
-        monkeypatch.setattr(histogram, "BLOB_DRIVER_MERGE_MAX_BYTES", 0)
-        dims_b, h2_b = ps.dims_and_hist2d(y_dim)
-        assert dims_a == dims_b
-        assert set(h2_a) == set(h2_b)
-        for f in h2_a:
-            assert (h2_a[f] == h2_b[f]).all(), f
-        ps.unpersist()
-    finally:
-        base.unpersist()
 
 
 def test_pack_rejects_duplicate_column_names(spark):
@@ -640,36 +509,31 @@ _I, _L = "int", "bigint"
 
 
 @pytest.mark.parametrize(
-    "n_rows, n_features, cell_bytes, engine, route",
+    "n_rows, n_features, cell_bytes, route",
     [
         # sparse_long's shape: 120k labels × 16 features × 16 B = 30.7 MB
-        (120_000, 16, 16, "sql", "local"),
-        (120_000, 16, 16, "packed", "local"),
+        (120_000, 16, 16, "local"),
         # exactly at the 32 MiB bound, and one label row past it
-        (131_072, 16, 16, "sql", "local"),
-        (131_073, 16, 16, "sql", "sql"),
-        (131_073, 16, 16, "packed", "packed"),
+        (131_072, 16, 16, "local"),
+        (131_073, 16, 16, "sql"),
         # wider cells cross the bound sooner
-        (120_000, 16, 24, "sql", "sql"),
+        (120_000, 16, 24, "sql"),
         # a non-integer column never goes local
-        (10, 2, None, "sql", "sql"),
-        (10, 2, None, "packed", "packed"),
+        (10, 2, None, "sql"),
     ],
 )
-def test_sparse_route_table(n_rows, n_features, cell_bytes, engine, route):
+def test_sparse_route_table(n_rows, n_features, cell_bytes, route):
     from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
 
     assert InfoThSelector.LOCAL_MAX_BYTES == 32 * 1024 * 1024
-    got = SparseInfoThSelector._plan_route(n_rows, n_features, cell_bytes, engine)
-    assert got == route
+    assert SparseInfoThSelector._plan_route(n_rows, n_features, cell_bytes) == route
 
 
-def test_sparse_route_bound_zero_keeps_engine(monkeypatch):
+def test_sparse_route_bound_zero_takes_sql(monkeypatch):
     from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
 
     monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
-    for engine in ("sql", "packed"):
-        assert SparseInfoThSelector._plan_route(1, 1, 3, engine) == engine
+    assert SparseInfoThSelector._plan_route(1, 1, 3) == "sql"
 
 
 @pytest.mark.parametrize(
@@ -705,9 +569,9 @@ def test_sparse_cell_bytes(nonzeros, labels, width):
 @pytest.fixture(scope="module")
 def sparse_input(spark):
     """Long-format input with every join corner: sparse, permuted
-    row_ids; orphan cells (no label row); label rows with no cells; a
-    repeated label row_id and a NULL one; explicit x=0 cells; an
-    all-zero feature."""
+    row_ids; orphan cells (no label row, one duplicated); label rows
+    with no cells; a repeated label row_id and a NULL one; explicit x=0
+    cells; an all-zero feature."""
     rng = np.random.default_rng(11)
     n, nf = 600, 8
     X = rng.integers(0, 5, (n, nf))
@@ -718,7 +582,8 @@ def sparse_input(spark):
     ids = rng.permutation(50 * n)[:n].astype(np.int64) * 7 + 3
     r, f = np.nonzero(X)
     cells = [(int(ids[a]), int(b), int(X[a, b])) for a, b in zip(r, f)]
-    cells += [(1, 2, 4), (2, 5, 1)]  # orphans: ids are ≡ 3 (mod 7)
+    # orphans (ids are ≡ 3 (mod 7)), one of them duplicated
+    cells += [(1, 2, 4), (1, 2, 4), (2, 5, 1)]
     cells += [(int(ids[50]), 3, 0)]  # explicit zero
     cells = [cells[i] for i in rng.permutation(len(cells))]
     lab = [(int(ids[i]), int(y[i])) for i in range(n)]
@@ -734,29 +599,28 @@ def sparse_input(spark):
 @pytest.mark.parametrize(
     "criterion", ["mim", "mifs", "jmi", "mrmr", "cmim", "if", "icap"]
 )
-def test_sparse_fit_identical_across_local_sql_and_packed_routes(
+def test_sparse_fit_identical_across_local_and_sql_routes(
     sparse_input, criterion, monkeypatch
 ):
     """The local route (two Arrow collects, the dense local stages)
-    selects exactly what both Spark routes select, with the same
+    selects exactly what the SQL route selects, with the same
     relevances: the densified block yields the same integer tables."""
     from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
 
     nz, labels, nf = sparse_input
 
-    def fit(engine):
+    def fit():
         return SparseInfoThSelector(
-            n_features=nf, n_to_select=6, criterion=criterion, loop_engine=engine
+            n_features=nf, n_to_select=6, criterion=criterion
         ).fit(nz, labels)
 
-    local = fit("sql")
+    local = fit()
     monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
-    fits = {"sql": fit("sql"), "packed": fit("packed")}
+    sql = fit()
     assert local.fit_timings["sparse_route"] == "local"
     if criterion != "mim":
         assert local.fit_timings["relayout"] == _LOCAL
         assert local.fit_timings["loop_jobs"] == 0
-    for route, other in fits.items():
-        assert other.fit_timings["sparse_route"] == route
-        assert other.selection_path == local.selection_path
-        assert other.relevances == local.relevances
+    assert sql.fit_timings["sparse_route"] == "sql"
+    assert sql.selection_path == local.selection_path
+    assert sql.relevances == local.relevances

@@ -217,9 +217,9 @@ def test_validate_rejects_null_features(spark):
         ).fit(df)
 
 
-# SparseInfoThSelector routes: the local route (default bound) and both
-# Spark engines with the local bound at 0
-SPARSE_REGIMES = ["local", "sql", "packed"]
+# SparseInfoThSelector routes: the local route (default bound) and the
+# SQL route with the local bound at 0
+SPARSE_REGIMES = ["local", "sql"]
 
 
 def _sparse_selector(regime, monkeypatch, **kw):
@@ -227,8 +227,7 @@ def _sparse_selector(regime, monkeypatch, **kw):
 
     if regime != "local":
         monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
-    engine = "packed" if regime == "packed" else "sql"
-    return SparseInfoThSelector(loop_engine=engine, **kw)
+    return SparseInfoThSelector(**kw)
 
 
 @pytest.mark.parametrize("regime", SPARSE_REGIMES)
@@ -378,22 +377,23 @@ def test_sparse_fit_clear_errors_on_bad_labels(spark, regime, monkeypatch):
 
 @pytest.mark.parametrize("regime", SPARSE_REGIMES)
 def test_sparse_fit_rejects_duplicate_cells(spark, regime, monkeypatch):
-    # duplicate (row_id, feat) cells over-count nonzeros past the label
-    # totals; the credited-zeros row would go NEGATIVE and mutual_info's
-    # p>0 mask would silently skip it — must be a loud error
+    # duplicate (row_id, feat) cells over-count nonzeros; a labelled
+    # duplicate must be a loud error on every route, at any copy count,
+    # while duplicates of an orphan cell (no label row) drop with it
     import pytest
 
+    sel = _sparse_selector(regime, monkeypatch, n_features=2, n_to_select=1)
     labels = spark.createDataFrame([(r, r % 2) for r in range(3)], "row_id long, y int")
-    # row 0 duplicated 3x: its (x=2, y=0) cell counts 3 > n_y[0]=2, so
-    # the credited x=0 row goes negative (2 copies would tie at zero and
-    # slip through — the guard fires when counts EXCEED the class total)
-    dup = spark.createDataFrame(
-        [(0, 0, 2)] * 3 + [(1, 1, 1)], "row_id long, feat int, x int"
-    )
-    with pytest.raises(ValueError, match="duplicate"):
-        _sparse_selector(regime, monkeypatch, n_features=2, n_to_select=1).fit(
-            dup, labels
+    for copies in (2, 3):
+        dup = spark.createDataFrame(
+            [(0, 0, 2)] * copies + [(1, 1, 1)], "row_id long, feat int, x int"
         )
+        with pytest.raises(ValueError, match="duplicate"):
+            sel.fit(dup, labels)
+    orphan = spark.createDataFrame(
+        [(0, 0, 2), (1, 1, 1), (9, 0, 2), (9, 0, 2)], "row_id long, feat int, x int"
+    )
+    assert sel.fit(orphan, labels).fit_timings["sparse_route"] == regime
 
 
 def test_mim_reports_zero_iterations(spark):
@@ -439,3 +439,100 @@ def test_sparse_fill_matches_row_loop_and_rejects_negatives(index_cols):
         bad.iloc[0, bad.columns.get_loc(c)] = -1
         with pytest.raises(ValueError, match=">= 0"):
             _scatter_counts({f: np.zeros(dims, dtype=np.int64) for f in range(4)}, bad, index_cols)
+
+
+# ---- greedy_path: the one selection loop, with a NumPy score pass ----------
+
+_CRITERIA = ["mim", "mifs", "jmi", "mrmr", "cmim", "if", "icap"]
+
+
+@pytest.fixture(scope="module")
+def numpy_scores():
+    """Relevances and a counting ``score_pass`` over a small random
+    matrix whose pairs come from ``mi_and_cmi`` on ``np.bincount``
+    tables — no Spark.  Returns ``(feats, relevances, make_pass)``;
+    ``make_pass(calls)`` records each call's ``(n_remaining, conds)``."""
+    from flink_infotheoretic_feature_selection_spark.functions.infotheory import (
+        mi_and_cmi,
+        mutual_info,
+    )
+
+    rng = np.random.default_rng(7)
+    n, nf = 400, 10
+    X = rng.integers(0, 4, (n, nf))
+    X[:, 5] = X[:, 2]  # a redundant twin, so redundancy terms matter
+    y = (X[:, 0] + X[:, 2] + rng.integers(0, 2, n)) % 3
+    feats = [f"f{i}" for i in range(nf)]
+    col = dict(zip(feats, X.T))
+    relevances = {
+        c: mutual_info(np.bincount(col[c] * 3 + y, minlength=12).reshape(4, 3), n)
+        for c in feats
+    }
+
+    def make_pass(calls):
+        def score_pass(remaining, conds):
+            calls.append((len(remaining), list(conds)))
+            return {
+                s: {
+                    c: mi_and_cmi(
+                        np.bincount(
+                            (col[c] * 4 + col[s]) * 3 + y, minlength=48
+                        ).reshape(4, 4, 3),
+                        n,
+                    )
+                    for c in remaining
+                }
+                for s in conds
+            }
+
+        return score_pass
+
+    return feats, relevances, make_pass
+
+
+@pytest.mark.parametrize("criterion", _CRITERIA)
+def test_greedy_path_identical_across_speculation_widths(numpy_scores, criterion):
+    from flink_infotheoretic_feature_selection_spark.selector import greedy_path
+
+    feats, relevances, make_pass = numpy_scores
+    k = 6
+    runs = {}
+    for width in (0, 1, 3, 7, "auto"):
+        calls = []
+        path, passes, hits = greedy_path(
+            feats, relevances, criterion, 1.0, k, 5, make_pass(calls), width
+        )
+        runs[width] = path
+        assert len(path) == k
+        assert passes == len(calls)
+        if criterion == "mim":
+            assert (passes, hits) == (0, 0)
+            continue
+        assert passes + hits == k - 1, width
+        for n_remaining, conds in calls:
+            # the winner plus at most the conds the fit can still use
+            still_needed = k - (len(feats) - n_remaining) - 1
+            assert 1 <= len(conds) <= 1 + still_needed
+            if width != "auto":
+                assert len(conds) <= 1 + width
+    for width, path in runs.items():
+        assert path == runs[0], width  # same features AND scores
+
+
+@pytest.mark.parametrize("criterion", ["mim", "mrmr"])
+def test_greedy_path_tie_rule(criterion):
+    """Scores equal at 5 decimals pick the lowest feature index; with
+    ``tie_precision=None`` they order by raw score."""
+    from flink_infotheoretic_feature_selection_spark.selector import greedy_path
+
+    feats = ["a", "b", "c"]
+    relevances = {"a": 0.1000001, "b": 0.1000004, "c": 0.1000002}
+
+    def no_redundancy(remaining, conds):
+        return {s: {c: (0.0, 0.0) for c in remaining} for s in conds}
+
+    for precision, order in ((5, ["a", "b", "c"]), (None, ["b", "c", "a"])):
+        path, _, _ = greedy_path(
+            feats, relevances, criterion, 1.0, 3, precision, no_redundancy, 0
+        )
+        assert [c for c, _ in path] == order, precision

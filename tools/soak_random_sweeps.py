@@ -62,16 +62,16 @@ def main() -> int:
         jobs.append(("media", s, lambda d, s=s: corpus.test_media_gates_on_ascii_corpus_with_nulls(spark, d, s)))
     def _matrix_distmerge(d, s):
         # r9 (verdict ask #7): force the DISTRIBUTED merge regime —
-        # combineByKey int64 partials on the dense packed substrate and
-        # PackedSparse's pad-to-max merge — under the randomized
-        # cross-engine sweep.  The default lanes above run the random
-        # shapes (far under 32 MB) in the local regime, every pass on
-        # the driver, so without this lane the distributed branch only
-        # ever ran in test_packed's fixed cases; the local regime is
-        # switched off here for that reason — for the dense fits and for
-        # SparseInfoThSelector's local route, which reads the same
-        # bound, so the sparse gates take the SQL route.  Both attrs restored in
-        # finally: packed.py and the selector read them at call time.
+        # combineByKey int64 partials on the dense packed substrate —
+        # under the randomized cross-engine sweep.  The default lanes
+        # above run the random shapes (far under 32 MB) in the local
+        # regime, every pass on the driver, so without this lane the
+        # distributed branch only ever ran in test_packed's fixed cases;
+        # the local regime is switched off here for that reason — for the
+        # dense fits and for SparseInfoThSelector's local route, which
+        # reads the same bound, so the sparse gates take the SQL route.
+        # Both attrs restored in finally: packed.py and the selector read
+        # them at call time.
         from flink_infotheoretic_feature_selection_spark.operators import histogram
         from flink_infotheoretic_feature_selection_spark.selector import InfoThSelector
 
