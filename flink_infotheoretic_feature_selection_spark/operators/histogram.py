@@ -14,22 +14,12 @@ Spark-first design
 ------------------
 The reference hand-builds a columnar byte layout and broadcasts the y/z
 columns (``InfoSelector.scala:421-436``).  On Spark we get the same data
-movement for free.  Two interchangeable routes, identical output:
-
-- **Default (codegen)**: ``posexplode`` the feature array + hash
-  aggregate.  The exploded rows never materialize — they stream through
-  the partial hash agg inside whole-stage codegen, so the shuffle
-  carries only count cells.  No Python in the loop; measured ~5× faster
-  than the Arrow route at sf0.1.
-- **Arrow (`hist2d_arrow`/`hist3d_arrow`)**: ``mapInArrow`` hands each
-  Python worker columnar batches — the per-feature contiguous byte
-  arrays the reference's transpose exists to produce — and NumPy
-  ``bincount`` emits sparse partial counts, merged by a Catalyst
-  ``groupBy().sum()``.  Kept as the faithful analogue of the
-  reference's hand-built partial matrices and as a cross-check.
-
-Either way, at 100 TB the shuffle volume is ``O(n_features × dims²)``
-cells per partition, independent of row count.
+movement for free: ``posexplode`` the feature array + hash aggregate.
+The exploded rows never materialize — they stream through the partial
+hash agg inside whole-stage codegen, so the shuffle carries only count
+cells, and at 100 TB its volume is ``O(n_features × dims²)`` cells per
+partition, independent of row count.  Tests cross-check the cells
+against ``np.bincount`` tables of the collected input.
 
 The selector's own fit passes (relevances and the greedy loop) run on
 the packed NumPy blocks instead (operators/packed.py); this module
@@ -39,10 +29,7 @@ driver-merge budget :data:`BLOB_DRIVER_MERGE_MAX_BYTES`.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -51,10 +38,7 @@ __all__ = [
     "feature_dims_and_count",
     "hist2d",
     "hist3d",
-    "hist2d_arrow",
-    "hist3d_arrow",
     "collect_hist2d",
-    "collect_hist3d",
 ]
 
 
@@ -85,7 +69,7 @@ def feature_dims_and_count(
             f"cannot derive dims: input is empty or columns are all-NULL: {missing}"
         )
     # RAISE on over-cap instead of silently clamping (r8 review find):
-    # clamped dims made the Arrow bincount routes ALIAS out-of-range
+    # clamped dims made bincount-based tables ALIAS out-of-range
     # values into neighboring cells (x·y_dim+y arithmetic with y ≥ y_dim
     # lands inside the array) — silently corrupted counts, where this
     # error names the offending columns.  Values are bytes by contract
@@ -96,124 +80,6 @@ def feature_dims_and_count(
             f"feature values exceed the byte range (dim>{cap}): {over}"
         )
     return {c: int(row[c]) for c in cols}, int(row["__n"])
-
-
-def _col_i64(batch: pa.RecordBatch, name: str) -> np.ndarray:
-    return batch.column(batch.schema.get_field_index(name)).to_numpy(zero_copy_only=False).astype(np.int64)
-
-
-def hist2d_arrow(
-    matrix: DataFrame,
-    feature_cols: list[str],
-    y_col: str,
-    dims: dict[str, int],
-    y_dim: int,
-) -> DataFrame:
-    """Arrow/NumPy route for :func:`hist2d` (same contract) — kept as the
-    faithful analogue of the reference's hand-built partial matrices and
-    as a cross-check for the codegen route (see test_infotheory).
-    Reference: ``InfoTheory.scala:474-521`` (partial build + merge).
-    """
-    feats = list(feature_cols)
-    xdims = [dims[c] for c in feats]
-
-    def count_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # Accumulate across ALL batches of the partition, emit ONCE:
-        # partial-cell volume is O(n_features × xd × y_dim) per PARTITION,
-        # independent of row count — the map-side combine the reference
-        # builds by hand (InfoTheory.scala:492-510).
-        acc = [np.zeros(xd * y_dim, dtype=np.int64) for xd in xdims]
-        for batch in batches:
-            y = _col_i64(batch, y_col)
-            for fi, fname in enumerate(feats):
-                x = _col_i64(batch, fname)
-                acc[fi] += np.bincount(x * y_dim + y, minlength=acc[fi].size)
-        out_f, out_x, out_y, out_c = [], [], [], []
-        for fi in range(len(feats)):
-            nz = np.flatnonzero(acc[fi])
-            if nz.size == 0:
-                continue
-            out_f.append(np.full(nz.size, fi, dtype=np.int32))
-            out_x.append((nz // y_dim).astype(np.int32))
-            out_y.append((nz % y_dim).astype(np.int32))
-            out_c.append(acc[fi][nz])
-        if out_f:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(out_f), type=pa.int32()),
-                    pa.array(np.concatenate(out_x), type=pa.int32()),
-                    pa.array(np.concatenate(out_y), type=pa.int32()),
-                    pa.array(np.concatenate(out_c), type=pa.int64()),
-                ],
-                names=["feat", "x", "y", "cnt"],
-            )
-
-    # Prune to the columns this pass reads — the Arrow exchange ships
-    # only (features + y), which matters as `remaining` shrinks.  Dedupe:
-    # y_col may BE a feature, and a duplicate-name select makes pyarrow's
-    # get_field_index return -1 (silently reading the wrong column).
-    pass_cols = list(dict.fromkeys([*feats, y_col]))
-    needed = matrix.select(*pass_cols) if set(matrix.columns) - set(pass_cols) else matrix
-    partial = needed.mapInArrow(count_batches, "feat int, x int, y int, cnt long")
-    return partial.groupBy("feat", "x", "y").agg(F.sum("cnt").alias("cnt"))
-
-
-def hist3d_arrow(
-    matrix: DataFrame,
-    feature_cols: list[str],
-    y_col: str,
-    z_col: str,
-    dims: dict[str, int],
-    y_dim: int,
-    z_dim: int,
-) -> DataFrame:
-    """Arrow/NumPy route for :func:`hist3d` (same contract).
-    Reference: ``InfoTheory.scala:535-586`` (conditional histograms).
-    """
-    feats = list(feature_cols)
-    xdims = [dims[c] for c in feats]
-    yz = y_dim * z_dim
-
-    def count_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # Per-partition accumulation (see hist2d): emitted cells are
-        # bounded by n_features × xd × y_dim × z_dim per partition — the
-        # row count never reaches the shuffle.
-        acc = [np.zeros(xd * yz, dtype=np.int64) for xd in xdims]
-        for batch in batches:
-            y = _col_i64(batch, y_col)
-            z = _col_i64(batch, z_col)
-            yz_code = y * z_dim + z
-            for fi, fname in enumerate(feats):
-                x = _col_i64(batch, fname)
-                acc[fi] += np.bincount(x * yz + yz_code, minlength=acc[fi].size)
-        out_f, out_x, out_y, out_z, out_c = [], [], [], [], []
-        for fi in range(len(feats)):
-            nz = np.flatnonzero(acc[fi])
-            if nz.size == 0:
-                continue
-            out_f.append(np.full(nz.size, fi, dtype=np.int32))
-            out_x.append((nz // yz).astype(np.int32))
-            rem = nz % yz
-            out_y.append((rem // z_dim).astype(np.int32))
-            out_z.append((rem % z_dim).astype(np.int32))
-            out_c.append(acc[fi][nz])
-        if out_f:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(out_f), type=pa.int32()),
-                    pa.array(np.concatenate(out_x), type=pa.int32()),
-                    pa.array(np.concatenate(out_y), type=pa.int32()),
-                    pa.array(np.concatenate(out_z), type=pa.int32()),
-                    pa.array(np.concatenate(out_c), type=pa.int64()),
-                ],
-                names=["feat", "x", "y", "z", "cnt"],
-            )
-
-    # dedup for the same get_field_index(-1) trap as hist2d_arrow
-    pass_cols = list(dict.fromkeys([*feats, y_col, z_col]))
-    needed = matrix.select(*pass_cols) if set(matrix.columns) - set(pass_cols) else matrix
-    partial = needed.mapInArrow(count_batches, "feat int, x int, y int, z int, cnt long")
-    return partial.groupBy("feat", "x", "y", "z").agg(F.sum("cnt").alias("cnt"))
 
 
 _INT32_MAX = np.iinfo(np.int32).max
@@ -284,45 +150,6 @@ def collect_hist2d(
     return out
 
 
-def collect_hist3d(
-    hist: DataFrame,
-    feature_cols: list[str],
-    dims: dict[str, int],
-    y_dim: int,
-    z_dim: int,
-) -> dict[str, np.ndarray]:
-    """Collect an aggregated 3-D histogram DF into per-feature ndarrays."""
-    out = {c: np.zeros((dims[c], y_dim, z_dim), dtype=np.int64) for c in feature_cols}
-    pdf = hist.toPandas()  # Arrow path
-    feat = pdf["feat"].to_numpy()
-    x = pdf["x"].to_numpy()
-    y = pdf["y"].to_numpy()
-    z = pdf["z"].to_numpy()
-    cnt = pdf["cnt"].to_numpy()
-    # Same dims-bounded range check as collect_hist2d — negative indices
-    # must error, never wrap.
-    if len(x) and (
-        x.min() < 0
-        or y.min() < 0
-        or z.min() < 0
-        or y.max() >= y_dim
-        or z.max() >= z_dim
-    ):
-        raise ValueError(
-            "histogram cell index out of range: got "
-            f"x∈[{x.min()},{x.max()}], y∈[{y.min()},{y.max()}], "
-            f"z∈[{z.min()},{z.max()}] vs y_dim={y_dim}, z_dim={z_dim}"
-        )
-    for fi, c in enumerate(feature_cols):
-        m = feat == fi
-        if m.any() and x[m].max() >= dims[c]:
-            raise ValueError(
-                f"feature {c!r} value {int(x[m].max())} exceeds dim {dims[c]}"
-            )
-        out[c][x[m], y[m], z[m]] = cnt[m]
-    return out
-
-
 def hist2d(
     matrix: DataFrame,
     feature_cols: list[str],
@@ -335,11 +162,10 @@ def hist2d(
     Returns a fully aggregated DataFrame ``(feat int, x int, y int,
     cnt long)`` where ``feat`` indexes ``feature_cols``.
 
-    Default route: ``posexplode`` + hash aggregate, 100% whole-stage
-    codegen.  The exploded rows never materialize — they stream through
-    the partial hash agg, so the shuffle still carries only count cells
-    (one exchange, pinned by test_plans).  Measured ~5× faster than the
-    Arrow route at sf0.1: no Python exchange in the loop.  ``dims`` /
+    ``posexplode`` + hash aggregate, 100% whole-stage codegen.  The
+    exploded rows never materialize — they stream through the partial
+    hash agg, so the shuffle carries only count cells (one exchange,
+    pinned by test_plans); no Python exchange in the loop.  ``dims`` /
     ``y_dim`` are accepted for signature compatibility (the cells emerge
     from the data; only :func:`collect_hist2d` needs the sizes).
     Reference: ``InfoTheory.scala:474-521`` (partial build + merge).
@@ -369,7 +195,7 @@ def hist3d(
     """All per-feature 3-D contingency tables vs ``(y_col, z_col)``.
 
     Returns ``(feat int, x int, y int, z int, cnt long)``.  Same codegen
-    route as :func:`hist2d`.  In the greedy loop ``y_col`` is the newly
+    plan as :func:`hist2d`.  In the greedy loop ``y_col`` is the newly
     selected feature and ``z_col`` the class (``InfoTheory.scala:445-461``).
     Reference: ``InfoTheory.scala:535-586``.
     """

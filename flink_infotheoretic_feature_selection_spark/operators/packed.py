@@ -50,11 +50,18 @@ gives three regimes:
 
 Bit-equality of all three against ``np.bincount`` tables is pinned by
 tests/test_packed.py.
+
+The byte contract — non-NULL integer features and label in [0, 255] —
+is checked in one place, the stats pass (``PackedMatrix._stats``) that
+every fit runs anyway: empty input, NULLs, values past 255 and
+negative or fractional values each raise a ``ValueError`` there, in
+every regime, at no extra job.
 """
 
 from __future__ import annotations
 
 import functools
+import math
 import pickle
 from typing import Iterator
 
@@ -295,13 +302,12 @@ def _compact(a: np.ndarray) -> np.ndarray:
     byte-ranged by contract, so uint8 loses nothing.
 
     Deliberately NOT a blind ``astype``: out-of-range values keep their
-    original dtype so ``dims_and_count``'s dim>256 raise and
-    ``validate_byte_range``'s offender report still see the real values
-    — a silent uint8 wrap (300 → 44) would turn both guards into liars.
-    Floats (Arrow's nullable-int promotion, NaN == NULL) pass through
-    untouched for the same reason.  Histogram kernels upcast via
-    ``astype(np.int64)`` before any code product, so the narrower
-    storage cannot overflow downstream math."""
+    original dtype so the stats pass's dim>256 and negative-value raises
+    still see the real values — a silent uint8 wrap (300 → 44) would
+    turn both into liars.  Floats (Arrow's nullable-int promotion,
+    NaN == NULL) pass through untouched for the same reason.  Histogram
+    kernels upcast via ``astype(np.int64)`` before any code product, so
+    the narrower storage cannot overflow downstream math."""
     if a.dtype == np.uint8 or a.dtype.kind not in "iu" or a.size == 0:
         return a if a.dtype.kind not in "iu" or a.flags.writeable else a.copy()
     lo, hi = int(a.min()), int(a.max())
@@ -370,11 +376,10 @@ class PackedMatrix:
     accumulators, same int32 partial emit, same f64 MI/CMI math).
     """
 
-    #: Driver-volume bound for the one-stage stats fold AND the
-    #: selector's fused dims+hist2d gate (hoisted r13, ADVICE: the two
-    #: sites previously duplicated the literal and could drift):
+    #: Driver-volume bound for the stats pass's one-stage fold, and so
+    #: for its fused relevance tables (read only by :meth:`_stats`):
     #: ``n_partitions × n_cols × 16 B`` of collected stat rows must stay
-    #: under this for a plain reduce/collect to beat a tree fold.
+    #: under this for a plain collect to beat a tree fold.
     DRIVER_STATS_MAX_BYTES = 64 * 1024 * 1024
 
     def __init__(
@@ -413,15 +418,10 @@ class PackedMatrix:
         cls,
         matrix: DataFrame,
         cols: list[str],
-        n_partitions: int | None = None,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
     ) -> "PackedMatrix":
-        """One scan of ``matrix`` → persisted RDD of column blocks.
-
-        ``n_partitions`` (when it differs from the input layout) rides
-        the same single scan: the round-robin repartition exchange feeds
-        ``mapInArrow`` directly, so no second DataFrame persist exists —
-        the pack IS the repartitioned cache.
+        """One scan of ``matrix`` → persisted RDD of column blocks, one
+        block per input partition (repartition ``matrix`` first for
+        another layout).
 
         Wide-schema fast path (the reference's own 631-attribute default
         shape): when ``cols`` is exactly the input's column set, the
@@ -444,8 +444,6 @@ class PackedMatrix:
             if set(cols) == set(mcols) and len(set(mcols)) == len(mcols)
             else matrix.select(*cols)
         )
-        if n_partitions is not None and src.rdd.getNumPartitions() != n_partitions:
-            src = src.repartition(n_partitions)
 
         def pack_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             # free the PREVIOUS task's retained Arrow buffers first:
@@ -463,7 +461,7 @@ class PackedMatrix:
         rdd = (
             src.mapInArrow(pack_batches, "blk binary")
             .rdd.map(lambda r: pickle.loads(r.blk))
-            .persist(storage_level)
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         n_parts = rdd.getNumPartitions()
         # materialize (downstream timing is pure iteration cost); the
@@ -479,7 +477,6 @@ class PackedMatrix:
         path: str | list[str],
         cols: list[str],
         rows_per_partition: int = 65536,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
         filesystem=None,
     ) -> "PackedMatrix":
         """Direct pack from a MATERIALIZED parquet feature matrix: tasks
@@ -507,7 +504,7 @@ class PackedMatrix:
           directory names, not in the files — packing one raises the
           missing-column error below.  Same value contract as :meth:`pack`:
           integer byte-ranged features; NULL-bearing columns surface as
-          NaN-promoted floats and fail ``dims_and_count`` identically,
+          NaN-promoted floats and fail the stats pass identically,
           because both routes share pyarrow's ``to_numpy`` promotion.
         - Distribution: the driver reads only FOOTERS (row-group row
           counts); (file, row_group) units are greedily chained into
@@ -602,7 +599,7 @@ class PackedMatrix:
         rdd = (
             sc.parallelize(chunks, max(len(chunks), 1))
             .mapPartitions(read_chunk)
-            .persist(storage_level)
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         # materialize: downstream timing is pure iteration cost; the row
         # count is also footer-known (sum of non-empty row-group rows)
@@ -638,250 +635,175 @@ class PackedMatrix:
     # -- stats / layout ------------------------------------------------------
 
     def dims_and_count(self, cap: int = 256) -> tuple[dict[str, int], int]:
-        """Per-column ``max+1`` + row count from the blocks — the packed
-        twin of ``histogram.feature_dims_and_count`` (same errors on
-        empty / all-NULL input and on over-``cap`` values — values are
-        bytes by contract, ``InfoTheory.scala:413-419``; a raise beats
-        the old silent clamp, which let out-of-range values alias into
-        neighboring histogram cells).
+        """Per-column ``max+1`` + row count from the blocks, after the
+        byte contract check (see :meth:`_stats`) — the packed twin of
+        ``histogram.feature_dims_and_count``.
 
         On wide schemas this replaces a Catalyst aggregate whose plan
         cost grows badly with column count (measured on 632 columns ×
         8k rows, local[32]: 60.9 s for the max-per-column agg vs 0.17 s
         here — NumPy ``max`` per block, scalars to the driver).
         """
-        import math
-
-        cols = self.cols
-
-        # Executor-side tree fold, not collect(): per-partition stat rows
-        # are n_cols floats each, so a plain collect is
-        # n_partitions × n_cols × 8 B on the driver — ~500 MB at a
-        # 100 TB-shape 100k partitions × 632 columns.  treeReduce folds
-        # them to ONE row; elementwise max and integer count sums are
-        # associative/commutative, so the fold order cannot change the
-        # result.  A NaN partial from a NON-empty block means the column
-        # holds NULLs there (Arrow promotes nullable ints to float,
-        # NaN-filled; np.max propagates it) — tracked as an explicit
-        # boolean mask, NEVER folded through max() (max(1.0, nan)=1.0
-        # but max(nan, 1.0)=nan: order-dependent, the r8 advisor find).
-        def stat(blk):
-            maxes = np.full(len(cols), -np.inf)
-            nan_mask = np.zeros(len(cols), dtype=bool)
-            for i, c in enumerate(cols):
-                a = blk[c]
-                if a.size:
-                    m = float(a.max())
-                    if math.isnan(m):
-                        nan_mask[i] = True
-                    else:
-                        maxes[i] = m
-            return maxes, nan_mask, len(blk[cols[0]])
-
-        def merge(a, b):
-            return np.maximum(a[0], b[0]), a[1] | b[1], a[2] + b[2]
-
-        empty_msg = (
-            "cannot derive dims: input is empty or columns are all-NULL "
-            f"or NULL-bearing: {cols}"
-        )
-        # Two-regime fold (r12, guide §2.4): treeReduce inserts a shuffle
-        # fold round whenever partitions > ~4, i.e. a second STAGE per
-        # dims call — measured +0.3-0.5 s at 10 partitions on local[32]
-        # for stat rows of 33 floats.  Up to a bounded driver volume
-        # (n_partitions × n_cols × 16 B ≤ 64 MB, i.e. ~128k partitions at
-        # 33 cols / ~6.7k at 632 cols) collecting the per-block rows and
-        # reducing on the driver — one stage, or no job at all for the
-        # driver-held block — is strictly cheaper; beyond it the tree
-        # fold keeps the driver volume flat.  Identical results either
-        # way: elementwise max / or / int sum are associative and
-        # commutative (NaN travels in the mask, never through max).
-        if self.n_partitions * len(cols) * 16 <= self.DRIVER_STATS_MAX_BYTES:
-            parts = _map_blocks(self.rdd, stat)
-            if not parts:
-                # empty input packs to no blocks at all
-                raise ValueError(empty_msg)
-            maxes, nan_mask, n = functools.reduce(merge, parts)
-        else:
-            try:
-                maxes, nan_mask, n = self.rdd.map(stat).treeReduce(merge)
-            except ValueError:
-                # treeReduce of an empty RDD raises — re-raise as the
-                # dims contract error
-                raise ValueError(empty_msg) from None
-        null_cols = [c for i, c in enumerate(cols) if nan_mask[i]]
-        if n == 0 or null_cols or not np.isfinite(maxes).all():
-            raise ValueError(
-                "cannot derive dims: input is empty or columns are all-NULL "
-                f"or NULL-bearing: {null_cols or cols}"
-            )
-        dims = {c: int(maxes[i]) + 1 for i, c in enumerate(cols)}
-        over = {c: d for c, d in dims.items() if d > cap}
-        if over:
-            # raise, don't clamp: clamped dims would let out-of-range
-            # values ALIAS into neighboring histogram cells downstream
-            raise ValueError(
-                f"feature values exceed the byte range (dim>{cap}): {over}"
-            )
+        dims, n, _ = self._stats(None, cap)
         return dims, n
 
     def dims_count_hist2d(
         self, y_col: str, cap: int = 256
     ) -> tuple[dict[str, int], int, dict[str, np.ndarray] | None]:
-        """ONE pass fusing :meth:`dims_and_count` with the stage-2
-        relevance histograms (r12, guide §1.2: remove whole passes —
-        dims + relevances were two full scans of the packed blocks).
+        """:meth:`dims_and_count` fused with the stage-2 relevance
+        histograms in ONE pass over the blocks (r12, guide §1.2: dims +
+        relevances were two full scans).
 
         Returns ``(dims, n, h2)`` where ``h2`` maps every non-label
         column to its global ``(dims[c], y_dim)`` int64 contingency
-        table vs ``y_col`` — or ``h2 = None`` when any block declined to
-        histogram (its tables would exceed its share of the driver-merge
-        budget, or it holds out-of-contract values that only the stats
-        pass can report cleanly); the caller then falls back to
-        :meth:`relevances` with the dims already in hand, i.e. worst
-        case costs what the unfused flow always cost.
+        table vs ``y_col`` — or ``h2 = None`` when the stats fold past
+        ``DRIVER_STATS_MAX_BYTES`` or any block declined to histogram
+        (its tables would exceed its share of the driver-merge budget);
+        the caller then runs :meth:`relevances` with the dims in hand,
+        i.e. worst case costs what the unfused flow always cost.
 
         Exactness: each block bincounts ``x·y_loc + y`` with its own
         LOCAL dims and the driver pads the 2-D tables into the global
         ``(dims[c], y_dim)`` accumulators — per-cell integer sums,
         bit-identical to :meth:`relevances`' global-dims bincount
-        (pinned by tests).  Error contract is :meth:`dims_and_count`'s,
-        raised from the same driver-side checks on the merged stats.
+        (pinned by tests)."""
+        return self._stats(y_col, cap)
 
-        Caller gate: only sensible in the bounded-partition regime
-        (collected stats + tables ≤ the driver-merge budget); at 100 TB
-        partition counts the caller keeps the treeReduce dims pass.
+    def _stats(self, y_col: str | None, cap: int):
+        """The one stats pass behind :meth:`dims_and_count` and
+        :meth:`dims_count_hist2d`, and the only place the byte contract
+        (``InfoSelector.scala:404-416``) is checked.
+
+        One closure per block records, for every column, its max, its
+        min, whether it holds NaN (Arrow promotes a nullable int column
+        to float, NaN-filled — a NULL) and whether it holds a fractional
+        value, plus the block's row count; with ``y_col`` it also
+        bincounts the block's local-dims relevance tables.  ``uint8``
+        blocks skip the min (unsigned) and only float blocks pay the
+        fractional check.  NaN travels in its own mask, NEVER through
+        ``max`` (``max(1.0, nan)`` is 1.0 but ``max(nan, 1.0)`` is nan:
+        order-dependent, the r8 advisor find).
+
+        Two-regime fold (r12, guide §2.4): up to a driver volume of
+        ``n_partitions × n_cols × 16 B`` ≤ ``DRIVER_STATS_MAX_BYTES``
+        (~128k partitions at 33 cols, ~6.7k at 632) the per-block rows
+        are collected and folded on the driver — one stage, or no job
+        for the driver-held block; beyond it an executor-side
+        ``treeAggregate`` keeps the driver volume flat and no tables are
+        built.  Elementwise max / min / or and integer sums are
+        associative and commutative, so both folds agree.
+
+        The merged stats then raise, in this order: an empty input; a
+        NULL-bearing column; a value past ``cap - 1`` (raise, never
+        clamp: clamped dims would let out-of-range values ALIAS into
+        neighboring histogram cells); a negative or fractional value
+        (the reference truncates those silently, ``InfoSelector:430``).
         """
-        import math
-
         cols = self.cols
         feats = [c for c in cols if c != y_col]
+        pos = {c: i for i, c in enumerate(cols)}
+        nc = len(cols)
+        on_driver = self.n_partitions * nc * 16 <= self.DRIVER_STATS_MAX_BYTES
+        want_tables = y_col is not None and on_driver
         per_part_budget = max(
             histogram.BLOB_DRIVER_MERGE_MAX_BYTES // max(self.n_partitions, 1), 1
         )
 
-        def stat_hist(blk):
-            maxes = np.full(len(cols), -np.inf)
-            nan_mask = np.zeros(len(cols), dtype=bool)
-            clean = True
+        # (max, min, NaN, fractional, rows) of no rows at all
+        zero = (np.full(nc, -np.inf), np.full(nc, np.inf), np.zeros(nc, bool), np.zeros(nc, bool), 0)
+
+        def stat(blk):
+            hi, lo, nan, frac = (z.copy() for z in zero[:4])
+            nrows = len(blk[cols[0]])
             for i, c in enumerate(cols):
                 a = blk[c]
-                if a.size:
-                    m = float(a.max())
-                    if math.isnan(m):
-                        nan_mask[i] = True
-                        clean = False
-                    else:
-                        maxes[i] = m
-                        # out-of-contract values (negative or >= cap)
-                        # must surface through the driver's stat checks,
-                        # never a raw bincount failure here
-                        if m >= cap or float(a.min()) < 0:
-                            clean = False
-                else:
-                    clean = False
-            nrows = len(blk[cols[0]])
+                if not a.size:
+                    continue
+                m = float(a.max())
+                if math.isnan(m):
+                    nan[i] = True
+                    continue
+                hi[i] = m
+                if a.dtype.kind != "u":
+                    lo[i] = float(a.min())
+                if a.dtype.kind == "f":
+                    frac[i] = bool((a % 1 != 0).any())
             tables = None
-            if clean and nrows:
+            clean = (
+                nrows
+                and not (nan.any() or frac.any())
+                and hi.max() < cap
+                and lo.min() >= 0
+            )
+            if want_tables and clean:
+                # local dims = this block's max + 1, already in hand
                 check_int32_rows(nrows)
                 y = blk[y_col].astype(np.int64)
-                y_loc = int(y.max()) + 1
+                y_loc = int(hi[pos[y_col]]) + 1
                 est = 0
-                tabs: list[tuple[int, np.ndarray]] | None = []
+                tabs = []
                 for c in feats:
-                    x = blk[c]
-                    xd_loc = int(x.max()) + 1
+                    xd_loc = int(hi[pos[c]]) + 1
                     est += xd_loc * y_loc * 4
                     if est > per_part_budget:
-                        tabs = None
                         break
+                    code = blk[c].astype(np.int64) * y_loc + y
                     tabs.append(
-                        (
-                            xd_loc,
-                            np.bincount(
-                                x.astype(np.int64) * y_loc + y,
-                                minlength=xd_loc * y_loc,
-                            ).astype(np.int32),
-                        )
+                        (xd_loc, np.bincount(code, minlength=xd_loc * y_loc).astype(np.int32))
                     )
-                if tabs is not None:
+                else:
                     tables = (y_loc, tabs)
-            return maxes, nan_mask, nrows, tables
+            return (hi, lo, nan, frac, nrows), tables
 
-        parts = _map_blocks(self.rdd, stat_hist)
-        if not parts:
-            raise ValueError(
-                "cannot derive dims: input is empty or columns are all-NULL "
-                f"or NULL-bearing: {cols}"
+        def merge(a, b):
+            return (
+                np.maximum(a[0], b[0]),
+                np.minimum(a[1], b[1]),
+                a[2] | b[2],
+                a[3] | b[3],
+                a[4] + b[4],
             )
-        maxes = np.full(len(cols), -np.inf)
-        nan_mask = np.zeros(len(cols), dtype=bool)
-        n = 0
-        for m_, nm_, nr_, _ in parts:
-            maxes = np.maximum(maxes, m_)
-            nan_mask |= nm_
-            n += nr_
-        null_cols = [c for i, c in enumerate(cols) if nan_mask[i]]
-        if n == 0 or null_cols or not np.isfinite(maxes).all():
+
+        if on_driver:
+            # an empty input packs to no blocks: the zero row stands in
+            parts = _map_blocks(self.rdd, stat)
+            hi, lo, nan, frac, n = functools.reduce(merge, [p[0] for p in parts], zero)
+        else:
+            hi, lo, nan, frac, n = self.rdd.treeAggregate(
+                zero, lambda acc, blk: merge(acc, stat(blk)[0]), merge
+            )
+        null_cols = [c for i, c in enumerate(cols) if nan[i]]
+        if n == 0 or null_cols:
             raise ValueError(
                 "cannot derive dims: input is empty or columns are all-NULL "
                 f"or NULL-bearing: {null_cols or cols}"
             )
-        dims = {c: int(maxes[i]) + 1 for i, c in enumerate(cols)}
-        over = {c: d for c, d in dims.items() if d > cap}
+        over = {
+            c: int(hi[i]) + 1 if math.isfinite(hi[i]) else hi[i]
+            for i, c in enumerate(cols)
+            if hi[i] >= cap
+        }
         if over:
+            raise ValueError(f"feature values exceed the byte range (dim>{cap}): {over}")
+        bad = [c for i, c in enumerate(cols) if lo[i] < 0 or frac[i]]
+        if bad:
             raise ValueError(
-                f"feature values exceed the byte range (dim>{cap}): {over}"
+                "features must be non-null integers in [0, 255] (the range the "
+                "histogram engine indexes by; cf. InfoSelector.scala:411-414 "
+                "whose −128..127 check contradicts its own [0,255] message); "
+                f"violating columns: {bad}"
             )
-        if any(p[3] is None for p in parts):
+        dims = {c: int(hi[i]) + 1 for i, c in enumerate(cols)}
+        if not want_tables or any(p[1] is None for p in parts):
             return dims, n, None
         y_dim = dims[y_col]
         h2 = {c: np.zeros((dims[c], y_dim), dtype=np.int64) for c in feats}
-        for _, _, _, (y_loc, tabs) in parts:
+        for _, (y_loc, tabs) in parts:
             for c, (xd_loc, flat) in zip(feats, tabs):
                 h2[c][:xd_loc, :y_loc] += flat.reshape(xd_loc, y_loc)
         return dims, n, h2
 
-    def validate_byte_range(self, cols: list[str]) -> list[str]:
-        """Columns violating the non-null-integer-in-[0,255] contract —
-        the selector's opt-in ``validate`` check
-        (``InfoSelector.scala:404-416``).  One pass; NULLs arrive as NaN
-        through Arrow's null→float promotion."""
-        cols = list(cols)
-
-        def check(blk):
-            bad = []
-            for c in cols:
-                a = blk[c]
-                if a.size == 0:
-                    continue
-                if a.dtype.kind == "f":
-                    # Arrow promotes nullable ints to float; NaN is a NULL
-                    if np.isnan(a).any() or np.any(a % 1 != 0):
-                        bad.append(c)
-                        continue
-                if a.min() < 0 or a.max() > 255:
-                    bad.append(c)
-            return bad
-
-        if self.local:
-            seen = set().union(*_map_blocks(self.rdd, check))
-        else:
-            # executor-side set-union fold: one small set reaches the
-            # driver regardless of partition count (same discipline as
-            # dims_and_count's treeReduce); treeAggregate's zero value
-            # covers the empty-RDD case in the SAME single job
-            seen = self.rdd.treeAggregate(
-                set(), lambda a, blk: a | set(check(blk)), lambda a, b: a | b
-            )
-        return [c for c in cols if c in seen]
-
-    def rebalance(
-        self,
-        n_partitions: int,
-        rows_per_partition: int,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-    ) -> "PackedMatrix":
+    def rebalance(self, n_partitions: int, rows_per_partition: int) -> "PackedMatrix":
         """Re-layout the blocks to ``n_partitions`` without touching the
         source.  Consolidating (fewer partitions) is a shuffle-free
         ``coalesce`` + per-partition concat; splitting (more partitions,
@@ -891,6 +813,7 @@ class PackedMatrix:
         merges are partition-agnostic integer sums.  The old RDD is
         unpersisted; a new materialized PackedMatrix returns."""
         cols = self.cols
+        level = StorageLevel.MEMORY_AND_DISK
 
         def concat(chunks):
             got = list(chunks)
@@ -901,7 +824,7 @@ class PackedMatrix:
                 }
 
         if n_partitions < self.n_partitions:
-            rdd = self.rdd.coalesce(n_partitions).mapPartitions(concat).persist(storage_level)
+            rdd = self.rdd.coalesce(n_partitions).mapPartitions(concat).persist(level)
         else:
             def split(blk):
                 nrows = len(blk[cols[0]])
@@ -916,7 +839,7 @@ class PackedMatrix:
                 self.rdd.flatMap(split)
                 .repartition(n_partitions)
                 .mapPartitions(concat)
-                .persist(storage_level)
+                .persist(level)
             )
         rdd.count()
         self.unpersist()

@@ -15,6 +15,9 @@ One dense fit path, five phases over one cache:
   blocks ONCE into a driver-held block before stats (the local regime).
 - stats: per-feature dims (``counterByFeat``) and the row count from the
   blocks, fused with the relevance histograms when the layout allows.
+  The same pass enforces the byte contract: an empty input, a NULL, a
+  value past 255 or a negative or fractional value raises a
+  ``ValueError`` (the reference truncates silently, ``InfoSelector:430``).
 - relevances: MI(X; class) from 2-D histograms vs the label
   (``InfoTheory.scala:413-432``).
 - loop: MIM short-circuits to top-k by relevance
@@ -336,11 +339,18 @@ class InfoThSelector:
     applied automatically), else takes the ``mapInArrow`` scan pack;
     ``"scan"`` / ``"direct"`` pin a route.
 
-    ``speculation`` — how many likely next winners each loop pass also
-    scores (``"auto"`` adapts the width to observed hits; an int pins
-    it, 0 = one conditioning column per pass).  Selections are
-    bit-identical at every width.  The local regime always runs width 0:
-    with no job launch to amortize, a speculated cond is pure waste.
+    Input contract, always enforced: features and label are non-NULL
+    integers in [0, 255] (``InfoSelector.scala:404-416``).  The fit's
+    stats pass raises a ``ValueError`` for an empty input, a NULL, a
+    value past 255, or a negative or fractional value — the reference
+    truncates the last two silently; discretize real-valued columns
+    first (``EqualFrequencyDiscretizer``).  The check rides the pass
+    that derives the dims, so it costs no job.
+
+    Loop passes on Spark score the adaptive ``"auto"`` speculation width
+    of :func:`greedy_path`; the local regime runs width 0, since with no
+    job launch to amortize a speculated cond is pure waste.  Selections
+    are bit-identical at every width.
     """
 
     def __init__(
@@ -351,21 +361,13 @@ class InfoThSelector:
         label_col: str = "label",
         beta: float = 1.0,
         emit_f32: bool = True,
-        validate: bool = False,
         tie_precision: int | None = 5,
         pack_route: str = "auto",
-        speculation: int | str = "auto",
     ) -> None:
         _check_selection_args(n_to_select, criterion)
         if pack_route not in ("auto", "scan", "direct"):
             raise ValueError(
                 f"pack_route must be 'auto', 'scan' or 'direct', got {pack_route!r}"
-            )
-        if speculation != "auto" and (
-            not isinstance(speculation, int) or speculation < 0
-        ):
-            raise ValueError(
-                f"speculation must be 'auto' or a non-negative int, got {speculation!r}"
             )
         self.n_to_select = int(n_to_select)
         self.criterion = criterion
@@ -373,10 +375,8 @@ class InfoThSelector:
         self.label_col = label_col
         self.beta = beta
         self.emit_f32 = emit_f32
-        self.validate = validate
         self.tie_precision = tie_precision
         self.pack_route = pack_route
-        self.speculation = speculation
 
     def fit(self, df: DataFrame) -> InfoThSelectorModel:
         df = self._widen_vectors(df)
@@ -387,8 +387,8 @@ class InfoThSelector:
                 f"n_to_select={self.n_to_select} exceeds n_features={len(feats)}"
             )
         # The fit scans the source EXACTLY ONCE (the pack is the cache)
-        # and derives dims/count/validation from the NumPy blocks — no
-        # DataFrame persist and no wide Catalyst aggregates, whose plan
+        # and derives dims/count and the contract check from the NumPy
+        # blocks — no DataFrame persist and no wide Catalyst aggregates, whose plan
         # cost explodes with column count (632-column dims agg measured
         # at 60.9 s vs 0.17 s from blocks; see operators/packed.py).
         return self._fit_packed(df, feats, self.label_col)
@@ -400,7 +400,7 @@ class InfoThSelector:
         cost on wide matrices (BASELINE r9: 600k×631 pack 113 s →
         seconds).  Semantics are identical to ``fit`` on
         ``spark.read.parquet(path)`` — bit-identical selection, same
-        dims/validation contract — PROVIDED the parquet columns already
+        input contract — PROVIDED the parquet columns already
         hold the final feature values (no Catalyst expressions are
         applied; derive-then-write first if your features are computed).
         ``feature_cols`` defaults to the parquet schema order minus
@@ -496,7 +496,7 @@ class InfoThSelector:
                     # under mergeSchema, all-empty row groups) — the scan
                     # route handles or re-diagnoses these.  The try wraps
                     # ONLY the pack: a contract ValueError from the fit
-                    # itself (dims>256, byte-range validation) must
+                    # itself (dims>256, a negative value) must
                     # propagate, not silently re-run the fit on another
                     # route (r10 self-review find)
                     packed = None
@@ -534,38 +534,21 @@ class InfoThSelector:
             )
             if relayout == ("local", 1):
                 packed = packed.collect_local()
-            if self.validate:
-                # BEFORE dims derivation: NULL-bearing columns would
-                # otherwise hit dims_and_count's blunter NaN-contract
-                # error instead of the actionable byte-range message
-                offenders = packed.validate_byte_range(feats + [label])
-                if offenders:
-                    raise ValueError(self._byte_range_message(offenders))
-            # r12 (guide §1.2): fuse the dims pass with the stage-2
-            # relevance histograms — one scan of the blocks instead of
-            # two — whenever the per-partition collect stays inside the
-            # driver-merge budget (h2 comes back None otherwise and the
-            # relevances pass runs separately, costing exactly what the
-            # unfused flow always cost).  At 100 TB partition counts the
-            # treeReduce dims pass keeps the driver volume flat.
-            # Bit-identical either way (integer pad-merge; pinned by
-            # tests/test_packed.py).  r13 (ADVICE r12): never fuse ahead
-            # of a starved split — the fused histograms would run
-            # serially inside the very partitions the split exists to
-            # spread; the relevances pass then runs over the spread
-            # blocks instead.
-            fuse = (
-                packed.n_partitions * len(packed.cols) * 16
-                <= type(packed).DRIVER_STATS_MAX_BYTES
-                and (relayout is None or relayout[0] != "split")
-            )
+            # The stats pass checks the byte contract and derives the
+            # dims; it also builds the stage-2 relevance tables (r12,
+            # guide §1.2: one scan of the blocks instead of two) unless
+            # the blocks are about to be split (r13, ADVICE r12): the
+            # tables would then run serially inside the very partitions
+            # the split exists to spread, so the relevances pass runs
+            # over the spread blocks instead.  h2 is None whenever the
+            # pass built no tables; bit-identical either way.
             timings["relayout"] = relayout
-            timings["stats_fused"] = fuse
-            h2_fused = None
-            if fuse:
-                dims, n, h2_fused = packed.dims_count_hist2d(label)
-            else:
+            if relayout is not None and relayout[0] == "split":
                 dims, n = packed.dims_and_count()
+                h2_fused = None
+            else:
+                dims, n, h2_fused = packed.dims_count_hist2d(label)
+            timings["stats_fused"] = h2_fused is not None
             timings["stats_sec"] = round(time.perf_counter() - t0, 3)
             if relayout is not None and relayout[0] != "local":
                 t0 = time.perf_counter()
@@ -577,15 +560,6 @@ class InfoThSelector:
             packed.unpersist()
 
     # -- internal ----------------------------------------------------------
-
-    @staticmethod
-    def _byte_range_message(offenders: list[str]) -> str:
-        return (
-            "features must be non-null integers in [0, 255] (the range the "
-            "histogram engine indexes by; cf. InfoSelector.scala:411-414 "
-            "whose −128..127 check contradicts its own [0,255] message); "
-            f"violating columns: {offenders}"
-        )
 
     def _widen_vectors(self, df: DataFrame) -> DataFrame:
         """Accept (label, features: VectorUDT) rows directly — the
@@ -737,7 +711,7 @@ class InfoThSelector:
             lambda remaining, conds: packed.hist3d_mi_cmi_multi(
                 remaining, conds, label, dims, n, emit_f32=self.emit_f32
             ),
-            0 if packed.local else self.speculation,
+            0 if packed.local else "auto",
         )
         timings["loop_jobs"] = 0 if packed.local else passes
         timings["speculation_hits"] = hits

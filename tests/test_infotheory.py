@@ -80,25 +80,21 @@ def test_mi_nonnegative_random():
 
 
 def test_arrow_hist_routes_handle_y_col_among_features(spark):
-    # duplicate-name select trap: pyarrow get_field_index returns -1 for
-    # a duplicated column name and column(-1) silently reads the LAST
-    # column — the arrow routes must dedupe their pass columns.
-    import pandas as pd
+    # y_col may also be one of the features: the hist2d cells must still
+    # equal np.bincount tables of the input, the y feature's own table
+    # included (its cells sit on the diagonal).
+    from flink_infotheoretic_feature_selection_spark.operators.histogram import hist2d
 
-    from flink_infotheoretic_feature_selection_spark.operators.histogram import (
-        hist2d,
-        hist2d_arrow,
-    )
-
-    df = spark.createDataFrame(
-        [(0, 1, 0), (1, 0, 1), (1, 1, 1), (0, 0, 0)], "f0 int, f1 int, label int"
-    )
+    rows = [(0, 1, 0), (1, 0, 1), (1, 1, 1), (0, 0, 0)]
+    df = spark.createDataFrame(rows, "f0 int, f1 int, label int")
     dims = {"f0": 2, "f1": 2}
     # y participates as a feature too: y_col == 'f1'
     via_codegen = {
         tuple(r) for r in hist2d(df, ["f0", "f1"], "f1", dims, 2).collect()
     }
-    via_arrow = {
-        tuple(r) for r in hist2d_arrow(df, ["f0", "f1"], "f1", dims, 2).collect()
-    }
-    assert via_arrow == via_codegen
+    m = np.array(rows)
+    want = set()
+    for fi in range(2):
+        t = np.bincount(m[:, fi] * 2 + m[:, 1], minlength=4).reshape(2, 2)
+        want |= {(fi, int(x), int(y), int(t[x, y])) for x, y in zip(*np.nonzero(t))}
+    assert via_codegen == want

@@ -41,7 +41,7 @@ def matrix(spark):
 @pytest.fixture(scope="module")
 def packed(matrix):
     feats = [c for c in matrix.columns if c != "label"]
-    pm = PackedMatrix.pack(matrix, feats + ["label"], n_partitions=4)
+    pm = PackedMatrix.pack(matrix.repartition(4), feats + ["label"])
     yield pm
     pm.unpersist()
 
@@ -120,22 +120,12 @@ def test_dims_and_count_raises_on_empty(spark, matrix):
         pm.unpersist()
 
 
-def test_validate_byte_range_flags_null_and_range(spark):
-    rows = [(1, None, 300, 2), (0, 3, 1, 2)]
-    df = spark.createDataFrame(rows, "f0 int, f1 int, f2 int, label int")
-    pm = PackedMatrix.pack(df, ["f0", "f1", "f2", "label"])
-    try:
-        assert pm.validate_byte_range(["f0", "f1", "f2"]) == ["f1", "f2"]
-    finally:
-        pm.unpersist()
-
-
 def test_rebalance_preserves_histograms(matrix, packed):
     feats = [c for c in matrix.columns if c != "label"]
     dims, n = _dims_n(matrix)
     best, remaining = feats[0], feats[1:6]
     want = packed.hist3d_mi_cmi_multi(remaining, [best], "label", dims, n)
-    pm2 = PackedMatrix.pack(matrix, feats + ["label"], n_partitions=2)
+    pm2 = PackedMatrix.pack(matrix.repartition(2), feats + ["label"])
     try:
         pm3 = pm2.rebalance(6, rows_per_partition=max(1, n // 6))
         assert pm3.n_partitions >= 2  # actually re-laid-out
@@ -148,7 +138,7 @@ def test_rebalance_preserves_histograms(matrix, packed):
 
 def test_pack_keeps_layout_when_target_none(matrix):
     feats = [c for c in matrix.columns if c != "label"]
-    pm = PackedMatrix.pack(matrix, feats + ["label"], n_partitions=None)
+    pm = PackedMatrix.pack(matrix, feats + ["label"])
     try:
         assert pm.n_partitions == matrix.rdd.getNumPartitions()
         blocks = pm.rdd.collect()
@@ -295,32 +285,42 @@ def test_hist3d_mi_cmi_multi_bit_equal_single(matrix, packed, forced_regime, mon
 
 
 @pytest.mark.parametrize("criterion", ["mrmr", "jmi", "cmim", "icap", "mifs"])
-def test_fit_identical_across_speculation_widths(matrix, criterion, monkeypatch):
-    """r13: speculation is a pure prefetch — selection path, scores and
-    relevances are bit-identical at every width (updates replay in
-    selection order from the same integer-merged histograms)."""
-    # speculation widths only exist in the Spark loop
-    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
-    base = InfoThSelector(
-        n_to_select=6, criterion=criterion, speculation=0
-    ).fit(matrix)
-    assert base.fit_timings["loop_jobs"] == 5
-    assert base.fit_timings["speculation_hits"] == 0
-    for spec in (2, "auto", 16):
-        m = InfoThSelector(
-            n_to_select=6, criterion=criterion, speculation=spec
-        ).fit(matrix)
-        assert m.selection_path == base.selection_path
-        assert m.relevances == base.relevances
-        assert m.selected_cols == base.selected_cols
-        assert m.fit_timings["loop_jobs"] + m.fit_timings["speculation_hits"] == 5
+def test_fit_identical_across_speculation_widths(matrix, packed, criterion):
+    """r13: speculation is a pure prefetch — the greedy loop driven by the
+    real packed pass selects the same path with the same scores at every
+    width (updates replay in selection order from the same
+    integer-merged histograms)."""
+    from flink_infotheoretic_feature_selection_spark.selector import greedy_path
+
+    feats = [c for c in matrix.columns if c != "label"]
+    dims, n = packed.dims_and_count()
+    relevances = packed.relevances(feats, "label", dims, n)
+
+    def fit(width):
+        return greedy_path(
+            feats, relevances, criterion, 1.0, 6, 5,
+            lambda remaining, conds: packed.hist3d_mi_cmi_multi(
+                remaining, conds, "label", dims, n
+            ),
+            width,
+        )
+
+    base, passes, hits = fit(0)
+    assert (passes, hits) == (5, 0)
+    for width in (2, "auto", 16):
+        path, passes, hits = fit(width)
+        assert path == base
+        assert passes + hits == 5
 
 
 def test_speculation_param_validated():
-    with pytest.raises(ValueError, match="speculation"):
-        InfoThSelector(speculation=-1)
-    with pytest.raises(ValueError, match="speculation"):
-        InfoThSelector(speculation="always")
+    """The speculation width and the opt-in validate pass are gone from
+    the constructor (the byte contract is always enforced): passing
+    either is rejected, not silently ignored."""
+    with pytest.raises(TypeError, match="speculation"):
+        InfoThSelector(speculation=0)
+    with pytest.raises(TypeError, match="validate"):
+        InfoThSelector(validate=True)
 
 
 def test_fusion_skipped_when_rebalance_will_fire(spark, matrix, monkeypatch):
@@ -468,7 +468,7 @@ def test_pack_records_n_rows(matrix, packed):
     assert packed.n_rows == matrix.count()
     # rebalance must carry the count through (it unpersists its input,
     # so use a private pack)
-    own = PackedMatrix.pack(matrix, list(matrix.columns), n_partitions=4)
+    own = PackedMatrix.pack(matrix.repartition(4), list(matrix.columns))
     re = own.rebalance(2, 1 << 16)
     try:
         assert re.n_rows == packed.n_rows
@@ -476,31 +476,78 @@ def test_pack_records_n_rows(matrix, packed):
         re.unpersist()
 
 
-@pytest.mark.parametrize(
-    "rows, validate, match",
-    [
-        ([(1, 200, 0), (2, -3, 1), (0, 5, 0)], True, r"non-null integers.*\['f1'\]"),
-        ([(1, 0, 0), (None, 1, 1), (2, 0, 1)], True, r"non-null integers.*\['f0'\]"),
-        ([(1, 0, 0), (None, 1, 1), (2, 0, 1)], False, r"NULL-bearing: \['f0'\]"),
-        ([(300, 0, 0), (1, 1, 1)], False, "exceed the byte range"),
-        ([], False, "input is empty"),
-    ],
-)
-def test_local_regime_keeps_contract_errors(spark, monkeypatch, rows, validate, match):
-    """The local regime runs the same validate / dims / NULL / over-256
-    checks on its driver-held block as the Spark passes run per block."""
+# fault -> (rows, schema, the ValueError text every regime must raise)
+_FAULTS = {
+    "null_feature": (
+        [(1, 0, 0), (None, 1, 1), (2, 0, 1)], "f0 int, f1 int, label int",
+        r"NULL-bearing: \['f0'\]",
+    ),
+    "null_label": (
+        [(1, 0, 0), (2, 1, None), (2, 0, 1)], "f0 int, f1 int, label int",
+        r"NULL-bearing: \['label'\]",
+    ),
+    "negative": (
+        [(1, 200, 0), (2, -3, 1), (0, 5, 0)], "f0 int, f1 int, label int",
+        r"non-null integers.*\['f1'\]",
+    ),
+    "fractional": (
+        [(1, 0.5, 0), (2, 1.0, 1), (0, 1.5, 0)], "f0 int, f1 double, label int",
+        r"non-null integers.*\['f1'\]",
+    ),
+    "over_255": (
+        [(300, 0, 0), (1, 1, 1)], "f0 int, f1 int, label int",
+        r"exceed the byte range \(dim>256\): \{'f0': 301\}",
+    ),
+    "empty": ([], "f0 int, f1 int, label int", "input is empty"),
+    # two faults at once: the NULL check runs first and names only the
+    # NULL-bearing column
+    "null_and_over_255": (
+        [(1, None, 0), (0, 300, 1), (2, 1, 1)], "f0 int, f1 int, label int",
+        r"NULL-bearing: \['f1'\]",
+    ),
+    "null_and_negative": (
+        [(None, -3, 0), (1, 1, 1), (2, 0, 1)], "f0 int, f1 int, label int",
+        r"NULL-bearing: \['f0'\]",
+    ),
+}
+
+
+@pytest.mark.parametrize("fault", list(_FAULTS))
+def test_byte_contract_table(spark, monkeypatch, fault):
+    """Every fit checks the byte contract in its one stats pass, and each
+    fault raises the same ValueError text in every regime: local (one
+    collect, stats on the driver), Spark fused (stats + relevance tables
+    in one pass) and Spark unfused (a split forced ahead of the stats,
+    so the plain dims pass runs)."""
+    rows, schema, match = _FAULTS[fault]
+    df = spark.createDataFrame(rows, schema)
     calls = []
-    collect_local = PackedMatrix.collect_local
+    for name in ("collect_local", "dims_count_hist2d", "dims_and_count"):
+        orig = getattr(PackedMatrix, name)
 
-    def spy(self):
-        calls.append(self.n_partitions)
-        return collect_local(self)
+        def spy(self, *a, _orig=orig, _name=name, **kw):
+            calls.append(_name)
+            return _orig(self, *a, **kw)
 
-    monkeypatch.setattr(PackedMatrix, "collect_local", spy)
-    df = spark.createDataFrame(rows, "f0 int, f1 int, label int")
-    with pytest.raises(ValueError, match=match):
-        InfoThSelector(n_to_select=2, feature_cols=["f0", "f1"], validate=validate).fit(df)
-    assert len(calls) == 1
+        monkeypatch.setattr(PackedMatrix, name, spy)
+
+    def fit_error():
+        calls.clear()
+        with pytest.raises(ValueError, match=match) as err:
+            InfoThSelector(n_to_select=2, feature_cols=["f0", "f1"]).fit(df)
+        return str(err.value)
+
+    local = fit_error()
+    assert calls == ["collect_local", "dims_count_hist2d"]
+    # Spark regimes: -1 keeps even an empty (0-byte) pack off the driver
+    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", -1)
+    assert fit_error() == local
+    assert calls == ["dims_count_hist2d"]
+    monkeypatch.setattr(
+        InfoThSelector, "_plan_relayout", classmethod(lambda cls, *a: ("split", 2))
+    )
+    assert fit_error() == local
+    assert calls == ["dims_and_count"]
 
 
 # ---- SparseInfoThSelector routes -------------------------------------------

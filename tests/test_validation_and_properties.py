@@ -1,4 +1,5 @@
-"""Byte-range validation (reference semantics) + hypothesis property tests."""
+"""The byte contract every fit enforces (reference semantics) + hypothesis
+property tests."""
 
 import numpy as np
 import pytest
@@ -13,16 +14,16 @@ def test_validate_rejects_out_of_range(spark):
     df = spark.createDataFrame(
         [(1, 200, 0), (2, -3, 1), (0, 5, 0)], "f0 int, f1 int, label int"
     )
-    with pytest.raises(ValueError, match="f1"):
-        InfoThSelector(n_to_select=1, validate=True).fit(df)
+    with pytest.raises(ValueError, match=r"non-null integers.*\['f1'\]"):
+        InfoThSelector(n_to_select=1).fit(df)
 
 
 def test_validate_rejects_non_integral(spark):
     df = spark.createDataFrame(
         [(1.0, 0.5, 0), (2.0, 1.0, 1)], "f0 double, f1 double, label int"
     )
-    with pytest.raises(ValueError, match="f1"):
-        InfoThSelector(n_to_select=1, validate=True).fit(df)
+    with pytest.raises(ValueError, match=r"non-null integers.*\['f1'\]"):
+        InfoThSelector(n_to_select=1).fit(df)
 
 
 def test_validate_accepts_engine_range(spark):
@@ -31,14 +32,14 @@ def test_validate_accepts_engine_range(spark):
         [(0, 255, 0), (0, 1, 1), (5, 128, 0), (3, 2, 1)],
         "f0 int, f1 int, label int",
     )
-    model = InfoThSelector(n_to_select=1, validate=True, emit_f32=False).fit(df)
+    model = InfoThSelector(n_to_select=1, emit_f32=False).fit(df)
     assert len(model.selected_cols) == 1
 
 
 def test_validate_rejects_negative(spark):
     df = spark.createDataFrame([(1, -1, 0), (2, 3, 1)], "f0 int, f1 int, label int")
-    with pytest.raises(ValueError, match="f1"):
-        InfoThSelector(n_to_select=1, validate=True).fit(df)
+    with pytest.raises(ValueError, match=r"non-null integers.*\['f1'\]"):
+        InfoThSelector(n_to_select=1).fit(df)
 
 
 # ---------------------------------------------------------------------------
@@ -127,22 +128,6 @@ def test_collect_hist2d_rejects_negative_values(spark):
     h = hist2d(df, ["f0"], "label", {"f0": 4}, 2)
     with _pytest.raises(ValueError, match="out of range"):
         collect_hist2d(h, ["f0"], {"f0": 4}, 2)
-
-
-def test_collect_hist3d_rejects_negative_values(spark):
-    import pytest as _pytest
-
-    from flink_infotheoretic_feature_selection_spark.operators.histogram import (
-        collect_hist3d,
-        hist3d,
-    )
-
-    df = spark.createDataFrame(
-        [(1, -2, 0), (2, 1, 1)], "f0 tinyint, f1 tinyint, label tinyint"
-    )
-    h = hist3d(df, ["f0"], "f1", "label", {"f0": 4}, 4, 2)
-    with _pytest.raises(ValueError, match="out of range"):
-        collect_hist3d(h, ["f0"], {"f0": 4}, 4, 2)
 
 
 @given(
