@@ -1654,12 +1654,13 @@ def _q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 # slots consolidate into ONE variant-column gate spanning ALL FIVE greedy
 # criteria at the 631-attribute width (the sessionize/asof_join precedent)
 # — icap/mifs at width previously rode only the randomized sweep's
-# deterministic rows.  Each criterion keeps a DESIGNATED pack route so
-# every substrate stays driver-pinned: mrmr→scan (the pinned scan pack),
-# cmim→auto (the r10 bare-scan router end-to-end), jmi→fit_parquet (the
-# direct row-group pack, the r11 two-accumulator × direct cell),
-# mifs→scan, icap→auto.  Registry 82 → 79: breaks the structural 82-gate
-# cap (18 core + 2×32 rotating) and frees 3 rotation slots.
+# deterministic rows.  Each criterion keeps a DESIGNATED pack route, picked
+# by the input it is fed, so every substrate stays driver-pinned:
+# mrmr→scan (the mapInArrow scan pack), cmim→auto (the bare-scan router
+# end-to-end), jmi→fit_parquet (the direct row-group pack, the r11
+# two-accumulator × direct cell), mifs→scan, icap→auto.  Registry
+# 82 → 79: breaks the structural 82-gate cap (18 core + 2×32 rotating)
+# and frees 3 rotation slots.
 _WIDE_GATE_ROUTES: list[tuple[str, str]] = [
     ("mrmr", "scan"),
     ("mifs", "scan"),
@@ -1685,17 +1686,21 @@ def _q_selected_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
             criterion=crit,
             feature_cols=feats,
             emit_f32=False,
-            **({"pack_route": route} if route != "direct" else {}),
         )
         if route == "direct":
             # fit_parquet prunes to feats+label at the reader, so the
             # oracle-only rid never packs
             model = sel.fit_parquet(spark, path)
         else:
-            # route == "auto" leaves the r10 router to detect the bare
-            # pruned scan and direct-pack it via
-            # plans.inspect.bare_parquet_scan_files
-            model = sel.fit(spark.read.parquet(path).select(*feats, "label"))
+            # "auto": the fit detects the bare pruned scan and direct-packs
+            # it (plans.inspect.bare_parquet_scan_files); "scan": a
+            # value-identical derived label makes the plan non-bare, so the
+            # fit takes the mapInArrow scan pack — greatest() survives the
+            # optimizer (`+ 0` is folded away) and keeps the column set
+            df = spark.read.parquet(path).select(*feats, "label")
+            if route == "scan":
+                df = df.withColumn("label", F.greatest("label", F.lit(0)))
+            model = sel.fit(df)
         rows.extend(
             (crit, step, int(c[1:]), _q5(s))
             for step, (c, s) in enumerate(model.selection_path)

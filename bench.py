@@ -33,6 +33,7 @@ import json
 import os
 import sys
 import time
+from unittest import mock
 
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -40,6 +41,7 @@ from pyspark.storagelevel import StorageLevel
 from flink_infotheoretic_feature_selection_spark.datasets import FEATURE_NAMES, features_dense
 from flink_infotheoretic_feature_selection_spark.discretizer import EqualFrequencyDiscretizer
 from flink_infotheoretic_feature_selection_spark.operators.histogram import collect_hist2d, feature_dims, hist2d
+from flink_infotheoretic_feature_selection_spark.plans import inspect as plans_inspect
 from flink_infotheoretic_feature_selection_spark.functions.infotheory import mutual_info
 from flink_infotheoretic_feature_selection_spark.selector import InfoThSelector
 from flink_infotheoretic_feature_selection_spark.session import get_spark
@@ -454,10 +456,15 @@ def main() -> None:
     )
 
     def b16s():
-        m = InfoThSelector(
-            n_to_select=10, criterion="mrmr", feature_cols=wide_feats,
-            emit_f32=False, pack_route="scan",
-        ).fit(wide_df)
+        # the scan pack on the same bare matrix: with the bare-scan probe
+        # patched to find nothing, fit() takes the mapInArrow pack with
+        # no extra projection over the 632 columns
+        with mock.patch.object(plans_inspect, "bare_parquet_scan_files", return_value=None):
+            m = InfoThSelector(
+                n_to_select=10, criterion="mrmr", feature_cols=wide_feats,
+                emit_f32=False,
+            ).fit(wide_df)
+        assert m.fit_timings["pack_route"] == "scan"
         wide_models.append(m)
         return m
 

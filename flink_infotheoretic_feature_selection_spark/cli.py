@@ -11,6 +11,9 @@ Usage::
 
     python -m flink_infotheoretic_feature_selection_spark.cli \
         --input /path/data.libsvm --type libsvm --nfeat 10 --crit mrmr
+
+With ``--type parquet`` the fit direct-packs the files with pyarrow (the
+input is a bare parquet scan); there is no flag to pick the pack route.
 """
 
 from __future__ import annotations
@@ -30,12 +33,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--crit", default="mrmr",
                    choices=["mim", "mifs", "jmi", "mrmr", "cmim", "if", "icap"])
     p.add_argument("--label", default="label")
-    p.add_argument(
-        "--pack-route",
-        default="auto",
-        choices=["auto", "scan", "direct"],
-        help="pack substrate routing (auto: direct-pack bare parquet scans)",
-    )
     p.add_argument("--save-model", default=None, help="write fitted model JSON here")
     # parity flags, ignored: schema-derived in this engine (SURVEY.md §1.3)
     p.add_argument("--nf", type=int, default=None, help="(ignored)")
@@ -67,7 +64,6 @@ def main(argv: list[str] | None = None) -> int:
         n_to_select=args.nfeat,
         criterion=args.crit,
         label_col=args.label,
-        pack_route=args.pack_route,
     ).fit(df)
     fs_time = time.perf_counter() - t0
 

@@ -27,7 +27,7 @@ design (SURVEY.md §7.1), and its inner pass is a fixed NumPy kernel
 over data whose layout never changes across k iterations.
 
 Scale shape (100 TB): the packed RDD is the same bytes as the DataFrame
-cache (int8/int16 columns, per-partition dict overhead amortized), it
+cache (uint8 columns, per-partition dict overhead amortized), it
 inherits the loop's 65536-rows-per-partition layout, and every
 histogram pass runs one per-block closure over the blocks.  Where the
 blocks live and how the per-block int32 partials merge is decided in
@@ -50,6 +50,16 @@ gives three regimes:
 
 Bit-equality of all three against ``np.bincount`` tables is pinned by
 tests/test_packed.py.
+
+A dense fit runs in one straight line over this substrate.  Its input
+picks the pack — there is no route option: a bare local parquet scan or
+a materialized parquet path is read by :meth:`PackedMatrix.pack_parquet`,
+anything else by the ``mapInArrow`` scan of :meth:`PackedMatrix.pack`.
+The fit then applies its one layout decision
+(:meth:`PackedMatrix.collect_local`, or :meth:`PackedMatrix.rebalance`
+to split or coalesce) before any pass reads the blocks, and runs the
+stats pass with its fused relevance tables, the relevances pass only
+when those tables were not built, and the loop passes.
 
 The byte contract — non-NULL integer features and label in [0, 255] —
 is checked in one place, the stats pass (``PackedMatrix._stats``) that
@@ -74,6 +84,10 @@ from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 __all__ = ["PackedMatrix", "list_parquet_files"]
+
+# The byte contract's value range: every column holds values in
+# [0, _BYTE_DIMS), so no dim exceeds 256.
+_BYTE_DIMS = 256
 
 
 def _add_partial(acc: np.ndarray, v: np.ndarray) -> np.ndarray:
@@ -144,66 +158,39 @@ def _is_hidden_relpath(rel: str) -> bool:
     )
 
 
-def list_parquet_files(path: str | list[str]) -> list[str]:
+def list_parquet_files(path: str | list[str], filesystem=None) -> list[str]:
     """Resolve ``path`` (file / directory / explicit list) to a sorted
-    list of parquet data files.
+    list of parquet data files, through ``filesystem`` (a
+    ``pyarrow.fs.FileSystem`` — S3, HDFS, a wrapped fsspec) or the local
+    filesystem when it is None.
 
-    Directories are walked RECURSIVELY so Spark-partitioned layouts
-    (``key=val/part-*.parquet``) and nested dirs resolve like
-    ``spark.read.parquet`` on the same path (r10, advisor find — the old
-    top-level glob rejected or silently skipped them).  Hidden paths
-    (any component starting with ``_`` or ``.`` below the root — e.g.
-    ``_temporary`` leftovers, ``_SUCCESS``, ``.crc`` sidecars) are
-    skipped exactly as Spark's Hadoop listing skips them (r11, advisor
-    find).  Explicit file lists are taken verbatim — the caller named
-    those files on purpose.  An empty result raises the clear
-    input-validation error instead of a downstream IndexError."""
-    import glob
-    import os
+    Directories are walked RECURSIVELY by the filesystem's own selector,
+    so Spark-partitioned layouts (``key=val/part-*.parquet``), nested
+    dirs and symlinked dirs resolve like ``spark.read.parquet`` on the
+    same path (r10, advisor find — the old top-level glob rejected or
+    silently skipped them).  Hidden paths (any component starting with
+    ``_`` or ``.`` below the root — e.g. ``_temporary`` leftovers,
+    ``_SUCCESS``, ``.crc`` sidecars) are skipped exactly as Spark's
+    Hadoop listing skips them (r11, advisor find).  Explicit file lists
+    are taken verbatim — the caller named those files on purpose.  An
+    empty result raises the clear input-validation error instead of a
+    downstream IndexError."""
+    from pyarrow import fs as pafs
 
+    fs = filesystem or pafs.LocalFileSystem()
     if isinstance(path, (list, tuple)):
         files = sorted(path)
-    elif os.path.isdir(path):
+    elif fs.get_file_info(path).type == pafs.FileType.Directory:
+        root = path.rstrip("/")
         files = sorted(
-            f
-            for f in glob.glob(
-                os.path.join(glob.escape(path), "**", "*.parquet"), recursive=True
-            )
-            if not _is_hidden_relpath(os.path.relpath(f, path))
+            f.path
+            for f in fs.get_file_info(pafs.FileSelector(path, recursive=True))
+            if f.type == pafs.FileType.File
+            and f.path.endswith(".parquet")
+            and not _is_hidden_relpath(f.path[len(root) :].lstrip("/"))
         )
     else:
         files = [path]
-    if not files:
-        raise ValueError(f"no parquet files under {path!r}")
-    return files
-
-
-def _list_parquet_files_fs(filesystem, path: str | list[str]) -> list[str]:
-    """Recursive ``*.parquet`` listing through a ``pyarrow.fs``
-    FileSystem — the non-local twin of :func:`list_parquet_files`
-    (object stores have no os.path; the filesystem's own selector
-    walks the prefix).  Applies the same Hadoop hidden-path filter
-    (``_``/``.``-prefixed components below the root) as the local
-    listing."""
-    from pyarrow import fs as pafs
-
-    if isinstance(path, (list, tuple)):
-        files = sorted(path)
-    else:
-        info = filesystem.get_file_info(path)
-        if info.type == pafs.FileType.Directory:
-            root = path.rstrip("/")
-            files = sorted(
-                f.path
-                for f in filesystem.get_file_info(
-                    pafs.FileSelector(path, recursive=True)
-                )
-                if f.type == pafs.FileType.File
-                and f.path.endswith(".parquet")
-                and not _is_hidden_relpath(f.path[len(root) :].lstrip("/"))
-            )
-        else:
-            files = [path]
     if not files:
         raise ValueError(f"no parquet files under {path!r}")
     return files
@@ -293,7 +280,7 @@ def _storage_budget_bytes(spark) -> int | None:
 def _compact(a: np.ndarray) -> np.ndarray:
     """Downcast an integer column block to uint8 when its values fit the
     byte contract ([0, 255] — ``InfoSelector.scala:411-414``'s actual
-    requirement) — int16 when they merely fit [-2^15, 2^15).
+    requirement).
 
     Why (r10, VERDICT ask #4): blocks used to persist at the SOURCE
     dtype — parquet int32/int64 columns inflated the persisted working
@@ -304,17 +291,15 @@ def _compact(a: np.ndarray) -> np.ndarray:
     Deliberately NOT a blind ``astype``: out-of-range values keep their
     original dtype so the stats pass's dim>256 and negative-value raises
     still see the real values — a silent uint8 wrap (300 → 44) would
-    turn both into liars.  Floats (Arrow's nullable-int promotion,
-    NaN == NULL) pass through untouched for the same reason.  Histogram
-    kernels upcast via ``astype(np.int64)`` before any code product, so
-    the narrower storage cannot overflow downstream math."""
+    turn both into liars.  Such a block is about to fail the stats pass,
+    so it is not narrowed any further.  Floats (Arrow's nullable-int
+    promotion, NaN == NULL) pass through untouched for the same reason.
+    Histogram kernels upcast via ``astype(np.int64)`` before any code
+    product, so the narrower storage cannot overflow downstream math."""
     if a.dtype == np.uint8 or a.dtype.kind not in "iu" or a.size == 0:
         return a if a.dtype.kind not in "iu" or a.flags.writeable else a.copy()
-    lo, hi = int(a.min()), int(a.max())
-    if 0 <= lo and hi <= 255:
+    if 0 <= int(a.min()) and int(a.max()) < _BYTE_DIMS:
         return a.astype(np.uint8)
-    if -(2**15) <= lo and hi < 2**15:
-        return a.astype(np.int16)
     # pass-through can now receive a READ-ONLY zero-copy Arrow view
     # (_col_to_numpy): copy it so blocks keep their historical writable
     # contract and stop pinning the whole decoded table (r11 review)
@@ -332,7 +317,7 @@ def _col_to_numpy(col) -> np.ndarray:
     r10 ask #2).  Everything else falls back to
     ``to_numpy(zero_copy_only=False)``, preserving the NULL → float64-NaN
     promotion the dims/NULL contract depends on.  ``_compact`` copies the
-    view into the uint8/int16 block right after, so no Arrow buffer
+    view into the uint8 block right after, so no Arrow buffer
     outlives the decode unless the column genuinely needs its source
     dtype."""
     chunks = col.chunks if isinstance(col, pa.ChunkedArray) else [col]
@@ -370,10 +355,11 @@ class PackedMatrix:
     """Per-partition NumPy column blocks of a wide discrete matrix,
     persisted as an RDD.
 
-    Build with :meth:`pack`; release with :meth:`unpersist`.  All
-    histogram methods return exact integer-merged results bit-identical
-    to the ``histogram.py`` DataFrame routes (same int64 partition
-    accumulators, same int32 partial emit, same f64 MI/CMI math).
+    Build with :meth:`pack` or :meth:`pack_parquet`; release with
+    :meth:`unpersist`.  All histogram methods return exact
+    integer-merged results bit-identical to the ``histogram.py``
+    DataFrame routes (same int64 partition accumulators, same int32
+    partial emit, same f64 MI/CMI math).
     """
 
     #: Driver-volume bound for the stats pass's one-stage fold, and so
@@ -398,10 +384,8 @@ class PackedMatrix:
         #: Total row count, when the pack could derive it for free (the
         #: materialization job sums per-block row counts; the direct
         #: route knows it from the footers).  ``None`` means unknown —
-        #: callers must not assume it.  Lets the selector predict the
-        #: starved-rebalance decision BEFORE the stats pass (ADVICE r12:
-        #: the fused dims+hist2d pass must not run serially inside the
-        #: very partitions the rebalance is about to split).
+        #: callers must not assume it.  Lets the selector make and apply
+        #: its one layout decision BEFORE any pass reads the blocks.
         self.n_rows = n_rows
         #: Summed ``nbytes`` of the blocks' column arrays, from the same
         #: materialization job (``None`` when unknown) — what the local
@@ -519,18 +503,14 @@ class PackedMatrix:
           ``pyarrow.fs.FileSystem`` (S3FileSystem, HadoopFileSystem,
           a PyFileSystem-wrapped fsspec, ...) — and both the driver's
           footer reads and the executors' row-group reads go through it
-          (pyarrow filesystems pickle into the task closures).  Listing
-          then uses the filesystem's own recursive selector.  Without
-          it, paths are local.
+          (pyarrow filesystems pickle into the task closures), and so
+          does the listing (:func:`list_parquet_files`).  Without it,
+          paths are local.
         """
         import pyarrow.parquet as pq_mod
 
         cols = list(cols)
-        files = (
-            list_parquet_files(path)
-            if filesystem is None
-            else _list_parquet_files_fs(filesystem, path)
-        )
+        files = list_parquet_files(path, filesystem)
         units: list[tuple[str, int, int]] = []
         for f in files:
             md = pq_mod.ParquetFile(f, filesystem=filesystem)
@@ -545,7 +525,7 @@ class PackedMatrix:
                     units.append((f, rg, nr))
         if not units:
             # an all-empty input would otherwise surface later as an
-            # opaque dims_and_count error (r10, advisor find)
+            # opaque stats-pass error (r10, advisor find)
             raise ValueError(
                 f"no non-empty parquet row groups under {path!r} — "
                 "cannot pack an empty matrix"
@@ -634,7 +614,7 @@ class PackedMatrix:
 
     # -- stats / layout ------------------------------------------------------
 
-    def dims_and_count(self, cap: int = 256) -> tuple[dict[str, int], int]:
+    def dims_and_count(self) -> tuple[dict[str, int], int]:
         """Per-column ``max+1`` + row count from the blocks, after the
         byte contract check (see :meth:`_stats`) — the packed twin of
         ``histogram.feature_dims_and_count``.
@@ -644,15 +624,15 @@ class PackedMatrix:
         8k rows, local[32]: 60.9 s for the max-per-column agg vs 0.17 s
         here — NumPy ``max`` per block, scalars to the driver).
         """
-        dims, n, _ = self._stats(None, cap)
+        dims, n, _ = self._stats(None)
         return dims, n
 
     def dims_count_hist2d(
-        self, y_col: str, cap: int = 256
+        self, y_col: str
     ) -> tuple[dict[str, int], int, dict[str, np.ndarray] | None]:
         """:meth:`dims_and_count` fused with the stage-2 relevance
         histograms in ONE pass over the blocks (r12, guide §1.2: dims +
-        relevances were two full scans).
+        relevances were two full scans) — the stats pass every fit runs.
 
         Returns ``(dims, n, h2)`` where ``h2`` maps every non-label
         column to its global ``(dims[c], y_dim)`` int64 contingency
@@ -667,9 +647,9 @@ class PackedMatrix:
         ``(dims[c], y_dim)`` accumulators — per-cell integer sums,
         bit-identical to :meth:`relevances`' global-dims bincount
         (pinned by tests)."""
-        return self._stats(y_col, cap)
+        return self._stats(y_col)
 
-    def _stats(self, y_col: str | None, cap: int):
+    def _stats(self, y_col: str | None):
         """The one stats pass behind :meth:`dims_and_count` and
         :meth:`dims_count_hist2d`, and the only place the byte contract
         (``InfoSelector.scala:404-416``) is checked.
@@ -694,7 +674,7 @@ class PackedMatrix:
         associative and commutative, so both folds agree.
 
         The merged stats then raise, in this order: an empty input; a
-        NULL-bearing column; a value past ``cap - 1`` (raise, never
+        NULL-bearing column; a value past 255 (raise, never
         clamp: clamped dims would let out-of-range values ALIAS into
         neighboring histogram cells); a negative or fractional value
         (the reference truncates those silently, ``InfoSelector:430``).
@@ -732,7 +712,7 @@ class PackedMatrix:
             clean = (
                 nrows
                 and not (nan.any() or frac.any())
-                and hi.max() < cap
+                and hi.max() < _BYTE_DIMS
                 and lo.min() >= 0
             )
             if want_tables and clean:
@@ -781,10 +761,10 @@ class PackedMatrix:
         over = {
             c: int(hi[i]) + 1 if math.isfinite(hi[i]) else hi[i]
             for i, c in enumerate(cols)
-            if hi[i] >= cap
+            if hi[i] >= _BYTE_DIMS
         }
         if over:
-            raise ValueError(f"feature values exceed the byte range (dim>{cap}): {over}")
+            raise ValueError(f"feature values exceed the byte range (dim>{_BYTE_DIMS}): {over}")
         bad = [c for i, c in enumerate(cols) if lo[i] < 0 or frac[i]]
         if bad:
             raise ValueError(

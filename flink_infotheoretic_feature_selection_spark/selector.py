@@ -3,23 +3,27 @@
 Re-expresses the reference's flagship (``InfoSelector.scala``; lifecycle
 traced in SURVEY.md §3.1) as an idiomatic PySpark Estimator/Model:
 
-One dense fit path, five phases over one cache:
+One dense fit path, one straight line of phases over one cache:
 
 - pack: ONE scan of the source packs per-partition NumPy column blocks
   into a persisted RDD (operators/packed.py) — the Spark analogue of the
   reference's columnar transpose + HDFS persist and hand-rolled byte
-  layout (``InfoSelector.scala:425-437``).
-- re-layout: one decision, ``InfoThSelector._plan_relayout``: keep the
-  layout, split or coalesce the blocks once (after stats), or — for a
-  greedy fit whose packed matrix fits ``LOCAL_MAX_BYTES`` — collect the
-  blocks ONCE into a driver-held block before stats (the local regime).
+  layout (``InfoSelector.scala:425-437``).  The input picks the pack;
+  there is no route option: a bare local parquet scan is read straight
+  from its files with pyarrow, anything else through ``mapInArrow``.
+- re-layout: one decision, ``InfoThSelector._plan_relayout``, from the
+  pack's free row, byte and partition counts, applied before any pass
+  reads the blocks: keep the layout, split or coalesce the blocks once,
+  or — for a greedy fit whose packed matrix fits ``LOCAL_MAX_BYTES`` —
+  collect them ONCE into a driver-held block (the local regime).
 - stats: per-feature dims (``counterByFeat``) and the row count from the
-  blocks, fused with the relevance histograms when the layout allows.
-  The same pass enforces the byte contract: an empty input, a NULL, a
-  value past 255 or a negative or fractional value raises a
-  ``ValueError`` (the reference truncates silently, ``InfoSelector:430``).
-- relevances: MI(X; class) from 2-D histograms vs the label
-  (``InfoTheory.scala:413-432``).
+  blocks, fused with the relevance histograms.  The same pass enforces
+  the byte contract: an empty input, a NULL, a value past 255 or a
+  negative or fractional value raises a ``ValueError`` (the reference
+  truncates silently, ``InfoSelector:430``).
+- relevances: MI(X; class) from the fused 2-D histograms vs the label
+  (``InfoTheory.scala:413-432``); a separate pass only when the stats
+  pass built no tables (its tree fold, or a block over budget).
 - loop: MIM short-circuits to top-k by relevance
   (``InfoSelector.scala:313-315``); otherwise the greedy loop
   (``InfoSelector.scala:353-362``) runs on the driver — at most one
@@ -332,12 +336,12 @@ class InfoThSelector:
     jobs (pack, collect) instead of one per pass.  Selections are
     bit-identical in every regime (same integer tables, same finalize).
 
-    ``pack_route`` — how the one-time pack is produced; all routes yield
-    bit-identical blocks-by-value (see :meth:`_fit_packed`): ``"auto"``
-    (default) detects a bare local parquet scan and direct-packs its
-    files with pyarrow (no JVM row transit — the r9 ``fit_parquet`` win
-    applied automatically), else takes the ``mapInArrow`` scan pack;
-    ``"scan"`` / ``"direct"`` pin a route.
+    The input picks the pack, and both packs yield bit-identical
+    blocks-by-value (see :meth:`fit`): a bare local parquet scan is
+    direct-packed from its files with pyarrow (no JVM row transit — the
+    r9 ``fit_parquet`` win applied automatically), anything else takes
+    the ``mapInArrow`` scan pack.  There is no option to pin a route;
+    ``fit_timings["pack_route"]`` records the one taken.
 
     Input contract, always enforced: features and label are non-NULL
     integers in [0, 255] (``InfoSelector.scala:404-416``).  The fit's
@@ -362,13 +366,8 @@ class InfoThSelector:
         beta: float = 1.0,
         emit_f32: bool = True,
         tie_precision: int | None = 5,
-        pack_route: str = "auto",
     ) -> None:
         _check_selection_args(n_to_select, criterion)
-        if pack_route not in ("auto", "scan", "direct"):
-            raise ValueError(
-                f"pack_route must be 'auto', 'scan' or 'direct', got {pack_route!r}"
-            )
         self.n_to_select = int(n_to_select)
         self.criterion = criterion
         self.feature_cols = feature_cols
@@ -376,9 +375,27 @@ class InfoThSelector:
         self.beta = beta
         self.emit_f32 = emit_f32
         self.tie_precision = tie_precision
-        self.pack_route = pack_route
 
     def fit(self, df: DataFrame) -> InfoThSelectorModel:
+        """Pack ``df``, then fit (:meth:`_fit_from_packed`).  The input
+        picks the pack, and both yield bit-identical blocks-by-value and
+        so identical selections (pinned by tests/test_direct_pack.py):
+
+        - a bare local parquet scan (optionally column-pruned, detected
+          by ``plans.inspect.bare_parquet_scan_files``) → the scan's own
+          files are direct-packed with pyarrow, no JVM row transit at all
+          — ``fit_parquet``'s 21× wide pack without the caller
+          materializing anything.
+        - anything else → the ``mapInArrow`` scan pack.  Spilling a
+          derived frame to parquet and direct-packing it does not beat
+          this outside a shallow ~40-100 column band (measured r10: the
+          parquet writer's per-field row cost crosses the Arrow
+          transit's from ~128 columns up), so there is no spill route.
+        """
+        from flink_infotheoretic_feature_selection_spark.plans.inspect import (
+            bare_parquet_scan_files,
+        )
+
         df = self._widen_vectors(df)
         feats = self.feature_cols or [c for c in df.columns if c != self.label_col]
         if self.n_to_select > len(feats):
@@ -391,7 +408,9 @@ class InfoThSelector:
         # blocks — no DataFrame persist and no wide Catalyst aggregates, whose plan
         # cost explodes with column count (632-column dims agg measured
         # at 60.9 s vs 0.17 s from blocks; see operators/packed.py).
-        return self._fit_packed(df, feats, self.label_col)
+        label = self.label_col
+        files = bare_parquet_scan_files(df, feats + [label])
+        return self._pack_and_fit(df.sparkSession, files, feats, label, scan_df=df)
 
     def fit_parquet(self, spark, path: str, filesystem=None) -> InfoThSelectorModel:
         """Fit straight from a MATERIALIZED parquet feature matrix via
@@ -408,13 +427,9 @@ class InfoThSelector:
         ``pyarrow.fs.FileSystem`` for non-local storage (S3, HDFS, a
         wrapped fsspec); footer reads and executor row-group reads both
         go through it."""
-        import time
-
         import pyarrow.parquet as pq_mod
 
         from flink_infotheoretic_feature_selection_spark.operators.packed import (
-            PackedMatrix,
-            _list_parquet_files_fs,
             list_parquet_files,
         )
 
@@ -422,107 +437,66 @@ class InfoThSelector:
         # an empty directory (r10, advisor find: the old sorted(glob)[0]
         # raised a bare IndexError first) and resolves nested /
         # Spark-partitioned layouts recursively
-        first = (
-            list_parquet_files(path)
-            if filesystem is None
-            else _list_parquet_files_fs(filesystem, path)
-        )[0]
+        first = list_parquet_files(path, filesystem)[0]
         schema_names = pq_mod.ParquetFile(first, filesystem=filesystem).schema_arrow.names
         feats = self.feature_cols or [c for c in schema_names if c != self.label_col]
         if self.n_to_select > len(feats):
             raise ValueError(
                 f"n_to_select={self.n_to_select} exceeds n_features={len(feats)}"
             )
-        label = self.label_col
-        timings: dict = {"pack_route": "direct"}
-        t0 = time.perf_counter()
-        packed = PackedMatrix.pack_parquet(
-            spark, path, feats + [label],
-            rows_per_partition=self.LOOP_ROWS_PER_PARTITION,
-            filesystem=filesystem,
-        )
-        timings["pack_sec"] = round(time.perf_counter() - t0, 3)
-        return self._fit_from_packed(packed, feats, label, timings)
+        return self._pack_and_fit(spark, path, feats, self.label_col, filesystem=filesystem)
 
-    def _fit_packed(self, df: DataFrame, feats: list[str], label: str) -> InfoThSelectorModel:
-        """Route the pack (r10, VERDICT ask #1) — all routes produce
-        bit-identical blocks-by-value and therefore identical selections
-        (pinned by tests/test_direct_pack.py):
-
-        - ``direct``: the input is a bare local parquet scan (optionally
-          column-pruned) → read the scan's own files with pyarrow — no
-          JVM row transit at all.  ``auto`` detects this itself via
-          ``plans.inspect.bare_parquet_scan_files``, so ``fit`` on
-          ``spark.read.parquet(...)`` gets ``fit_parquet``'s 21× wide
-          pack without the caller materializing anything.
-        - ``scan``: the ``mapInArrow`` pack — handles every input, and
-          is what ``auto`` takes for DERIVED frames.  Spilling a derived
-          frame to parquet and direct-packing it does not beat this
-          outside a shallow ~40-100 column band (measured r10: the
-          parquet writer's per-field row cost crosses the Arrow
-          transit's from ~128 columns up), so there is no spill route.
-        """
+    def _pack_and_fit(
+        self, spark, files, feats: list[str], label: str, scan_df=None, filesystem=None
+    ) -> InfoThSelectorModel:
+        """The pack both entry points share, then :meth:`_fit_from_packed`:
+        ``files`` (a parquet path or file list) → the direct row-group
+        pack; ``files`` None → the ``mapInArrow`` scan pack of
+        ``scan_df``.  With both given (``fit`` on a bare scan), a
+        footer-stage ValueError of the direct pack — a file missing a
+        column under mergeSchema, all-empty row groups — takes the scan
+        pack instead, which handles or re-diagnoses those.  The try
+        wraps ONLY the pack: a contract ValueError from the fit itself
+        (dims>256, a negative value) must propagate, not silently re-run
+        the fit on another route (r10 self-review find)."""
         import time
 
         from flink_infotheoretic_feature_selection_spark.operators.packed import PackedMatrix
-        from flink_infotheoretic_feature_selection_spark.plans.inspect import (
-            bare_parquet_scan_files,
-        )
 
         cols = feats + [label]
-        route = self.pack_route
-        if route in ("auto", "direct"):
-            files = bare_parquet_scan_files(df, cols)
-            if files is None:
-                if route == "direct":
-                    raise ValueError(
-                        "pack_route='direct' requires the input to be a bare "
-                        "local parquet scan (optionally column-pruned); this "
-                        "plan computes expressions — use 'auto' or 'scan', "
-                        "or fit_parquet on the materialized path"
-                    )
-            else:
-                timings: dict = {"pack_route": "direct"}
-                t0 = time.perf_counter()
-                try:
-                    packed = PackedMatrix.pack_parquet(
-                        df.sparkSession, files, cols,
-                        rows_per_partition=self.LOOP_ROWS_PER_PARTITION,
-                    )
-                except ValueError:
-                    if route == "direct":
-                        raise
-                    # footer-stage ineligibility (a file missing a column
-                    # under mergeSchema, all-empty row groups) — the scan
-                    # route handles or re-diagnoses these.  The try wraps
-                    # ONLY the pack: a contract ValueError from the fit
-                    # itself (dims>256, a negative value) must
-                    # propagate, not silently re-run the fit on another
-                    # route (r10 self-review find)
-                    packed = None
-                if packed is not None:
-                    timings["pack_sec"] = round(time.perf_counter() - t0, 3)
-                    return self._fit_from_packed(packed, feats, label, timings)
-        timings = {"pack_route": "scan"}
         t0 = time.perf_counter()
-        packed = PackedMatrix.pack(df, cols)
+        packed = None
+        if files is not None:
+            try:
+                packed = PackedMatrix.pack_parquet(
+                    spark, files, cols,
+                    rows_per_partition=self.LOOP_ROWS_PER_PARTITION,
+                    filesystem=filesystem,
+                )
+            except ValueError:
+                if scan_df is None:
+                    raise
+        timings: dict = {"pack_route": "scan" if packed is None else "direct"}
+        if packed is None:
+            packed = PackedMatrix.pack(scan_df, cols)
         timings["pack_sec"] = round(time.perf_counter() - t0, 3)
         return self._fit_from_packed(packed, feats, label, timings)
 
     def _fit_from_packed(
         self, packed, feats: list[str], label: str, timings: dict
     ) -> InfoThSelectorModel:
-        """Everything after the pack — shared by :meth:`fit` (DataFrame
-        pack) and :meth:`fit_parquet` (direct row-group pack); the two
-        routes differ ONLY in how the blocks were produced."""
+        """Everything after the pack, one straight line: apply the
+        layout decision, then the stats pass, the relevances and the
+        greedy loop.  Shared by every dense route and by the sparse
+        selector's local route; they differ ONLY in how the blocks were
+        produced."""
         import time
 
         try:
-            t0 = time.perf_counter()
-            # The layout is decided ONCE, from the pack's free row and
-            # byte counts, and that one decision gates the local collect,
-            # the stats fusion and the re-layout below (see
-            # _plan_relayout).
+            # The layout is decided ONCE, from the pack's free row, byte
+            # and partition counts (see _plan_relayout), and applied
+            # before any pass reads the blocks — so every pass, stats
+            # included, runs over the layout the loop will use.
             needs_loop = self.criterion.lower() != "mim" and self.n_to_select >= 2
             relayout = self._plan_relayout(
                 packed.n_rows or 0,
@@ -532,30 +506,62 @@ class InfoThSelector:
                 needs_loop,
                 packed.n_bytes,
             )
+            timings["relayout"] = relayout
+            t0 = time.perf_counter()
             if relayout == ("local", 1):
                 packed = packed.collect_local()
-            # The stats pass checks the byte contract and derives the
-            # dims; it also builds the stage-2 relevance tables (r12,
-            # guide §1.2: one scan of the blocks instead of two) unless
-            # the blocks are about to be split (r13, ADVICE r12): the
-            # tables would then run serially inside the very partitions
-            # the split exists to spread, so the relevances pass runs
-            # over the spread blocks instead.  h2 is None whenever the
-            # pass built no tables; bit-identical either way.
-            timings["relayout"] = relayout
-            if relayout is not None and relayout[0] == "split":
-                dims, n = packed.dims_and_count()
-                h2_fused = None
-            else:
-                dims, n, h2_fused = packed.dims_count_hist2d(label)
-            timings["stats_fused"] = h2_fused is not None
-            timings["stats_sec"] = round(time.perf_counter() - t0, 3)
-            if relayout is not None and relayout[0] != "local":
-                t0 = time.perf_counter()
+            elif relayout is not None:
                 packed = packed.rebalance(relayout[1], self.LOOP_ROWS_PER_PARTITION)
                 timings["rebalance_sec"] = round(time.perf_counter() - t0, 3)
+                t0 = time.perf_counter()
             timings["loop_partitions"] = packed.n_partitions
-            return self._fit_stages(packed, feats, label, dims, n, timings, h2_fused)
+
+            # The stats pass checks the byte contract, derives the dims
+            # and builds the stage-2 relevance tables (r12, guide §1.2:
+            # one scan of the blocks instead of two); h2 is None when it
+            # built no tables, and the relevances pass runs instead —
+            # bit-identical either way.
+            dims, n, h2 = packed.dims_count_hist2d(label)
+            timings["stats_fused"] = h2 is not None
+            timings["stats_sec"] = round(time.perf_counter() - t0, 3)
+            t0 = time.perf_counter()
+            if h2 is not None:
+                relevances = {
+                    c: mutual_info(h2[c], n, emit_f32=self.emit_f32) for c in feats
+                }
+            else:
+                relevances = packed.relevances(feats, label, dims, n, emit_f32=self.emit_f32)
+            timings["relevance_sec"] = round(time.perf_counter() - t0, 3)
+
+            # Loop: one packed pass (hist3d_mi_cmi_multi) per launch,
+            # called through the instance at pass time.  A speculated
+            # cond only pays off by saving a job launch, so the local
+            # regime pins width 0.
+            t0 = time.perf_counter()
+            path, passes, hits = greedy_path(
+                feats, relevances, self.criterion, self.beta, self.n_to_select,
+                self.tie_precision,
+                lambda remaining, conds: packed.hist3d_mi_cmi_multi(
+                    remaining, conds, label, dims, n, emit_f32=self.emit_f32
+                ),
+                0 if packed.local else "auto",
+            )
+            timings["loop_jobs"] = 0 if packed.local else passes
+            timings["speculation_hits"] = hits
+            timings["loop_sec"] = round(time.perf_counter() - t0, 3)
+            # MIM never runs a redundancy pass — reporting k-1 would hand
+            # per-iteration diagnostics a nonsense denominator (r8 review)
+            timings["iterations"] = (
+                0 if self.criterion.lower() == "mim" else max(len(path) - 1, 0)
+            )
+            return InfoThSelectorModel(
+                feature_cols=feats,
+                label_col=label,
+                selected_cols=sorted((c for c, _ in path), key=feats.index),
+                selection_path=path,
+                relevances=relevances,
+                fit_timings=timings,
+            )
         finally:
             packed.unpersist()
 
@@ -673,63 +679,6 @@ class InfoThSelector:
         if n_partitions > 2 * ideal:
             return ("coalesce", ideal)
         return None
-
-    def _fit_stages(
-        self,
-        packed,
-        feats: list[str],
-        label: str,
-        dims: dict[str, int],
-        n: int,
-        timings: dict,
-        h2_fused: dict | None = None,
-    ) -> InfoThSelectorModel:
-        import time as _time
-
-        # Stage 2 — relevances: one histogram pass over all features
-        # (or zero, when the fused dims+hist2d pass already produced the
-        # global tables — driver-side MI math only).
-        _t0 = _time.perf_counter()
-        if h2_fused is not None:
-            relevances = {
-                c: mutual_info(h2_fused[c], n, emit_f32=self.emit_f32)
-                for c in feats
-            }
-        else:
-            relevances = packed.relevances(
-                feats, label, dims, n, emit_f32=self.emit_f32
-            )
-        timings["relevance_sec"] = round(_time.perf_counter() - _t0, 3)
-
-        # Loop: one packed pass (hist3d_mi_cmi_multi) per launch, called
-        # through the instance at pass time.  A speculated cond only pays
-        # off by saving a job launch, so the local regime pins width 0.
-        _t0 = _time.perf_counter()
-        path, passes, hits = greedy_path(
-            feats, relevances, self.criterion, self.beta, self.n_to_select,
-            self.tie_precision,
-            lambda remaining, conds: packed.hist3d_mi_cmi_multi(
-                remaining, conds, label, dims, n, emit_f32=self.emit_f32
-            ),
-            0 if packed.local else "auto",
-        )
-        timings["loop_jobs"] = 0 if packed.local else passes
-        timings["speculation_hits"] = hits
-        timings["loop_sec"] = round(_time.perf_counter() - _t0, 3)
-        # MIM never runs a redundancy pass — reporting k-1 would hand
-        # per-iteration diagnostics a nonsense denominator (r8 review)
-        timings["iterations"] = (
-            0 if self.criterion.lower() == "mim" else max(len(path) - 1, 0)
-        )
-        selected = sorted((c for c, _ in path), key=feats.index)
-        return InfoThSelectorModel(
-            feature_cols=feats,
-            label_col=label,
-            selected_cols=selected,
-            selection_path=path,
-            relevances=relevances,
-            fit_timings=timings,
-        )
 
 
 class SparseInfoThSelector:

@@ -114,10 +114,18 @@ from flink_infotheoretic_feature_selection_spark.plans.inspect import (  # noqa:
 )
 
 
-def _sel(route="auto", k=3):
-    return InfoThSelector(
-        n_to_select=k, criterion="mrmr", emit_f32=False, pack_route=route
-    )
+def _sel(k=3):
+    return InfoThSelector(n_to_select=k, criterion="mrmr", emit_f32=False)
+
+
+def _scan_frame(df):
+    """``df`` with a value-identical derived label, so ``fit`` takes the
+    ``mapInArrow`` scan pack instead of the direct one.  NOTE:
+    ``F.col("label") + 0`` does NOT work here — Catalyst's optimizer
+    folds the identity away and the plan IS a bare scan again (which the
+    probe correctly accepts); ``greatest()`` survives optimization.  The
+    column set is unchanged, so the pack's wide fast path still runs."""
+    return df.withColumn("label", F.greatest("label", F.lit(0)))
 
 
 def test_auto_route_direct_packs_bare_scan(spark, tmp_path):
@@ -144,26 +152,21 @@ def test_auto_route_falls_back_to_scan_on_derived_frame(spark, tmp_path):
 
 
 def test_all_pack_routes_bit_identical(spark, tmp_path):
+    # the input picks the route: the bare scan direct-packs, the derived
+    # frame takes the scan pack, fit_parquet direct-packs the path
     p = tmp_path / "m.parquet"
     _write_matrix(p)
     bare = spark.read.parquet(str(p))
-    paths = {}
-    for route in ("auto", "scan", "direct"):
-        m = _sel(route).fit(bare)
-        assert m.fit_timings["pack_route"] in (route, "direct")
-        paths[route] = tuple(m.selection_path)
-    assert len(set(paths.values())) == 1
-
-
-def test_direct_route_raises_on_derived_plan(spark, tmp_path):
-    p = tmp_path / "m.parquet"
-    _write_matrix(p)
-    # NOTE: `F.col("f1") + 0` does NOT work here — Catalyst's optimizer
-    # folds the identity away and the plan IS a bare scan again (which
-    # the probe correctly accepts); greatest() survives optimization
-    derived = spark.read.parquet(str(p)).withColumn("f1", F.greatest("f1", F.lit(0)))
-    with pytest.raises(ValueError, match="bare .*parquet scan"):
-        _sel("direct").fit(derived)
+    models = {
+        "direct": _sel().fit(bare),
+        "scan": _sel().fit(_scan_frame(bare)),
+        "fit_parquet": _sel().fit_parquet(spark, str(p)),
+    }
+    assert {k: m.fit_timings["pack_route"] for k, m in models.items()} == {
+        "direct": "direct", "scan": "scan", "fit_parquet": "direct",
+    }
+    assert len({tuple(m.selection_path) for m in models.values()}) == 1
+    assert len({tuple(m.relevances.items()) for m in models.values()}) == 1
 
 
 def test_bare_scan_probe_rejects_filters_renames_and_partition_cols(spark, tmp_path):
@@ -205,8 +208,9 @@ def test_auto_route_on_partitioned_layout_matches_scan(spark, tmp_path):
     ).fit(pdf)
     assert auto.fit_timings["pack_route"] == "direct"
     scan = InfoThSelector(
-        n_to_select=3, feature_cols=feats, emit_f32=False, pack_route="scan"
-    ).fit(pdf)
+        n_to_select=3, feature_cols=feats, emit_f32=False
+    ).fit(_scan_frame(pdf))
+    assert scan.fit_timings["pack_route"] == "scan"
     assert auto.selection_path == scan.selection_path
 
 
@@ -216,6 +220,14 @@ def test_list_parquet_files_recursive_and_errors(tmp_path):
     _write_matrix(tmp_path / "a" / "pk=1" / "nested.parquet", n=100)
     files = list_parquet_files(str(tmp_path / "a"))
     assert [f.split("/")[-1] for f in files] == ["nested.parquet", "top.parquet"]
+    # a symlinked directory is walked too, as the former glob walked it
+    (tmp_path / "elsewhere").mkdir()
+    _write_matrix(tmp_path / "elsewhere" / "linked.parquet", n=100)
+    (tmp_path / "a" / "link").symlink_to(tmp_path / "elsewhere")
+    files = list_parquet_files(str(tmp_path / "a"))
+    assert [f.split("/")[-1] for f in files] == [
+        "linked.parquet", "nested.parquet", "top.parquet"
+    ]
     with pytest.raises(ValueError, match="no parquet files"):
         list_parquet_files([])
     empty = tmp_path / "empty"
@@ -249,7 +261,7 @@ def test_compact_downcasts_without_wrapping():
     assert _compact(a).dtype == np.uint8
     assert _compact(a).tolist() == [0, 7, 255]
     # out-of-contract values must KEEP a dtype that preserves them so
-    # dims_and_count still sees the real value (no silent 300 -> 44)
+    # the stats pass still sees the real value (no silent 300 -> 44)
     big = np.array([0, 300], dtype=np.int64)
     assert _compact(big).tolist() == [0, 300]
     neg = np.array([-3, 5], dtype=np.int32)
@@ -347,8 +359,8 @@ def test_fit_parquet_heterogeneous_object_store_layout(spark, tmp_path):
     # explicit file list to keep both engines reading the same rows
     files = sorted(str(p) for p in d.rglob("*.parquet"))
     via_df = InfoThSelector(
-        n_to_select=3, feature_cols=feats, emit_f32=False, pack_route="scan"
-    ).fit(spark.read.parquet(*files))
+        n_to_select=3, feature_cols=feats, emit_f32=False
+    ).fit(_scan_frame(spark.read.parquet(*files)))
     assert direct.selection_path == via_df.selection_path
     assert direct.relevances == via_df.relevances
 
@@ -371,18 +383,16 @@ def test_fit_parquet_through_pyarrow_filesystem(spark, tmp_path):
     via_fs = InfoThSelector(n_to_select=3, emit_f32=False).fit_parquet(
         spark, "store", filesystem=subfs
     )
-    via_local = InfoThSelector(n_to_select=3, emit_f32=False, pack_route="scan").fit(
-        spark.read.parquet(str(d / "a.parquet"), str(d / "nested" / "b.parquet"))
+    via_local = InfoThSelector(n_to_select=3, emit_f32=False).fit(
+        _scan_frame(
+            spark.read.parquet(str(d / "a.parquet"), str(d / "nested" / "b.parquet"))
+        )
     )
     assert via_fs.selection_path == via_local.selection_path
     assert via_fs.relevances == via_local.relevances
+    (tmp_path / "void").mkdir()
     with pytest.raises(ValueError, match="no parquet files"):
-        from flink_infotheoretic_feature_selection_spark.operators.packed import (
-            _list_parquet_files_fs,
-        )
-
-        (tmp_path / "void").mkdir()
-        _list_parquet_files_fs(subfs, "void")
+        list_parquet_files("void", subfs)
 
 
 def test_auto_route_propagates_contract_errors_without_reroute(spark, tmp_path):
@@ -404,6 +414,23 @@ def test_auto_route_propagates_contract_errors_without_reroute(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="exceed the byte range"):
         _sel(k=1).fit(spark.read.parquet(str(p)))
+
+
+def test_auto_route_footer_ineligible_falls_back_to_scan(spark, tmp_path):
+    # a file missing a column under mergeSchema fails the direct pack's
+    # footer stage; the fit re-runs the pack on the scan route, whose
+    # stats pass re-diagnoses the gap as the NULL-bearing column
+    d = tmp_path / "merged"
+    d.mkdir()
+    _write_matrix(d / "a.parquet", n=200, nf=3)
+    _write_matrix(d / "b.parquet", n=200, nf=2)  # no f2
+    df = spark.read.option("mergeSchema", "true").parquet(str(d))
+    cols = ["f0", "f1", "f2", "label"]
+    assert bare_parquet_scan_files(df, cols)
+    with pytest.raises(ValueError, match="missing pack columns"):
+        PackedMatrix.pack_parquet(spark, bare_parquet_scan_files(df, cols), cols)
+    with pytest.raises(ValueError, match=r"NULL-bearing: \['f2'\]"):
+        _sel(k=2).fit(df.select(*cols))
 
 
 def test_rebalance_band_compares_oversplit_to_row_ideal(spark, tmp_path):
@@ -482,16 +509,12 @@ def test_list_parquet_files_skips_hidden_paths(tmp_path):
 def test_list_parquet_files_fs_skips_hidden_paths(tmp_path):
     from pyarrow import fs as pafs
 
-    from flink_infotheoretic_feature_selection_spark.operators.packed import (
-        _list_parquet_files_fs,
-    )
-
     d = tmp_path / "tbl"
     (d / "_temporary").mkdir(parents=True)
     _write_matrix(d / "part-0.parquet", n=100)
     _write_matrix(d / "_temporary" / "part-0.parquet", n=100)
     subfs = pafs.SubTreeFileSystem(str(tmp_path), pafs.LocalFileSystem())
-    files = _list_parquet_files_fs(subfs, "tbl")
+    files = list_parquet_files("tbl", subfs)
     assert [f.split("/")[-1] for f in files] == ["part-0.parquet"]
 
 
@@ -506,8 +529,8 @@ def test_hidden_temporary_dir_matches_spark_read(spark, tmp_path):
     via_direct = InfoThSelector(n_to_select=3, emit_f32=False).fit_parquet(
         spark, str(d)
     )
-    via_scan = InfoThSelector(n_to_select=3, emit_f32=False, pack_route="scan").fit(
-        spark.read.parquet(str(d))
+    via_scan = InfoThSelector(n_to_select=3, emit_f32=False).fit(
+        _scan_frame(spark.read.parquet(str(d)))
     )
     assert via_direct.selection_path == via_scan.selection_path
     assert via_direct.relevances == via_scan.relevances
@@ -624,8 +647,8 @@ def test_fit_parquet_over_s3_protocol(spark, tmp_path):
         )
     finally:
         server.stop()
-    via_local = InfoThSelector(n_to_select=3, emit_f32=False, pack_route="scan").fit(
-        spark.read.parquet(str(p1), str(p2))
+    via_local = InfoThSelector(n_to_select=3, emit_f32=False).fit(
+        _scan_frame(spark.read.parquet(str(p1), str(p2)))
     )
     assert via_s3.selection_path == via_local.selection_path
     assert via_s3.relevances == via_local.relevances

@@ -91,8 +91,9 @@ def test_hist3d_mi_cmi_bit_equal_both_regimes(matrix, packed, forced_regime, mon
 
 
 def test_loop_engine_validated():
-    """Both selectors have one loop engine, and the dense one three pack
-    routes: the removed options are rejected, not silently ignored."""
+    """Both selectors have one loop engine, and the dense one picks its
+    pack route from the input: the removed options are rejected, not
+    silently ignored."""
     from flink_infotheoretic_feature_selection_spark.selector import SparseInfoThSelector
 
     with pytest.raises(TypeError, match="loop_engine"):
@@ -101,8 +102,9 @@ def test_loop_engine_validated():
         SparseInfoThSelector(n_features=2, loop_engine="packed")
     with pytest.raises(TypeError, match="spill_dir"):
         InfoThSelector(spill_dir="/tmp")
-    with pytest.raises(ValueError, match="pack_route"):
-        InfoThSelector(pack_route="spill")
+    for route in ("spill", "scan", "auto"):
+        with pytest.raises(TypeError, match="pack_route"):
+            InfoThSelector(pack_route=route)
 
 
 def test_dims_and_count_matches_catalyst_route(matrix, packed):
@@ -323,48 +325,89 @@ def test_speculation_param_validated():
         InfoThSelector(validate=True)
 
 
-def test_fusion_skipped_when_rebalance_will_fire(spark, matrix, monkeypatch):
-    """ADVICE r12 (medium): a starved input that the re-layout is about
-    to split must NOT take the fused dims+hist2d pass (it would run the
-    stage-2 histograms serially in the starved partitions); the fit
-    falls back to stats -> rebalance -> parallel relevances, with a
-    bit-identical selection."""
-    from flink_infotheoretic_feature_selection_spark.selector import InfoThSelector as Sel
+# forced layout -> (input partitions, the plan _plan_relayout returns)
+_RELAYOUT_ORDER = {
+    "keep": (4, None),
+    "local": (4, ("local", 1)),
+    "split": (1, ("split", 2)),
+    "coalesce": (4, ("coalesce", 2)),
+}
 
-    few = matrix.coalesce(1)
-    # the Spark-loop stats/re-layout path, not the local regime
-    monkeypatch.setattr(Sel, "LOCAL_MAX_BYTES", 0)
-    m_fused = Sel(n_to_select=3, criterion="mrmr").fit(few)
 
-    # force the starved-rebalance prediction true on the tiny fixture
-    monkeypatch.setattr(Sel, "REBALANCE_MIN_CELLS_PER_PART", 0)
-    monkeypatch.setattr(Sel, "LOOP_ROWS_PER_PARTITION", 64)
+@pytest.mark.parametrize("criterion", ["mrmr", "jmi"])
+@pytest.mark.parametrize("layout", list(_RELAYOUT_ORDER))
+def test_relayout_order_table(matrix, monkeypatch, layout, criterion):
+    """The fit applies its one layout decision before any pass reads the
+    blocks: whatever the plan, the stats pass runs once over the final
+    layout and builds the relevance tables, so no relevances pass runs,
+    and the selection and relevances are bit-identical to the local fit
+    (ADVICE r12: a starved input must not run the tables serially inside
+    the partitions a split is about to spread)."""
+    parts, plan = _RELAYOUT_ORDER[layout]
+    df = matrix.repartition(parts)
+    want = InfoThSelector(n_to_select=4, criterion=criterion).fit(df)
+    assert want.fit_timings["relayout"] == _LOCAL
 
-    def boom(self, *a, **k):  # pragma: no cover - failure path
-        raise AssertionError("dims_count_hist2d must not run before a rebalance")
+    # small split chunks, so the split really spreads the rows
+    monkeypatch.setattr(InfoThSelector, "LOOP_ROWS_PER_PARTITION", 1024)
+    monkeypatch.setattr(
+        InfoThSelector, "_plan_relayout", classmethod(lambda cls, *a: plan)
+    )
+    calls = []
+    for name in ("dims_count_hist2d", "dims_and_count", "relevances"):
+        orig = getattr(PackedMatrix, name)
 
-    monkeypatch.setattr(PackedMatrix, "dims_count_hist2d", boom)
-    m = Sel(n_to_select=3, criterion="mrmr").fit(few)
-    assert "rebalance_sec" in m.fit_timings
-    assert m.fit_timings["relayout"][0] == "split"
+        def spy(self, *a, _orig=orig, _name=name, **kw):
+            calls.append((_name, self.n_partitions))
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(PackedMatrix, name, spy)
+    m = InfoThSelector(n_to_select=4, criterion=criterion).fit(df)
+    assert m.fit_timings["relayout"] == plan
+    assert m.fit_timings["stats_fused"] is True
+    assert calls == [("dims_count_hist2d", m.fit_timings["loop_partitions"])]
+    assert m.fit_timings["loop_partitions"] == (plan or (None, parts))[1]
+    assert ("rebalance_sec" in m.fit_timings) == (layout in ("split", "coalesce"))
+    assert m.selection_path == want.selection_path
+    assert m.relevances == want.relevances
+
+
+def test_tree_fold_fit_runs_relevances_pass(matrix, monkeypatch):
+    """A stats pass that builds no tables (the tree fold past
+    DRIVER_STATS_MAX_BYTES) leaves the relevances to their own pass,
+    with a bit-identical selection."""
+    df = matrix.repartition(4)
+    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
+    want = InfoThSelector(n_to_select=4).fit(df)
+    monkeypatch.setattr(PackedMatrix, "DRIVER_STATS_MAX_BYTES", 0)
+    calls = []
+    orig = PackedMatrix.relevances
+
+    def spy(self, *a, **kw):
+        calls.append(self.n_partitions)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(PackedMatrix, "relevances", spy)
+    m = InfoThSelector(n_to_select=4).fit(df)
+    assert want.fit_timings["stats_fused"] is True
     assert m.fit_timings["stats_fused"] is False
-    assert m.selection_path == m_fused.selection_path
-    assert m.relevances == m_fused.relevances
+    assert calls == [4]
+    assert m.selection_path == want.selection_path
+    assert m.relevances == want.relevances
 
 
 @pytest.mark.parametrize("criterion, k", [("mim", 3), ("mrmr", 1)])
 def test_no_loop_fit_keeps_fused_stats_on_starved_input(matrix, monkeypatch, criterion, k):
     """ADVICE r13 (medium): a fit that runs no loop pass (MIM, k=1) never
-    re-lays out, so the same starved input that skips fusion for a k>=2
-    fit must still take the fused dims+hist2d pass — one decision gates
-    both."""
+    re-lays out, even on a starved input that a k>=2 fit would split:
+    the fused dims+hist2d pass runs over the pack's own layout."""
     from flink_infotheoretic_feature_selection_spark.selector import InfoThSelector as Sel
 
     few = matrix.coalesce(1)
     monkeypatch.setattr(Sel, "LOCAL_MAX_BYTES", 0)
     want = Sel(n_to_select=k, criterion=criterion).fit(few)
 
-    # the same forcing as test_fusion_skipped_when_rebalance_will_fire
+    # the forcing that makes a k>=2 fit split this input
     monkeypatch.setattr(Sel, "REBALANCE_MIN_CELLS_PER_PART", 0)
     monkeypatch.setattr(Sel, "LOOP_ROWS_PER_PARTITION", 64)
     calls = []
@@ -417,7 +460,7 @@ _LOCAL_LAYOUTS = [
     ((100_000, 33, 4, 32, _BOUND - 1), _LOCAL),
     ((100_000, 33, 4, 32, _BOUND), _LOCAL),
     ((100_000, 33, 4, 32, _BOUND + 1), None),
-    # the byte count wins over the cell count (int16 blocks are 2 B/cell)
+    # the byte count wins over the cell count (2 B/cell)
     ((600_000, 33, 32, 32, 2 * 600_000 * 33), ("coalesce", 10)),
     # cells fallback: below / above the bound
     ((600_000, 33, 32, 32, None), _LOCAL),
@@ -517,8 +560,8 @@ def test_byte_contract_table(spark, monkeypatch, fault):
     """Every fit checks the byte contract in its one stats pass, and each
     fault raises the same ValueError text in every regime: local (one
     collect, stats on the driver), Spark fused (stats + relevance tables
-    in one pass) and Spark unfused (a split forced ahead of the stats,
-    so the plain dims pass runs)."""
+    in one pass) and Spark unfused (the executor-side tree fold past
+    ``DRIVER_STATS_MAX_BYTES``, which builds no tables)."""
     rows, schema, match = _FAULTS[fault]
     df = spark.createDataFrame(rows, schema)
     calls = []
@@ -543,11 +586,9 @@ def test_byte_contract_table(spark, monkeypatch, fault):
     monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", -1)
     assert fit_error() == local
     assert calls == ["dims_count_hist2d"]
-    monkeypatch.setattr(
-        InfoThSelector, "_plan_relayout", classmethod(lambda cls, *a: ("split", 2))
-    )
+    monkeypatch.setattr(PackedMatrix, "DRIVER_STATS_MAX_BYTES", 0)
     assert fit_error() == local
-    assert calls == ["dims_and_count"]
+    assert calls == ["dims_count_hist2d"]
 
 
 # ---- SparseInfoThSelector routes -------------------------------------------

@@ -21,6 +21,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
 from flink_infotheoretic_feature_selection_spark.selector import InfoThSelector
@@ -47,10 +48,11 @@ def _write_wide_matrix(path: str, seed: int) -> tuple[int, int]:
     return nf, n
 
 
-# (seed, criterion, pack_route) — r10 extends the sweep across the
-# criterion update algebras (VERDICT ask #7) and the pack router:
-# "scan" pins the r9 substrate the staged mRMR gate owns; the "auto"
-# rows run the r10 router, which direct-packs the pruned bare scan.
+# (seed, criterion, route) — r10 extends the sweep across the criterion
+# update algebras (VERDICT ask #7) and both pack routes, which the input
+# picks: the "scan" rows feed a value-identical derived frame, so the
+# fit takes the r9 mapInArrow substrate the staged mRMR gate owns; the
+# "auto" rows feed the pruned bare scan, which the fit direct-packs.
 @pytest.mark.parametrize(
     "seed, criterion, route",
     [
@@ -71,12 +73,15 @@ def test_wide_selection_cross_engine_on_random_matrix(spark, tmp_path, seed, cri
     # select drops rid so the pack column-count fast path arms — the
     # exact route the staged gate pins (see _q_selected_wide)
     df = spark.read.parquet(path).select(*feats, "label")
+    if route == "scan":
+        # greatest() survives the optimizer (`+ 0` is folded away) and
+        # keeps the column set, so the wide fast path still arms
+        df = df.withColumn("label", F.greatest("label", F.lit(0)))
     model = InfoThSelector(
         n_to_select=k,
         criterion=criterion,
         feature_cols=feats,
         emit_f32=False,
-        pack_route=route,
     ).fit(df)
     assert model.fit_timings["pack_route"] == ("direct" if route == "auto" else route)
     got = [

@@ -67,10 +67,13 @@ def main(cfg_path: str) -> None:
     spark.sparkContext.setLogLevel("WARN")
     out: dict = {}
 
+    from unittest import mock
+
     from pyspark.sql import functions as F
 
     from flink_infotheoretic_feature_selection_spark.operators import histogram
     from flink_infotheoretic_feature_selection_spark.operators.dedup import minhash_lsh_pairs
+    from flink_infotheoretic_feature_selection_spark.plans import inspect as plans_inspect
     from flink_infotheoretic_feature_selection_spark.selector import (
         InfoThSelector,
         SparseInfoThSelector,
@@ -79,20 +82,26 @@ def main(cfg_path: str) -> None:
     def q5_path(model):
         return [[c, round(float(s), 5)] for c, s in model.selection_path]
 
-    # -- dense fit on every pack route (bit-identity asserted HERE, the
+    # -- dense fit on both pack routes (bit-identity asserted HERE, the
     #    parent compares the auto row against local[*]) ------------------
     matrix = cfg["matrix"]
     feats = cfg["feats"]
     bare = spark.read.parquet(matrix)
-    sels = {}
-    for route in ("auto", "scan"):
-        m = InfoThSelector(
-            n_to_select=4, criterion="mrmr", feature_cols=feats,
-            emit_f32=False, pack_route=route,
+
+    def dense_fit():
+        return InfoThSelector(
+            n_to_select=4, criterion="mrmr", feature_cols=feats, emit_f32=False
         ).fit(bare)
-        sels[route] = q5_path(m)
-        if route == "auto":
-            out["dense_auto_route"] = m.fit_timings.get("pack_route")
+
+    m = dense_fit()
+    out["dense_auto_route"] = m.fit_timings.get("pack_route")
+    sels = {"auto": q5_path(m)}
+    # the scan pack on the same bare matrix: the bare-scan probe patched
+    # to find nothing sends fit() down the mapInArrow pack
+    with mock.patch.object(plans_inspect, "bare_parquet_scan_files", return_value=None):
+        m = dense_fit()
+    assert m.fit_timings["pack_route"] == "scan"
+    sels["scan"] = q5_path(m)
     assert sels["auto"] == sels["scan"], sels
     out["dense_selection"] = sels["auto"]
     # sampled AFTER real jobs so both executor JVMs have registered
@@ -114,10 +123,8 @@ def main(cfg_path: str) -> None:
     local_max = InfoThSelector.LOCAL_MAX_BYTES
     InfoThSelector.LOCAL_MAX_BYTES = 0
     try:
-        m = InfoThSelector(
-            n_to_select=4, criterion="mrmr", feature_cols=feats,
-            emit_f32=False, pack_route="scan",
-        ).fit(bare)
+        with mock.patch.object(plans_inspect, "bare_parquet_scan_files", return_value=None):
+            m = dense_fit()
         out["distmerge_selection"] = q5_path(m)
     finally:
         histogram.BLOB_DRIVER_MERGE_MAX_BYTES = 32 << 20
