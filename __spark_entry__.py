@@ -1658,7 +1658,10 @@ def _q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 # by the input it is fed, so every substrate stays driver-pinned:
 # mrmr→scan (the mapInArrow scan pack), cmim→auto (the bare-scan router
 # end-to-end), jmi→fit_parquet (the direct row-group pack, the r11
-# two-accumulator × direct cell), mifs→scan, icap→auto.  Registry
+# two-accumulator × direct cell), mifs→scan, icap→auto.  The gate
+# matrix (2048 × 632 int32, 5.2 MB) is under the local bound, so "auto"
+# reads it onto the driver with pyarrow and the pack rows pin their pack
+# with the local bound at 0 (``_PackOnlySelector``).  Registry
 # 82 → 79: breaks the structural 82-gate cap (18 core + 2×32 rotating)
 # and frees 3 rotation slots.
 _WIDE_GATE_ROUTES: list[tuple[str, str]] = [
@@ -1668,6 +1671,13 @@ _WIDE_GATE_ROUTES: list[tuple[str, str]] = [
     ("cmim", "auto"),
     ("icap", "auto"),
 ]
+
+
+class _PackOnlySelector(InfoThSelector):
+    """The selector with the local route off, so a small input takes the
+    pack its input picks."""
+
+    LOCAL_MAX_BYTES = 0
 
 
 def _q_selected_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1681,7 +1691,7 @@ def _q_selected_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _staged_wide_matrix_path()
     rows = []
     for crit, route in _WIDE_GATE_ROUTES:
-        sel = InfoThSelector(
+        sel = (InfoThSelector if route == "auto" else _PackOnlySelector)(
             n_to_select=_WIDE_GATE_K,
             criterion=crit,
             feature_cols=feats,
@@ -1692,8 +1702,8 @@ def _q_selected_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
             # oracle-only rid never packs
             model = sel.fit_parquet(spark, path)
         else:
-            # "auto": the fit detects the bare pruned scan and direct-packs
-            # it (plans.inspect.bare_parquet_scan_files); "scan": a
+            # "auto": the fit detects the bare pruned scan and reads its
+            # files (plans.inspect.bare_parquet_scan_files); "scan": a
             # value-identical derived label makes the plan non-bare, so the
             # fit takes the mapInArrow scan pack — greatest() survives the
             # optimizer (`+ 0` is folded away) and keeps the column set

@@ -74,8 +74,12 @@ MEDIANS: dict[str, float] = {}
 # r13 (VERDICT r12 ask #5, additions-only): estimated sequential Spark
 # job count per selector/loop-family query, from the fitted model's own
 # fit_timings — pack(1) + stats(1) + optional rebalance(1) + the separate
-# relevances job when stats were not fused(1) + loop_jobs; a local-regime
-# fit is pack(1) + its one collect(1), every later pass on the driver.
+# relevances job when stats were not fused(1) + loop_jobs; a fit on the
+# local route (pack_route "local") is 3 on a frame: statusTracker() read
+# 3 jobs for each of b3 and b4 (k=5, 10, 25) at sf0.1 on local[4] — the
+# route's count() and its one toArrow(), every pass on the driver.  A
+# parquet input read on the driver runs none (statusTracker, bare scan
+# and fit_parquet), which fit_timings does not show: b16 records 0.
 # A sparse fit on its local route is 4: the label histogram (2 under
 # AQE, its shuffle stage and its result) plus the two Arrow collects;
 # its SQL route is not estimated.
@@ -91,8 +95,8 @@ def _est_fit_jobs(model) -> int | None:
         return None
     if "sparse_route" in ft:
         return 4 if ft["sparse_route"] == "local" else None
-    if ft.get("relayout") == ("local", 1):
-        return 2
+    if ft.get("pack_route") == "local":
+        return 3
     return (
         2
         + (1 if "rebalance_sec" in ft else 0)
@@ -426,11 +430,12 @@ def main() -> None:
 
     wide_models = []
 
-    # r10: fit() on this bare scan now AUTO-routes through the direct
-    # row-group pack (plans.inspect.bare_parquet_scan_files) — b16
-    # measures what a user actually gets from fit(); its r9 twin (the
-    # pinned scan pack) moves to b16s so the substrate regression signal
-    # survives the default change.
+    # r10: fit() on this bare scan AUTO-routes by its footers
+    # (plans.inspect.bare_parquet_scan_files) — b16 measures what a user
+    # actually gets from fit(): at 8192 x 632 int32 (20.7 MB of Arrow
+    # bytes, under LOCAL_MAX_BYTES) a pyarrow read on the driver.  Its
+    # twins b16s and b16c pin the scan and the direct pack with the
+    # local bound at 0, so the substrate regression signal survives.
     # One UNTIMED warmup first: the first wide fit in the process pays
     # one-time JIT/GC/plan machinery that min-of-3 does not fully decay
     # (measured r10: the first-positioned wide bench reads ~1.5 s above
@@ -443,13 +448,13 @@ def main() -> None:
         m = InfoThSelector(
             n_to_select=10, criterion="mrmr", feature_cols=wide_feats, emit_f32=False
         ).fit(wide_df)
-        assert m.fit_timings["pack_route"] == "direct"
+        assert m.fit_timings["pack_route"] == "local"
         wide_models.append(m)
         return m
 
     t, _ = record("b16_wide_mrmr_k10", b16)
     last = wide_models[-1]
-    EST_JOBS["b16_wide_mrmr_k10"] = _est_fit_jobs(last)
+    EST_JOBS["b16_wide_mrmr_k10"] = 0  # the bare scan's files are read on the driver
     results["b16_wide_pack_per_iter"] = round(last.fit_timings["pack_sec"], 3)
     results["b16_wide_loop_per_iter"] = round(
         last.fit_timings["loop_sec"] / max(last.fit_timings["iterations"], 1), 3
@@ -459,7 +464,8 @@ def main() -> None:
         # the scan pack on the same bare matrix: with the bare-scan probe
         # patched to find nothing, fit() takes the mapInArrow pack with
         # no extra projection over the 632 columns
-        with mock.patch.object(plans_inspect, "bare_parquet_scan_files", return_value=None):
+        with mock.patch.object(plans_inspect, "bare_parquet_scan_files", return_value=None), \
+                mock.patch.object(InfoThSelector, "LOCAL_MAX_BYTES", 0):
             m = InfoThSelector(
                 n_to_select=10, criterion="mrmr", feature_cols=wide_feats,
                 emit_f32=False,
@@ -480,9 +486,11 @@ def main() -> None:
     # scan's JVM row round-trip (at 600k×631 that transit is 84% of the
     # fit — BASELINE r9).  Selection must be identical to b16's.
     def b16c():
-        m = InfoThSelector(
-            n_to_select=10, criterion="mrmr", feature_cols=wide_feats, emit_f32=False
-        ).fit_parquet(spark, wide_path)
+        with mock.patch.object(InfoThSelector, "LOCAL_MAX_BYTES", 0):
+            m = InfoThSelector(
+                n_to_select=10, criterion="mrmr", feature_cols=wide_feats, emit_f32=False
+            ).fit_parquet(spark, wide_path)
+        assert m.fit_timings["pack_route"] == "direct"
         wide_models.append(m)
         return m
 

@@ -34,12 +34,11 @@ blocks live and how the per-block int32 partials merge is decided in
 ONE dispatch, :func:`_map_blocks` plus :func:`_merge_partials`, which
 gives three regimes:
 
-- local: a matrix small enough to hold on the driver
-  (``InfoThSelector.LOCAL_MAX_BYTES``) is collected ONCE into a single
-  driver-held block (:meth:`PackedMatrix.collect_local`), and every
-  later pass calls its closure on that block in the driver process —
-  no Spark job at all.  At bench scale a job launch costs several times
-  the NumPy work of a loop pass, so this regime removes the loop's cost.
+- local: a matrix under ``InfoThSelector.LOCAL_MAX_BYTES`` never
+  becomes an RDD: it is read once as Arrow into a single driver-held
+  block (:meth:`PackedMatrix.from_arrow`), and every pass calls its
+  closure on that block in the driver process — no Spark job.  At bench
+  scale a job launch costs several times a pass's NumPy work.
 - driver merge: a pass volume under
   ``histogram.BLOB_DRIVER_MERGE_MAX_BYTES`` is collected and summed on
   the driver (one stage, no shuffle).
@@ -51,15 +50,16 @@ gives three regimes:
 Bit-equality of all three against ``np.bincount`` tables is pinned by
 tests/test_packed.py.
 
-A dense fit runs in one straight line over this substrate.  Its input
-picks the pack — there is no route option: a bare local parquet scan or
-a materialized parquet path is read by :meth:`PackedMatrix.pack_parquet`,
-anything else by the ``mapInArrow`` scan of :meth:`PackedMatrix.pack`.
-The fit then applies its one layout decision
-(:meth:`PackedMatrix.collect_local`, or :meth:`PackedMatrix.rebalance`
-to split or coalesce) before any pass reads the blocks, and runs the
-stats pass with its fused relevance tables, the relevances pass only
-when those tables were not built, and the loop passes.
+A dense fit runs in one straight line over this substrate: plan, then
+the Arrow collect or the pack, then stats, relevances and the loop.  The
+selector plans the route before any job runs, from the row count (the
+parquet footers', :func:`parquet_units`, else one ``count()``) and the
+Arrow byte widths: under the local bound :meth:`PackedMatrix.from_arrow`;
+above it :meth:`PackedMatrix.pack_parquet` for a bare local parquet
+scan or a parquet path, the ``mapInArrow`` :meth:`PackedMatrix.pack` for
+anything else, then the packed RDD's one layout decision
+(:meth:`PackedMatrix.rebalance`).  The relevances pass runs only when
+the stats pass built no relevance tables.
 
 The byte contract — non-NULL integer features and label in [0, 255] —
 is checked in one place, the stats pass (``PackedMatrix._stats``) that
@@ -100,7 +100,7 @@ def _add_partial(acc: np.ndarray, v: np.ndarray) -> np.ndarray:
 def _map_blocks(src, fn) -> list:
     """``[fn(block) for every block]``, on the driver: one Spark job over a
     persisted block RDD, a plain loop over the driver-held block list of
-    the local regime (:meth:`PackedMatrix.collect_local`)."""
+    the local regime (:meth:`PackedMatrix.from_arrow`)."""
     if isinstance(src, list):
         return [fn(blk) for blk in src]
     return src.map(fn).collect()
@@ -194,6 +194,56 @@ def list_parquet_files(path: str | list[str], filesystem=None) -> list[str]:
     if not files:
         raise ValueError(f"no parquet files under {path!r}")
     return files
+
+
+def arrow_byte_width(t: pa.DataType) -> int | None:
+    """Bytes per value of the fixed-width Arrow type ``t`` (a bool
+    counts 1), ``None`` for a variable-width one (string, list, ...)."""
+    try:
+        return -(-t.bit_width // 8)
+    except ValueError:
+        return None
+
+
+def parquet_units(
+    path: str | list[str], cols: list[str], filesystem=None
+) -> tuple[list[tuple[str, int, int]], list[int | None]]:
+    """The footers of every parquet read: ``(units, widths)`` — the
+    non-empty ``(file, row_group, rows)`` units under ``path`` and the
+    largest Arrow byte width (:func:`arrow_byte_width`) of each of
+    ``cols`` in any file.  Raises a ``ValueError`` when a file lacks one
+    of ``cols``."""
+    import pyarrow.parquet as pq_mod
+
+    units: list[tuple[str, int, int]] = []
+    widths: dict[str, int | None] = dict.fromkeys(cols, 0)
+    for f in list_parquet_files(path, filesystem):
+        md = pq_mod.ParquetFile(f, filesystem=filesystem)
+        schema = md.schema_arrow
+        missing = [c for c in cols if c not in schema.names]
+        if missing:
+            raise ValueError(
+                f"parquet file {f!r} is missing pack columns {missing}"
+            )
+        for c in cols:
+            w = arrow_byte_width(schema.field(c).type)
+            widths[c] = None if w is None or widths[c] is None else max(widths[c], w)
+        for rg in range(md.metadata.num_row_groups):
+            nr = md.metadata.row_group(rg).num_rows
+            if nr:
+                units.append((f, rg, nr))
+    return units, list(widths.values())
+
+
+def read_units(units: list[tuple[str, int, int]], cols: list[str], filesystem=None) -> list:
+    """One pyarrow table of ``cols`` per ``(file, row_group, rows)``
+    unit, read through ``filesystem``."""
+    import pyarrow.parquet as pq_mod
+
+    return [
+        pq_mod.ParquetFile(f, filesystem=filesystem).read_row_group(rg, columns=cols)
+        for f, rg, _ in units
+    ]
 
 
 def _warn_if_spill_regime(spark, n_rows: int, n_cols: int) -> None:
@@ -329,33 +379,45 @@ def _col_to_numpy(col) -> np.ndarray:
     return col.to_numpy(zero_copy_only=False)
 
 
-def _block_of(batches: list[pa.RecordBatch], cols: list[str]) -> dict[str, np.ndarray]:
-    # resolve columns BY NAME from the batch schema, not by position:
-    # pack feeds the scan's own column order through when possible (the
-    # wide-schema fast path below) and only the dict keys must follow
-    # ``cols``
-    idx = {name: i for i, name in enumerate(batches[0].schema.names)}
+def _block_of(batches: list, cols: list[str]) -> dict[str, np.ndarray]:
+    """One block of ``cols`` from Arrow record batches or tables, each
+    column resolved BY NAME in every batch (the scan pack feeds the
+    scan's own column order through, and parquet files may order their
+    columns differently), converted by :func:`_col_to_numpy`,
+    concatenated and narrowed by :func:`_compact`."""
     arrs: dict[str, np.ndarray] = {}
     for c in cols:
-        i = idx[c]
-        chunks = [_col_to_numpy(b.column(i)) for b in batches]
+        chunks = [_col_to_numpy(b.column(c)) for b in batches]
         arrs[c] = _compact(chunks[0] if len(chunks) == 1 else np.concatenate(chunks))
     return arrs
 
 
-def _materialize(rdd, cols: list[str]) -> tuple[int, int]:
+def pack_source(matrix: DataFrame, cols: list[str]) -> DataFrame:
+    """The frame a pack or an Arrow collect of ``cols`` reads: ``matrix``
+    itself when ``cols`` is exactly its column set (the wide-schema fast
+    path of :meth:`PackedMatrix.pack`), else ``matrix.select(*cols)``."""
+    # fast path requires UNIQUE input columns: _block_of resolves by
+    # name, and a duplicate name (e.g. from a join) would silently read
+    # the last occurrence for both logical columns — the select keeps
+    # Catalyst's loud AMBIGUOUS_REFERENCE error for that case
+    mcols = matrix.columns
+    if set(cols) == set(mcols) and len(set(mcols)) == len(mcols):
+        return matrix
+    return matrix.select(*cols)
+
+
+def _materialize(rdd, cols: list[str]) -> int:
     """Materialize a freshly persisted block RDD in ONE job, returning
-    its total row count and the summed ``nbytes`` of its column arrays."""
-    return rdd.map(
-        lambda blk: (len(blk[cols[0]]), sum(blk[c].nbytes for c in cols))
-    ).fold((0, 0), lambda a, b: (a[0] + b[0], a[1] + b[1]))
+    its total row count."""
+    return rdd.map(lambda blk: len(blk[cols[0]])).fold(0, lambda a, b: a + b)
 
 
 class PackedMatrix:
     """Per-partition NumPy column blocks of a wide discrete matrix,
-    persisted as an RDD.
+    persisted as an RDD — or one driver-held block in the local regime.
 
-    Build with :meth:`pack` or :meth:`pack_parquet`; release with
+    Build with :meth:`pack` or :meth:`pack_parquet` (an RDD), or
+    :meth:`from_arrow` (the driver-held block); release with
     :meth:`unpersist`.  All histogram methods return exact
     integer-merged results bit-identical to the ``histogram.py``
     DataFrame routes (same int64 partition accumulators, same int32
@@ -374,10 +436,9 @@ class PackedMatrix:
         cols: list[str],
         n_partitions: int,
         n_rows: int | None = None,
-        n_bytes: int | None = None,
     ) -> None:
-        #: The persisted RDD of blocks — or, after :meth:`collect_local`,
-        #: a plain list holding the one driver-held block.
+        #: The persisted RDD of blocks — or, in the local regime, a plain
+        #: list holding the one driver-held block.
         self.rdd = rdd
         self.cols = list(cols)
         self.n_partitions = n_partitions
@@ -387,14 +448,10 @@ class PackedMatrix:
         #: callers must not assume it.  Lets the selector make and apply
         #: its one layout decision BEFORE any pass reads the blocks.
         self.n_rows = n_rows
-        #: Summed ``nbytes`` of the blocks' column arrays, from the same
-        #: materialization job (``None`` when unknown) — what the local
-        #: regime would hold on the driver.
-        self.n_bytes = n_bytes
 
     @property
     def local(self) -> bool:
-        """True once :meth:`collect_local` moved the blocks to the driver."""
+        """True when the blocks are held on the driver, not in an RDD."""
         return isinstance(self.rdd, list)
 
     @classmethod
@@ -415,19 +472,11 @@ class PackedMatrix:
         the wide projection class plus a per-batch copy; neither buys
         anything when no column is dropped or reordered (measured 631×8k,
         local[32]: pack 7.2 s → ~2 s).  With a strict subset the select
-        stays — that's what pushes column pruning into the scan.
+        stays — that's what pushes column pruning into the scan
+        (:func:`pack_source`).
         """
         cols = list(cols)
-        # fast path requires UNIQUE input columns: _block_of resolves by
-        # name, and a duplicate name (e.g. from a join) would silently
-        # read the last occurrence for both logical columns — the select
-        # keeps Catalyst's loud AMBIGUOUS_REFERENCE error for that case
-        mcols = matrix.columns
-        src = (
-            matrix
-            if set(cols) == set(mcols) and len(set(mcols)) == len(mcols)
-            else matrix.select(*cols)
-        )
+        src = pack_source(matrix, cols)
 
         def pack_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             # free the PREVIOUS task's retained Arrow buffers first:
@@ -449,10 +498,9 @@ class PackedMatrix:
         )
         n_parts = rdd.getNumPartitions()
         # materialize (downstream timing is pure iteration cost); the
-        # per-block row counts and byte sizes ride the same job and give
-        # n_rows / n_bytes for free (r13 — replaces the former bare count())
-        n_rows, n_bytes = _materialize(rdd, cols)
-        return cls(rdd, cols, n_parts, n_rows=n_rows, n_bytes=n_bytes)
+        # per-block row counts ride the same job and give n_rows for free
+        # (r13 — replaces the former bare count())
+        return cls(rdd, cols, n_parts, n_rows=_materialize(rdd, cols))
 
     @classmethod
     def pack_parquet(
@@ -462,6 +510,7 @@ class PackedMatrix:
         cols: list[str],
         rows_per_partition: int = 65536,
         filesystem=None,
+        units: list[tuple[str, int, int]] | None = None,
     ) -> "PackedMatrix":
         """Direct pack from a MATERIALIZED parquet feature matrix: tasks
         read their own row groups via pyarrow straight into NumPy blocks.
@@ -506,23 +555,12 @@ class PackedMatrix:
           (pyarrow filesystems pickle into the task closures), and so
           does the listing (:func:`list_parquet_files`).  Without it,
           paths are local.
+        - ``units``: the footers' units when the caller already read them
+          (:func:`parquet_units`), so the footers are read once per fit.
         """
-        import pyarrow.parquet as pq_mod
-
         cols = list(cols)
-        files = list_parquet_files(path, filesystem)
-        units: list[tuple[str, int, int]] = []
-        for f in files:
-            md = pq_mod.ParquetFile(f, filesystem=filesystem)
-            missing = [c for c in cols if c not in md.schema_arrow.names]
-            if missing:
-                raise ValueError(
-                    f"parquet file {f!r} is missing pack columns {missing}"
-                )
-            for rg in range(md.metadata.num_row_groups):
-                nr = md.metadata.row_group(rg).num_rows
-                if nr:
-                    units.append((f, rg, nr))
+        if units is None:
+            units, _ = parquet_units(path, cols, filesystem)
         if not units:
             # an all-empty input would otherwise surface later as an
             # opaque stats-pass error (r10, advisor find)
@@ -545,27 +583,9 @@ class PackedMatrix:
 
         def read_chunk(it):
             import pyarrow as _pa
-            import pyarrow.parquet as _pq
 
             for chunk in it:
-                parts: dict[str, list[np.ndarray]] = {c: [] for c in cols}
-                for f, rg, _ in chunk:
-                    tbl = _pq.ParquetFile(f, filesystem=filesystem).read_row_group(
-                        rg, columns=cols
-                    )
-                    for c in cols:
-                        # _col_to_numpy: zero-copy buffer view for the
-                        # null-free integer case (0.51 of 0.67 s/unit was
-                        # ChunkedArray.to_numpy's copying path — VERDICT
-                        # r10 ask #2), to_numpy fallback otherwise so the
-                        # NULL → float64-NaN promotion the dims contract
-                        # sees is unchanged
-                        parts[c].append(_col_to_numpy(tbl.column(c)))
-                out = {
-                    c: _compact(v[0] if len(v) == 1 else np.concatenate(v))
-                    for c, v in parts.items()
-                }
-                del parts, tbl
+                out = _block_of(read_units(chunk, cols, filesystem), cols)
                 # Return retained decode buffers to the OS: long-lived
                 # REUSED python workers otherwise keep each unit's
                 # transient int32 table (~rows × cols × 4 B) in the
@@ -583,34 +603,26 @@ class PackedMatrix:
         )
         # materialize: downstream timing is pure iteration cost; the row
         # count is also footer-known (sum of non-empty row-group rows)
-        n_rows, n_bytes = _materialize(rdd, cols)
-        return cls(rdd, cols, rdd.getNumPartitions(), n_rows=n_rows, n_bytes=n_bytes)
+        n_rows = _materialize(rdd, cols)
+        return cls(rdd, cols, rdd.getNumPartitions(), n_rows=n_rows)
+
+    @classmethod
+    def from_arrow(cls, tables: list, cols: list[str]) -> "PackedMatrix":
+        """The local regime: Arrow tables on the driver → ONE
+        driver-held block of ``cols`` (:func:`_block_of`, the conversion
+        both packs run per block), so every pass calls its per-block
+        closure in the driver process (:func:`_map_blocks`,
+        :func:`_merge_partials`) — no Spark job.  Integer tables are
+        partition-agnostic sums, so every result is bit-identical to the
+        distributed passes.  No tables (all-empty parquet) hold no block,
+        which the stats pass rejects as an empty input."""
+        cols = list(cols)
+        blocks = [_block_of(tables, cols)] if tables else []
+        return cls(blocks, cols, 1, n_rows=sum(len(b[cols[0]]) for b in blocks))
 
     def unpersist(self) -> None:
         if not self.local:
             self.rdd.unpersist()
-
-    def collect_local(self) -> "PackedMatrix":
-        """The local regime: ONE ``collect()`` of the persisted blocks,
-        concatenated per column into a single driver-held block; the RDD
-        is unpersisted.  Every later pass runs its per-block closure on
-        that block in the driver process (:func:`_map_blocks`,
-        :func:`_merge_partials`) — no Spark job.  Integer tables are
-        partition-agnostic sums and concatenation keeps each column's
-        values (and any out-of-contract dtype the checks need), so every
-        result is bit-identical to the distributed passes.  An already
-        driver-held matrix (e.g. the sparse selector's densified block)
-        is returned as is."""
-        if self.local:
-            return self
-        cols = self.cols
-        try:
-            blocks = self.rdd.collect()
-        finally:
-            self.unpersist()
-        if len(blocks) > 1:
-            blocks = [{c: np.concatenate([b[c] for b in blocks]) for c in cols}]
-        return PackedMatrix(blocks, cols, 1, n_rows=self.n_rows, n_bytes=self.n_bytes)
 
     # -- stats / layout ------------------------------------------------------
 
@@ -824,7 +836,7 @@ class PackedMatrix:
         rdd.count()
         self.unpersist()
         return PackedMatrix(
-            rdd, cols, rdd.getNumPartitions(), n_rows=self.n_rows, n_bytes=self.n_bytes
+            rdd, cols, rdd.getNumPartitions(), n_rows=self.n_rows
         )
 
     # -- histograms --------------------------------------------------------

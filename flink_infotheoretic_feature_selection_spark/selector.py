@@ -5,17 +5,18 @@ traced in SURVEY.md §3.1) as an idiomatic PySpark Estimator/Model:
 
 One dense fit path, one straight line of phases over one cache:
 
-- pack: ONE scan of the source packs per-partition NumPy column blocks
-  into a persisted RDD (operators/packed.py) — the Spark analogue of the
+- plan: one route, ``InfoThSelector._plan_pack_route``, from the row
+  count (free from parquet footers, else one ``count()``) and the Arrow
+  byte widths, before any pack; there is no route option.
+- Arrow collect or pack: a matrix under ``LOCAL_MAX_BYTES`` is read ONCE
+  as Arrow into a driver-held block (the local regime, any criterion);
+  a larger one is packed by ONE scan into a persisted RDD of NumPy
+  column blocks (operators/packed.py) — the Spark analogue of the
   reference's columnar transpose + HDFS persist and hand-rolled byte
-  layout (``InfoSelector.scala:425-437``).  The input picks the pack;
-  there is no route option: a bare local parquet scan is read straight
-  from its files with pyarrow, anything else through ``mapInArrow``.
-- re-layout: one decision, ``InfoThSelector._plan_relayout``, from the
-  pack's free row, byte and partition counts, applied before any pass
-  reads the blocks: keep the layout, split or coalesce the blocks once,
-  or — for a greedy fit whose packed matrix fits ``LOCAL_MAX_BYTES`` —
-  collect them ONCE into a driver-held block (the local regime).
+  layout (``InfoSelector.scala:425-437``): a bare local parquet scan
+  straight from its files with pyarrow, anything else through
+  ``mapInArrow``; ``_plan_relayout`` then keeps, splits or coalesces
+  the blocks once, before any pass reads them.
 - stats: per-feature dims (``counterByFeat``) and the row count from the
   blocks, fused with the relevance histograms.  The same pass enforces
   the byte contract: an empty input, a NULL, a value past 255 or a
@@ -324,24 +325,21 @@ class InfoThSelector:
     users wanting byte-parity with the reference's selection order on
     near-tied scores must pass ``None``.
 
-    The fit packs the matrix once into a persisted RDD of NumPy column
-    blocks (operators/packed.py); stats, relevances and every greedy
-    iteration are plain closures over those blocks — no per-iteration
-    Catalyst plan or Arrow conversion.  When the fit runs loop passes and
-    the packed matrix holds at most ``LOCAL_MAX_BYTES`` (32 MB — the
+    The fit reads the matrix once into NumPy column blocks
+    (operators/packed.py); stats, relevances and every greedy iteration
+    are plain closures over those blocks — no per-iteration Catalyst
+    plan or Arrow conversion.  The route is planned before any pack
+    (:meth:`_plan_pack_route`) and recorded as
+    ``fit_timings["pack_route"]``; there is no option to pin it.  A
+    matrix of at most ``LOCAL_MAX_BYTES`` Arrow bytes (32 MB — the
     volume one loop pass may already collect under the driver-merge
-    budget), the blocks are collected once to the driver and every later
-    pass runs there: at that size a Spark job launch costs several times
-    a pass's NumPy work (see :meth:`_plan_relayout`), so the fit pays two
-    jobs (pack, collect) instead of one per pass.  Selections are
-    bit-identical in every regime (same integer tables, same finalize).
-
-    The input picks the pack, and both packs yield bit-identical
-    blocks-by-value (see :meth:`fit`): a bare local parquet scan is
-    direct-packed from its files with pyarrow (no JVM row transit — the
-    r9 ``fit_parquet`` win applied automatically), anything else takes
-    the ``mapInArrow`` scan pack.  There is no option to pin a route;
-    ``fit_timings["pack_route"]`` records the one taken.
+    budget) is ``"local"``: one Arrow collect into a driver-held block
+    and every pass on the driver, since at that size a Spark job launch
+    costs several times a pass's NumPy work.  Above it the matrix is
+    packed into a persisted RDD: ``"direct"`` from the files of a bare
+    local parquet scan with pyarrow (no JVM row transit), ``"scan"``
+    through ``mapInArrow`` for anything else.  Selections are
+    bit-identical on every route (same integer tables, same finalize).
 
     Input contract, always enforced: features and label are non-NULL
     integers in [0, 255] (``InfoSelector.scala:404-416``).  The fit's
@@ -377,16 +375,16 @@ class InfoThSelector:
         self.tie_precision = tie_precision
 
     def fit(self, df: DataFrame) -> InfoThSelectorModel:
-        """Pack ``df``, then fit (:meth:`_fit_from_packed`).  The input
-        picks the pack, and both yield bit-identical blocks-by-value and
-        so identical selections (pinned by tests/test_direct_pack.py):
+        """Read or pack ``df`` (:meth:`_pack_and_fit`), then fit.  Every
+        route yields bit-identical blocks-by-value and so identical
+        selections (pinned by tests/test_direct_pack.py):
 
         - a bare local parquet scan (optionally column-pruned, detected
           by ``plans.inspect.bare_parquet_scan_files``) → the scan's own
-          files are direct-packed with pyarrow, no JVM row transit at all
-          — ``fit_parquet``'s 21× wide pack without the caller
+          files are read with pyarrow, no JVM row transit at all —
+          ``fit_parquet``'s 21× wide pack without the caller
           materializing anything.
-        - anything else → the ``mapInArrow`` scan pack.  Spilling a
+        - anything else → one ``toArrow()`` or the scan pack.  Spilling a
           derived frame to parquet and direct-packing it does not beat
           this outside a shallow ~40-100 column band (measured r10: the
           parquet writer's per-field row cost crosses the Arrow
@@ -414,7 +412,7 @@ class InfoThSelector:
 
     def fit_parquet(self, spark, path: str, filesystem=None) -> InfoThSelectorModel:
         """Fit straight from a MATERIALIZED parquet feature matrix via
-        the direct row-group pack (``PackedMatrix.pack_parquet``) —
+        pyarrow (driver-read or ``PackedMatrix.pack_parquet``) —
         skips the DataFrame scan's JVM row round-trip, the dominant
         cost on wide matrices (BASELINE r9: 600k×631 pack 113 s →
         seconds).  Semantics are identical to ``fit`` on
@@ -425,8 +423,8 @@ class InfoThSelector:
         ``feature_cols`` defaults to the parquet schema order minus
         ``label_col``.  ``filesystem`` (r10) — an optional
         ``pyarrow.fs.FileSystem`` for non-local storage (S3, HDFS, a
-        wrapped fsspec); footer reads and executor row-group reads both
-        go through it."""
+        wrapped fsspec); footer reads and row-group reads all go through
+        it."""
         import pyarrow.parquet as pq_mod
 
         from flink_infotheoretic_feature_selection_spark.operators.packed import (
@@ -449,37 +447,66 @@ class InfoThSelector:
     def _pack_and_fit(
         self, spark, files, feats: list[str], label: str, scan_df=None, filesystem=None
     ) -> InfoThSelectorModel:
-        """The pack both entry points share, then :meth:`_fit_from_packed`:
-        ``files`` (a parquet path or file list) → the direct row-group
-        pack; ``files`` None → the ``mapInArrow`` scan pack of
-        ``scan_df``.  With both given (``fit`` on a bare scan), a
-        footer-stage ValueError of the direct pack — a file missing a
-        column under mergeSchema, all-empty row groups — takes the scan
-        pack instead, which handles or re-diagnoses those.  The try
-        wraps ONLY the pack: a contract ValueError from the fit itself
-        (dims>256, a negative value) must propagate, not silently re-run
-        the fit on another route (r10 self-review find)."""
+        """Plan the route, read or pack the matrix, then
+        :meth:`_fit_from_packed`.  The row count that picks the route
+        (:meth:`_plan_pack_route`, before any other job) comes free from
+        the footers of ``files`` (a parquet path or file list), else from
+        one ``count()`` of ``scan_df``:
+
+        - ``"local"``: one Arrow read into a driver-held block
+          (``PackedMatrix.from_arrow``) — pyarrow on the driver for
+          ``files``, no Spark job; else one JVM-side ``toArrow()``;
+        - ``"direct"``: the row-group pack of ``files``;
+        - ``"scan"``: the ``mapInArrow`` pack of ``scan_df``.
+
+        With both given (``fit`` on a bare scan), footers the direct read
+        cannot take — a file missing a column under mergeSchema, no
+        non-empty row group — send the frame down the frame routes,
+        which handle or re-diagnose those.  The try wraps ONLY the
+        footers: a contract ValueError from the fit itself must
+        propagate, not silently re-run the fit on another route (r10
+        self-review find).  The fit's ``n`` comes from the blocks."""
         import time
 
-        from flink_infotheoretic_feature_selection_spark.operators.packed import PackedMatrix
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        from flink_infotheoretic_feature_selection_spark.operators.packed import (
+            PackedMatrix,
+            arrow_byte_width,
+            pack_source,
+            parquet_units,
+            read_units,
+        )
 
         cols = feats + [label]
         t0 = time.perf_counter()
-        packed = None
+        units = None
         if files is not None:
             try:
-                packed = PackedMatrix.pack_parquet(
-                    spark, files, cols,
-                    rows_per_partition=self.LOOP_ROWS_PER_PARTITION,
-                    filesystem=filesystem,
-                )
+                units, widths = parquet_units(files, cols, filesystem)
             except ValueError:
                 if scan_df is None:
                     raise
-        timings: dict = {"pack_route": "scan" if packed is None else "direct"}
-        if packed is None:
+        if not units and scan_df is not None:
+            src = pack_source(scan_df, cols)
+            widths = [arrow_byte_width(to_arrow_type(f.dataType)) for f in src.schema]
+            n_rows, units = src.count(), None
+        else:
+            n_rows = sum(u[2] for u in units)
+        route = self._plan_pack_route(n_rows, widths, units is not None)
+        if route == "local":
+            tables = [src.toArrow()] if units is None else read_units(units, cols, filesystem)
+            packed = PackedMatrix.from_arrow(tables, cols)
+        elif route == "direct":
+            packed = PackedMatrix.pack_parquet(
+                spark, files, cols,
+                rows_per_partition=self.LOOP_ROWS_PER_PARTITION,
+                filesystem=filesystem,
+                units=units,
+            )
+        else:
             packed = PackedMatrix.pack(scan_df, cols)
-        timings["pack_sec"] = round(time.perf_counter() - t0, 3)
+        timings = {"pack_route": route, "pack_sec": round(time.perf_counter() - t0, 3)}
         return self._fit_from_packed(packed, feats, label, timings)
 
     def _fit_from_packed(
@@ -493,24 +520,21 @@ class InfoThSelector:
         import time
 
         try:
-            # The layout is decided ONCE, from the pack's free row, byte
-            # and partition counts (see _plan_relayout), and applied
+            # A packed RDD's layout is decided ONCE, from the pack's free
+            # row and partition counts (see _plan_relayout), and applied
             # before any pass reads the blocks — so every pass, stats
-            # included, runs over the layout the loop will use.
-            needs_loop = self.criterion.lower() != "mim" and self.n_to_select >= 2
-            relayout = self._plan_relayout(
+            # included, runs over the layout the loop will use.  The
+            # driver-held block of the local route has no layout to plan.
+            relayout = None if packed.local else self._plan_relayout(
                 packed.n_rows or 0,
                 len(packed.cols),
                 packed.n_partitions,
-                1 if packed.local else packed.rdd.context.defaultParallelism,
-                needs_loop,
-                packed.n_bytes,
+                packed.rdd.context.defaultParallelism,
+                self.criterion.lower() != "mim" and self.n_to_select >= 2,
             )
             timings["relayout"] = relayout
             t0 = time.perf_counter()
-            if relayout == ("local", 1):
-                packed = packed.collect_local()
-            elif relayout is not None:
+            if relayout is not None:
                 packed = packed.rebalance(relayout[1], self.LOOP_ROWS_PER_PARTITION)
                 timings["rebalance_sec"] = round(time.perf_counter() - t0, 3)
                 t0 = time.perf_counter()
@@ -597,10 +621,32 @@ class InfoThSelector:
     # Scale-free: compares actual per-partition work against the fixed
     # cost of one extra job + shuffling every packed byte once.
     REBALANCE_MIN_CELLS_PER_PART = 32 * 1024 * 1024
-    # Largest packed matrix (bytes) the local regime holds on the driver
-    # — see _plan_relayout.  The same volume one loop pass may already
+    # Largest matrix (Arrow bytes) the local route reads onto the driver
+    # — see _plan_pack_route.  The same volume one loop pass may already
     # collect under histogram.BLOB_DRIVER_MERGE_MAX_BYTES.
     LOCAL_MAX_BYTES = 32 * 1024 * 1024
+
+    @classmethod
+    def _plan_pack_route(cls, n_rows: int, widths: list[int | None], direct: bool) -> str:
+        """The fit's route, a pure function of the row count and the
+        Arrow byte width of each pack column (``None``: variable width):
+        ``"local"`` when ``n_rows × Σ widths`` — what the driver
+        receives — is at most ``LOCAL_MAX_BYTES`` (read at call time; 0
+        keeps every non-empty input off the driver, -1 every input), else
+        ``"direct"`` for parquet files (``direct``) and ``"scan"`` for a
+        frame.  The criterion and k play no part: MIM goes local too.
+
+        local: stats, relevances and every loop pass run on the driver,
+        no Spark job: at this size the launches, not the bincounts, are
+        the fit's cost.  Measured on a 4-vCPU host, mRMR k=10: on 120k
+        rows × 33 columns the Spark loop's 4 speculative passes took
+        2.24 s and the 9 local passes 0.16-0.18 s; on 600k × 33 (sf0.1,
+        19.8 MB) 2.4-2.7 s vs 0.70-0.75 s.  Reading the frame as Arrow
+        instead of packing and collecting blocks took the 120k × 33 fit
+        from 1.65 to 0.90 s (MIM k=10: 1.83 to 0.81 s)."""
+        if None not in widths and n_rows * sum(widths) <= cls.LOCAL_MAX_BYTES:
+            return "local"
+        return "direct" if direct else "scan"
 
     @classmethod
     def _plan_relayout(
@@ -610,29 +656,15 @@ class InfoThSelector:
         n_partitions: int,
         parallelism: int,
         needs_loop: bool,
-        n_bytes: int | None = None,
     ) -> tuple[str, int] | None:
-        """The fit's one layout decision, a pure function of the pack's
-        shape: ``None`` (keep the layout), ``("local", 1)``,
+        """The one layout decision for a Spark-packed matrix, a pure
+        function of the pack's shape: ``None`` (keep the layout),
         ``("split", target)`` or ``("coalesce", ideal)``.
 
         The re-layout exists for the greedy LOOP (dims and relevances
         run before or regardless of it), so MIM and k=1 fits
         (``needs_loop`` False) never re-lay out (r13 — the MIM bench
         paid a 0.55 s coalesce for zero loop jobs).
-
-        local: the packed matrix — ``n_bytes`` from the pack's own
-        materialization job, else ``n_rows × n_cols`` one-byte cells —
-        holds at most ``LOCAL_MAX_BYTES``.  The fit collects the blocks
-        once and runs stats, relevances and every loop pass on the
-        driver (``PackedMatrix.collect_local``): at this size the job
-        launches, not the bincounts, are the loop's cost.  Measured on a
-        4-vCPU host, mRMR k=10: on 120k rows × 33 packed columns the
-        Spark loop's 4 speculative passes took 2.24 s and the 9 local
-        passes 0.16-0.18 s; on 600k × 33 (sf0.1, 19.8 MB) 2.4-2.7 s vs
-        0.70-0.75 s.  Checked first: it also covers data under
-        2 × ``LOOP_ROWS_PER_PARTITION`` rows, which is otherwise never
-        re-laid out.
 
         ``ideal`` is the layout the loop's memory model is built on
         (~``LOOP_ROWS_PER_PARTITION`` rows per block); the core-clamped
@@ -663,8 +695,6 @@ class InfoThSelector:
         """
         if not needs_loop:
             return None
-        if (n_rows * n_cols if n_bytes is None else n_bytes) <= cls.LOCAL_MAX_BYTES:
-            return ("local", 1)
         rows_per_part = cls.LOOP_ROWS_PER_PARTITION
         if n_rows < 2 * rows_per_part:
             return None
@@ -776,9 +806,7 @@ class SparseInfoThSelector:
         names = [f"f{i}" for i in range(self.n_features)]
         cols = dict(zip(names, block))
         cols["y"] = y
-        packed = PackedMatrix(
-            [cols], names + ["y"], 1, n_rows=n, n_bytes=block.nbytes + y.nbytes
-        )
+        packed = PackedMatrix([cols], names + ["y"], 1, n_rows=n)
         timings = {"sparse_route": "local", "collect_sec": round(time.perf_counter() - t0, 3)}
         dense = InfoThSelector(
             n_to_select=self.n_to_select,

@@ -128,7 +128,8 @@ def _scan_frame(df):
     return df.withColumn("label", F.greatest("label", F.lit(0)))
 
 
-def test_auto_route_direct_packs_bare_scan(spark, tmp_path):
+def test_auto_route_direct_packs_bare_scan(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)  # the packs are under test
     p = tmp_path / "m.parquet"
     _write_matrix(p)
     m = _sel().fit(spark.read.parquet(str(p)))
@@ -140,7 +141,8 @@ def test_auto_route_direct_packs_bare_scan(spark, tmp_path):
     assert m2.fit_timings["pack_route"] == "direct"
 
 
-def test_auto_route_falls_back_to_scan_on_derived_frame(spark, tmp_path):
+def test_auto_route_falls_back_to_scan_on_derived_frame(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)  # the packs are under test
     p = tmp_path / "m.parquet"
     _write_matrix(p)
     bare = spark.read.parquet(str(p))
@@ -151,22 +153,34 @@ def test_auto_route_falls_back_to_scan_on_derived_frame(spark, tmp_path):
     assert m.selection_path == _sel().fit(bare).selection_path
 
 
-def test_all_pack_routes_bit_identical(spark, tmp_path):
-    # the input picks the route: the bare scan direct-packs, the derived
-    # frame takes the scan pack, fit_parquet direct-packs the path
+def test_all_pack_routes_bit_identical(spark, tmp_path, monkeypatch):
+    # the input picks the route: under the local bound every input is
+    # read once as Arrow onto the driver; with the bound at 0 the bare
+    # scan direct-packs, the derived frame takes the scan pack and
+    # fit_parquet direct-packs the path
     p = tmp_path / "m.parquet"
     _write_matrix(p)
     bare = spark.read.parquet(str(p))
-    models = {
-        "direct": _sel().fit(bare),
-        "scan": _sel().fit(_scan_frame(bare)),
-        "fit_parquet": _sel().fit_parquet(spark, str(p)),
+
+    def fits():
+        return {
+            "bare": _sel().fit(bare),
+            "derived": _sel().fit(_scan_frame(bare)),
+            "fit_parquet": _sel().fit_parquet(spark, str(p)),
+        }
+
+    local = fits()
+    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
+    spark_routes = fits()
+    assert {k: m.fit_timings["pack_route"] for k, m in local.items()} == {
+        "bare": "local", "derived": "local", "fit_parquet": "local",
     }
-    assert {k: m.fit_timings["pack_route"] for k, m in models.items()} == {
-        "direct": "direct", "scan": "scan", "fit_parquet": "direct",
+    assert {k: m.fit_timings["pack_route"] for k, m in spark_routes.items()} == {
+        "bare": "direct", "derived": "scan", "fit_parquet": "direct",
     }
-    assert len({tuple(m.selection_path) for m in models.values()}) == 1
-    assert len({tuple(m.relevances.items()) for m in models.values()}) == 1
+    models = [*local.values(), *spark_routes.values()]
+    assert len({tuple(m.selection_path) for m in models}) == 1
+    assert len({tuple(m.relevances.items()) for m in models}) == 1
 
 
 def test_bare_scan_probe_rejects_filters_renames_and_partition_cols(spark, tmp_path):
@@ -191,10 +205,11 @@ def test_bare_scan_probe_rejects_filters_renames_and_partition_cols(spark, tmp_p
     assert bare_parquet_scan_files(pdf, ["f0", "label"])
 
 
-def test_auto_route_on_partitioned_layout_matches_scan(spark, tmp_path):
+def test_auto_route_on_partitioned_layout_matches_scan(spark, tmp_path, monkeypatch):
     # end-to-end over a Spark-partitioned (nested-dir) layout: the
     # recursive lister + inputFiles-driven direct pack must agree with
     # the scan route on the same frame
+    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)  # the packs are under test
     p = tmp_path / "m.parquet"
     _write_matrix(p)
     d = tmp_path / "bypk"
@@ -365,9 +380,10 @@ def test_fit_parquet_heterogeneous_object_store_layout(spark, tmp_path):
     assert direct.relevances == via_df.relevances
 
 
-def test_fit_parquet_through_pyarrow_filesystem(spark, tmp_path):
+def test_fit_parquet_through_pyarrow_filesystem(spark, tmp_path, monkeypatch):
     # VERDICT r9 ask #5 (non-local storage): the `filesystem` param
-    # routes BOTH the driver's footer reads and the executors'
+    # routes the driver's footer reads, the local route's driver-side
+    # row-group reads and, with the local bound at 0, the executors'
     # row-group reads through a pyarrow FileSystem object (pickled into
     # task closures — the same mechanism an S3FileSystem would use).
     # SubTreeFileSystem makes paths meaningless to the local os.path
@@ -380,16 +396,23 @@ def test_fit_parquet_through_pyarrow_filesystem(spark, tmp_path):
     _write_matrix(d / "nested" / "b.parquet", n=800, seed=12, row_group_size=190)
     subfs = pafs.SubTreeFileSystem(str(tmp_path), pafs.LocalFileSystem())
 
-    via_fs = InfoThSelector(n_to_select=3, emit_f32=False).fit_parquet(
-        spark, "store", filesystem=subfs
-    )
+    def fit_fs():
+        return InfoThSelector(n_to_select=3, emit_f32=False).fit_parquet(
+            spark, "store", filesystem=subfs
+        )
+
+    via_fs = [fit_fs()]
+    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
+    via_fs.append(fit_fs())
+    assert [m.fit_timings["pack_route"] for m in via_fs] == ["local", "direct"]
     via_local = InfoThSelector(n_to_select=3, emit_f32=False).fit(
         _scan_frame(
             spark.read.parquet(str(d / "a.parquet"), str(d / "nested" / "b.parquet"))
         )
     )
-    assert via_fs.selection_path == via_local.selection_path
-    assert via_fs.relevances == via_local.relevances
+    for m in via_fs:
+        assert m.selection_path == via_local.selection_path
+        assert m.relevances == via_local.relevances
     (tmp_path / "void").mkdir()
     with pytest.raises(ValueError, match="no parquet files"):
         list_parquet_files("void", subfs)
@@ -603,12 +626,13 @@ def test_col_to_numpy_zero_copy_and_null_promotion(tmp_path):
     assert ((gn == rn) | (np.isnan(gn) & np.isnan(rn))).all()
 
 
-def test_fit_parquet_over_s3_protocol(spark, tmp_path):
+def test_fit_parquet_over_s3_protocol(spark, tmp_path, monkeypatch):
     # r11 (VERDICT ask #5): fit_parquet through pyarrow's REAL
     # S3FileSystem against a local moto S3 endpoint — the full object-
-    # store path: driver footer reads, executor row-group reads through
-    # the pickled filesystem, recursive prefix listing, and the Hadoop
-    # hidden-path filter (a _temporary duplicate upload must be ignored).
+    # store path: driver footer reads, driver-side row-group reads and
+    # executor ones through the pickled filesystem, recursive prefix
+    # listing, and the Hadoop hidden-path filter (a _temporary duplicate
+    # upload must be ignored).
     pytest.importorskip("moto")
     import io
 
@@ -642,13 +666,21 @@ def test_fit_parquet_over_s3_protocol(spark, tmp_path):
             region="us-east-1",
         )
 
-        via_s3 = InfoThSelector(n_to_select=3, emit_f32=False).fit_parquet(
-            spark, "bkt/data", filesystem=s3
-        )
+        def fit_s3():
+            return InfoThSelector(n_to_select=3, emit_f32=False).fit_parquet(
+                spark, "bkt/data", filesystem=s3
+            )
+
+        # the driver-side read, then the executors' (local bound at 0)
+        via_s3 = [fit_s3()]
+        monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
+        via_s3.append(fit_s3())
     finally:
         server.stop()
+    assert [m.fit_timings["pack_route"] for m in via_s3] == ["local", "direct"]
     via_local = InfoThSelector(n_to_select=3, emit_f32=False).fit(
         _scan_frame(spark.read.parquet(str(p1), str(p2)))
     )
-    assert via_s3.selection_path == via_local.selection_path
-    assert via_s3.relevances == via_local.relevances
+    for m in via_s3:
+        assert m.selection_path == via_local.selection_path
+        assert m.relevances == via_local.relevances

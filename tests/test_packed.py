@@ -325,12 +325,14 @@ def test_speculation_param_validated():
         InfoThSelector(validate=True)
 
 
-# forced layout -> (input partitions, the plan _plan_relayout returns)
+# forced layout -> (input partitions, the plan _plan_relayout returns,
+# the loop's partitions); "local" reads the matrix onto the driver, so
+# no plan is made
 _RELAYOUT_ORDER = {
-    "keep": (4, None),
-    "local": (4, ("local", 1)),
-    "split": (1, ("split", 2)),
-    "coalesce": (4, ("coalesce", 2)),
+    "keep": (4, None, 4),
+    "local": (4, None, 1),
+    "split": (1, ("split", 2), 2),
+    "coalesce": (4, ("coalesce", 2), 2),
 }
 
 
@@ -342,17 +344,23 @@ def test_relayout_order_table(matrix, monkeypatch, layout, criterion):
     layout and builds the relevance tables, so no relevances pass runs,
     and the selection and relevances are bit-identical to the local fit
     (ADVICE r12: a starved input must not run the tables serially inside
-    the partitions a split is about to spread)."""
-    parts, plan = _RELAYOUT_ORDER[layout]
+    the partitions a split is about to spread).  The local route's one
+    driver-held block has no layout to plan."""
+    parts, plan, loop_parts = _RELAYOUT_ORDER[layout]
     df = matrix.repartition(parts)
     want = InfoThSelector(n_to_select=4, criterion=criterion).fit(df)
-    assert want.fit_timings["relayout"] == _LOCAL
+    assert want.fit_timings["pack_route"] == "local"
+    assert want.fit_timings["relayout"] is None
 
     # small split chunks, so the split really spreads the rows
     monkeypatch.setattr(InfoThSelector, "LOOP_ROWS_PER_PARTITION", 1024)
-    monkeypatch.setattr(
-        InfoThSelector, "_plan_relayout", classmethod(lambda cls, *a: plan)
-    )
+    if layout == "local":
+        monkeypatch.setattr(InfoThSelector, "_plan_relayout", None)
+    else:
+        monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
+        monkeypatch.setattr(
+            InfoThSelector, "_plan_relayout", classmethod(lambda cls, *a: plan)
+        )
     calls = []
     for name in ("dims_count_hist2d", "dims_and_count", "relevances"):
         orig = getattr(PackedMatrix, name)
@@ -363,10 +371,11 @@ def test_relayout_order_table(matrix, monkeypatch, layout, criterion):
 
         monkeypatch.setattr(PackedMatrix, name, spy)
     m = InfoThSelector(n_to_select=4, criterion=criterion).fit(df)
+    assert m.fit_timings["pack_route"] == ("local" if layout == "local" else "scan")
     assert m.fit_timings["relayout"] == plan
     assert m.fit_timings["stats_fused"] is True
     assert calls == [("dims_count_hist2d", m.fit_timings["loop_partitions"])]
-    assert m.fit_timings["loop_partitions"] == (plan or (None, parts))[1]
+    assert m.fit_timings["loop_partitions"] == loop_parts
     assert ("rebalance_sec" in m.fit_timings) == (layout in ("split", "coalesce"))
     assert m.selection_path == want.selection_path
     assert m.relevances == want.relevances
@@ -432,8 +441,8 @@ def test_no_loop_fit_keeps_fused_stats_on_starved_input(matrix, monkeypatch, cri
 
 
 # (n_rows, n_cols, n_partitions, parallelism) -> plan when the fit runs
-# loop passes, with the local regime off (these rows pin the Spark-loop
-# rules); a fit without loop passes (MIM, k=1) never re-lays out
+# loop passes (these rows pin the Spark-loop rules); a fit without loop
+# passes (MIM, k=1) never re-lays out
 _LAYOUTS = [
     # starved: one unsplit 6M-row file on 32 cores, far above the cost gate
     ((6_000_000, 33, 1, 32), ("split", 32)),
@@ -451,32 +460,78 @@ _LAYOUTS = [
     # small data (< 2x LOOP_ROWS_PER_PARTITION rows) is never re-laid out
     ((100_000, 33, 100, 32), None),
 ]
-_LOCAL = ("local", 1)
-_BOUND = InfoThSelector.LOCAL_MAX_BYTES
-# (n_rows, n_cols, n_partitions, parallelism, n_bytes) -> plan at the
-# default local bound; n_bytes None falls back to n_rows x n_cols cells
-_LOCAL_LAYOUTS = [
-    # packed bytes below, at and above the bound (small data: no re-layout)
-    ((100_000, 33, 4, 32, _BOUND - 1), _LOCAL),
-    ((100_000, 33, 4, 32, _BOUND), _LOCAL),
-    ((100_000, 33, 4, 32, _BOUND + 1), None),
-    # the byte count wins over the cell count (2 B/cell)
-    ((600_000, 33, 32, 32, 2 * 600_000 * 33), ("coalesce", 10)),
-    # cells fallback: below / above the bound
-    ((600_000, 33, 32, 32, None), _LOCAL),
-    ((6_000_000, 33, 1, 32, None), ("split", 32)),
-    # a starved single-partition input under the bound goes local too
-    ((1_000_000, 33, 1, 32, 1_000_000 * 33), _LOCAL),
+# shapes at or under the default local bound plan like any Spark-packed
+# matrix: the bound picks the route before the pack, never the layout
+_UNDER_BOUND_LAYOUTS = [
+    # sf0.1's 600k x 33 (19.8 MB), over-split -> coalesce to IDEAL
+    ((600_000, 33, 32, 32), ("coalesce", 10)),
+    ((262_144, 33, 64, 32), ("coalesce", 4)),
+    ((100_000, 33, 4, 32), None),
+    ((1_000_000, 33, 40, 32), ("coalesce", 16)),
+    # one block holding exactly LOCAL_MAX_BYTES cells is also exactly at
+    # the split's cost gate
+    ((1_048_576, 32, 1, 32), ("split", 16)),
+    ((1_048_576, 32, 1, 4), ("split", 4)),
+    ((2_000_000, 17, 1, 8), ("split", 8)),
 ]
 
 
 @pytest.mark.parametrize("needs_loop", [True, False])
-@pytest.mark.parametrize("layout, plan", _LAYOUTS + _LOCAL_LAYOUTS)
-def test_plan_relayout_table(layout, plan, needs_loop, monkeypatch):
-    if len(layout) == 4:
-        monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
-    got = InfoThSelector._plan_relayout(*layout[:4], needs_loop, *layout[4:])
+@pytest.mark.parametrize("layout, plan", _LAYOUTS + _UNDER_BOUND_LAYOUTS)
+def test_plan_relayout_table(layout, plan, needs_loop):
+    got = InfoThSelector._plan_relayout(*layout, needs_loop)
     assert got == (plan if needs_loop else None)
+
+
+_B = InfoThSelector.LOCAL_MAX_BYTES
+_T, _I4, _I8 = 1, 4, 8  # Arrow byte widths: TINYINT, INT, BIGINT
+
+
+# (n_rows, widths, bound) -> route for a frame; a parquet input
+# (direct=True) routes "direct" wherever a frame routes "scan"
+@pytest.mark.parametrize(
+    "n_rows, widths, bound, route",
+    [
+        # Arrow bytes below, at and one row past the bound
+        (1_000_000, [_T] * 33, _B, "local"),
+        (1_048_576, [_T] * 32, _B, "local"),
+        (1_048_577, [_T] * 32, _B, "scan"),
+        # the same rows at wider Arrow types
+        (250_000, [_T] * 33, _B, "local"),
+        (250_000, [_I4] * 33, _B, "local"),
+        (250_000, [_I8] * 33, _B, "scan"),
+        (600_000, [_T] * 33, _B, "local"),
+        (600_000, [_I4] * 33, _B, "scan"),
+        # a mixed frame sums its own widths
+        (100_000, [_T] * 32 + [_I8], _B, "local"),
+        # a variable-width column never goes local
+        (10, [_T, None], _B, "scan"),
+        # an empty input reads nothing onto the driver
+        (0, [_T] * 33, _B, "local"),
+        # bound 0 keeps every non-empty input off the driver, -1 every one
+        (1, [_T], 0, "scan"),
+        (0, [_T], 0, "local"),
+        (0, [_T], -1, "scan"),
+    ],
+)
+def test_plan_pack_route_table(n_rows, widths, bound, route, monkeypatch):
+    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", bound)
+    assert _B == 32 * 1024 * 1024
+    assert InfoThSelector._plan_pack_route(n_rows, widths, False) == route
+    direct = "direct" if route == "scan" else route
+    assert InfoThSelector._plan_pack_route(n_rows, widths, True) == direct
+
+
+@pytest.mark.parametrize("criterion, k", [("mrmr", 4), ("mim", 4), ("mrmr", 1)])
+def test_every_fit_under_the_bound_goes_local(matrix, criterion, k):
+    """The route does not depend on the criterion or k: MIM and k=1
+    fits, which run no loop pass, read the matrix onto the driver too
+    and run no Spark job after the collect."""
+    m = InfoThSelector(n_to_select=k, criterion=criterion).fit(matrix)
+    assert m.fit_timings["pack_route"] == "local"
+    assert m.fit_timings["relayout"] is None
+    assert m.fit_timings["loop_partitions"] == 1
+    assert m.fit_timings["loop_jobs"] == 0
 
 
 @pytest.mark.parametrize(
@@ -485,9 +540,10 @@ def test_plan_relayout_table(layout, plan, needs_loop, monkeypatch):
 def test_fit_identical_across_local_driver_and_shuffled_regimes(
     matrix, criterion, monkeypatch
 ):
-    """The local regime (blocks collected once, every pass on the driver)
+    """The local route (one Arrow collect, every pass on the driver)
     selects exactly what the Spark loop selects in both merge regimes:
-    the same integer tables reach the same finalize."""
+    the same integer tables reach the same finalize.  Every criterion,
+    MIM included, goes local."""
     def fit():
         return InfoThSelector(n_to_select=6, criterion=criterion).fit(matrix)
 
@@ -496,12 +552,12 @@ def test_fit_identical_across_local_driver_and_shuffled_regimes(
     driver = fit()
     monkeypatch.setattr(histogram, "BLOB_DRIVER_MERGE_MAX_BYTES", 0)
     shuffled = fit()
-    if criterion != "mim":
-        assert local.fit_timings["relayout"] == _LOCAL
-        assert local.fit_timings["loop_partitions"] == 1
-        assert local.fit_timings["loop_jobs"] == 0
-        assert driver.fit_timings["relayout"] != _LOCAL
-        assert driver.fit_timings["loop_jobs"] > 0
+    assert local.fit_timings["pack_route"] == "local"
+    assert local.fit_timings["relayout"] is None
+    assert local.fit_timings["loop_partitions"] == 1
+    assert local.fit_timings["loop_jobs"] == 0
+    assert driver.fit_timings["pack_route"] == "scan"
+    assert (driver.fit_timings["loop_jobs"] > 0) == (criterion != "mim")
     for other in (driver, shuffled):
         assert other.selection_path == local.selection_path
         assert other.relevances == local.relevances
@@ -556,16 +612,20 @@ _FAULTS = {
 
 
 @pytest.mark.parametrize("fault", list(_FAULTS))
-def test_byte_contract_table(spark, monkeypatch, fault):
+def test_byte_contract_table(spark, monkeypatch, tmp_path, fault):
     """Every fit checks the byte contract in its one stats pass, and each
-    fault raises the same ValueError text in every regime: local (one
-    collect, stats on the driver), Spark fused (stats + relevance tables
-    in one pass) and Spark unfused (the executor-side tree fold past
-    ``DRIVER_STATS_MAX_BYTES``, which builds no tables)."""
+    fault raises the same ValueError text on every route: local (one
+    Arrow read — a frame's ``toArrow()``, a bare scan's or
+    ``fit_parquet``'s files through pyarrow — and stats on the driver),
+    Spark fused (stats + relevance tables in one pass) and Spark unfused
+    (the executor-side tree fold past ``DRIVER_STATS_MAX_BYTES``, which
+    builds no tables)."""
     rows, schema, match = _FAULTS[fault]
     df = spark.createDataFrame(rows, schema)
+    path = str(tmp_path / "m")
+    df.write.parquet(path)
     calls = []
-    for name in ("collect_local", "dims_count_hist2d", "dims_and_count"):
+    for name in ("dims_count_hist2d", "dims_and_count"):
         orig = getattr(PackedMatrix, name)
 
         def spy(self, *a, _orig=orig, _name=name, **kw):
@@ -573,21 +633,35 @@ def test_byte_contract_table(spark, monkeypatch, fault):
             return _orig(self, *a, **kw)
 
         monkeypatch.setattr(PackedMatrix, name, spy)
+    from_arrow = PackedMatrix.from_arrow
 
-    def fit_error():
+    def arrow_spy(*a, **kw):
+        calls.append("from_arrow")
+        return from_arrow(*a, **kw)
+
+    monkeypatch.setattr(PackedMatrix, "from_arrow", arrow_spy)
+
+    def fit_error(fit):
         calls.clear()
+        sel = InfoThSelector(n_to_select=2, feature_cols=["f0", "f1"])
         with pytest.raises(ValueError, match=match) as err:
-            InfoThSelector(n_to_select=2, feature_cols=["f0", "f1"]).fit(df)
+            fit(sel)
         return str(err.value)
 
-    local = fit_error()
-    assert calls == ["collect_local", "dims_count_hist2d"]
-    # Spark regimes: -1 keeps even an empty (0-byte) pack off the driver
+    derived = fit_error(lambda sel: sel.fit(df))
+    assert calls == ["from_arrow", "dims_count_hist2d"]
+    for fit in (
+        lambda sel: sel.fit(spark.read.parquet(path)),
+        lambda sel: sel.fit_parquet(spark, path),
+    ):
+        assert fit_error(fit) == derived
+        assert calls == ["from_arrow", "dims_count_hist2d"]
+    # Spark routes: -1 keeps even an empty input off the driver
     monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", -1)
-    assert fit_error() == local
+    assert fit_error(lambda sel: sel.fit(df)) == derived
     assert calls == ["dims_count_hist2d"]
     monkeypatch.setattr(PackedMatrix, "DRIVER_STATS_MAX_BYTES", 0)
-    assert fit_error() == local
+    assert fit_error(lambda sel: sel.fit(df)) == derived
     assert calls == ["dims_count_hist2d"]
 
 
@@ -706,9 +780,8 @@ def test_sparse_fit_identical_across_local_and_sql_routes(
     monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
     sql = fit()
     assert local.fit_timings["sparse_route"] == "local"
-    if criterion != "mim":
-        assert local.fit_timings["relayout"] == _LOCAL
-        assert local.fit_timings["loop_jobs"] == 0
+    assert local.fit_timings["relayout"] is None
+    assert local.fit_timings["loop_jobs"] == 0
     assert sql.fit_timings["sparse_route"] == "sql"
     assert sql.selection_path == local.selection_path
     assert sql.relevances == local.relevances

@@ -53,6 +53,9 @@ def _write_wide_matrix(path: str, seed: int) -> tuple[int, int]:
 # picks: the "scan" rows feed a value-identical derived frame, so the
 # fit takes the r9 mapInArrow substrate the staged mRMR gate owns; the
 # "auto" rows feed the pruned bare scan, which the fit direct-packs.
+# The local bound is set to 0 so that these small matrices take the
+# packs; the local route's bit-identity to both is pinned in
+# tests/test_direct_pack.py and tests/test_packed.py.
 @pytest.mark.parametrize(
     "seed, criterion, route",
     [
@@ -64,7 +67,10 @@ def _write_wide_matrix(path: str, seed: int) -> tuple[int, int]:
         (36, "mifs", "scan"),
     ],
 )
-def test_wide_selection_cross_engine_on_random_matrix(spark, tmp_path, seed, criterion, route):
+def test_wide_selection_cross_engine_on_random_matrix(
+    spark, tmp_path, monkeypatch, seed, criterion, route
+):
+    monkeypatch.setattr(InfoThSelector, "LOCAL_MAX_BYTES", 0)
     k = 4
     path = str(tmp_path / f"wide_{seed}.parquet")
     nf, n = _write_wide_matrix(path, seed)

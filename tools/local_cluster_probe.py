@@ -87,6 +87,9 @@ def main(cfg_path: str) -> None:
     matrix = cfg["matrix"]
     feats = cfg["feats"]
     bare = spark.read.parquet(matrix)
+    # every fit in this probe is about executor boundaries: the local
+    # route would read its small input onto the driver, so it is off
+    InfoThSelector.LOCAL_MAX_BYTES = 0
 
     def dense_fit():
         return InfoThSelector(
@@ -118,17 +121,13 @@ def main(cfg_path: str) -> None:
     out["n_executors"] = n_exec
 
     # -- distributed-merge regime across real executor boundaries -------
-    # (the local regime would keep every pass on the driver: off here)
     histogram.BLOB_DRIVER_MERGE_MAX_BYTES = 0
-    local_max = InfoThSelector.LOCAL_MAX_BYTES
-    InfoThSelector.LOCAL_MAX_BYTES = 0
     try:
         with mock.patch.object(plans_inspect, "bare_parquet_scan_files", return_value=None):
             m = dense_fit()
         out["distmerge_selection"] = q5_path(m)
     finally:
         histogram.BLOB_DRIVER_MERGE_MAX_BYTES = 32 << 20
-        InfoThSelector.LOCAL_MAX_BYTES = local_max
 
     # -- wide fit (column-count fast path + direct pack) ----------------
     wide = cfg.get("wide_matrix")
@@ -141,17 +140,12 @@ def main(cfg_path: str) -> None:
         out["wide_selection"] = q5_path(m)
 
     # -- sparse fit: zipper-join co-location under multi-executor AQE ---
-    # (the local route would collect the cells to the driver: off here)
     nz = spark.read.parquet(cfg["sparse_nonzeros"])
     labels = spark.read.parquet(cfg["sparse_labels"])
-    InfoThSelector.LOCAL_MAX_BYTES = 0
-    try:
-        m = SparseInfoThSelector(
-            n_features=cfg["sparse_nf"], n_to_select=3, criterion="mrmr",
-            emit_f32=False,
-        ).fit(nz, labels)
-    finally:
-        InfoThSelector.LOCAL_MAX_BYTES = local_max
+    m = SparseInfoThSelector(
+        n_features=cfg["sparse_nf"], n_to_select=3, criterion="mrmr",
+        emit_f32=False,
+    ).fit(nz, labels)
     out["sparse_route"] = m.fit_timings["sparse_route"]
     out["sparse_selection"] = q5_path(m)
 
